@@ -92,7 +92,7 @@ lines = [
     "slope; SCALING.md's sf1 decade shows per-query growth ≤~1.1x per 10x",
     "data while the floor stays flat. The work-bound subset compares the",
     "engines where the oracle itself does real work.\n",
-    "## Floor decomposition (graft.tools.FloorProbe, r10)\n",
+    "## Floor decomposition (r10, OPTIMIZATION_r10.md §7)\n",
     "Five floor-bound queries (x1, m1, s8, a4, a14), fresh plan per",
     "sample, best-of-5 per arm, four interleaved conf arms in one JVM,",
     "with a SparkListener splitting execution into task work vs",

@@ -229,6 +229,9 @@ object Bench {
       if (ratioMins.isEmpty) 1.0 else ratioMins(ratioMins.size / 2)
     val uniformSteal = ratioMedian < CpuRunMedianThresh
     val hostContended = contended.nonEmpty || uniformSteal
+    // an erroring query's "best" is its time-to-failure, so a run with any
+    // error is no record either (same refusal path as contention)
+    val nErr = results.count(_.err.isDefined)
 
     val stolenMap = results.filter(_.stolen > 0)
       .map(r => "\"" + r.name + "\":" + r.stolen).mkString("{", ",", "}")
@@ -247,7 +250,7 @@ object Bench {
     chunks.zipWithIndex.foreach { case (c, i) =>
       println(s"""{"metric":"per_query","part":${i + 1},"parts":${chunks.size},"unit":"sec","queries":${c.mkString("{", ",", "}")},"sf":"$sfDir"}""")
     }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","host_contended":$hostContended}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","host_contended":$hostContended,"n_err":$nErr}""")
 
     // Full per-query artifact, persisted to the repo so driver stdout
     // tail-truncation can never lose entries (round-3/4 lesson: the
@@ -266,12 +269,20 @@ object Bench {
       f"""  "${r.name}": {"best_sec": ${r.best}%.3f, "worst_sec": ${r.worst}%.3f, "clean_samples": ${r.cleanSamples}, "stolen": ${r.stolen}, "cpu_stolen": ${r.cpuStolen}, "cpu_ratio_min": $rm, "err": $e}"""
     }.mkString("{\n", ",\n", "\n}")
     val payload =
-      f"""{"sf": "$sfDir", "n_queries": ${results.size}, "total_best_sec": $total%.3f, "protocol": "sentinel+taskcpu-vetted best-of-$CleanTarget", "sentinel_base_sec": $sentinelBase%.4f, "cpu_ratio_thresh": $CpuRatioThresh, "cpu_ratio_median": $ratioMedian%.3f, "uniform_steal": $uniformSteal, "host_contended": $hostContended, "contended_queries": ${contended.map(Verify.jsonQ).mkString("[", ",", "]")}, "queries": $detail}"""
+      f"""{"sf": "$sfDir", "n_queries": ${results.size}, "total_best_sec": $total%.3f, "protocol": "sentinel+taskcpu-vetted best-of-$CleanTarget", "sentinel_base_sec": $sentinelBase%.4f, "cpu_ratio_thresh": $CpuRatioThresh, "cpu_ratio_median": $ratioMedian%.3f, "uniform_steal": $uniformSteal, "host_contended": $hostContended, "n_err": $nErr, "contended_queries": ${contended.map(Verify.jsonQ).mkString("[", ",", "]")}, "queries": $detail}"""
     val fname = f"BENCH_DETAIL_r$round%02d.json"
-    // Refusal path: a contended run may not become the round's record.
-    val target = if (hostContended) fname + ".contended" else fname
+    // Refusal path: a run with errors or a contended host may not become
+    // the round's record.
+    val target =
+      if (nErr > 0) fname + ".err"
+      else if (hostContended) fname + ".contended"
+      else fname
     java.nio.file.Files.writeString(java.nio.file.Paths.get(target), payload)
-    if (hostContended)
+    if (nErr > 0)
+      System.err.println(s"[bench] $nErr queries FAILED " +
+        s"(${results.filter(_.err.isDefined).map(_.name).mkString(", ")}); " +
+        s"artifact diverted to $target")
+    else if (hostContended)
       System.err.println(s"[bench] HOST CONTENDED — ${contended.size} queries never got a " +
         s"steal-free sample; artifact diverted to $target")
     spark.stop()

@@ -271,17 +271,13 @@ object LlmQueries extends graft.core.QueryModule {
     * bounds the join fan-out at freqCap² per value. Property-tested
     * against a brute-force longest-common-substring reference (Ds1Spec).
     */
-  def dupSpans(docs: DataFrame, minTokens: Long = 5, freqCap: Int = Ds1FreqCap): DataFrame =
-    dupSpansShape(docs, minTokens, freqCap, runShape = "agg")
-
-  private[llm] def dupSpansShape(docs: DataFrame, minTokens: Long,
-      freqCap: Int, runShape: String): DataFrame = {
+  def dupSpans(docs: DataFrame, minTokens: Long = 5, freqCap: Int = Ds1FreqCap): DataFrame = {
     // the within-doc frequency cap stays a COUNT WINDOW: the tempting
     // hash-agg shape (collect_list positions per (doc, shingle), filter,
     // re-explode) measured slower interleaved-A/B at sf0.1 (best 1.67 s
     // vs 1.33 s) — the list materialization + Generate costs more than
     // the window's sort at this group cardinality
-    val psh0 = docs
+    val psh = docs
       .select(col("doc_id"), col("lang"), TextOps.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("lang"),
@@ -291,8 +287,7 @@ object LlmQueries extends graft.core.QueryModule {
       .filter(col("cnt") <= freqCap).drop("cnt")
     // the self-join reads psh from both sides: checkpointing would save
     // the second tokenize+shingle+cap pass, but measured as a LOSS
-    // (Ds1Probe `aggckpt` arm) — see the probe note below
-    val psh = if (runShape.endsWith("ckpt")) psh0.localCheckpoint() else psh0
+    // (SCALING.md "r10 decision probes", ds1 row: 2.35 s sf1 best vs 2.08 s)
     // SHUFFLE_HASH, not the default sort-merge: both sides are the same
     // 2.6M-row positioned-shingle stream, and SMJ pays two full
     // per-partition sorts on the ~25-byte string key for a join that
@@ -308,44 +303,28 @@ object LlmQueries extends graft.core.QueryModule {
         Seq("lang", "sh"))
       .filter(col("da") < col("db"))
       .withColumn("delta", (col("pa") - col("pb")).cast("long"))
-    val spans = runShape match {
-      case "window" =>
-        // r9 shape: rank window over (pair, delta) + two aggregations —
-        // three exchanges of the match stream and a per-partition sort
-        val wRun = Window.partitionBy(col("da"), col("db"), col("delta"))
-          .orderBy(col("pa"))
-        m.withColumn("island", col("pa") - row_number().over(wRun))
-          .groupBy(col("da"), col("db"), col("delta"), col("island"))
-          .agg(count(lit(1)).as("run"))
-          .groupBy(col("da"), col("db"))
-          .agg((max(col("run")) + 2).as("max_dup_tokens"))
-      case "agg" | "aggckpt" =>
-        // r10 shape (probed, Ds1Probe in SCALING.md): ONE mergeable hash
-        // aggregation per pair — matches collect as sorted (delta, pa)
-        // structs and the longest consecutive run is a codegen'd
-        // array fold (pa strictly increases within a delta: pb = pa−delta
-        // is unique per match, so run detection is `pa = prev+1` under
-        // `delta = prevDelta`). The window shape exchanged the match
-        // stream onto (da, db, delta), sorted every partition, then paid
-        // two more aggregation exchanges; this pays one exchange to
-        // (da, db) with map-side partials and sorts only within-group
-        // arrays. Group size = match rows per pair, bounded by the
-        // freqCap join fan-out — the same bound the window relied on.
-        m.groupBy(col("da"), col("db"))
-          .agg(sort_array(collect_list(struct(col("delta"),
-            col("pa").cast("long").as("pa")))).as("ms"))
-          .select(col("da"), col("db"), expr(
-            """aggregate(ms,
-              |  named_struct('best', 0L, 'cur', 0L,
-              |               'pd', -9223372036854775808L, 'pp', -2L),
-              |  (a, x) -> named_struct(
-              |    'best', greatest(a.best,
-              |      IF(x.delta = a.pd AND x.pa = a.pp + 1L, a.cur + 1L, 1L)),
-              |    'cur', IF(x.delta = a.pd AND x.pa = a.pp + 1L, a.cur + 1L, 1L),
-              |    'pd', x.delta, 'pp', x.pa),
-              |  a -> a.best) + 2L""".stripMargin).as("max_dup_tokens"))
-    }
-    spans
+    // ONE mergeable hash aggregation per pair (SCALING.md "r10 decision
+    // probes", ds1 row): matches collect as sorted (delta, pa) structs and
+    // the longest consecutive run is a codegen'd array fold (pa strictly
+    // increases within a delta: pb = pa−delta is unique per match, so run
+    // detection is `pa = prev+1` under `delta = prevDelta`). The r9 rank
+    // window over (da, db, delta) exchanged the match stream three times
+    // and sorted every partition; this pays one exchange to (da, db) with
+    // map-side partials and sorts only within-group arrays. Group size =
+    // match rows per pair, bounded by the freqCap join fan-out.
+    m.groupBy(col("da"), col("db"))
+      .agg(sort_array(collect_list(struct(col("delta"),
+        col("pa").cast("long").as("pa")))).as("ms"))
+      .select(col("da"), col("db"), expr(
+        """aggregate(ms,
+          |  named_struct('best', 0L, 'cur', 0L,
+          |               'pd', -9223372036854775808L, 'pp', -2L),
+          |  (a, x) -> named_struct(
+          |    'best', greatest(a.best,
+          |      IF(x.delta = a.pd AND x.pa = a.pp + 1L, a.cur + 1L, 1L)),
+          |    'cur', IF(x.delta = a.pd AND x.pa = a.pp + 1L, a.cur + 1L, 1L),
+          |    'pd', x.delta, 'pp', x.pa),
+          |  a -> a.best) + 2L""".stripMargin).as("max_dup_tokens"))
       .filter(col("max_dup_tokens") >= minTokens)
       .orderBy(col("da"), col("db"))
   }
@@ -390,10 +369,11 @@ object LlmQueries extends graft.core.QueryModule {
 
   /** Doc count above which simhash candidate generation switches from the
     * four 16-bit chunk bands to the 20-combo 32-bit block keys (both exact
-    * for hamming ≤ 3 — see [[simhashComboPairs]]). MEASURED end-to-end by
-    * graft.llm.SimhashGeoProbe (interleaved one-JVM A/B at local[32]).
-    * `--synthetic` = uniform chunks + a 129k true-pair skew block (the
-    * BandProbe corpus); `--zipf` = the r9 SKEWED re-test the r8 dial
+    * for hamming ≤ 3 — see [[simhashComboPairs]]). MEASURED end-to-end
+    * (interleaved one-JVM A/B at local[32]; SCALING.md "r8 decision
+    * probes" and "r9 decision probes", simhash rows). "syn" = uniform
+    * chunks + a 129k true-pair skew block (the "banding knee probe"
+    * corpus); "zipf" = the r9 SKEWED re-test the r8 dial
     * comment demanded — 20% of docs draw each chunk from a Zipf(1) head
     * over ranks 1..4095 (measured per-chunk self-match Σp² ≈ 5.7e-4,
     * ~37× uniform — the short-doc/boilerplate regime):
@@ -413,11 +393,12 @@ object LlmQueries extends graft.core.QueryModule {
     * (1M, 2M) — combo first wins at the 2M row. The dial sits at the
     * LAST point where band16 still won under the worst tested skew (1M):
     * past the knee band16 is quadratic while an early combo switch costs
-    * only its ~2–6× linear constant, so the dial errs low. Re-run
-    * `--zipf` (or the real corpus) before trusting band16 beyond this on
-    * hotter-than-Zipf(1) data. (Immutable — the geometry probes call
-    * [[simhashBand16Pairs]]/[[simhashComboPairs]] directly; a sys.props
-    * dial would leak across a shared JVM, the r8-ADVICE KCore lesson.) */
+    * only its ~2–6× linear constant, so the dial errs low. Re-measure
+    * under skew (or on the real corpus) before trusting band16 beyond
+    * this on hotter-than-Zipf(1) data. (Immutable — SimhashGeometrySpec
+    * calls [[simhashBand16Pairs]]/[[simhashComboPairs]] directly; a
+    * sys.props dial would leak across a shared JVM, the r8-ADVICE KCore
+    * lesson.) */
   private[llm] val simhashComboThreshold: Long = 1000000L
 
   private def simhashPairs0(s: SparkSession, dir: String): DataFrame = {
@@ -584,7 +565,7 @@ object LlmQueries extends graft.core.QueryModule {
   // bands hit near 65k docs per chunk value moves out past any
   // realistic corpus — the "band width as a function of corpus size"
   // dial made concrete (VERDICT r5 #2), and MEASURED, not argued:
-  // graft.tools.BandProbe (SCALING.md "banding knee probe") — at n=300k
+  // SCALING.md "banding knee probe" — at n=300k
   // uniform docs the 16-bit geometry emits 2.8M false candidates
   // (matching the 4·n²/2¹⁷ prediction) while the 32-bit geometry emits
   // 38, both atop an identical 129,024 true-pair floor from a skewed
@@ -858,7 +839,7 @@ object LlmQueries extends graft.core.QueryModule {
   // instead of serializing it in one; the pair SET is identical, so the
   // exact oracle below is unchanged.
   //
-  // r10 (D5Probe + D5Sort decomposition, SCALING.md): cap 4096 → 512.
+  // r10 (SCALING.md "r10 decision probes", d5 row): cap 4096 → 512.
   // The cap is not only the detonation guard — it is the PARALLELISM
   // dial: this corpus has 10 fixed labels, so at sf1 a 2,180-row label
   // fit one 4096-chunk and the 20M-pair job ran as 10 tasks on 32 cores;
@@ -944,8 +925,8 @@ object LlmQueries extends graft.core.QueryModule {
     * n²/k = n·ivfCellTarget, linear in n. The r9 shape pinned k = 4, which
     * made sem1/knn1 the two steepest decade slopes in the inventory (0.81 /
     * 0.93 — quadratic within-cell work with a cell count that never grows).
-    * Probed interleaved one-JVM A/B at sf0.1/sf1 (graft.llm.IvfProbe,
-    * results in SCALING.md). 256 keeps the gate SF (sf0.01, n=500) at the
+    * Probed interleaved one-JVM A/B at sf0.1/sf1 (SCALING.md "r10
+    * decision probes", IVF row). 256 keeps the gate SF (sf0.01, n=500) at the
     * k=4 floor — assignment quality there is seed-limited either way — and
     * puts sf1 (n=20k) at k=79 / ~253 rows per cell, comfortably under
     * BoundedSelfJoin's 4096 chunk cap. The n·k assignment itself goes
@@ -965,7 +946,7 @@ object LlmQueries extends graft.core.QueryModule {
     * is the √k-row coarse one, broadcast-sized at ANY corpus (√(4·10⁶) ≈
     * 2000 rows at the 10⁹-vector regime).
     *
-    * The threshold IS the measured crossover (graft.llm.Ivf2Probe at sf1,
+    * The threshold IS the measured crossover (OPTIMIZATION_r11.md §2, sf1,
     * interleaved noop-forced assignment stage, best-of-3): flat wins at
     * k=79 (0.32 vs 0.47 s — the coarse route's extra stages cost more
     * than the ~k dot products it saves while √k ≈ k/8), two-level wins
@@ -984,7 +965,8 @@ object LlmQueries extends graft.core.QueryModule {
     * (a 10⁹-vector corpus at [[ivfCellTarget]]); past that the fine
     * codebook is hash-partitioned by coarse cell and the vector stream
     * shuffles once on its routed cell instead — linear, never a growing
-    * broadcast. Identical output either way ([[Ivf2Probe]] asserts it). */
+    * broadcast. Identical output either way (ShapeEquivalenceSpec asserts
+    * it). */
   private[llm] val ivfFineShuffleMinK: Long = 4L << 20
 
   /** Centroid frame (cid, ce, cn2) at the corpus-sized k — memoized: the
@@ -1018,8 +1000,7 @@ object LlmQueries extends graft.core.QueryModule {
   /** `mode`: "auto" picks flat at or below [[ivfTwoLevelMin]] and
     * two-level with a broadcast fine stage above it (SHUFFLE_HASH past
     * [[ivfFineShuffleMinK]]); "flat" / "twolevel" / "twolevel-shuffle"
-    * force an arm at ANY k — probe/spec-only ([[Ivf2Probe]],
-    * ShapeEquivalenceSpec). */
+    * force an arm at ANY k — spec-only (ShapeEquivalenceSpec). */
   private[llm] def ivfCellsAt(s: SparkSession, e: DataFrame,
       cents: DataFrame, mode: String = "auto"): DataFrame = {
     import s.implicits._
@@ -2409,25 +2390,13 @@ object LlmQueries extends graft.core.QueryModule {
   // fraction, and the keep/drop decision. All integer counts + single
   // divisions: bit-exact with no rounding. Bigrams come from a lead()
   // window partitioned by doc (never a global window); at 100 TB this is
-  // one shuffle on doc_id shared by both aggregates.
-  def t7(s: SparkSession, dir: String): DataFrame =
-    t7Shape(s, dir, copartition = false)
-
-  /** r11 (the nv1 co-partition device): `copartition = true` puts ONE
-    * explicit repartition(doc_id) under both consumers of the token
-    * stream. Every downstream requirement is then satisfied by that single
-    * exchange — the bigram window needs hashpartitioning(doc_id); the
-    * (doc_id, bg) and (doc_id, tok) groupBys accept any partitioning on a
-    * SUBSET of their keys; the per-doc re-aggregations and the final join
-    * are already doc_id-clustered — so the r10 shape's three exchanges
-    * (window's doc_id, tokStats' (doc_id, tok), tokStats' doc_id re-agg)
-    * collapse to one, shared via ReusedExchange. Pure physical change;
-    * SharedStageProbe asserts full-output identity. */
-  private[llm] def t7Shape(s: SparkSession, dir: String,
-      copartition: Boolean): DataFrame = {
+  // one shuffle on doc_id shared by both aggregates. One explicit
+  // repartition(doc_id) under both consumers of the token stream (the nv1
+  // co-partition device) was measured a loss at the bench SF:
+  // OPTIMIZATION_r11.md §6, sf0.1 local[32] 0.414 → 0.640 s.
+  def t7(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pt0 = docTokens(s, dir)
-    val pt = if (copartition) pt0.repartition($"doc_id") else pt0
+    val pt = docTokens(s, dir)
     val w = Window.partitionBy($"doc_id").orderBy($"pos")
     val bg = pt.withColumn("nxt", lead($"tok", 1).over(w))
       .filter($"nxt".isNotNull)
@@ -2570,23 +2539,14 @@ object LlmQueries extends graft.core.QueryModule {
   // corpus unigram probabilities → per-doc mean token log-probability →
   // keep/drop. The unigram table is vocabulary-sized → broadcast; the doc
   // side is one groupBy — at 100 TB this is one shuffle on doc_id plus a
-  // broadcast, no global state.
-  def t8(s: SparkSession, dir: String): DataFrame =
-    t8Shape(s, dir, sharedStage = false)
-
-  /** r11 (the t9 device): `sharedStage = true` derives the corpus unigram
-    * table from the per-doc-term counts — Σ over doc_id of c ≡ COUNT(*)
-    * per tok, exact integers — so the token stream crosses ONE
-    * (doc_id, tok) exchange shared by both consumers (ReusedExchange)
-    * instead of two independent full-stream aggregations. */
-  private[llm] def t8Shape(s: SparkSession, dir: String,
-      sharedStage: Boolean): DataFrame = {
+  // broadcast, no global state. Deriving the unigram table from the
+  // per-doc-term counts (one shared exchange) was measured a loss:
+  // OPTIMIZATION_r11.md §6, sf1 local[32] 0.894 → 1.151 s.
+  def t8(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pt = docTokens(s, dir)
     val dc = pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
-    val tokC =
-      if (sharedStage) dc.groupBy($"tok").agg(sum($"c").as("ct"))
-      else pt.groupBy($"tok").agg(count(lit(1)).as("ct"))
+    val tokC = pt.groupBy($"tok").agg(count(lit(1)).as("ct"))
     val tot = tokC.agg(sum($"ct").as("total"))
     // per-doc log-prob is a LEFT FOLD over the tok-sorted term list, not an
     // unordered double SUM — float addition is non-associative, and the
@@ -2639,27 +2599,21 @@ object LlmQueries extends graft.core.QueryModule {
     * bit-identical IEEE result t8/t10 already rely on.
     */
   def t11(s: SparkSession, dir: String): DataFrame =
-    t11Shape(s, dir, arrayzip = true, derivedNb = false)
+    t11Shape(s, dir, arrayzip = true)
 
-  /** r11 (ADVICE r10): `derivedNb = true` derives the total bigram count
-    * from the (w1, w2) count table BEFORE its support filter — Σ cab over
-    * all groups ≡ COUNT(*) over the stream, exact integers — instead of
-    * aggregating the bigram stream a second time. Under the arrayzip
-    * shape the stream tokenizes from parquet on every consumption, so the
-    * r10 form paid a full second tokenize+zip pass for one scalar; now
-    * both consumers hang off the one (w1, w2) aggregation exchange
-    * (ReusedExchange at runtime) and the stream is computed ONCE. */
+  /** The total bigram count `nb` aggregates the bigram stream a second
+    * time; deriving it from the (w1, w2) count table (Σ cab) so the stream
+    * is computed once was measured a loss: OPTIMIZATION_r11.md §6, sf1
+    * local[32] 0.686 → 0.725 s. */
   private[llm] def t11Shape(s: SparkSession, dir: String,
-      arrayzip: Boolean, derivedNb: Boolean = false): DataFrame = {
+      arrayzip: Boolean): DataFrame = {
     import s.implicits._
     val pt = docTokens(s, dir)
     val bg = bigrams(s, dir, arrayzip).select($"w1", $"w2")
     val bc = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("cab"))
     val ug = pt.groupBy($"tok").agg(count(lit(1)).as("cu"))
     val nt = pt.agg(count(lit(1)).as("nt"))
-    val nb =
-      if (derivedNb) bc.agg(coalesce(sum($"cab"), lit(0L)).as("nb"))
-      else bg.agg(count(lit(1)).as("nb"))
+    val nb = bg.agg(count(lit(1)).as("nb"))
     bc.filter($"cab" >= 5)
       .join(broadcast(ug.select($"tok".as("w1"), $"cu".as("ca"))), "w1")
       .join(broadcast(ug.select($"tok".as("w2"), $"cu".as("cb"))), "w2")
@@ -2689,7 +2643,7 @@ object LlmQueries extends graft.core.QueryModule {
        |ORDER BY pmi DESC, bc.w1, bc.w2 LIMIT 20""".stripMargin
 
   /** Bigram stream (doc_id, w1, w2) for t10/t11. `arrayzip = true` (the
-    * r10-adopted shape, T10Probe in SCALING.md) builds consecutive pairs
+    * r10-adopted shape, OPTIMIZATION_r10.md §6) builds consecutive pairs
     * ARRAY-SIDE before the explode — zip_with over the token array, the
     * tc1 edge-build device — so there is NO doc-keyed exchange and no
     * per-doc sort at all; the window form paid Exchange(doc_id)+Sort+
@@ -2720,28 +2674,19 @@ object LlmQueries extends graft.core.QueryModule {
   }
 
   def t10(s: SparkSession, dir: String): DataFrame =
-    t10Shape(s, dir, arrayzip = true, derivedCounts = false)
+    t10Shape(s, dir, arrayzip = true)
 
-  /** r11 (the t9 device applied to the bigram stream, ADVICE r10): with
-    * `derivedCounts = true` the global (w1, w2) count table is the per-doc
-    * count table `dc` re-aggregated — Σ over doc_id of c ≡ COUNT(*) per
-    * (w1, w2), exact integers — so the bigram stream (which re-tokenizes
-    * from parquet per consumer under arrayzip) is consumed ONCE and both
-    * consumers share dc's (doc_id, w1, w2) exchange (ReusedExchange at
-    * runtime). The r10 arrayzip shape paid tokenize+zip twice: once for
-    * the global counts, once for the per-doc counts — the explode subtree
-    * appeared once per consumer in the r10 plan because the aggregation
-    * keys differ; deriving the coarse grain from the fine one is what
-    * makes the exchange shareable. */
+  /** The bigram stream is consumed twice: for the global (w1, w2) counts
+    * and for the per-doc counts. Deriving the global table from the
+    * per-doc one (one shared exchange) was measured a loss:
+    * OPTIMIZATION_r11.md §6, sf1 local[32] 2.167 → 2.743 s. */
   private[llm] def t10Shape(s: SparkSession, dir: String,
-      arrayzip: Boolean, derivedCounts: Boolean = false): DataFrame = {
+      arrayzip: Boolean): DataFrame = {
     import s.implicits._
     val pt = docTokens(s, dir)
     val bg = bigrams(s, dir, arrayzip)
     val dc = bg.groupBy($"doc_id", $"w1", $"w2").agg(count(lit(1)).as("c"))
-    val bc =
-      if (derivedCounts) dc.groupBy($"w1", $"w2").agg(sum($"c").as("cb"))
-      else bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("cb"))
+    val bc = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("cb"))
     val uc = bc.groupBy($"w1").agg(sum($"cb").as("cu"))
     val vv = pt.agg(countDistinct($"tok").as("v"))
     dc
@@ -2785,35 +2730,16 @@ object LlmQueries extends graft.core.QueryModule {
   // T9: TF-IDF top terms per document — the classic relevance weighting,
   // top-3 by score with deterministic tok tiebreak. df table is
   // vocabulary-sized → broadcast; ranking is a doc-partitioned window.
-  def t9(s: SparkSession, dir: String): DataFrame =
-    t9Shape(s, dir, sharedStage = false)
-
-  /** r11 (VERDICT r10 directive 3): `sharedStage = true` derives every
-    * aggregate from ONE (doc_id, tok) exchange of the token stream — the
-    * per-doc-term counts `dc` are the finest grain, so the document
-    * frequency table is `dc` re-aggregated by tok (distinct (doc_id, tok)
-    * ≡ the dc key set) and n_docs is a countDistinct over dc instead of
-    * over the full stream. The r10 shape paid the token stream through
-    * THREE independent full-stream aggregations (the (doc_id, tok)
-    * distinct, the (doc_id, tok) groupBy, and the countDistinct(doc_id)
-    * expand) — duplicated subtrees with nothing reusable; now all three
-    * consumers hang off the same exchange (ReusedExchange at runtime, the
-    * pr1/nv1-proven mechanism) and the re-aggregations run over the
-    * doc-term pairs, a fraction of the stream. Exact by construction:
-    * sum/count over the finer grain equals the coarse aggregate
-    * (T9Probe asserts full-output identity every round). */
-  private[llm] def t9Shape(s: SparkSession, dir: String,
-      sharedStage: Boolean): DataFrame = {
+  // Deriving n_docs and the df table from the per-doc-term counts (one
+  // shared (doc_id, tok) exchange) was measured a wash: OPTIMIZATION_r11.md
+  // §6, sf0.1 local[32] 0.660 vs 0.657 s.
+  def t9(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pt = docTokens(s, dir)
     val dc = pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
-    val nDocs =
-      if (sharedStage) dc.agg(countDistinct($"doc_id").as("n_docs"))
-      else pt.agg(countDistinct($"doc_id").as("n_docs"))
-    val dfT =
-      if (sharedStage) dc.groupBy($"tok").agg(count(lit(1)).as("dft"))
-      else pt.select($"doc_id", $"tok").distinct()
-        .groupBy($"tok").agg(count(lit(1)).as("dft"))
+    val nDocs = pt.agg(countDistinct($"doc_id").as("n_docs"))
+    val dfT = pt.select($"doc_id", $"tok").distinct()
+      .groupBy($"tok").agg(count(lit(1)).as("dft"))
     // rank on the ROUNDED score: the raw ln-derived value can differ by an
     // ulp between engines, which would flip row_number for near-equal
     // scores — round first, deterministic tok tiebreak second
@@ -2962,14 +2888,11 @@ object LlmQueries extends graft.core.QueryModule {
   // detonating a task. τ = 0.35 sits above the corpus's within-cell bulk
   // and below its near-dup max cosine, so the drop set stays non-trivial
   // at every SF under the corpus-sized k (750 rows at sf0.1, 14k at sf1).
-  def sem1(s: SparkSession, dir: String): DataFrame =
-    sem1Cells(s, dir, ivfCells(s, dir))
-  private[llm] def sem1Cells(s: SparkSession, dir: String,
-      cells: DataFrame): DataFrame = {
+  def sem1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
       .withColumn("n2", VectorOps.dotNative($"embedding", $"embedding"))
-    val ec = e.join(cells, "vec_id")
+    val ec = e.join(ivfCells(s, dir), "vec_id")
     graft.operators.BoundedSelfJoin.pairs(ec, "cell", "vec_id", cap = 4096)
       .select($"a.cell".as("cell"), $"a.vec_id".as("va"), $"b.vec_id".as("vb"),
         (VectorOps.dotNative($"a.embedding", $"b.embedding") /
@@ -3004,35 +2927,24 @@ object LlmQueries extends graft.core.QueryModule {
   // bottom-k aggregate over priority −cos ([[graft.functions.Aggregators.BottomKPairs]]
   // — ≤ 3 (cos, nb) pairs per vector on the shuffle, no rank window over
   // cell-sized groups).
-  def knn1(s: SparkSession, dir: String): DataFrame =
-    knn1Cells(s, dir, ivfCells(s, dir))
-  private[llm] def knn1Cells(s: SparkSession, dir: String,
-      cells: DataFrame): DataFrame = {
+  def knn1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
       .withColumn("n2", VectorOps.dotNative($"embedding", $"embedding"))
-    val ec = e.join(cells, "vec_id")
+    val ec = e.join(ivfCells(s, dir), "vec_id")
     val p = graft.operators.BoundedSelfJoin.pairs(ec, "cell", "vec_id", cap = 4096)
       .select($"a.vec_id".as("va"), $"b.vec_id".as("vb"),
         (VectorOps.dotNative($"a.embedding", $"b.embedding") /
           (sqrt($"a.n2") * sqrt($"b.n2"))).as("cos"))
-    // MEASURED NEGATIVE (r8, graft.llm.Knn1Probe — interleaved one-JVM
-    // A/B at sf1/local[32]): emitting both directions via ONE
-    // explode(array(struct(va,vb), struct(vb,va))) — to avoid the union's
-    // second dot-product evaluation — ran 9.2 s vs the union's 5.5 s
-    // best. The recomputed dot is 64 codegen'd FMAs per pair; the explode
-    // pays a per-row array-of-structs allocation plus a Generate row
-    // copy, which costs more than the arithmetic it saves. The union
-    // stays; the prop dial exists only for the probe.
-    val sym =
-      if (sys.props.get("graft.knn1.explodeSym").contains("true"))
-        p.select(explode(array(
-            struct($"va".as("src"), $"vb".as("nb")),
-            struct($"vb".as("src"), $"va".as("nb")))).as("e"), $"cos")
-          .select($"e.src".as("src"), $"e.nb".as("nb"), $"cos")
-      else
-        p.select($"va".as("src"), $"vb".as("nb"), $"cos")
-          .unionAll(p.select($"vb".as("src"), $"va".as("nb"), $"cos"))
+    // MEASURED NEGATIVE (r8, interleaved one-JVM A/B at sf1/local[32],
+    // SCALING.md "r8 decision probes" knn1 row): emitting both directions
+    // via ONE explode(array(struct(va,vb), struct(vb,va))) — to avoid the
+    // union's second dot-product evaluation — ran 9.2 s vs the union's
+    // 5.5 s best. The recomputed dot is 64 codegen'd FMAs per pair; the
+    // explode pays a per-row array-of-structs allocation plus a Generate
+    // row copy, which costs more than the arithmetic it saves.
+    val sym = p.select($"va".as("src"), $"vb".as("nb"), $"cos")
+      .unionAll(p.select($"vb".as("src"), $"va".as("nb"), $"cos"))
     val bk = udaf(new graft.functions.Aggregators.BottomKPairs(3))
     sym.groupBy($"src")
       .agg(bk(-$"cos", $"nb").as("nbs"))
@@ -3074,18 +2986,15 @@ object LlmQueries extends graft.core.QueryModule {
     * prefix equijoin keys, and the verify intersect — carries 8-byte
     * longs where the r8 shape shuffled ~25-byte shingle STRINGS through
     * the three build exchanges and re-hashed per exploded prefix row
-    * (measured via D9Probe --stages: the build was 3.5 s of d9's 5.9 s
-    * sf1 total, pairs+verify 2.4 s). The canonical order becomes
+    * (measured stage by stage, SCALING.md "r9 decision probes": the build
+    * was 3.5 s of d9's 5.9 s sf1 total, pairs+verify 2.4 s). The
+    * canonical order becomes
     * (df asc, hash asc) — any global total order preserves PPJoin
     * completeness (the naive-generator oracle seals it). A cross-shingle
     * hash collision perturbs one df count / one |∩| with probability
     * ~2⁻⁶⁴ per shingle pair — the same accepted class as the r8 verify
     * hashing (the gate-SF oracle match is the empirical seal). */
-  private[llm] def d9Docs(s: SparkSession, dir: String): DataFrame =
-    d9DocsShape(s, dir, dfShape = "copartition")
-
-  private[llm] def d9DocsShape(s: SparkSession, dir: String,
-      dfShape: String): DataFrame = {
+  private[llm] def d9Docs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // lang folds into the hash key (docs only ever pair within a
     // language): the candidate equijoin keys on ONE long and no lang
@@ -3093,44 +3002,24 @@ object LlmQueries extends graft.core.QueryModule {
     // collision — the accepted 2^-64 class above.
     val sh = docShingles(s, dir)
       .select($"doc_id", xxhash64($"lang", $"sh").as("shh"))
-    val withDf = dfShape match {
-      case "copartition" =>
-        // ADOPTED (r9, D9Probe --stages interleaved at sf1): ONE
-        // explicit repartition(shh) exchange feeds BOTH the df
-        // aggregation and the join-back — each is co-partitioned on
-        // shh, so neither adds its own exchange. The shuffle_hash hint
-        // keeps the join sort-free; its build side per partition is the
-        // partition's DISTINCT shingles — a hot boilerplate shingle is
-        // ONE build entry however many docs carry it, and AQE's
-        // skew-join splitting applies to shuffled-hash joins, so a hot
-        // key's probe stream can be split across tasks. Measured
-        // 2.31 s vs 3.3–3.7 s for the r8 agg+join shape (two
-        // non-dedupable full exchanges of the shingle stream) and vs
-        // 1.45–1.91 s for the window arm — the window is ~25% faster
-        // HERE (no hot shingles in the fixture) but buffers each shh
-        // group inside one WindowExec task with no skew relief: on the
-        // boilerplate-heavy corpora d9 exists for, that is the
-        // rank-window funnel this repo bans, so the ~0.6 s local cost
-        // buys the shape that survives skew (the code-review r9
-        // finding on the briefly-adopted window arm).
-        val part = sh.repartition($"shh")
-        val dfTab = part.groupBy($"shh").agg(count(lit(1)).as("dfc"))
-        part.join(dfTab.hint("shuffle_hash"), "shh")
-      case "window" =>
-        // probe arm: df via window count — same single exchange, but
-        // WindowExec sorts the partition and buffers each shh group,
-        // so one hot shingle funnels its whole group into one task
-        import org.apache.spark.sql.expressions.Window
-        sh.withColumn("dfc", count(lit(1)).over(Window.partitionBy($"shh")))
-      case "aggjoin" =>
-        // probe arm (the r8 shape): the df agg's compressed exchange
-        // and the join probe's full one can't be deduped (different
-        // projections) — two exchanges of the shingle stream
-        val dfTab = sh.groupBy($"shh").agg(count(lit(1)).as("dfc"))
-        sh.join(dfTab, "shh")
-      case other => sys.error(s"unknown d9 df shape: $other")
-    }
-    withDf
+    // ONE explicit repartition(shh) exchange feeds BOTH the df
+    // aggregation and the join-back — each is co-partitioned on shh, so
+    // neither adds its own exchange. The shuffle_hash hint keeps the join
+    // sort-free; its build side per partition is the partition's DISTINCT
+    // shingles — a hot boilerplate shingle is ONE build entry however
+    // many docs carry it, and AQE's skew-join splitting applies to
+    // shuffled-hash joins, so a hot key's probe stream can be split
+    // across tasks. Measured (SCALING.md "r9 decision probes", d9 docs
+    // build row) 2.31 s vs 3.3–3.7 s for the r8 agg+join shape (two
+    // non-dedupable full exchanges of the shingle stream) and vs
+    // 1.45–1.91 s for a window count — the window is ~25% faster HERE (no
+    // hot shingles in the fixture) but buffers each shh group inside one
+    // WindowExec task with no skew relief: on the boilerplate-heavy
+    // corpora d9 exists for, that is the rank-window funnel this repo
+    // bans, so the ~0.6 s local cost buys the shape that survives skew.
+    val part = sh.repartition($"shh")
+    val dfTab = part.groupBy($"shh").agg(count(lit(1)).as("dfc"))
+    part.join(dfTab.hint("shuffle_hash"), "shh")
       .groupBy($"doc_id")
       .agg(sort_array(collect_list(struct($"dfc", $"shh"))).as("arr"))
       .withColumn("ns", size($"arr"))
@@ -3216,14 +3105,13 @@ object LlmQueries extends graft.core.QueryModule {
   def d9(s: SparkSession, dir: String): DataFrame =
     d9From(d9Docs(s, dir).localCheckpoint(), shape = "indexed")
 
-  /** Full d9 pipeline from a checkpointed d9Docs frame — the probe entry
-    * (both candidate arms share the verify stage, so an A/B on this
-    * function times exactly the candidate-geometry term).
+  /** Full d9 pipeline from a checkpointed d9Docs frame — every candidate
+    * arm shares the verify stage (PrefixFilterSpec compares the arms).
     * LENGTH FILTER at candidate time (the second AllPairs pruner):
     * J ≥ τ forces τ·|x| ≤ |y| ≤ |x|/τ, so size-incompatible pairs never
     * leave the join. Still complete — it's a necessary condition of the
-    * threshold, not a heuristic. Positional arm adopted from the r8
-    * interleaved probe (see d9Pairs doc). */
+    * threshold, not a heuristic. Indexed arm adopted from the r9
+    * interleaved A/B (SCALING.md "r9 decision probes", d9 rows). */
   private[llm] def d9From(docs: DataFrame, shape: String): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._

@@ -172,41 +172,23 @@ object QualityQueries extends graft.core.QueryModule {
   // term is c · ln((ct·Dr)/(cr·Dt)) with every product left-associated the
   // same way on both engines, folded in tok-sorted order (t8's discipline).
   /** Per-document (doc_id, n_tokens, lw) under the target-vs-raw model —
-    * shared by [[dsir1]] and the spec's corpus-mean baseline. */
-  private[llm] def dsirScored(s: SparkSession, dir: String): DataFrame =
-    dsirScoredShape(s, dir, sharedStage = false)
-
-  /** r11 (the t9 single-exchange device): `sharedStage = true` aggregates
-    * the token stream ONCE at its finest grain — (doc_id, lang, tok); lang
-    * is functionally dependent on doc_id (one row per doc in `documents`),
-    * so this IS the (doc_id, tok) grain with lang riding — and derives the
-    * raw and target unigram models by re-aggregating those counts (Σ c per
-    * tok ≡ COUNT(*) per tok, the lang = 'en' filter applied on the counted
-    * rows — exact integers). The r10 shape tokenized and shuffled the full
-    * stream THREE times (raw counts, target counts, per-doc counts:
-    * different keys, nothing reusable); now all three consumers hang off
-    * one exchange (ReusedExchange at runtime) and the re-aggregations run
-    * over doc-term pairs. Output identity asserted per round (T9Probe). */
-  private[llm] def dsirScoredShape(s: SparkSession, dir: String,
-      sharedStage: Boolean): DataFrame = {
+    * shared by [[dsir1]] and the spec's corpus-mean baseline. The raw,
+    * target and per-doc counts are three aggregations of the token
+    * stream; deriving the raw and target models from the per-doc
+    * counts (one shared exchange) was measured a loss: OPTIMIZATION_r11.md
+    * §6, sf1 local[32] 0.802 → 1.122 s. */
+  private[llm] def dsirScored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pt = TextOps.docTokens(Tables.documents(s, dir), $"doc_id", $"text",
       keep = Seq($"lang"))
-    val dcl = pt.groupBy($"doc_id", $"lang", $"tok").agg(count(lit(1)).as("c"))
-    val rawC =
-      if (sharedStage) dcl.groupBy($"tok").agg(sum($"c").as("cr0"))
-      else pt.groupBy($"tok").agg(count(lit(1)).as("cr0"))
-    val tgtC =
-      if (sharedStage) dcl.filter($"lang" === "en").groupBy($"tok").agg(sum($"c").as("ct0"))
-      else pt.filter($"lang" === "en").groupBy($"tok").agg(count(lit(1)).as("ct0"))
+    val rawC = pt.groupBy($"tok").agg(count(lit(1)).as("cr0"))
+    val tgtC = pt.filter($"lang" === "en").groupBy($"tok").agg(count(lit(1)).as("ct0"))
     // shared vocab = raw vocab (target tokens are a subset of raw's); add-1
     // smoothing keeps unseen-in-target tokens finite
     val model = rawC.join(tgtC, Seq("tok"), "left")
       .select($"tok", ($"cr0" + 1L).as("cr"), (coalesce($"ct0", lit(0L)) + 1L).as("ct"))
     val totals = model.agg(sum($"cr").as("dr"), sum($"ct").as("dt"))
-    val docTermCounts =
-      if (sharedStage) dcl.select($"doc_id", $"tok", $"c")
-      else pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
+    val docTermCounts = pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
     val scored = docTermCounts
       .join(broadcast(model), "tok")
       .transform(graft.core.ScalarSub.withScalars(_, totals))
@@ -495,8 +477,8 @@ object QualityQueries extends graft.core.QueryModule {
   def nv1(s: SparkSession, dir: String): DataFrame =
     nv1Shape(s, dir, copartition = true)
 
-  /** `copartition = true` is the d9DocsShape device, adopted r10
-    * (Nv1Probe, SCALING.md): the shipped agg+join-back shape computed the
+  /** `copartition = true` is the d9Docs device, adopted r10
+    * (OPTIMIZATION_r10.md §5): the r9 agg+join-back shape computed the
     * tokenize→shingle→explode stream TWICE (duplicated subtrees feeding
     * the df aggregation and the join probe) and exchanged the ~25-byte
     * shingle strings twice; ONE explicit repartition(sh) feeds both — the

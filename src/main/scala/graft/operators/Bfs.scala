@@ -93,36 +93,18 @@ object Bfs {
     * unique ids disambiguate before the call (as bfs1 does with 2k / 2k+1).
     * Same checkpoint/short-circuit discipline as [[levels]].
     *
-    * @param prePartition checkpoint the edge set hash-partitioned on `a`,
-    *   the ODD-round probe key (LogicalRDD keeps the partitioning across
-    *   the checkpoint — the lp1/pr1 device), so odd rounds probe it
-    *   exchange-free; even rounds join on `b` and re-shuffle either way.
-    *   The unpartitioned checkpoint's ExistingRDD stats are unknown-huge,
-    *   so without this every round plans a full edge-side exchange before
-    *   AQE can see the tiny frontier.
-    * @param shjHint hint the frontier side SHUFFLE_HASH so the round join
-    *   builds the (small) frontier hash table instead of sort-merging two
-    *   unknown-stat sides.
-    *   Both flags measured in BfsProbe (SCALING.md r10) before flipping
-    *   any default: wash / negative, shipped shape kept.
+    * The edge checkpoint is NOT pre-partitioned on the probe key, and the
+    * frontier carries no SHUFFLE_HASH hint: AQE broadcasts the tiny
+    * frontier every round, so the edge side never shuffles anyway. Both
+    * were measured (SCALING.md "r10 decision probes", bfs row): the
+    * pre-partitioned checkpoint was a wash at sf0.1 and a loss at sf1
+    * (3.62 → 4.52 s); the hint, which blocks the broadcast conversion,
+    * lost at sf0.1 (1.36 → 1.75 s).
     */
   def levelsBipartite(edges: DataFrame, sources: DataFrame,
-      maxDepth: Int, prePartition: Boolean = false,
-      shjHint: Boolean = false): DataFrame = {
+      maxDepth: Int): DataFrame = {
     require(maxDepth >= 0)
-    val e0 = edges.select(col("a"), col("b"))
-    // r11: pin the count and re-assert on the checkpoint (AQE hands
-    // localCheckpoints back as UnknownPartitioning — without the assert
-    // this flag never delivered the partitioning it promised; see
-    // GraftSqlBridge.assertHashPartitioned). Default stays false: BfsProbe
-    // measured the flag a wash/negative because AQE broadcasts the tiny
-    // frontier every round, so the edge side never shuffles anyway.
-    val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val e1 = (if (prePartition) e0.repartition(p, col("a")) else e0).localCheckpoint()
-    val e =
-      if (prePartition)
-        org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(e1, Seq("a"), p)
-      else e1
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     var visitedLeft = sources.select(col("v")).distinct()
       .withColumn("level", lit(0)).localCheckpoint()
     var visitedRight: DataFrame = null
@@ -131,10 +113,7 @@ object Bfs {
     var done = maxDepth == 0
     while (!done) {
       val fromLeft = d % 2 == 1
-      def f(key: String) = {
-        val r = frontier.withColumnRenamed("v", key)
-        if (shjHint) r.hint("shuffle_hash") else r
-      }
+      def f(key: String) = frontier.withColumnRenamed("v", key)
       val expanded =
         if (fromLeft) e.join(f("a"), "a").select(col("b").as("v"))
         else e.join(f("b"), "b").select(col("a").as("v"))

@@ -44,11 +44,14 @@ object KCore {
     * twice (probe + fallback). The degree bound is conservative (it
     * counts edges to just-peeled neighbours), so a fire is always safe
     * and a miss costs one metadata-cheap aggregation. Measured
-    * (graft.tools.KcProbe, interleaved one-JVM A/B at sf1/local[32]):
-    * old vs new guard is a wash there (4.92 s vs 4.88 s best) — the sf1
-    * cost floor is the oracle-pinned edge CONSTRUCTION (distinct → window
-    * → distinct over the co-supply pairs), not round count; the wider
-    * guard is kept for graphs whose tails shed slower. */
+    * (SCALING.md "r8 decision probes", kc row; interleaved A/B at
+    * sf1/local[32]): old vs new guard is a wash there (4.92 s vs 4.88 s
+    * best) — the sf1 cost floor is the oracle-pinned edge CONSTRUCTION
+    * (distinct → window → distinct over the co-supply pairs), not round
+    * count; the wider guard is kept for graphs whose tails shed slower.
+    * The guards are immutable constants (an r8 sys.props dial was read on
+    * every call, so a stray property set earlier in a shared JVM silently
+    * changed production guard geometry — ADVICE r8). */
   val LocalFinishNodes: Long = 32768L
   val LocalFinishEdges: Long = 1L << 20
 
@@ -59,12 +62,6 @@ object KCore {
     * the aggregate output (the peel profile — how fast the graph sheds its
     * periphery); [[coreVertices]] exposes the surviving set itself.
     *
-    * `localNodes` / `localEdges` override the tail-finish guard geometry —
-    * probes (graft.tools.KcProbe) pass alternatives EXPLICITLY; the
-    * production constants are immutable (the r8 sys.props dial was read
-    * on every call, so a stray property set earlier in a shared JVM
-    * silently changed production guard geometry — ADVICE r8).
-    *
     * `inputCheckpointed` (r11): caller guarantees `edges` is ALREADY a
     * long-typed localCheckpoint — skips the round-0 normalize+checkpoint
     * pass (ownership transfers: the peel releases it when superseded, as
@@ -74,8 +71,6 @@ object KCore {
     * threshold scalar and once inside round 1. */
   def peelRounds(edges: DataFrame, k: Int, rounds: Int,
       nVertices: Option[Long] = None,
-      localNodes: Long = LocalFinishNodes,
-      localEdges: Long = LocalFinishEdges,
       inputCheckpointed: Boolean = false,
       deg0: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
@@ -122,12 +117,12 @@ object KCore {
         // (0 peeled, cur remaining) — fill without running further jobs
         converged = true
         ((r + 1) to rounds).foreach(i => out += ((i.toLong, 0L, cur)))
-      } else if (r < rounds && cur <= localNodes &&
+      } else if (r < rounds && cur <= LocalFinishNodes &&
           // coalesce: a round that peels EVERY survivor leaves keep empty
           // and sum(dg) null — getLong on that is an NPE, and the empty
           // tail is exactly the cheapest local finish there is
           keep.agg(coalesce(sum(col("dg")), lit(0L)))
-            .head().getLong(0) / 2 <= localEdges) {
+            .head().getLong(0) / 2 <= LocalFinishEdges) {
         // guarded local tail finish: the degree-sum bound above PROVES the
         // induced edge set fits, so this collect is bounded before it
         // runs (primitive tuples — an untyped Row collect would

@@ -44,7 +44,8 @@ object LabelPropagation {
     * the join — which co-locates BOTH vote aggregations (clustering by u
     * satisfies the (u, label) grain too), where the r8 shape paid the sym
     * shuffle plus separate (u, label) and (u) exchanges. Measured
-    * interleaved-A/B (graft.tools.Lp1Probe, local[32]): see SCALING.md. */
+    * interleaved-A/B at local[32]: SCALING.md "r9 decision probes", lp1
+    * row. */
   def run(edges: DataFrame, rounds: Int): DataFrame =
     run(edges, rounds, prePartition = true)
 
@@ -60,8 +61,9 @@ object LabelPropagation {
     // WAS measured in r9 comes from the build geometry alone (one
     // exchange whose v-clustering co-supplies the (u, v) dedup). A
     // pinned-count + asserted variant that makes the original per-round
-    // claim real was probed r11 (Lp1Probe) and measured a LOSS at
-    // sf0.1/local[32] (2.04 → 2.96 s) and a wash at sf1 (3.68 → 4.04 s):
+    // claim real was probed r11 (OPTIMIZATION_r11.md §4) and measured a
+    // LOSS at sf0.1/local[32] (2.04 → 2.96 s) and a wash at sf1 (3.68 →
+    // 4.04 s):
     // unlike pr1's SHUFFLE_HASH-hinted joins, lp1's vote join can
     // AQE-broadcast the node-sized labels, so the edge side escapes the
     // per-round shuffle anyway and the pin only adds un-coalesced task

@@ -44,21 +44,14 @@ object PageRank {
     * appearing in any edge is present (degree ≥ 1 after symmetrisation, so
     * there are no dangling nodes by construction).
     */
-  /** `assumeDistinct`: caller guarantees `edges` is already duplicate-free
-    * AND no pair can equal a swapped pair (e.g. disjoint id spaces on the
-    * two sides, as in a bipartite graph) — skips the symmetrisation
-    * dedup. Under the single-exchange build the dedup is exchange-FREE
-    * (it runs on the repartition(b) clustering), so callers with raw
-    * duplicated edges should prefer passing them as-is over paying their
-    * own upstream distinct exchange (measured: Lp1Probe `pr1build`). */
-  /** Edge-row threshold for the pinned-partitioning upgrade below: the
-    * dial IS the measured crossover (graft.tools.Pr1Probe, interleaved,
-    * local[32], ranks asserted bit-identical): at sf0.1 (1.17M symmetric
-    * rows) pinning LOSES 0.609 → 0.804 s — un-coalesced 32-partition
-    * stages cost more task floor than the cheap per-round re-exchange of
-    * a small edge table — while at sf1 (11.7M rows) it WINS 2.173 →
-    * 1.654 s. 4M splits the probe points; above it the per-round exchange
-    * is the dominant term and only grows. */
+  /** Edge-row threshold for the pinned-partitioning upgrade below: the dial
+    * IS the measured crossover (SCALING.md "r11 decision probes", pr1 row;
+    * interleaved, local[32], ranks asserted bit-identical): at sf0.1 (1.17M
+    * symmetric rows) pinning LOSES 0.609 → 0.804 s — un-coalesced
+    * 32-partition stages cost more task floor than the cheap per-round
+    * re-exchange of a small edge table — while at sf1 (11.7M rows) it WINS
+    * 2.173 → 1.654 s. 4M splits the probe points; above it the per-round
+    * exchange is the dominant term and only grows. */
   val PinMinEdgeRows: Long = 4000000L
 
   /** `pinnedBuildPartitions` (r11, VERDICT r10 directive 6): when the
@@ -73,11 +66,15 @@ object PageRank {
     * sits directly under the join). Below the threshold the r10 bare
     * build is kept unchanged — the upgrade decision piggybacks on the
     * node-count aggregation the build already pays, so the small-scale
-    * path costs nothing extra. Bit-identical ranks asserted per round
-    * (Pr1Probe) and in ShapeEquivalenceSpec. */
+    * path costs nothing extra. Bit-identical ranks are asserted in
+    * ShapeEquivalenceSpec.
+    *
+    * The symmetrisation dedup runs exchange-free on the build's
+    * repartition(b) clustering, so callers should pass raw duplicated
+    * edges as-is rather than pay their own upstream distinct exchange
+    * (SCALING.md "r10 decision probes", pr1 build row). */
   def run(edges: DataFrame, iters: Int = 3, reliable: Boolean = false,
-      checkpointEvery: Int = 4, assumeDistinct: Boolean = false,
-      singleExchangeBuild: Boolean = true,
+      checkpointEvery: Int = 4,
       pinnedBuildPartitions: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val doubled = edges.select(col("a"), col("b"))
@@ -94,7 +91,7 @@ object PageRank {
     // made it ~3× slower than hash join + hash agg.)
     //
     // Build geometry (r10, the lp1/kc1 single-exchange construction;
-    // measured Lp1Probe `pr1build`, SCALING.md): ONE edge-wide
+    // OPTIMIZATION_r10.md §2): ONE edge-wide
     // repartition on the per-iteration join key `b` feeds EVERYTHING —
     // hash partitioning on b satisfies the (a, b) dedup clustering, the
     // degree aggregation's b grouping, and the degree join-back, so all
@@ -103,21 +100,10 @@ object PageRank {
     // the edge list either). The r9 shape paid deg's a-side exchange, the
     // join's two b-side exchanges, and a redundant repartition after a
     // join already keyed on b.
-    val symDeg0 =
-      if (singleExchangeBuild) {
-        val part = doubled.repartition(col("b"))
-        val sym = if (assumeDistinct) part else part.distinct()
-        val degB = sym.groupBy(col("b")).agg(count(lit(1)).as("deg_b"))
-        sym.join(degB.hint("shuffle_hash"), "b")
-          .select(col("a"), col("b"), col("deg_b"))
-      } else {
-        val bidir = if (assumeDistinct) doubled else doubled.distinct()
-        val deg = bidir.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
-        bidir
-          .join(deg.select(col("v").as("b"), col("deg").as("deg_b")), "b")
-          .select(col("a"), col("b"), col("deg_b"))
-          .repartition(col("b"))
-      }
+    val sym = doubled.repartition(col("b")).distinct()
+    val degB = sym.groupBy(col("b")).agg(count(lit(1)).as("deg_b"))
+    val symDeg0 = sym.join(degB.hint("shuffle_hash"), "b")
+      .select(col("a"), col("b"), col("deg_b"))
     val symDeg0Ck =
       if (reliable) symDeg0.checkpoint() else symDeg0.localCheckpoint()
     // map-side-combined distinct over the materialized edges; an O(1)
@@ -134,8 +120,7 @@ object PageRank {
     // iteration join re-exchanged the edge table; see scaladoc). Below
     // it, the r10 bare coalesced checkpoint is strictly cheaper.
     val symDeg =
-      if (singleExchangeBuild && pinnedBuildPartitions &&
-          edgeRows >= PinMinEdgeRows) {
+      if (pinnedBuildPartitions && edgeRows >= PinMinEdgeRows) {
         val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
         val rep = symDeg0Ck.repartition(p, col("b"))
         val c = if (reliable) rep.checkpoint() else rep.localCheckpoint()

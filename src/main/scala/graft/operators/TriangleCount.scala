@@ -37,11 +37,11 @@ object TriangleCount {
     * dst — stays exchange-free). Below the dial the r10 bare shape is
     * kept: there the joins broadcast the adjacency anyway, and the pin's
     * extra exchange + un-coalesced task floor measured a 2× LOSS at
-    * sf0.1/local[32] (Tc1Probe 0.254 → 0.457 s) against a 26% win at sf1
+    * sf0.1/local[32] (0.254 → 0.457 s) against a 26% win at sf1
     * (1.039 → 0.768 s, where big=true). The dial tying the pin to the
-    * SHJ path is exactly the condition under which the exchanges exist.
-    * Orientation semantics untouched; Tc1Probe asserts the one-row output
-    * identical. */
+    * SHJ path is exactly the condition under which the exchanges exist
+    * (OPTIMIZATION_r11.md §5). Orientation semantics untouched;
+    * ShapeEquivalenceSpec asserts the one-row output identical. */
   def run(edges: DataFrame, pinnedPartitions: Boolean = true): DataFrame = {
     val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // ids normalized to LONG at the boundary (the KCore discipline): key

@@ -25,9 +25,9 @@ object GraphQueries extends graft.core.QueryModule {
     // build dedups exchange-free on its repartition(b) clustering, so an
     // (a, b) distinct here would add a whole lineitem-wide exchange
     // barrier (and run its dedup agg twice through the symmetrisation
-    // union) for nothing — measured r10, Lp1Probe `pr1build` in
-    // SCALING.md: sf1 5.68 → 4.39 s. Bipartite ids (even customers / odd
-    // suppliers) keep a swapped pair from ever colliding with an
+    // union) for nothing — measured r10 (SCALING.md "r10 decision
+    // probes", pr1 build row): sf1 5.68 → 4.39 s. Bipartite ids (even
+    // customers / odd suppliers) keep a swapped pair from ever colliding with an
     // original, so the in-build dedup is exactly the upstream one.
     val edges = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir), $"l_orderkey" === $"o_orderkey")
@@ -164,14 +164,7 @@ object GraphQueries extends graft.core.QueryModule {
     */
   private val KcRounds = 6
   def kc1(s: SparkSession, dir: String): DataFrame =
-    kc1Guard(s, dir, graft.operators.KCore.LocalFinishNodes,
-      graft.operators.KCore.LocalFinishEdges)
-
-  /** kc1 with an explicit tail-finish guard geometry — the KcProbe entry
-    * (guard overrides travel as parameters, never shared-JVM sys.props). */
-  private[graft] def kc1Guard(s: SparkSession, dir: String,
-      localNodes: Long, localEdges: Long): DataFrame =
-    kc1Shape(s, dir, localNodes, localEdges, sharedBuild = true)
+    kc1Shape(s, dir, sharedBuild = true)
 
   /** r11 (VERDICT r10 directive 4): `sharedBuild = true` materializes the
     * canonical co-supply edge set and its degree table ONCE. The r10 shape
@@ -183,9 +176,10 @@ object GraphQueries extends graft.core.QueryModule {
     * feed the scalar AND the peel (ownership of the edge checkpoint
     * transfers to the peel; the degree checkpoint is released here once
     * the peel returns — the profile is driver-side rows by then).
-    * Kc1Probe asserts full-profile identity between the shapes. */
+    * Measured in OPTIMIZATION_r11.md §3 (sf1 local[32] 3.70 → 2.42 s);
+    * ShapeEquivalenceSpec pins full-profile identity between the shapes. */
   private[graft] def kc1Shape(s: SparkSession, dir: String,
-      localNodes: Long, localEdges: Long, sharedBuild: Boolean): DataFrame = {
+      sharedBuild: Boolean): DataFrame = {
     import s.implicits._
     if (sharedBuild) {
       val e = coSupplyEdges(s, dir)
@@ -196,7 +190,6 @@ object GraphQueries extends graft.core.QueryModule {
       val k = math.ceil(d0.getLong(0).toDouble / d0.getLong(1).toDouble).toLong + 1
       val profile = graft.operators.KCore.peelRounds(e, k.toInt, rounds = KcRounds,
         nVertices = Some(d0.getLong(1)),
-        localNodes = localNodes, localEdges = localEdges,
         inputCheckpointed = true, deg0 = Some(deg))
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(deg)
       profile
@@ -209,8 +202,7 @@ object GraphQueries extends graft.core.QueryModule {
       // d0's count IS the vertex count — hand it over so the peel doesn't
       // rerun the same edge-wide degree aggregation for its round-0 size
       graft.operators.KCore.peelRounds(e, k.toInt, rounds = KcRounds,
-        nVertices = Some(d0.getLong(1)),
-        localNodes = localNodes, localEdges = localEdges)
+        nVertices = Some(d0.getLong(1)))
     }
   }
 
@@ -256,7 +248,7 @@ object GraphQueries extends graft.core.QueryModule {
     * partitioning on p alone satisfies the distinct's (p, sup) clustering
     * and IS the window's required partitioning, where the distinct-induced
     * shape paid a second full exchange between them — measured interleaved
-    * one-JVM A/B (Lp1Probe `cosupply` mode, sf1, best-of-5): construction
+    * one-JVM A/B (sf1, best-of-5): construction
     * 1.62 → 1.09 s, the one-exchange arm winning every round. The final
     * (u, v) dedup exchange is unavoidable (different key). */
   private def coSupplyEdges(s: SparkSession, dir: String): DataFrame = {
@@ -419,34 +411,21 @@ object GraphQueries extends graft.core.QueryModule {
   // dictionary-sized broadcast; the only wide shuffle is the (a,b) pair
   // count. Top-20 by unrounded cosine (identical expression both
   // engines), keys as the tiebreak.
-  def cf1(s: SparkSession, dir: String): DataFrame =
-    cf1Shape(s, dir, "arrayckpt")
-
-  /** The cf1 pipeline with a named downstream shape — the probe entry
-    * (graft.relational.Cf1Probe interleaves the arms in one JVM).
-    *
-    * "arrayckpt" (ADOPTED, r9): the capped profile is kept in ARRAY form
-    * (one row per customer, ≤20 items) and localCheckpoint'ed, so the
-    * expensive TopKByScore UDAF aggregation runs exactly ONCE — the r8
-    * weak-row mechanism was that agg re-running for each of its three
-    * consumers (exchange reuse dedupes only the shuffle below it). The
-    * checkpoint is customer-COUNT-sized (≤20 longs per row), an order
-    * smaller than r8's exploded-form checkpoint, and the pair stage is
-    * mb1's chained double explode (codegen'd Generate, ≤C(20,2) pairs per
-    * customer) instead of a self-join — no join build, no second read of
-    * the profile exchange. Measured interleaved-A/B (r9 Cf1Probe,
-    * local[32], best-of-5/6, both arms sharing the single-exchange ul):
-    * sf0.1 1.15 vs 1.16 s (wash — the shared scan+shuffle dominates
-    * there), sf1 3.50 vs 4.53 s (the agg re-runs are the decade cost);
-    * vs the r8 record (two-exchange ul, lazy self-join) sf1 6.39 → 3.50 s
-    * and sf0.1 1.51 → 1.15 s. Identical output rows every round.
-    *
-    * "selfjoin-lazy" (the r8 shape, kept for the probe): exploded profile,
-    * lazy (agg re-runs ×3), co-partitioned self-join pair stage. The
-    * r8-measured negatives on OTHER arms (exploded-form checkpoint, HOF
-    * flatten/transform pair generation) are in SCALING.md's probe table. */
-  private[relational] def cf1Shape(s: SparkSession, dir: String,
-      shape: String): DataFrame = {
+  //
+  // The capped profile is kept in ARRAY form (one row per customer, ≤20
+  // items) and localCheckpoint'ed, so the expensive TopKByScore UDAF
+  // aggregation runs exactly ONCE — the r8 weak-row mechanism was that agg
+  // re-running for each of its three consumers (exchange reuse dedupes
+  // only the shuffle below it). The checkpoint is customer-COUNT-sized
+  // (≤20 longs per row), and the double-explode pair stage needs no join
+  // build and no second read of the profile exchange.
+  // Measured against the r8 lazy exploded-profile self-join in SCALING.md
+  // "r9 decision probes" (cf1 rows): sf0.1 1.15 vs 1.16 s (wash — the
+  // shared scan+shuffle dominates there), sf1 3.50 vs 4.53 s (the agg
+  // re-runs are the decade cost). The r8-measured negatives on other
+  // shapes (exploded-form checkpoint, HOF flatten/transform pair
+  // generation) are in "r8 decision probes".
+  def cf1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // ONE shuffle feeds BOTH aggregation grains: hash partitioning on
     // cust alone satisfies the (cust, item) clustering requirement too
@@ -463,27 +442,14 @@ object GraphQueries extends graft.core.QueryModule {
       .groupBy($"o_custkey".as("cust"), $"l_partkey".as("item"))
       .agg(count(lit(1)).as("cnt"))
     val topk = udaf(new graft.functions.Aggregators.TopKByScore(20))
-    val profArr = ul.groupBy($"cust").agg(topk($"cnt", $"item").as("items"))
-    val (supp, pairs) = shape match {
-      case "arrayckpt" =>
-        val prof = profArr.localCheckpoint()
-        val sp = prof.select(explode($"items").as("item"))
-          .groupBy($"item").agg(count(lit(1)).as("ni"))
-        val pr = prof.select(explode($"items").as("ia"), $"items")
-          .select($"ia", explode($"items").as("ib"))
-          .filter($"ia" < $"ib")
-          .groupBy($"ia", $"ib").agg(count(lit(1)).as("co"))
-        (sp, pr)
-      case "selfjoin-lazy" =>
-        val capped = profArr.select($"cust", explode($"items").as("item"))
-        val sp = capped.groupBy($"item").agg(count(lit(1)).as("ni"))
-        val pr = capped.toDF("cust", "ia")
-          .join(capped.toDF("cust", "ib"), "cust")
-          .filter($"ia" < $"ib")
-          .groupBy($"ia", $"ib").agg(count(lit(1)).as("co"))
-        (sp, pr)
-      case other => sys.error(s"unknown cf1 shape: $other")
-    }
+    val prof = ul.groupBy($"cust").agg(topk($"cnt", $"item").as("items"))
+      .localCheckpoint()
+    val supp = prof.select(explode($"items").as("item"))
+      .groupBy($"item").agg(count(lit(1)).as("ni"))
+    val pairs = prof.select(explode($"items").as("ia"), $"items")
+      .select($"ia", explode($"items").as("ib"))
+      .filter($"ia" < $"ib")
+      .groupBy($"ia", $"ib").agg(count(lit(1)).as("co"))
     pairs.filter($"co" >= 2)
       .join(broadcast(supp.toDF("ia", "na")), "ia")
       .join(broadcast(supp.toDF("ib", "nb")), "ib")

@@ -2,10 +2,11 @@ package graft.tools
 
 /** Section-safe writes to the shared evidence markdown (SCALING.md).
   *
-  * Three tools own one "## …" section each (ScalingProbe's decade,
-  * BandProbe's banding knee, StreamBench's streaming throughput); the
-  * original truncate-at-my-marker-and-append logic meant re-running any
-  * one of them silently deleted every section after its own. Each writer
+  * Two tools own one "## …" section each (ScalingProbe's decade,
+  * StreamBench's streaming throughput); the other sections, such as the
+  * decision-probe tables, are hand-kept records. The original
+  * truncate-at-my-marker-and-append logic meant re-running either tool
+  * silently deleted every section after its own. Each writer
   * now REPLACES exactly its own section (marker up to the next "## "
   * heading) and leaves the rest of the document alone, so the tools are
   * idempotent and order-independent.

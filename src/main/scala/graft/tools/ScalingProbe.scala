@@ -84,7 +84,7 @@ object ScalingProbe {
     }
     // the tri-SF table is the document HEAD; the decade is an owned "## "
     // section — both composed via MdSections so re-running either mode
-    // never deletes the OTHER tools' sections (BandProbe / StreamBench)
+    // never deletes the other sections (StreamBench's, the hand-kept records)
     val headText: Option[String] = if (decadeOnly) None else Some {
       val sb = new StringBuilder
       sb ++= "# SCALING — seconds at sf0.001 / 0.01 / 0.1 and the 0.01→0.1 log-log slope\n\n"

@@ -17,19 +17,6 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Release the storage blocks of a `localCheckpoint()`ed Dataset NOW.
-    *
-    * Iterative operators (connected components, BFS, k-core, PageRank)
-    * checkpoint each round and drop the reference to the previous round —
-    * but the superseded blocks stay in the BlockManager until a full GC
-    * lets the ContextCleaner notice the dead RDD. On a long-lived session
-    * (a 215-query bench JVM, or a week-old cluster app) that lag
-    * accumulates into executor-storage pressure that measurably degrades
-    * later queries (bfs1 timed 5.7s late in a bench run vs 1.7s fresh).
-    * The loop KNOWS the exact moment a round's blocks become garbage, so
-    * it should say so instead of waiting for the GC to guess. No-op for
-    * plans that aren't a materialized checkpoint (`LogicalRDD`).
-    */
   /** Drain the listener-bus queue (`private[spark]`): measurement tools
     * that read per-task metrics off a SparkListener must settle events
     * between samples or a slow bus bleeds one run's tasks into the next
@@ -53,7 +40,10 @@ object GraftSqlBridge {
     * SAFETY: the claim must be TRUE — asserting a partitioning the RDD
     * does not have silently mis-joins. Only call on a checkpoint whose
     * immediate upstream was `repartition(n, cols)` with the same n and
-    * column list. */
+    * column list. Throws `IllegalArgumentException` when `df` is not a
+    * bare checkpoint (its analyzed plan is not a `LogicalRDD`): there is
+    * no partitioning to stamp, and returning `df` unchanged would hide the
+    * caller's broken assumption. */
   def assertHashPartitioned(df: DataFrame, colNames: Seq[String],
       numPartitions: Int): DataFrame =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
@@ -64,9 +54,23 @@ object GraftSqlBridge {
           .HashPartitioning(attrs, numPartitions)
         ofRows(df.sparkSession, l.copy(outputPartitioning = part)(
           df.sparkSession.asInstanceOf[classic.SparkSession], None, None))
-      case _ => df
+      case other => throw new IllegalArgumentException(
+        s"assertHashPartitioned needs a checkpointed frame (LogicalRDD), got ${other.nodeName}")
     }
 
+  /** Release the storage blocks of a `localCheckpoint()`ed Dataset NOW.
+    *
+    * Iterative operators (connected components, BFS, k-core, PageRank)
+    * checkpoint each round and drop the reference to the previous round —
+    * but the superseded blocks stay in the BlockManager until a full GC
+    * lets the ContextCleaner notice the dead RDD. On a long-lived session
+    * (a 215-query bench JVM, or a week-old cluster app) that lag
+    * accumulates into executor-storage pressure that measurably degrades
+    * later queries (bfs1 timed 5.7s late in a bench run vs 1.7s fresh).
+    * The loop KNOWS the exact moment a round's blocks become garbage, so
+    * it should say so instead of waiting for the GC to guess. No-op for
+    * plans that aren't a materialized checkpoint (`LogicalRDD`).
+    */
   def unpersistCheckpoint(df: DataFrame): Unit =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)

@@ -1,5 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
+import org.apache.spark.sql.execution.SparkPlan
+
 /** Plan-shape audit: the 100 TB posture claims (broadcast dims, pushed
   * filters, no cartesian products) asserted against the actual physical
   * plans at sf0.001.
@@ -13,6 +16,22 @@ class PlanAuditSpec extends SparkTestBase {
     df.collect() // materialize so AQE settles on the final plan
     df.queryExecution.executedPlan.toString
   }
+
+  /** Every registered query's initial physical plan (no execution), or the
+    * error building it threw, recorded per query so one unreadable input
+    * cannot abort a sweep and hide the audit of every other query. An
+    * error still fails the sweep: it is listed with the other findings.
+    * Iterative operators run actions while BUILDING the frame, so c1/c2
+    * are left to their own specs. */
+  private def sweepPlans(): Seq[(String, Either[String, SparkPlan])] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => name != "c1_dedup_clusters" && name != "c2_dedup_droplist" }
+      .map { case (name, fn) =>
+        name -> (try Right(fn(spark, dir).queryExecution.executedPlan)
+          catch { case NonFatal(e) =>
+            Left(s"threw ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+          })
+      }
 
   private def formatted(name: String): String = {
     val df = SparkEntry.queries(name)(spark, dir)
@@ -155,19 +174,17 @@ class PlanAuditSpec extends SparkTestBase {
       "a15_marginalised_stat", // 1-row marginalisation constant
       "pca1_reconstruction_audit", // 4 local flag rows × 1-row exact-trace broadcast
       "pq1_product_quant")   // 1-row centroid + distance-table broadcast
-    // iterative operators run actions while BUILDING the frame — profile
-    // their final stage only (loop internals are audited by their specs)
-    val violations = for {
-      (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-      if name != "c1_dedup_clusters" && name != "c2_dedup_droplist"
-      p = fn(spark, dir).queryExecution.executedPlan.toString
-      flag <- Seq(
-        if ("Window \\[[^\\]]*\\], \\[\\]".r.findFirstIn(p).isDefined)
-          Some("empty-partition window") else None,
-        if (!intendedCross(name) &&
-          (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")))
-          Some("unplanned cross join") else None).flatten
-    } yield s"$name: $flag"
+    val violations = sweepPlans().flatMap {
+      case (name, Left(err)) => Seq(s"$name: $err")
+      case (name, Right(plan)) =>
+        val p = plan.toString
+        Seq(
+          if ("Window \\[[^\\]]*\\], \\[\\]".r.findFirstIn(p).isDefined)
+            Some("empty-partition window") else None,
+          if (!intendedCross(name) &&
+            (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")))
+            Some("unplanned cross join") else None).flatten.map(flag => s"$name: $flag")
+    }
     assert(violations.isEmpty, violations.mkString("; "))
   }
 
@@ -179,13 +196,13 @@ class PlanAuditSpec extends SparkTestBase {
     // expressions codegen-capable — an interpreted expression in a hot
     // loop silently costs a JIT-compiled inner loop at 100 TB.
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    val bad = for {
-      (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-      if name != "c1_dedup_clusters" && name != "c2_dedup_droplist"
-      node <- fn(spark, dir).queryExecution.executedPlan
-      expr <- node.expressions
-      ce <- expr.collect { case e: CodegenFallback => e.getClass.getSimpleName }
-    } yield s"$name: $ce"
+    val bad = sweepPlans().flatMap {
+      case (name, Left(err)) => Seq(s"$name: $err")
+      case (name, Right(plan)) =>
+        plan.flatMap(_.expressions.flatMap(_.collect {
+          case e: CodegenFallback => s"$name: ${e.getClass.getSimpleName}"
+        }))
+    }
     assert(bad.isEmpty, bad.distinct.mkString("; "))
   }
 

@@ -1,30 +1,38 @@
 package graft.llm
 
 import graft.SparkTestBase
+import graft.core.{ScalarSub, Tables}
+import graft.text.TextOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
-/** r10 plan-shape adoptions must be RESULT-invariant: each rewrite below
-  * changed only the physical geometry (co-partitioned df join-back for nv1,
-  * array-side zip_with bigrams for t10/t11, the probed-but-unadopted
-  * prePartition/shjHint flags for bipartite BFS), so the shipped shape and
-  * its probe arm must produce byte-identical rows. The interleaved probes
-  * (Nv1Probe, T10Probe, BfsProbe) assert this at sf0.1/sf1; this spec pins
-  * it in the suite at the fixture SF so a future edit to either arm that
-  * drifts the semantics fails fast.
+/** Adopted plan-shape rewrites must be RESULT-invariant: each case below
+  * compares a shipped shape with the shape it replaced (or with its
+  * gated-off arm), and each changed only the physical geometry, so both
+  * must produce byte-identical rows at the fixture SF. A future edit that
+  * drifts either arm's semantics fails fast here.
   *
-  * r11 adds the shared-stage rewrites (t7/t8/t9/t10/t11/dsir1/kc1 — every
-  * coarser aggregate derived from the finest-grain count table of ONE
-  * exchange; exact integer identities, probed by SharedStageProbe and
-  * Kc1Probe) and the two-level IVF assignment's invariants (flat
-  * degeneracy at gate-SF k, fine-stage join-strategy independence; the
-  * k > threshold geometry is oracle-proven, not identity-proven — see
-  * Ivf2Probe).
+  * r10: the co-partitioned df join-back for nv1 and array-side zip_with
+  * bigrams for t10/t11 (OPTIMIZATION_r10.md §5, §6). r11: kc1's shared
+  * edge/degree build (exact integer identities), the two-level IVF
+  * assignment's invariants (flat degeneracy at gate-SF k, fine-stage
+  * join-strategy independence; the k > threshold geometry is
+  * oracle-proven, not identity-proven), and the pinned checkpoint
+  * partitioning of pr1, tc1 and lp1 (OPTIMIZATION_r11.md §1-§5). The
+  * t7-t11, dsir1 and bfs arms, losses never shipped (OPTIMIZATION_r11.md
+  * §6, SCALING.md), are rebuilt here and compared with the shipped output.
   */
 class ShapeEquivalenceSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
+
+  /** The (doc_id, pos, tok, lang) token stream the text queries read. */
+  private def toks: DataFrame = TextOps.docTokens(Tables.documents(spark, sf),
+    col("doc_id"), col("text"), keep = Seq(col("lang")))
 
   test("nv1: co-partitioned shuffle-hash df shape == agg+join-back shape") {
     val a = rows(QualityQueries.nv1Shape(spark, sf, copartition = false))
@@ -44,50 +52,134 @@ class ShapeEquivalenceSpec extends SparkTestBase {
     assert(a.nonEmpty && a == b)
   }
 
-  // ---- r11 shared-stage rewrites (exact sum-over-finer-grain identities)
+  // ---- r11 shared-stage arms (exact sum-over-finer-grain identities)
 
   test("t9: shared (doc_id, tok) stage == independent aggregations") {
-    val a = rows(LlmQueries.t9Shape(spark, sf, sharedStage = false))
-    val b = rows(LlmQueries.t9Shape(spark, sf, sharedStage = true))
-    assert(a.nonEmpty && a == b)
+    import spark.implicits._
+    val dc = toks.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
+    val nDocs = dc.agg(countDistinct($"doc_id").as("n_docs"))
+    val dfT = dc.groupBy($"tok").agg(count(lit(1)).as("dft"))
+    val w = Window.partitionBy($"doc_id").orderBy($"tfidf".desc, $"tok")
+    val shared = dc.join(broadcast(dfT), "tok")
+      .transform(ScalarSub.withScalars(_, nDocs))
+      .withColumn("tfidf", round(
+        $"c".cast("double") * log($"n_docs".cast("double") / $"dft".cast("double")), 6))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter($"rk" <= 3 && $"tfidf" > 0)
+      .select($"doc_id", $"rk", $"tok", $"tfidf").orderBy($"doc_id", $"rk")
+    val a = rows(LlmQueries.t9(spark, sf))
+    assert(a.nonEmpty && a == rows(shared))
   }
 
   test("t8: unigram table derived from (doc_id, tok) counts == direct") {
-    val a = rows(LlmQueries.t8Shape(spark, sf, sharedStage = false))
-    val b = rows(LlmQueries.t8Shape(spark, sf, sharedStage = true))
-    assert(a.nonEmpty && a == b)
+    import spark.implicits._
+    val dc = toks.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
+    val tokC = dc.groupBy($"tok").agg(sum($"c").as("ct"))
+    val derived = dc.join(broadcast(tokC), "tok")
+      .transform(ScalarSub.withScalars(_, tokC.agg(sum($"ct").as("total"))))
+      .withColumn("term", $"c".cast("double") *
+        log($"ct".cast("double") / $"total".cast("double")))
+      .groupBy($"doc_id")
+      .agg(sum($"c").as("n_tokens"),
+        sort_array(collect_list(struct($"tok", $"term"))).as("ts"))
+      .withColumn("lp", aggregate($"ts", lit(0.0), (acc, x) => acc + x("term")))
+      .withColumn("avg_logprob", round($"lp" / $"n_tokens".cast("double"), 6))
+      .select($"doc_id", $"n_tokens", $"avg_logprob", $"avg_logprob" >= -3.5)
+      .orderBy($"doc_id")
+    val a = rows(LlmQueries.t8(spark, sf))
+    assert(a.nonEmpty && a == rows(derived))
   }
 
   test("t10: global bigram counts derived from per-doc counts == direct") {
-    val a = rows(LlmQueries.t10Shape(spark, sf, arrayzip = true, derivedCounts = false))
-    val b = rows(LlmQueries.t10Shape(spark, sf, arrayzip = true, derivedCounts = true))
-    assert(a.nonEmpty && a == b)
+    import spark.implicits._
+    val dc = LlmQueries.bigrams(spark, sf, arrayzip = true)
+      .groupBy($"doc_id", $"w1", $"w2").agg(count(lit(1)).as("c"))
+    val bc = dc.groupBy($"w1", $"w2").agg(sum($"c").as("cb"))
+    val uc = bc.groupBy($"w1").agg(sum($"cb").as("cu"))
+    val derived = dc.join(broadcast(bc), Seq("w1", "w2"))
+      .join(broadcast(uc), Seq("w1"))
+      .transform(ScalarSub.withScalars(_, toks.agg(countDistinct($"tok").as("v"))))
+      .withColumn("term", $"c".cast("double") *
+        log(($"cb" + 1).cast("double") / ($"cu" + $"v").cast("double")))
+      .groupBy($"doc_id")
+      .agg(sum($"c").as("n_bigrams"),
+        sort_array(collect_list(struct($"w1", $"w2", $"term"))).as("ts"))
+      .withColumn("lp", aggregate($"ts", lit(0.0), (acc, x) => acc + x("term")))
+      .select($"doc_id", $"n_bigrams", round($"lp" / $"n_bigrams".cast("double"), 6))
+      .orderBy($"doc_id")
+    val a = rows(LlmQueries.t10(spark, sf))
+    assert(a.nonEmpty && a == rows(derived))
   }
 
   test("t11: nb derived from pre-filter count table == direct stream count") {
-    val a = rows(LlmQueries.t11Shape(spark, sf, arrayzip = true, derivedNb = false))
-    val b = rows(LlmQueries.t11Shape(spark, sf, arrayzip = true, derivedNb = true))
-    assert(a.nonEmpty && a == b)
+    import spark.implicits._
+    val bc = LlmQueries.bigrams(spark, sf, arrayzip = true)
+      .groupBy($"w1", $"w2").agg(count(lit(1)).as("cab"))
+    val ug = toks.groupBy($"tok").agg(count(lit(1)).as("cu"))
+    val derived = bc.filter($"cab" >= 5)
+      .join(broadcast(ug.select($"tok".as("w1"), $"cu".as("ca"))), "w1")
+      .join(broadcast(ug.select($"tok".as("w2"), $"cu".as("cb"))), "w2")
+      .transform(ScalarSub.withScalars(_, toks.agg(count(lit(1)).as("nt"))))
+      .transform(ScalarSub.withScalars(_,
+        bc.agg(coalesce(sum($"cab"), lit(0L)).as("nb"))))
+      .select($"w1", $"w2", $"cab",
+        round(log($"cab".cast("double") * $"nt".cast("double") * $"nt".cast("double") /
+          ($"nb".cast("double") * $"ca".cast("double") * $"cb".cast("double"))), 6)
+          .as("pmi"))
+      .orderBy($"pmi".desc, $"w1", $"w2").limit(20)
+    val a = rows(LlmQueries.t11(spark, sf))
+    assert(a.nonEmpty && a == rows(derived))
   }
 
   test("t7: one co-partitioning exchange == three independent exchanges") {
-    val a = rows(LlmQueries.t7Shape(spark, sf, copartition = false))
-    val b = rows(LlmQueries.t7Shape(spark, sf, copartition = true))
-    assert(a.nonEmpty && a == b)
+    import spark.implicits._
+    val pt = toks.repartition($"doc_id")
+    val w = Window.partitionBy($"doc_id").orderBy($"pos")
+    val bgStats = pt.withColumn("nxt", lead($"tok", 1).over(w))
+      .filter($"nxt".isNotNull)
+      .groupBy($"doc_id", concat_ws("_", $"tok", $"nxt")).agg(count(lit(1)).as("c"))
+      .groupBy($"doc_id").agg(max($"c").as("top_bg"), sum($"c").as("n_bg"))
+    val copart = pt.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
+      .groupBy($"doc_id").agg(max($"c").as("top_tok"), sum($"c").as("n_tok"),
+        count(lit(1)).as("n_distinct"))
+      .join(bgStats, Seq("doc_id"), "left")
+      .withColumn("tt", $"top_tok".cast("double") / $"n_tok".cast("double"))
+      .withColumn("tb",
+        coalesce($"top_bg".cast("double") / $"n_bg".cast("double"), lit(0.0)))
+      .select($"doc_id", $"tt", $"tb",
+        ($"n_tok" - $"n_distinct").cast("double") / $"n_tok".cast("double"),
+        $"tt" <= 0.2 && $"tb" <= 0.2)
+      .orderBy($"doc_id")
+    val a = rows(LlmQueries.t7(spark, sf))
+    assert(a.nonEmpty && a == rows(copart))
   }
 
   test("dsir1 scored: shared (doc_id, lang, tok) stage == three passes") {
-    import org.apache.spark.sql.functions.col
-    def arm(s: Boolean) = rows(
-      QualityQueries.dsirScoredShape(spark, sf, sharedStage = s).orderBy(col("doc_id")))
-    val a = arm(false); val b = arm(true)
-    assert(a.nonEmpty && a == b)
+    import spark.implicits._
+    val dcl = toks.groupBy($"doc_id", $"lang", $"tok").agg(count(lit(1)).as("c"))
+    val rawC = dcl.groupBy($"tok").agg(sum($"c").as("cr0"))
+    val tgtC = dcl.filter($"lang" === "en").groupBy($"tok").agg(sum($"c").as("ct0"))
+    val model = rawC.join(tgtC, Seq("tok"), "left")
+      .select($"tok", ($"cr0" + 1L).as("cr"), (coalesce($"ct0", lit(0L)) + 1L).as("ct"))
+    val shared = dcl.select($"doc_id", $"tok", $"c")
+      .join(broadcast(model), "tok")
+      .transform(ScalarSub.withScalars(_,
+        model.agg(sum($"cr").as("dr"), sum($"ct").as("dt"))))
+      .withColumn("term", $"c".cast("double") *
+        log(($"ct".cast("double") * $"dr".cast("double")) /
+            ($"cr".cast("double") * $"dt".cast("double"))))
+      .groupBy($"doc_id")
+      .agg(sum($"c").as("n_tokens"),
+        sort_array(collect_list(struct($"tok", $"term"))).as("ts"))
+      .select($"doc_id", $"n_tokens",
+        aggregate($"ts", lit(0.0), (acc, x) => acc + x("term")))
+    val a = rows(QualityQueries.dsirScored(spark, sf).orderBy($"doc_id"))
+    assert(a.nonEmpty && a == rows(shared.orderBy($"doc_id")))
   }
 
   test("kc1: shared edge/degree materialization == rebuilt-per-consumer") {
-    import graft.operators.KCore
-    def arm(s: Boolean) = rows(graft.relational.GraphQueries.kc1Shape(
-      spark, sf, KCore.LocalFinishNodes, KCore.LocalFinishEdges, sharedBuild = s))
+    def arm(s: Boolean) = rows(
+      graft.relational.GraphQueries.kc1Shape(spark, sf, sharedBuild = s))
     val a = arm(false); val b = arm(true)
     assert(a.nonEmpty && a == b)
   }
@@ -158,18 +250,38 @@ class ShapeEquivalenceSpec extends SparkTestBase {
 
   test("bfs bipartite: prePartition/shjHint arms == shipped levels") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val e = graft.core.Tables.lineitem(spark, sf)
-      .join(graft.core.Tables.orders(spark, sf), $"l_orderkey" === $"o_orderkey")
+    val edges = Tables.lineitem(spark, sf)
+      .join(Tables.orders(spark, sf), $"l_orderkey" === $"o_orderkey")
       .select(($"o_custkey" * 2).as("a"), ($"l_suppkey" * 2 + 1).as("b"))
-    val src = graft.core.Tables.customer(spark, sf)
+    val src = Tables.customer(spark, sf)
       .filter($"c_nationkey" === 0).select(($"c_custkey" * 2).as("v"))
-    def lv(p: Boolean, h: Boolean): Seq[String] =
-      rows(graft.operators.Bfs.levelsBipartite(e, src, maxDepth = 3, p, h)
-        .orderBy($"level", $"v"))
-    val shipped = lv(false, false)
+    // the never-shipped arms: edges checkpointed hash-partitioned on the
+    // odd-round probe key `a`; optionally a SHUFFLE_HASH hint on the frontier
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def arm(shjHint: Boolean): Seq[String] = {
+      val e = org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(
+        edges.repartition(p, $"a").localCheckpoint(), Seq("a"), p)
+      val side = Array[DataFrame](
+        src.distinct().withColumn("level", lit(0)).localCheckpoint(), null)
+      var frontier = side(0).select($"v")
+      var d = 1
+      while (d <= 3 && !frontier.isEmpty) {
+        val (k, o) = if (d % 2 == 1) ("a", "b") else ("b", "a")
+        val f = frontier.withColumnRenamed("v", k)
+        val fresh = e.join(if (shjHint) f.hint("shuffle_hash") else f, k)
+          .select(col(o).as("v")).distinct()
+        val same = side(d % 2)
+        val next = (if (same == null) fresh else fresh.join(same, Seq("v"), "left_anti"))
+          .withColumn("level", lit(d)).localCheckpoint()
+        side(d % 2) = if (same == null) next else same.union(next)
+        frontier = next.select($"v"); d += 1
+      }
+      rows(side.filter(_ != null).reduce(_ union _).orderBy($"level", $"v"))
+    }
+    val shipped = rows(graft.operators.Bfs.levelsBipartite(edges, src, maxDepth = 3)
+      .orderBy($"level", $"v"))
     assert(shipped.nonEmpty)
-    assert(lv(true, false) == shipped)
-    assert(lv(true, true) == shipped)
+    assert(arm(shjHint = false) == shipped)
+    assert(arm(shjHint = true) == shipped)
   }
 }

@@ -67,4 +67,19 @@ class CheckpointHygieneSpec extends SparkTestBase {
     val leaked = (persisted -- before).size
     assert(leaked <= 1, s"leaked $leaked checkpoint RDDs")
   }
+
+  test("assertHashPartitioned rejects a frame that is not a bare checkpoint") {
+    import org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned
+    val session = spark
+    import session.implicits._
+    val df = (1L to 100L).map(i => (i, i % 7)).toDF("a", "b")
+    val lazyPart = df.repartition(4, $"b")
+    intercept[IllegalArgumentException](assertHashPartitioned(lazyPart, Seq("b"), 4))
+    // a projection over a checkpoint is no longer the checkpoint's plan
+    val ck = lazyPart.localCheckpoint()
+    intercept[IllegalArgumentException](
+      assertHashPartitioned(ck.select($"b"), Seq("b"), 4))
+    assert(assertHashPartitioned(ck, Seq("b"), 4).count() == 100L)
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(ck)
+  }
 }
