@@ -46,6 +46,9 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+if not oracle:
+    # a run that checked nothing is a failure, never "0/0 passed"
+    sys.exit(f"{outdir}/oracle_sql.json is empty: no query to check")
 
 CAPPED = object()  # sentinel: the wall cap fired for this statement
 
@@ -247,26 +250,16 @@ for name, sql in sorted(oracle.items()):
               for c in got.columns if str(got[c].dtype) != str(exp[c].dtype)]
         suffix = f"  TYPEWARN {'; '.join(tw)}" if tw else ""
         print(f"PASS {name} ({len(got)} rows){oracle_kind}{suffix}")
-# Queries declared in SparkEntry.queries but WITHOUT an oracle get the
-# driver's weaker rows-only check; here we at least require non-thrown
-# output so a broken non-oracle query cannot hide.
+# Every registered query carries an oracle, so a name in queries.json
+# that is missing from oracle_sql.json vanished between the two dumps.
 total = len(oracle)
 qlist = f"{outdir}/queries.json"
 if os.path.exists(qlist):
     for name in json.load(open(qlist)):
-        if name in oracle:
-            continue
-        total += 1
-        err = error_marker(name)
-        if err is not None:
-            print(f"FAIL {name}: (no oracle) spark query threw: {err}"); fails += 1
-            mark(name, "fail", f"(no oracle) spark threw: {err[:300]}")
-        elif not glob.glob(f"{outdir}/{name}/*.parquet"):
-            print(f"FAIL {name}: (no oracle) no spark output"); fails += 1
-            mark(name, "fail", "(no oracle) no spark output")
-        else:
-            print(f"PASS {name} (rows-only: no oracle)")
-            mark(name, "pass_rows_only", "no oracle")
+        if name not in oracle:
+            total += 1
+            print(f"FAIL {name}: no oracle SQL"); fails += 1
+            mark(name, "fail", "no oracle SQL")
 
 capped = sorted(n for n, r in report.items() if r["status"] == "capped")
 # A cap may only EXCLUDE queries explicitly allowlisted via --allow-cap

@@ -147,8 +147,10 @@ object Bench {
         "t3_token_stats", // documents
         "s1_ann_brute_topk", // embeddings
         "a4_model_counts") // events
-      .foreach(name => SparkEntry.queries.get(name)
-        .foreach(fn => try fn(spark, sfDir).collect() catch { case _: Throwable => () }))
+      .foreach { name =>
+        val fn = SparkEntry.queries(name)
+        try fn(spark, sfDir).collect() catch { case _: Throwable => () }
+      }
 
     val sentinelBase = calibrateSentinel()
     // 2× floor, with a 5 ms absolute allowance so scheduler jitter on a
@@ -164,11 +166,12 @@ object Bench {
     val CleanTarget = 3   // min over 3 vetted samples
     val MaxRuns = 6       // query executions, vetted or not
     val MaxPreWaits = 10  // hot pre-sentinel back-offs (500 ms each)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.registry.sortBy(_.name).map { q =>
+      val name = q.name
       var err: Option[String] = None
       def run(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).collect() } catch { case e: Throwable =>
+        try { q.run(spark, sfDir).collect() } catch { case e: Throwable =>
           err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
         }
         (System.nanoTime() - t0) / 1e9
@@ -270,13 +273,20 @@ object Bench {
     }.mkString("{\n", ",\n", "\n}")
     val payload =
       f"""{"sf": "$sfDir", "n_queries": ${results.size}, "total_best_sec": $total%.3f, "protocol": "sentinel+taskcpu-vetted best-of-$CleanTarget", "sentinel_base_sec": $sentinelBase%.4f, "cpu_ratio_thresh": $CpuRatioThresh, "cpu_ratio_median": $ratioMedian%.3f, "uniform_steal": $uniformSteal, "host_contended": $hostContended, "n_err": $nErr, "contended_queries": ${contended.map(Verify.jsonQ).mkString("[", ",", "]")}, "queries": $detail}"""
-    val fname = f"BENCH_DETAIL_r$round%02d.json"
     // Refusal path: a run with errors or a contended host may not become
     // the round's record.
-    val target =
-      if (nErr > 0) fname + ".err"
-      else if (hostContended) fname + ".contended"
-      else fname
+    val suffix =
+      if (nErr > 0) ".json.err"
+      else if (hostContended) ".json.contended"
+      else ".json"
+    // Never overwrite an existing record: a repeat run of the same round
+    // goes to the first free BENCH_DETAIL_rNN.<k>.json.
+    val base = f"BENCH_DETAIL_r$round%02d"
+    val target = (Iterator.single(base + suffix) ++
+      Iterator.from(1).map(k => s"$base.$k$suffix"))
+      .find(f => !new java.io.File(f).exists).get
+    if (target != base + suffix)
+      System.err.println(s"[bench] ${base + suffix} exists; writing $target")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(target), payload)
     if (nErr > 0)
       System.err.println(s"[bench] $nErr queries FAILED " +

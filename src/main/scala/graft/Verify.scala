@@ -5,7 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Queries run 4 at
   * a time — the Spark scheduler is thread-safe and the local cluster is
   * otherwise underutilized by small single-query jobs. */
@@ -26,18 +26,22 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name subset (fast iteration
-    // on new queries without paying for the whole inventory)
+    // on new queries without paying for the whole inventory). An unknown
+    // name is an error: a typo must not select nothing and pass 0/0.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    val selected = SparkEntry.registry.filter(q => only.forall(_.contains(q.name)))
     val spark = graft.core.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val work = selected.map { case (name, fn) =>
+    val work = selected.map { q =>
+      val name = q.name
       Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           // A failed query must produce a RED row, never a missing one
@@ -54,28 +58,26 @@ object Verify {
     }
     Await.result(Future.sequence(work), Duration.Inf)
     pool.shutdown()
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${jsonQ(k)}: ${jsonQ(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Full declared-query inventory, so a checker can distinguish "query
-    // has no oracle (rows-only check)" from "query silently vanished".
+    def obj(kv: Seq[(String, String)]) =
+      kv.sortBy(_._1).map { case (k, v) => s"${jsonQ(k)}: ${jsonQ(v)}" }
+        .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(selected.map(q => q.name -> q.oracleSql)))
+    // Full declared-query inventory, so a checker can tell a query that
+    // silently vanished from the oracle map.
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      selected.map(_._1).sorted.map(jsonQ).mkString("[", ",", "]"))
+      selected.map(_.name).sorted.map(jsonQ).mkString("[", ",", "]"))
     // Iterative (non-recursive) oracle formulations for the queries whose
     // recursive-CTE oracles are sf1-infeasible in DuckDB — selfcheck.py
     // switches to these when a wall cap is in force (see
     // LlmQueries.ccIterPairsSql). The SQL is authored next to the
     // recursive forms it mirrors; this file is just the transport.
     val iter = graft.llm.LlmQueries
-    def obj(m: Map[String, String]) =
-      m.toSeq.sortBy(_._1).map { case (k, v) => s"${jsonQ(k)}: ${jsonQ(v)}" }
-        .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_iter.json"),
       s"""{"pairs": ${jsonQ(iter.ccIterPairsSql)}, """ +
-        s""""loop": ${obj(iter.ccIterLoop)}, """ +
-        s""""finals": ${obj(iter.ccIterFinals.filter { case (k, _) =>
-          only.forall(_.contains(k)) })}, "max_rounds": 200}""")
+        s""""loop": ${obj(iter.ccIterLoop.toSeq)}, """ +
+        s""""finals": ${obj(selected.flatMap(q => q.iterOracle.map(q.name -> _)))}, """ +
+        s""""max_rounds": 200}""")
     spark.stop()
   }
 }

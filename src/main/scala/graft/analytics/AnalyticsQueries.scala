@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.Tables
+import graft.core.{Query, Tables}
 
 /** SURVEY §2 chain-analytics / window / set-op operators instantiated over
   * the driver's `events`/`documents` tables so each has a DuckDB oracle.
@@ -2818,149 +2818,76 @@ object AnalyticsQueries extends graft.core.QueryModule {
       |  (abs(est - exact) <= 2.0 * w + 1e-9) AS within_sketch_bound
       |FROM hit ORDER BY event_type, q""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bf1_bloom_membership" -> bf1,
-    "qsk1_quantile_sketch" -> qsk1,
-    "rfm1_rfm_segmentation" -> rfm1,
-    "hll1_hyperloglog" -> hll1,
-    "path1_user_journeys" -> path1,
-    "gini1_activity_concentration" -> gini1,
-    "rb1_mad_outliers" -> rb1,
-    "cms1_countmin_freq" -> cms1,
-    "w10_winsorized_stats" -> w10,
-    "im1_incremental_agg" -> im1,
-    "scd1_scd2_intervals" -> scd1,
-    "gf1_gap_fill" -> gf1,
-    "zo1_zorder_locality" -> zo1,
-    "z1_event_anomaly" -> z1,
-    "reg1_linear_trend" -> reg1,
-    "mk1_markov_transitions" -> mk1,
-    "seq1_skip_bigrams" -> seq1,
-    "blb1_little_bootstraps" -> blb1,
-    "mw1_mann_whitney" -> mw1,
-    "cuped1_variance_reduction" -> cuped1,
-    "dp1_noisy_release" -> dp1,
-    "ac1_daily_autocorrelation" -> ac1,
-    "sax1_series_symbolization" -> sax1,
-    "hll2_sketch_rollup" -> hll2,
-    "ewma1_trend_smoothing" -> ewma1,
-    "at1_attribution" -> at1,
-    "au1_rolling_active_users" -> au1,
-    "au2_rolling_sketch_mau" -> au2,
-    "cp1_cusum_changepoint" -> cp1,
-    "th1_theta_sketch_ops" -> th1,
-    "fc1_naive_backtest" -> fc1,
-    "ia1_interarrival_profile" -> ia1,
-    "w13_running_ltv" -> w13,
-    "up1_user_profile" -> up1,
-    "hm1_dow_hour_heatmap" -> hm1,
-    "ab1_ab_test_zscore" -> ab1,
-    "rt2_cohort_ltv" -> rt2,
-    "twa1_time_weighted" -> twa1,
-    "o1_ohlc_bars" -> o1,
-    "fn1_funnel_steps" -> fn1,
-    "rt1_retention_cohorts" -> rt1,
-    "sk1_sketches" -> sketches,
-    "sk2_sketch_bounds" -> sk2,
-    "sm1_bottomk_sample" -> sm1,
-    "w9_percent_rank" -> w9,
-    "ao_asof_join" -> asof,
-    "ao3_asof_native" -> asofNative,
-    "ao2_asof_forward" -> asofForward,
-    "x1_powerlaw_psd" -> x1,
-    "st2_sliding_window" -> sliding,
-    "a4_model_counts" -> a4,
-    "a5_log_bayes_factors" -> a5,
-    "a8_posterior_summary" -> a8,
-    "w4_burnin_thinning" -> w4,
-    "w3_earliest_split" -> w3,
-    "a10_rms_stats" -> a10,
-    "a11_weighted_mean" -> a11,
-    "a12_equal_count_bins" -> a12,
-    "a13_fixed_width_bins" -> a13,
-    "a15_marginalised_stat" -> a15,
-    "j8_hd_pair_correlation" -> j8,
-    "j5_unpivot_long" -> j5,
-    "a14_distinct_backends" -> a14,
-    "e1_intersect_users" -> e1,
-    "e5_except_pairs" -> e5,
-    "f4_flag_selection" -> f4,
-    "f10_regex_filter" -> f10,
-    "w7_argmax_per_group" -> w7,
-    "w_sessionize" -> sessionize,
-    "st_tumbling_window" -> tumbling,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "bf1_bloom_membership" -> bf1Sql,
-    "qsk1_quantile_sketch" -> qsk1Sql,
-    "rfm1_rfm_segmentation" -> rfm1Sql,
-    "hll1_hyperloglog" -> hll1Sql,
-    "path1_user_journeys" -> path1Sql,
-    "gini1_activity_concentration" -> gini1Sql,
-    "rb1_mad_outliers" -> rb1Sql,
-    "cms1_countmin_freq" -> cms1Sql,
-    "w10_winsorized_stats" -> w10Sql,
-    "im1_incremental_agg" -> im1Sql,
-    "scd1_scd2_intervals" -> scd1Sql,
-    "gf1_gap_fill" -> gf1Sql,
-    "zo1_zorder_locality" -> zo1Sql,
-    "z1_event_anomaly" -> z1Sql,
-    "reg1_linear_trend" -> reg1Sql,
-    "mk1_markov_transitions" -> mk1Sql,
-    "seq1_skip_bigrams" -> seq1Sql,
-    "blb1_little_bootstraps" -> blb1Sql,
-    "mw1_mann_whitney" -> mw1Sql,
-    "cuped1_variance_reduction" -> cuped1Sql,
-    "dp1_noisy_release" -> dp1Sql,
-    "ac1_daily_autocorrelation" -> ac1Sql,
-    "sax1_series_symbolization" -> sax1Sql,
-    "hll2_sketch_rollup" -> hll2Sql,
-    "ewma1_trend_smoothing" -> ewma1Sql,
-    "at1_attribution" -> at1Sql,
-    "au1_rolling_active_users" -> au1Sql,
-    "au2_rolling_sketch_mau" -> au2Sql,
-    "cp1_cusum_changepoint" -> cp1Sql,
-    "th1_theta_sketch_ops" -> th1Sql,
-    "fc1_naive_backtest" -> fc1Sql,
-    "ia1_interarrival_profile" -> ia1Sql,
-    "w13_running_ltv" -> w13Sql,
-    "up1_user_profile" -> up1Sql,
-    "hm1_dow_hour_heatmap" -> hm1Sql,
-    "ab1_ab_test_zscore" -> ab1Sql,
-    "rt2_cohort_ltv" -> rt2Sql,
-    "twa1_time_weighted" -> twa1Sql,
-    "o1_ohlc_bars" -> o1Sql,
-    "fn1_funnel_steps" -> fn1Sql,
-    "rt1_retention_cohorts" -> rt1Sql,
-    "sk1_sketches" -> sketchesSql,
-    "sk2_sketch_bounds" -> sk2Sql,
-    "sm1_bottomk_sample" -> sm1Sql,
-    "w9_percent_rank" -> w9Sql,
-    "ao_asof_join" -> asofSql,
-    "ao3_asof_native" -> asofSql,
-    "ao2_asof_forward" -> asofForwardSql,
-    "x1_powerlaw_psd" -> x1Sql,
-    "st2_sliding_window" -> slidingSql,
-    "a4_model_counts" -> a4Sql,
-    "a5_log_bayes_factors" -> a5Sql,
-    "a8_posterior_summary" -> a8Sql,
-    "w4_burnin_thinning" -> w4Sql,
-    "w3_earliest_split" -> w3Sql,
-    "a10_rms_stats" -> a10Sql,
-    "a11_weighted_mean" -> a11Sql,
-    "a12_equal_count_bins" -> a12Sql,
-    "a13_fixed_width_bins" -> a13Sql,
-    "a15_marginalised_stat" -> a15Sql,
-    "j8_hd_pair_correlation" -> j8Sql,
-    "j5_unpivot_long" -> j5Sql,
-    "a14_distinct_backends" -> a14Sql,
-    "e1_intersect_users" -> e1Sql,
-    "e5_except_pairs" -> e5Sql,
-    "f4_flag_selection" -> f4Sql,
-    "f10_regex_filter" -> f10Sql,
-    "w7_argmax_per_group" -> w7Sql,
-    "w_sessionize" -> sessionizeSql,
-    "st_tumbling_window" -> tumblingSql,
+  val registry: Seq[Query] = Seq(
+    Query("bf1_bloom_membership", bf1, bf1Sql),
+    Query("qsk1_quantile_sketch", qsk1, qsk1Sql),
+    Query("rfm1_rfm_segmentation", rfm1, rfm1Sql),
+    Query("hll1_hyperloglog", hll1, hll1Sql),
+    Query("path1_user_journeys", path1, path1Sql),
+    Query("gini1_activity_concentration", gini1, gini1Sql),
+    Query("rb1_mad_outliers", rb1, rb1Sql),
+    Query("cms1_countmin_freq", cms1, cms1Sql),
+    Query("w10_winsorized_stats", w10, w10Sql),
+    Query("im1_incremental_agg", im1, im1Sql),
+    Query("scd1_scd2_intervals", scd1, scd1Sql),
+    Query("gf1_gap_fill", gf1, gf1Sql),
+    Query("zo1_zorder_locality", zo1, zo1Sql),
+    Query("z1_event_anomaly", z1, z1Sql),
+    Query("reg1_linear_trend", reg1, reg1Sql),
+    Query("mk1_markov_transitions", mk1, mk1Sql),
+    Query("seq1_skip_bigrams", seq1, seq1Sql),
+    Query("blb1_little_bootstraps", blb1, blb1Sql),
+    Query("mw1_mann_whitney", mw1, mw1Sql),
+    Query("cuped1_variance_reduction", cuped1, cuped1Sql),
+    Query("dp1_noisy_release", dp1, dp1Sql),
+    Query("ac1_daily_autocorrelation", ac1, ac1Sql),
+    Query("sax1_series_symbolization", sax1, sax1Sql),
+    Query("hll2_sketch_rollup", hll2, hll2Sql),
+    Query("ewma1_trend_smoothing", ewma1, ewma1Sql),
+    Query("at1_attribution", at1, at1Sql),
+    Query("au1_rolling_active_users", au1, au1Sql),
+    Query("au2_rolling_sketch_mau", au2, au2Sql),
+    Query("cp1_cusum_changepoint", cp1, cp1Sql),
+    Query("th1_theta_sketch_ops", th1, th1Sql),
+    Query("fc1_naive_backtest", fc1, fc1Sql),
+    Query("ia1_interarrival_profile", ia1, ia1Sql),
+    Query("w13_running_ltv", w13, w13Sql),
+    Query("up1_user_profile", up1, up1Sql),
+    Query("hm1_dow_hour_heatmap", hm1, hm1Sql),
+    Query("ab1_ab_test_zscore", ab1, ab1Sql),
+    Query("rt2_cohort_ltv", rt2, rt2Sql),
+    Query("twa1_time_weighted", twa1, twa1Sql),
+    Query("o1_ohlc_bars", o1, o1Sql),
+    Query("fn1_funnel_steps", fn1, fn1Sql),
+    Query("rt1_retention_cohorts", rt1, rt1Sql),
+    Query("sk1_sketches", sketches, sketchesSql),
+    Query("sk2_sketch_bounds", sk2, sk2Sql),
+    Query("sm1_bottomk_sample", sm1, sm1Sql),
+    Query("w9_percent_rank", w9, w9Sql),
+    Query("ao_asof_join", asof, asofSql),
+    Query("ao3_asof_native", asofNative, asofSql),
+    Query("ao2_asof_forward", asofForward, asofForwardSql),
+    Query("x1_powerlaw_psd", x1, x1Sql),
+    Query("st2_sliding_window", sliding, slidingSql),
+    Query("a4_model_counts", a4, a4Sql),
+    Query("a5_log_bayes_factors", a5, a5Sql),
+    Query("a8_posterior_summary", a8, a8Sql),
+    Query("w4_burnin_thinning", w4, w4Sql),
+    Query("w3_earliest_split", w3, w3Sql),
+    Query("a10_rms_stats", a10, a10Sql),
+    Query("a11_weighted_mean", a11, a11Sql),
+    Query("a12_equal_count_bins", a12, a12Sql),
+    Query("a13_fixed_width_bins", a13, a13Sql),
+    Query("a15_marginalised_stat", a15, a15Sql),
+    Query("j8_hd_pair_correlation", j8, j8Sql),
+    Query("j5_unpivot_long", j5, j5Sql),
+    Query("a14_distinct_backends", a14, a14Sql),
+    Query("e1_intersect_users", e1, e1Sql),
+    Query("e5_except_pairs", e5, e5Sql),
+    Query("f4_flag_selection", f4, f4Sql),
+    Query("f10_regex_filter", f10, f10Sql),
+    Query("w7_argmax_per_group", w7, w7Sql),
+    Query("w_sessionize", sessionize, sessionizeSql),
+    Query("st_tumbling_window", tumbling, tumblingSql),
   )
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.operators.GlobalRank
 import graft.text.TextOps
 
@@ -456,29 +456,16 @@ object CorpusQueries extends graft.core.QueryModule {
       |  TRUE AS order_free
       |FROM h GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "msf1_multiset_fingerprint" -> msf1,
-    "tm1_training_manifest" -> tm1,
-    "mf1_manifest_fingerprint" -> mf1,
-    "mkl1_merkle_tree" -> mkl1,
-    "pack1_sequence_packing" -> pack1,
-    "mix1_domain_mixture" -> mix1,
-    "mix2_quota_sample" -> mix2,
-    "mix3_epoch_schedule" -> mix3,
-    "ord1_global_shuffle" -> ord1,
-    "ch1_token_windows" -> ch1,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "msf1_multiset_fingerprint" -> msf1Sql,
-    "tm1_training_manifest" -> tm1Sql,
-    "mf1_manifest_fingerprint" -> mf1Sql,
-    "mkl1_merkle_tree" -> mkl1Sql,
-    "pack1_sequence_packing" -> pack1Sql,
-    "mix1_domain_mixture" -> mix1Sql,
-    "mix2_quota_sample" -> mix2Sql,
-    "mix3_epoch_schedule" -> mix3Sql,
-    "ord1_global_shuffle" -> ord1Sql,
-    "ch1_token_windows" -> ch1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("msf1_multiset_fingerprint", msf1, msf1Sql),
+    Query("tm1_training_manifest", tm1, tm1Sql),
+    Query("mf1_manifest_fingerprint", mf1, mf1Sql),
+    Query("mkl1_merkle_tree", mkl1, mkl1Sql),
+    Query("pack1_sequence_packing", pack1, pack1Sql),
+    Query("mix1_domain_mixture", mix1, mix1Sql),
+    Query("mix2_quota_sample", mix2, mix2Sql),
+    Query("mix3_epoch_schedule", mix3, mix3Sql),
+    Query("ord1_global_shuffle", ord1, ord1Sql),
+    Query("ch1_token_windows", ch1, ch1Sql),
   )
 }

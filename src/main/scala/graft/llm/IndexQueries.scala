@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.text.TextOps
 
 /** Tokenizer-training, indexing, and change-data queries — the remaining
@@ -479,29 +479,16 @@ object IndexQueries extends graft.core.QueryModule {
       |JOIN pt c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2 AND c.tok = top.w3
       |ORDER BY a.doc_id, start_pos""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bpe1_pair_counts" -> bpe1,
-    "bpe2_merge_train" -> bpe2,
-    "bpe3_batched_train" -> bpe3,
-    "bpe4_encode" -> bpe4,
-    "ii1_inverted_index" -> ii1,
-    "cdc1_merge_snapshot" -> cdc1,
-    "spl1_hash_split" -> spl1,
-    "diff1_snapshot_diff" -> diff1,
-    "wsm1_weighted_sample" -> wsm1,
-    "pi1_phrase_search" -> pi1,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "bpe1_pair_counts" -> bpe1Sql,
-    "bpe2_merge_train" -> bpe2Sql,
-    "bpe3_batched_train" -> bpe3Sql,
-    "bpe4_encode" -> bpe4Sql,
-    "ii1_inverted_index" -> ii1Sql,
-    "cdc1_merge_snapshot" -> cdc1Sql,
-    "spl1_hash_split" -> spl1Sql,
-    "diff1_snapshot_diff" -> diff1Sql,
-    "wsm1_weighted_sample" -> wsm1Sql,
-    "pi1_phrase_search" -> pi1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("bpe1_pair_counts", bpe1, bpe1Sql),
+    Query("bpe2_merge_train", bpe2, bpe2Sql),
+    Query("bpe3_batched_train", bpe3, bpe3Sql),
+    Query("bpe4_encode", bpe4, bpe4Sql),
+    Query("ii1_inverted_index", ii1, ii1Sql),
+    Query("cdc1_merge_snapshot", cdc1, cdc1Sql),
+    Query("spl1_hash_split", spl1, spl1Sql),
+    Query("diff1_snapshot_diff", diff1, diff1Sql),
+    Query("wsm1_weighted_sample", wsm1, wsm1Sql),
+    Query("pi1_phrase_search", pi1, pi1Sql),
   )
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.text.TextOps
 import graft.similarity.VectorOps
 
@@ -784,7 +784,7 @@ object LlmQueries extends graft.core.QueryModule {
     * no procedural SQL): it materializes `cc_pairs` via [[ccIterPairsSql]],
     * derives `cc_edges`/`cc_comp`, re-runs the relaxation round until the
     * changed-row count hits zero, then evaluates each query's
-    * [[ccIterFinals]] SELECT against the converged `cc_comp` — whose
+    * `Query.iterOracle` SELECT against the converged `cc_comp` — whose
     * schema (v, root) and contents equal the recursive oracle's `comp` by
     * the fixpoint argument above (and empirically: both formulations are
     * hash-checked against Spark at the sf0.01 gate). The SQL lives HERE,
@@ -818,19 +818,17 @@ object LlmQueries extends graft.core.QueryModule {
       "SELECT COUNT(*) FROM cc_next n JOIN cc_comp c USING (v) WHERE n.root <> c.root",
   )
 
-  /** Final SELECTs over the converged `cc_comp(v, root)` — same
-    * expressions as the recursive oracles' tails, comp → cc_comp. */
-  val ccIterFinals: Map[String, String] = Map(
-    "c1_dedup_clusters" ->
-      """SELECT root AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_docs, MAX(v) AS max_id
-        |FROM cc_comp GROUP BY root HAVING COUNT(*) >= 2
-        |ORDER BY cluster_id""".stripMargin,
-    "c2_dedup_droplist" ->
-      """SELECT v AS doc_id, root AS cluster_id FROM cc_comp WHERE root <> v
-        |ORDER BY doc_id""".stripMargin,
-    "cs1_canonical_selection" ->
-      s"""WITH ${cs1Tail("cc_comp")}""".stripMargin,
-  )
+  // Final SELECTs over the converged `cc_comp(v, root)`: each query's
+  // `iterOracle`, the same expressions as its recursive oracle's tail,
+  // comp → cc_comp.
+  val c1IterSql: String =
+    """SELECT root AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_docs, MAX(v) AS max_id
+      |FROM cc_comp GROUP BY root HAVING COUNT(*) >= 2
+      |ORDER BY cluster_id""".stripMargin
+  val c2IterSql: String =
+    """SELECT v AS doc_id, root AS cluster_id FROM cc_comp WHERE root <> v
+      |ORDER BY doc_id""".stripMargin
+  val cs1IterSql: String = s"""WITH ${cs1Tail("cc_comp")}""".stripMargin
 
   // D5: embedding-cosine near-dup pairs within a coarse partition (label =
   // IVF cell) — unrolled dot products for cross-engine bit-exactness.
@@ -3172,123 +3170,63 @@ object LlmQueries extends graft.core.QueryModule {
        |WHERE CAST(c AS DOUBLE) / CAST(na.ns + nb.ns - c AS DOUBLE) >= $D9Tau
        |ORDER BY da, db""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "knn1_knn_graph" -> knn1,
-    "cs1_canonical_selection" -> cs1,
-    "sem1_semantic_dedup" -> sem1,
-    "d9_prefix_filter_join" -> d9,
-    "d1_exact_dedup" -> d1,
-    "d2_minhash_lsh" -> d2,
-    "d3_simhash" -> d3,
-    "d6_simhash_hamming" -> d6,
-    "d6c_simhash_capped" -> d6c,
-    "d6b_simhash128_scale" -> d6b,
-    "c1_dedup_clusters" -> c1,
-    "c2_dedup_droplist" -> c2,
-    "m2_chunk_sample" -> m2,
-    "d4_ngram_jaccard" -> d4,
-    "d5_embedding_neardup" -> d5,
-    "s1_ann_brute_topk" -> s1,
-    "s2_ann_lsh_topk" -> s2,
-    "s3_ann_ivf_topk" -> s3,
-    "r1_ann_recall" -> r1,
-    "r2_ivf_recall" -> r2,
-    "s5_ann_ivf_multiprobe" -> s5,
-    "qz1_int8_quant_ann" -> qz1,
-    "pq1_product_quant" -> pq1,
-    "ivfpq1_ivf_adc_topk" -> ivfpq1,
-    "emb2_matryoshka_recall" -> emb2,
-    "ndcg1_lsh_ranking_quality" -> ndcg1,
-    "bp1_boilerplate_ngrams" -> bp1,
-    "t12_vocab_coverage" -> t12,
-    "rp1_random_projection" -> rp1,
-    "t5_regex_tokens" -> t5,
-    "hof1_array_stats" -> hof1,
-    "ev1_embedding_moments" -> ev1,
-    "ec1_embedding_gram" -> ec1,
-    "pca1_reconstruction_audit" -> pca1,
-    "t1_langid" -> t1,
-    "t2_quality_score" -> t2,
-    "t3_token_stats" -> t3,
-    "t4_fingerprint" -> t4,
-    "fh1_feature_hashing" -> fh1,
-    "cl1_text_clean" -> cl1,
-    "t6_bm25_score" -> t6,
-    "rrf1_hybrid_fusion" -> rrf1,
-    "spm1_doc_topic_scores" -> spm1,
-    "vp1_vocab_prune" -> vp1,
-    "pad1_batch_pad_audit" -> pad1,
-    "t7_repetition_filter" -> t7,
-    "t8_unigram_logprob" -> t8,
-    "t9_tfidf_topterms" -> t9,
-    "t10_bigram_logprob" -> t10,
-    "t11_pmi_collocations" -> t11,
-    "s4_kmeans_update" -> s4,
-    "hh1_heavy_hitters" -> hh1,
-    "d7_decontaminate" -> d7,
-    "d8_incremental_dedup" -> d8,
-    "ds1_dup_spans" -> ds1,
-    "sm2_stratified_sample" -> sm2,
-    "m1_binary_meta" -> m1,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "knn1_knn_graph" -> knn1Sql,
-    "cs1_canonical_selection" -> cs1Sql,
-    "sem1_semantic_dedup" -> sem1Sql,
-    "d9_prefix_filter_join" -> d9Sql,
-    "d1_exact_dedup" -> d1Sql,
-    "d2_minhash_lsh" -> d2Sql,
-    "d3_simhash" -> d3Sql,
-    "d6_simhash_hamming" -> d6Sql,
-    "d6c_simhash_capped" -> d6cSql,
-    "d6b_simhash128_scale" -> d6bSql,
-    "c1_dedup_clusters" -> c1Sql,
-    "c2_dedup_droplist" -> c2Sql,
-    "m2_chunk_sample" -> m2Sql,
-    "d4_ngram_jaccard" -> d4Sql,
-    "d5_embedding_neardup" -> d5Sql,
-    "s1_ann_brute_topk" -> s1Sql,
-    "s2_ann_lsh_topk" -> s2Sql,
-    "s3_ann_ivf_topk" -> s3Sql,
-    "r1_ann_recall" -> r1Sql,
-    "r2_ivf_recall" -> r2Sql,
-    "s5_ann_ivf_multiprobe" -> s5Sql,
-    "qz1_int8_quant_ann" -> qz1Sql,
-    "pq1_product_quant" -> pq1Sql,
-    "ivfpq1_ivf_adc_topk" -> ivfpq1Sql,
-    "emb2_matryoshka_recall" -> emb2Sql,
-    "ndcg1_lsh_ranking_quality" -> ndcg1Sql,
-    "bp1_boilerplate_ngrams" -> bp1Sql,
-    "t12_vocab_coverage" -> t12Sql,
-    "rp1_random_projection" -> rp1Sql,
-    "t5_regex_tokens" -> t5Sql,
-    "hof1_array_stats" -> hof1Sql,
-    "ev1_embedding_moments" -> ev1Sql,
-    "ec1_embedding_gram" -> ec1Sql,
-    "pca1_reconstruction_audit" -> pca1Sql,
-    "t1_langid" -> t1Sql,
-    "t2_quality_score" -> t2Sql,
-    "t3_token_stats" -> t3Sql,
-    "t4_fingerprint" -> t4Sql,
-    "fh1_feature_hashing" -> fh1Sql,
-    "cl1_text_clean" -> cl1Sql,
-    "t6_bm25_score" -> t6Sql,
-    "rrf1_hybrid_fusion" -> rrf1Sql,
-    "spm1_doc_topic_scores" -> spm1Sql,
-    "vp1_vocab_prune" -> vp1Sql,
-    "pad1_batch_pad_audit" -> pad1Sql,
-    "t7_repetition_filter" -> t7Sql,
-    "t8_unigram_logprob" -> t8Sql,
-    "t9_tfidf_topterms" -> t9Sql,
-    "t10_bigram_logprob" -> t10Sql,
-    "t11_pmi_collocations" -> t11Sql,
-    "s4_kmeans_update" -> s4Sql,
-    "hh1_heavy_hitters" -> hh1Sql,
-    "d7_decontaminate" -> d7Sql,
-    "d8_incremental_dedup" -> d8Sql,
-    "ds1_dup_spans" -> ds1Sql,
-    "sm2_stratified_sample" -> sm2Sql,
-    "m1_binary_meta" -> m1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("knn1_knn_graph", knn1, knn1Sql),
+    Query("cs1_canonical_selection", cs1, cs1Sql, Some(cs1IterSql)),
+    Query("sem1_semantic_dedup", sem1, sem1Sql),
+    Query("d9_prefix_filter_join", d9, d9Sql),
+    Query("d1_exact_dedup", d1, d1Sql),
+    Query("d2_minhash_lsh", d2, d2Sql),
+    Query("d3_simhash", d3, d3Sql),
+    Query("d6_simhash_hamming", d6, d6Sql),
+    Query("d6c_simhash_capped", d6c, d6cSql),
+    Query("d6b_simhash128_scale", d6b, d6bSql),
+    Query("c1_dedup_clusters", c1, c1Sql, Some(c1IterSql)),
+    Query("c2_dedup_droplist", c2, c2Sql, Some(c2IterSql)),
+    Query("m2_chunk_sample", m2, m2Sql),
+    Query("d4_ngram_jaccard", d4, d4Sql),
+    Query("d5_embedding_neardup", d5, d5Sql),
+    Query("s1_ann_brute_topk", s1, s1Sql),
+    Query("s2_ann_lsh_topk", s2, s2Sql),
+    Query("s3_ann_ivf_topk", s3, s3Sql),
+    Query("r1_ann_recall", r1, r1Sql),
+    Query("r2_ivf_recall", r2, r2Sql),
+    Query("s5_ann_ivf_multiprobe", s5, s5Sql),
+    Query("qz1_int8_quant_ann", qz1, qz1Sql),
+    Query("pq1_product_quant", pq1, pq1Sql),
+    Query("ivfpq1_ivf_adc_topk", ivfpq1, ivfpq1Sql),
+    Query("emb2_matryoshka_recall", emb2, emb2Sql),
+    Query("ndcg1_lsh_ranking_quality", ndcg1, ndcg1Sql),
+    Query("bp1_boilerplate_ngrams", bp1, bp1Sql),
+    Query("t12_vocab_coverage", t12, t12Sql),
+    Query("rp1_random_projection", rp1, rp1Sql),
+    Query("t5_regex_tokens", t5, t5Sql),
+    Query("hof1_array_stats", hof1, hof1Sql),
+    Query("ev1_embedding_moments", ev1, ev1Sql),
+    Query("ec1_embedding_gram", ec1, ec1Sql),
+    Query("pca1_reconstruction_audit", pca1, pca1Sql),
+    Query("t1_langid", t1, t1Sql),
+    Query("t2_quality_score", t2, t2Sql),
+    Query("t3_token_stats", t3, t3Sql),
+    Query("t4_fingerprint", t4, t4Sql),
+    Query("fh1_feature_hashing", fh1, fh1Sql),
+    Query("cl1_text_clean", cl1, cl1Sql),
+    Query("t6_bm25_score", t6, t6Sql),
+    Query("rrf1_hybrid_fusion", rrf1, rrf1Sql),
+    Query("spm1_doc_topic_scores", spm1, spm1Sql),
+    Query("vp1_vocab_prune", vp1, vp1Sql),
+    Query("pad1_batch_pad_audit", pad1, pad1Sql),
+    Query("t7_repetition_filter", t7, t7Sql),
+    Query("t8_unigram_logprob", t8, t8Sql),
+    Query("t9_tfidf_topterms", t9, t9Sql),
+    Query("t10_bigram_logprob", t10, t10Sql),
+    Query("t11_pmi_collocations", t11, t11Sql),
+    Query("s4_kmeans_update", s4, s4Sql),
+    Query("hh1_heavy_hitters", hh1, hh1Sql),
+    Query("d7_decontaminate", d7, d7Sql),
+    Query("d8_incremental_dedup", d8, d8Sql),
+    Query("ds1_dup_spans", ds1, ds1Sql),
+    Query("sm2_stratified_sample", sm2, sm2Sql),
+    Query("m1_binary_meta", m1, m1Sql),
   )
 }

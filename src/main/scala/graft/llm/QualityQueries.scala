@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.text.TextOps
 
 /** Corpus-quality and data-selection operators — the filtering stage a
@@ -717,29 +717,16 @@ object QualityQueries extends graft.core.QueryModule {
       |  ROUND(-lp, 6) >= 2.0 AS keep
       |FROM e ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ent1_char_entropy" -> ent1,
-    "gq1_gopher_rules" -> gq1,
-    "pii1_redaction" -> pii1,
-    "dsir1_importance_resample" -> dsir1,
-    "ld1_segment_dedup" -> ld1,
-    "lr1_quality_classifier" -> lr1,
-    "nv1_novelty_score" -> nv1,
-    "cdk1_content_chunking" -> cdk1,
-    "qf1_adaptive_floor" -> qf1,
-    "cal1_score_calibration" -> cal1,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "ent1_char_entropy" -> ent1Sql,
-    "gq1_gopher_rules" -> gq1Sql,
-    "pii1_redaction" -> pii1Sql,
-    "dsir1_importance_resample" -> dsir1Sql,
-    "ld1_segment_dedup" -> ld1Sql,
-    "lr1_quality_classifier" -> lr1Sql,
-    "nv1_novelty_score" -> nv1Sql,
-    "cdk1_content_chunking" -> cdk1Sql,
-    "qf1_adaptive_floor" -> qf1Sql,
-    "cal1_score_calibration" -> cal1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("ent1_char_entropy", ent1, ent1Sql),
+    Query("gq1_gopher_rules", gq1, gq1Sql),
+    Query("pii1_redaction", pii1, pii1Sql),
+    Query("dsir1_importance_resample", dsir1, dsir1Sql),
+    Query("ld1_segment_dedup", ld1, ld1Sql),
+    Query("lr1_quality_classifier", lr1, lr1Sql),
+    Query("nv1_novelty_score", nv1, nv1Sql),
+    Query("cdk1_content_chunking", cdk1, cdk1Sql),
+    Query("qf1_adaptive_floor", qf1, qf1Sql),
+    Query("cal1_score_calibration", cal1, cal1Sql),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Oracle, Tables}
+import graft.core.{Oracle, Query, Tables}
 
 /** Window-frame / grouping-set / global-span extras rounding out the
   * relational surface (SURVEY W/A2 + north-star additions the reference
@@ -949,62 +949,33 @@ object Extras extends graft.core.QueryModule {
       .mkString("", "\nUNION ALL\n", "\nORDER BY fk_edge")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ri1_referential_integrity" -> ri1,
-    "snb1_sorted_neighborhood" -> snb1,
-    "dl1_damerau_linkage" -> dl1,
-    "skew1_key_skew_audit" -> skew1,
-    "sky1_pareto_front" -> sky1,
-    "ka1_k_anonymity" -> ka1,
-    "w12_range_frame" -> w12,
-    "w11_rank_family" -> w11,
-    "pf1_column_profile" -> pf1,
-    "pf2_numeric_profile" -> pf2,
-    "dq1_quality_audit" -> dq1,
-    "fz1_fuzzy_match" -> fz1,
-    "tk1_topk_per_group" -> tk1,
-    "sj1_salted_join" -> sj1,
-    "g2_pivot" -> g2,
-    "w5_rolling_avg" -> w5,
-    "g1_rollup" -> g1,
-    "g4_cube" -> g4,
-    "a2_global_tspan" -> a2,
-    "q8_market_share" -> q8,
-    "rj1_range_join_count" -> rj1,
-    "rj2_band_join_native" -> rj2,
-    "ams1_f2_sketch" -> ams1,
-    "oi1_interval_overlap" -> oi1,
-    "oi2_interval_native" -> oi2,
-    "w8_lead_lag" -> w8,
-    "g3_grouping_sets" -> g3,
-  )
-  val oracles: Map[String, String] = Map(
-    "ri1_referential_integrity" -> ri1Sql,
-    "snb1_sorted_neighborhood" -> snb1Sql,
-    "dl1_damerau_linkage" -> dl1Sql,
-    "skew1_key_skew_audit" -> skew1Sql,
-    "sky1_pareto_front" -> sky1Sql,
-    "ka1_k_anonymity" -> ka1Sql,
-    "w12_range_frame" -> w12Sql,
-    "w11_rank_family" -> w11Sql,
-    "pf1_column_profile" -> pf1Sql,
-    "pf2_numeric_profile" -> pf2Sql,
-    "dq1_quality_audit" -> dq1Sql,
-    "fz1_fuzzy_match" -> fz1Sql,
-    "tk1_topk_per_group" -> tk1Sql,
-    "sj1_salted_join" -> sj1Sql,
-    "g2_pivot" -> g2Sql,
-    "w5_rolling_avg" -> w5Sql,
-    "g1_rollup" -> g1Sql,
-    "g4_cube" -> g4Sql,
-    "a2_global_tspan" -> a2Sql,
-    "q8_market_share" -> q8Sql,
-    "rj1_range_join_count" -> rj1Sql,
-    "rj2_band_join_native" -> rj2Sql,
-    "ams1_f2_sketch" -> ams1Sql,
-    "oi1_interval_overlap" -> oi1Sql,
-    "oi2_interval_native" -> oi2Sql,
-    "w8_lead_lag" -> w8Sql,
-    "g3_grouping_sets" -> g3Sql,
+  val registry: Seq[Query] = Seq(
+    Query("ri1_referential_integrity", ri1, ri1Sql),
+    Query("snb1_sorted_neighborhood", snb1, snb1Sql),
+    Query("dl1_damerau_linkage", dl1, dl1Sql),
+    Query("skew1_key_skew_audit", skew1, skew1Sql),
+    Query("sky1_pareto_front", sky1, sky1Sql),
+    Query("ka1_k_anonymity", ka1, ka1Sql),
+    Query("w12_range_frame", w12, w12Sql),
+    Query("w11_rank_family", w11, w11Sql),
+    Query("pf1_column_profile", pf1, pf1Sql),
+    Query("pf2_numeric_profile", pf2, pf2Sql),
+    Query("dq1_quality_audit", dq1, dq1Sql),
+    Query("fz1_fuzzy_match", fz1, fz1Sql),
+    Query("tk1_topk_per_group", tk1, tk1Sql),
+    Query("sj1_salted_join", sj1, sj1Sql),
+    Query("g2_pivot", g2, g2Sql),
+    Query("w5_rolling_avg", w5, w5Sql),
+    Query("g1_rollup", g1, g1Sql),
+    Query("g4_cube", g4, g4Sql),
+    Query("a2_global_tspan", a2, a2Sql),
+    Query("q8_market_share", q8, q8Sql),
+    Query("rj1_range_join_count", rj1, rj1Sql),
+    Query("rj2_band_join_native", rj2, rj2Sql),
+    Query("ams1_f2_sketch", ams1, ams1Sql),
+    Query("oi1_interval_overlap", oi1, oi1Sql),
+    Query("oi2_interval_native", oi2, oi2Sql),
+    Query("w8_lead_lag", w8, w8Sql),
+    Query("g3_grouping_sets", g3, g3Sql),
   )
 }

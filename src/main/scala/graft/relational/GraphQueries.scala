@@ -2,7 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Query, Tables}
 import graft.operators.{BloomSemiJoin, PageRank}
 
 /** Graph analytics + runtime-filter queries over the star schema —
@@ -483,25 +483,14 @@ object GraphQueries extends graft.core.QueryModule {
       |SELECT ia AS item_a, ib AS item_b, co, na, nb, round(cosr, 9) AS cosine
       |FROM scored ORDER BY cosr DESC, ia, ib LIMIT 20""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bfs1_reachability_levels" -> bfs1,
-    "cf1_item_similarity" -> cf1,
-    "mb1_market_basket" -> mb1,
-    "pr1_pagerank" -> pr1,
-    "bf1_bloom_semijoin" -> bf1,
-    "tc1_triangle_count" -> tc1,
-    "kc1_kcore_peel" -> kc1,
-    "lp1_label_propagation" -> lp1,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "bfs1_reachability_levels" -> bfs1Sql,
-    "cf1_item_similarity" -> cf1Sql,
-    "mb1_market_basket" -> mb1Sql,
-    "pr1_pagerank" -> pr1Sql,
-    "bf1_bloom_semijoin" -> bf1Sql,
-    "tc1_triangle_count" -> tc1Sql,
-    "kc1_kcore_peel" -> kc1Sql,
-    "lp1_label_propagation" -> lp1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("bfs1_reachability_levels", bfs1, bfs1Sql),
+    Query("cf1_item_similarity", cf1, cf1Sql),
+    Query("mb1_market_basket", mb1, mb1Sql),
+    Query("pr1_pagerank", pr1, pr1Sql),
+    Query("bf1_bloom_semijoin", bf1, bf1Sql),
+    Query("tc1_triangle_count", tc1, tc1Sql),
+    Query("kc1_kcore_peel", kc1, kc1Sql),
+    Query("lp1_label_propagation", lp1, lp1Sql),
   )
 }

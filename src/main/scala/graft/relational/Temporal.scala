@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Query, Tables}
 
 /** Time-series shaping over the `events` table: per-key calendar
   * densification with last-observation-carried-forward (vs gf1's fixed
@@ -129,13 +129,8 @@ object Temporal extends graft.core.QueryModule {
       |  MAX(conc) AS max_concurrent, COUNT(*) AS n_boundaries
       |FROM c GROUP BY 1 ORDER BY day""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts1_gapfill_locf" -> ts1,
-    "ol1_max_concurrency" -> ol1,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "ts1_gapfill_locf" -> ts1Sql,
-    "ol1_max_concurrency" -> ol1Sql,
+  val registry: Seq[Query] = Seq(
+    Query("ts1_gapfill_locf", ts1, ts1Sql),
+    Query("ol1_max_concurrency", ol1, ol1Sql),
   )
 }

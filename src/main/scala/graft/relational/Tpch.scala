@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Oracle, Tables}
+import graft.core.{Oracle, Query, Tables}
 import graft.core.Oracle._
 
 /** Generic relational query surface over the driver's TPC-H-ish star schema
@@ -407,39 +407,21 @@ object Tpch extends graft.core.QueryModule {
       |                 AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
       |ORDER BY c_custkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> q1,
-    "q2_min_cost_supplier" -> q2,
-    "q3_shipping_priority" -> q3,
-    "q4_order_priority" -> q4,
-    "q5_local_supplier" -> q5,
-    "q6_forecast_revenue" -> q6,
-    "q7_nation_volume" -> q7,
-    "q10_returned_items" -> q10,
-    "q12_late_shipments" -> q12,
-    "q14_promo_effect" -> q14,
-    "q15_top_supplier" -> q15,
-    "q17_small_qty_revenue" -> q17,
-    "q18_large_orders" -> q18,
-    "q19_disjunctive_revenue" -> q19,
-    "q22_idle_customers" -> q22,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q1_pricing_summary" -> q1Sql,
-    "q2_min_cost_supplier" -> q2Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q4_order_priority" -> q4Sql,
-    "q5_local_supplier" -> q5Sql,
-    "q6_forecast_revenue" -> q6Sql,
-    "q7_nation_volume" -> q7Sql,
-    "q10_returned_items" -> q10Sql,
-    "q12_late_shipments" -> q12Sql,
-    "q14_promo_effect" -> q14Sql,
-    "q15_top_supplier" -> q15Sql,
-    "q17_small_qty_revenue" -> q17Sql,
-    "q18_large_orders" -> q18Sql,
-    "q19_disjunctive_revenue" -> q19Sql,
-    "q22_idle_customers" -> q22Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q1_pricing_summary", q1, q1Sql),
+    Query("q2_min_cost_supplier", q2, q2Sql),
+    Query("q3_shipping_priority", q3, q3Sql),
+    Query("q4_order_priority", q4, q4Sql),
+    Query("q5_local_supplier", q5, q5Sql),
+    Query("q6_forecast_revenue", q6, q6Sql),
+    Query("q7_nation_volume", q7, q7Sql),
+    Query("q10_returned_items", q10, q10Sql),
+    Query("q12_late_shipments", q12, q12Sql),
+    Query("q14_promo_effect", q14, q14Sql),
+    Query("q15_top_supplier", q15, q15Sql),
+    Query("q17_small_qty_revenue", q17, q17Sql),
+    Query("q18_large_orders", q18, q18Sql),
+    Query("q19_disjunctive_revenue", q19, q19Sql),
+    Query("q22_idle_customers", q22, q22Sql),
   )
 }

@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Oracle, Tables}
+import graft.core.{Oracle, Query, Tables}
 import graft.core.Oracle._
 
 /** Second wave of relational coverage: profit roll-ups, scalar-subquery
@@ -192,71 +192,6 @@ object Tpch2 extends graft.core.QueryModule {
       |                  AND l3.l_suppkey <> l1.l_suppkey)
       |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin
 
-  // Q8 (adapted): NATION_1's market share of ECONOMY-part revenue among
-  // AMERICA-region customers, per order year (1996–1997). The share is a
-  // ratio of two EXACT decimal sums computed in the same aggregation pass
-  // (numerator = CASE-gated revenue), divided once as doubles — one IEEE
-  // division per output row is bit-stable across engines.
-  //
-  // Scale posture: part/supplier/nation/region are broadcast dims; the
-  // date-windowed orders⋈customer is a keyed shuffle (customer ~ 1/10 of
-  // orders in TPC-H ratios — too big to broadcast at 100 TB), then
-  // lineitem joins the qualified orders on the orderkey. Two shuffles
-  // total, both on join keys AQE can re-plan.
-  def q8(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val econParts = Tables.part(s, dir).filter($"p_type" === "ECONOMY")
-      .select($"p_partkey")
-    val suppNation = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), $"s_nationkey" === $"n_nationkey")
-      .select($"s_suppkey", $"n_name".as("supp_nation"))
-    val americaNations = Tables.nation(s, dir)
-      .join(broadcast(Tables.region(s, dir).filter($"r_name" === "AMERICA")),
-        $"n_regionkey" === $"r_regionkey")
-      .select($"n_nationkey")
-    val americaCust = Tables.customer(s, dir)
-      .join(broadcast(americaNations), $"c_nationkey" === $"n_nationkey")
-      .select($"c_custkey")
-    val winOrders = Tables.orders(s, dir)
-      .filter($"o_orderdate" >= expr(t0) &&
-        $"o_orderdate" < expr("TIMESTAMP '1998-01-01 00:00:00'"))
-      .join(americaCust, $"o_custkey" === $"c_custkey")
-      .select($"o_orderkey", year($"o_orderdate").cast("long").as("o_year"))
-    val vol = revenueTerm($"l_extendedprice", $"l_discount")
-    Tables.lineitem(s, dir)
-      .join(broadcast(econParts), $"l_partkey" === $"p_partkey")
-      .join(broadcast(suppNation), $"l_suppkey" === $"s_suppkey")
-      .join(winOrders, $"l_orderkey" === $"o_orderkey")
-      .groupBy($"o_year")
-      .agg(
-        sum(when($"supp_nation" === "NATION_1", vol)
-          .otherwise(lit(0).cast(DecimalType(18, 4)))).as("ndec"),
-        sum(vol).as("ddec"))
-      .select($"o_year", (d($"ndec") / d($"ddec")).as("mkt_share"))
-      .orderBy($"o_year")
-  }
-  val q8Sql: String =
-    s"""WITH all_nations AS (
-       |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-       |   ${sqlRevenueTerm("l_extendedprice", "l_discount")} AS volume,
-       |   n2.n_name AS supp_nation
-       |  FROM lineitem
-       |   JOIN part ON l_partkey = p_partkey
-       |   JOIN supplier ON l_suppkey = s_suppkey
-       |   JOIN nation n2 ON s_nationkey = n2.n_nationkey
-       |   JOIN orders ON l_orderkey = o_orderkey
-       |   JOIN customer ON o_custkey = c_custkey
-       |   JOIN nation n1 ON c_nationkey = n1.n_nationkey
-       |   JOIN region ON n1.n_regionkey = r_regionkey
-       |  WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
-       |   AND o_orderdate >= $t0
-       |   AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
-       |SELECT o_year,
-       | CAST(SUM(CASE WHEN supp_nation = 'NATION_1' THEN volume
-       |   ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) /
-       | CAST(SUM(volume) AS DOUBLE) AS mkt_share
-       |FROM all_nations GROUP BY o_year ORDER BY o_year""".stripMargin
-
   // Q13 (adapted, no o_comment column): distribution of per-customer
   // non-urgent order counts, zero-order customers included. The textbook
   // plan LEFT-OUTER-joins every order row to customer then counts; this
@@ -284,22 +219,12 @@ object Tpch2 extends graft.core.QueryModule {
       |  GROUP BY c_custkey) c_orders
       |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q8_market_share" -> q8,
-    "q9_profit_by_nation" -> q9,
-    "q11_important_parts" -> q11,
-    "q13_customer_distribution" -> q13,
-    "q16_supplier_counts" -> q16,
-    "q20_promo_suppliers" -> q20,
-    "q21_sole_late_supplier" -> q21,
-  )
-  val oracles: Map[String, String] = Map(
-    "q8_market_share" -> q8Sql,
-    "q9_profit_by_nation" -> q9Sql,
-    "q11_important_parts" -> q11Sql,
-    "q13_customer_distribution" -> q13Sql,
-    "q16_supplier_counts" -> q16Sql,
-    "q20_promo_suppliers" -> q20Sql,
-    "q21_sole_late_supplier" -> q21Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q9_profit_by_nation", q9, q9Sql),
+    Query("q11_important_parts", q11, q11Sql),
+    Query("q13_customer_distribution", q13, q13Sql),
+    Query("q16_supplier_counts", q16, q16Sql),
+    Query("q20_promo_suppliers", q20, q20Sql),
+    Query("q21_sole_late_supplier", q21, q21Sql),
   )
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Query
 
 /** Oracle-backed ROUND-TRIP checks of the reference-I/O surface (r7
   * verdict directive 7): ids whose correctness previously rested on specs
@@ -204,15 +205,10 @@ object FixtureOracles extends graft.core.QueryModule {
        |SELECT s.step AS step, par, s.value AS value FROM v
        |ORDER BY step, par""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s6_noisefile_roundtrip" -> s6RoundTrip,
-    "s9_chain_roundtrip" -> s9RoundTrip,
-    "s8_covariance_roundtrip" -> s8RoundTrip,
-    "s13_bilby_roundtrip" -> s13RoundTrip)
-
-  val oracles: Map[String, String] = Map(
-    "s6_noisefile_roundtrip" -> s6Sql,
-    "s9_chain_roundtrip" -> s9Sql,
-    "s8_covariance_roundtrip" -> s8Sql,
-    "s13_bilby_roundtrip" -> s13Sql)
+  val registry: Seq[Query] = Seq(
+    Query("s6_noisefile_roundtrip", s6RoundTrip, s6Sql),
+    Query("s9_chain_roundtrip", s9RoundTrip, s9Sql),
+    Query("s8_covariance_roundtrip", s8RoundTrip, s8Sql),
+    Query("s13_bilby_roundtrip", s13RoundTrip, s13Sql),
+  )
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Query
 
 /** Oracle-backed checks of the `.tim` reader against the REFERENCE's own
   * example data (VERDICT r5 directive 8): DuckDB re-parses the
@@ -147,13 +148,9 @@ object TimOracle extends graft.core.QueryModule {
          |  (len(f) >= 3 AND f[3] = '1') AS fit
          |FROM rows_ ORDER BY psr, param, value""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tim1_backend_stats" -> tim1,
-    "tim2_tspan_nfreqs" -> tim2,
-    "par1_param_table" -> par1)
-
-  def oracles: Map[String, String] = Map(
-    "tim1_backend_stats" -> tim1Sql,
-    "tim2_tspan_nfreqs" -> tim2Sql,
-    "par1_param_table" -> par1Sql)
+  val registry: Seq[Query] = Seq(
+    Query("tim1_backend_stats", tim1, tim1Sql),
+    Query("tim2_tspan_nfreqs", tim2, tim2Sql),
+    Query("par1_param_table", par1, par1Sql),
+  )
 }

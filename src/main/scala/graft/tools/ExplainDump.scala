@@ -71,7 +71,7 @@ object ExplainDump {
     census ++= "| query | shuffles | broadcasts | sorts | parquet scans | nested-loop |\n"
     census ++= "|---|---|---|---|---|---|\n"
     headline.foreach { name =>
-      val df = SparkEntry_queries(name)(spark, dir)
+      val df = graft.SparkEntry.queries(name)(spark, dir)
       val full = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       def n(pat: String) = pat.r.findAllIn(full).size
       census ++= s"| $name | ${n("\\(\\d+\\) Exchange\\b")}" +
@@ -87,5 +87,4 @@ object ExplainDump {
     println(s"[explain] wrote $out")
     spark.stop()
   }
-  private def SparkEntry_queries = graft.SparkEntry.queries
 }

@@ -16,8 +16,7 @@ object QuickStart {
     println("q1 pricing summary:")
     graft.SparkEntry.queries("q1_pricing_summary")(spark, dir).show(3)
 
-    // 2. reference-native: read a .tim TOA file (typed), per-backend stats
-    //    (uses the bundled fixture shape — here the parquet-backed tables)
+    // 2. events: 30-minute-gap sessions per user (sessions and events counted)
     println("events sessionization:")
     graft.SparkEntry.queries("w_sessionize")(spark, dir).show(3)
 

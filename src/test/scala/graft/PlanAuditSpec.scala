@@ -24,10 +24,10 @@ class PlanAuditSpec extends SparkTestBase {
     * Iterative operators run actions while BUILDING the frame, so c1/c2
     * are left to their own specs. */
   private def sweepPlans(): Seq[(String, Either[String, SparkPlan])] =
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => name != "c1_dedup_clusters" && name != "c2_dedup_droplist" }
-      .map { case (name, fn) =>
-        name -> (try Right(fn(spark, dir).queryExecution.executedPlan)
+    SparkEntry.registry.sortBy(_.name)
+      .filter(q => q.name != "c1_dedup_clusters" && q.name != "c2_dedup_droplist")
+      .map { q =>
+        q.name -> (try Right(q.run(spark, dir).queryExecution.executedPlan)
           catch { case NonFatal(e) =>
             Left(s"threw ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
           })
