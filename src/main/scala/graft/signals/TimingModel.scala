@@ -21,8 +21,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession
   * Spark-first split: the matrices live INSIDE `mapGroups` per pulsar —
   * only (psr, TOA columns) rows cross the shuffle and only
   * (psr, param, value) rows come out, never a matrix (SURVEY §7.4.3
-  * "aggregate coefficients, not matrices"). A 1000-executor run fits every
-  * pulsar in parallel with zero driver-side linear algebra.
+  * "aggregate coefficients, not matrices"). [[fitNoise]] gives every
+  * pulsar its own reduce partition, so each pulsar is fit in its own task
+  * and no linear algebra runs outside the tasks (see there for why a
+  * plain group-by is not enough).
   */
 object TimingModel {
 
@@ -143,31 +145,56 @@ object TimingModel {
   /** Enterprise's TimingModel coefficient variance — "infinite" prior. */
   val TmPriorVariance: Double = 1e40
 
+  /** A Fourier GP basis as the likelihoods take it: (F n×2k, f_k, T). */
+  type GpBasis = (DenseMatrix[Double], Array[Double], Double)
+
+  /** (log10_A, gamma) of a GP whose parameters are not given. */
+  private val GpDefault = (-20.0, 0.0)
+
+  /** T = [M F_red F_dm], the columns both likelihoods marginalize over. */
+  private def basis(m: DenseMatrix[Double], red: Option[GpBasis],
+      dm: Option[GpBasis]): DenseMatrix[Double] =
+    DenseMatrix.horzcat(m +: (red.toSeq ++ dm.toSeq).map(_._1): _*)
+
+  /** B diagonal: huge for the `nm` timing-model columns, φ = psd·Δf for
+    * each GP's columns (Δf = 1/T, enterprise's Fourier-basis convention);
+    * sin and cos of the same frequency share one φ. Each GP comes with its
+    * (log10_A, gamma). */
+  private def bDiagonal(nm: Int, gps: Seq[(GpBasis, (Double, Double))]): Array[Double] = {
+    val out = Array.fill(nm + gps.map(2 * _._1._2.length).sum)(TmPriorVariance)
+    var off = nm
+    gps.foreach { case ((_, freqs, tspan), (lgA, gam)) =>
+      freqs.zipWithIndex.foreach { case (f, k) =>
+        val phi = powerlawPsd(f, lgA, gam) / tspan
+        out(off + 2 * k) = phi
+        out(off + 2 * k + 1) = phi
+      }
+      off += 2 * freqs.length
+    }
+    out
+  }
+
   /** Marginalized Gaussian likelihood over (timing model ⊕ red GP ⊕ DM GP)
     * — the U7 [[Priors.LogLikelihood]] boundary made concrete. Parameter
     * names follow the reference noise-file convention
     * (`{psr}_{backend}_efac`, `{psr}_{backend}_log10_equad`,
     * `{psr}_red_noise_{log10_A,gamma}`, `{psr}_dm_gp_{log10_A,gamma}`,
     * results.py:236-248); missing white-noise params default to
-    * efac 1 / equad 0 exactly as enterprise treats unlisted backends. */
+    * efac 1 / equad 0 exactly as enterprise treats unlisted backends.
+    * Every call builds the whole objective from scratch; [[fitOne]]
+    * maximizes the same objective through [[IncrementalLikelihood]]. */
   class MarginalizedLikelihood(
       val psr: String,
       resid: DenseVector[Double],
       sigmaSec: DenseVector[Double],
       backends: Array[String],
       m: DenseMatrix[Double],
-      red: Option[(DenseMatrix[Double], Array[Double], Double)], // (F, f_k, T)
-      dm: Option[(DenseMatrix[Double], Array[Double], Double)])
+      red: Option[GpBasis],
+      dm: Option[GpBasis])
       extends Priors.LogLikelihood {
 
     private val n = resid.length
-    private val t: DenseMatrix[Double] = (red, dm) match {
-      case (Some((fr, _, _)), Some((fd, _, _))) =>
-        DenseMatrix.horzcat(m, fr, fd)
-      case (Some((fr, _, _)), None) => DenseMatrix.horzcat(m, fr)
-      case (None, Some((fd, _, _))) => DenseMatrix.horzcat(m, fd)
-      case (None, None) => m
-    }
+    private val t: DenseMatrix[Double] = basis(m, red, dm)
     private val nm = m.cols
 
     def apply(params: Map[String, Double]): Double = {
@@ -185,31 +212,11 @@ object TimingModel {
         lnDetN += math.log(nii)
         i += 1
       }
-      // B diagonal: huge for timing-model cols, φ = psd·Δf for GP cols
-      // (Δf = 1/T, enterprise's Fourier-basis convention); sin and cos of
-      // the same frequency share one φ.
-      val bDiag = DenseVector.zeros[Double](t.cols)
-      (0 until nm).foreach(j => bDiag(j) = TmPriorVariance)
-      var off = nm
-      red.foreach { case (fr, freqs, tspan) =>
-        val lgA = params.getOrElse(s"${psr}_red_noise_log10_A", -20.0)
-        val gam = params.getOrElse(s"${psr}_red_noise_gamma", 0.0)
-        freqs.zipWithIndex.foreach { case (f, k) =>
-          val phi = powerlawPsd(f, lgA, gam) / tspan
-          bDiag(off + 2 * k) = phi
-          bDiag(off + 2 * k + 1) = phi
-        }
-        off += fr.cols
-      }
-      dm.foreach { case (fd, freqs, tspan) =>
-        val lgA = params.getOrElse(s"${psr}_dm_gp_log10_A", -20.0)
-        val gam = params.getOrElse(s"${psr}_dm_gp_gamma", 0.0)
-        freqs.zipWithIndex.foreach { case (f, k) =>
-          val phi = powerlawPsd(f, lgA, gam) / tspan
-          bDiag(off + 2 * k) = phi
-          bDiag(off + 2 * k + 1) = phi
-        }
-      }
+      def gp(prefix: String) = (
+        params.getOrElse(s"${psr}_${prefix}_log10_A", GpDefault._1),
+        params.getOrElse(s"${psr}_${prefix}_gamma", GpDefault._2))
+      val bDiag = DenseVector(bDiagonal(nm,
+        red.map((_, gp("red_noise"))).toSeq ++ dm.map((_, gp("dm_gp")))))
       // Woodbury: A = B⁻¹ + Tᵀ N⁻¹ T; lnL per the object doc
       val ninvR = resid *:* ninv
       val rNr = resid dot ninvR
@@ -242,6 +249,207 @@ object TimingModel {
     }
   }
 
+  /** The [[MarginalizedLikelihood]] objective as coordinate ascent needs
+    * it: the parameters live in an array, ordered as [[names]], and an
+    * evaluation recomputes only what the parameters changed since the
+    * previous one. Starts at the defaults of an empty parameter map.
+    *
+    * N is diagonal and a backend's efac and equad touch only that
+    * backend's TOAs, so TᵀN⁻¹T, TᵀN⁻¹r, rᵀN⁻¹r and ln|N| are sums of
+    * per-backend blocks G_b = Σ wᵢtᵢtᵢᵀ, d_b = Σ wᵢrᵢtᵢ, Σ wᵢrᵢ² and
+    * Σ ln Nᵢᵢ over i in b (wᵢ = 1/Nᵢᵢ, tᵢ = row i of T). Updating an
+    * efac or equad marks only its backend's blocks stale; updating a red
+    * or DM parameter marks only the B diagonal stale. [[apply]] rebuilds
+    * what is stale (n_b·c²/2 for a backend, 2k powers for B) and then
+    * factors A = Σ_b G_b + B⁻¹ (c³/6) for ln|A| and dᵀA⁻¹d. Each
+    * evaluation is a pure function of the current parameters: the
+    * result differs from [[MarginalizedLikelihood]] only by the order of
+    * floating-point sums. */
+  final class IncrementalLikelihood(
+      psr: String,
+      resid: DenseVector[Double],
+      sigmaSec: DenseVector[Double],
+      backends: Array[String],
+      m: DenseMatrix[Double],
+      red: Option[GpBasis],
+      dm: Option[GpBasis]) {
+
+    val backendNames: Array[String] = backends.distinct.sorted
+    private val nb = backendNames.length
+
+    /** Per backend its efac then log10_equad, then the red noise's
+      * (log10_A, gamma), then the DM GP's. */
+    val names: Array[String] =
+      backendNames.flatMap(b => Array(s"${psr}_${b}_efac", s"${psr}_${b}_log10_equad")) ++
+        red.toArray.flatMap(_ => Array(s"${psr}_red_noise_log10_A", s"${psr}_red_noise_gamma")) ++
+        dm.toArray.flatMap(_ => Array(s"${psr}_dm_gp_log10_A", s"${psr}_dm_gp_gamma"))
+
+    // log10_equad = -∞ is equad 0, the absent-parameter default
+    private val params: Array[Double] =
+      Array.fill(nb)(Array(1.0, Double.NegativeInfinity)).flatten ++
+        Array.fill(names.length / 2 - nb)(Array(GpDefault._1, GpDefault._2)).flatten
+
+    private val n = resid.length
+    private val nm = m.cols
+    // every c×c matrix below is an array of rows, of which only the upper
+    // triangle (k ≥ j in row j) is kept: the inner loops are then
+    // same-index axpys over two rows, a form the JIT can vectorize
+    private val tRows: Array[Array[Double]] = {
+      val t = basis(m, red, dm)
+      Array.tabulate(n)(i => t(i, ::).t.toArray)
+    }
+    private val c = nm + (red.toSeq ++ dm.toSeq).map(_._1.cols).sum
+    private val r = resid.toArray
+    private val sigma = sigmaSec.toArray
+    private val rowsOf: Array[Array[Int]] =
+      backendNames.map(b => backends.indices.filter(backends(_) == b).toArray)
+
+    // per-backend blocks
+    private val g = Array.ofDim[Double](nb, c, c)
+    private val d = Array.ofDim[Double](nb, c)
+    private val rNr = new Array[Double](nb)
+    private val lnN = new Array[Double](nb)
+    private val stale = Array.fill(nb)(true)
+    private var bStale = true
+    // sums of the blocks, B, and the work space of the factorization
+    private val gSum = Array.ofDim[Double](c, c)
+    private val dSum = new Array[Double](c)
+    private var rNrSum = 0.0
+    private var lnNSum = 0.0
+    private val bInv = new Array[Double](c)
+    private var lnDetB = 0.0
+    private val a = Array.ofDim[Double](c, c)
+    private val y = new Array[Double](c)
+
+    def update(k: Int, v: Double): Unit = {
+      params(k) = v
+      if (k < 2 * nb) stale(k / 2) = true else bStale = true
+    }
+
+    def apply(): Double = {
+      var resum = false
+      var b = 0
+      while (b < nb) {
+        if (stale(b)) { rebuild(b); stale(b) = false; resum = true }
+        b += 1
+      }
+      if (resum) sumBlocks()
+      if (bStale) {
+        val gp = params.drop(2 * nb).grouped(2).map(p => (p(0), p(1))).toSeq
+        val bDiag = bDiagonal(nm, (red.toSeq ++ dm.toSeq).zip(gp))
+        var j = 0
+        while (j < c) { bInv(j) = 1.0 / bDiag(j); j += 1 }
+        lnDetB = bDiag.map(math.log).sum
+        bStale = false
+      }
+      var j = 0
+      while (j < c) {
+        System.arraycopy(gSum(j), j, a(j), j, c - j)
+        a(j)(j) += bInv(j)
+        j += 1
+      }
+      val lnDetA = choleskyInPlace()
+      // solve Uᵀ y = d, then quadratic form dᵀA⁻¹d = |y|²
+      System.arraycopy(dSum, 0, y, 0, c)
+      var quad = 0.0
+      var k = 0
+      while (k < c) {
+        val uk = a(k)
+        val yk = y(k) / uk(k)
+        y(k) = yk
+        quad += yk * yk
+        j = k + 1
+        while (j < c) { y(j) -= uk(j) * yk; j += 1 }
+        k += 1
+      }
+      -0.5 * (rNrSum - quad) - 0.5 * (lnNSum + lnDetB + lnDetA) -
+        0.5 * n * math.log(2.0 * math.Pi)
+    }
+
+    private def rebuild(b: Int): Unit = {
+      val ef = params(2 * b)
+      val eq2 = math.pow(10.0, 2 * params(2 * b + 1))
+      val gb = g(b)
+      val db = d(b)
+      gb.foreach(java.util.Arrays.fill(_, 0.0))
+      java.util.Arrays.fill(db, 0.0)
+      var rr = 0.0
+      var ln = 0.0
+      rowsOf(b).foreach { i =>
+        val nii = ef * ef * sigma(i) * sigma(i) + eq2
+        val w = 1.0 / nii
+        val wr = r(i) * w
+        rr += r(i) * wr
+        ln += math.log(nii)
+        val ti = tRows(i)
+        var j = 0
+        while (j < c) {
+          val tj = ti(j)
+          db(j) += tj * wr
+          val wtj = w * tj
+          val gbj = gb(j)
+          var k = j
+          while (k < c) { gbj(k) += wtj * ti(k); k += 1 }
+          j += 1
+        }
+      }
+      rNr(b) = rr
+      lnN(b) = ln
+    }
+
+    private def sumBlocks(): Unit = {
+      gSum.foreach(java.util.Arrays.fill(_, 0.0))
+      java.util.Arrays.fill(dSum, 0.0)
+      rNrSum = 0.0
+      lnNSum = 0.0
+      var b = 0
+      while (b < nb) {
+        var j = 0
+        while (j < c) {
+          val sj = gSum(j)
+          val gbj = g(b)(j)
+          var k = j
+          while (k < c) { sj(k) += gbj(k); k += 1 }
+          dSum(j) += d(b)(j)
+          j += 1
+        }
+        rNrSum += rNr(b)
+        lnNSum += lnN(b)
+        b += 1
+      }
+    }
+
+    /** Right-looking Cholesky A = UᵀU on the upper triangle of `a`,
+      * overwritten by U; returns ln|A|. Row k of U updates each trailing
+      * row i as one axpy. */
+    private def choleskyInPlace(): Double = {
+      var lnDet = 0.0
+      var k = 0
+      while (k < c) {
+        val uk = a(k)
+        val akk = uk(k)
+        if (!(akk > 0.0)) throw new ArithmeticException(
+          s"$psr: A = B⁻¹ + TᵀN⁻¹T is not positive definite at column $k")
+        val ukk = math.sqrt(akk)
+        lnDet += math.log(akk)
+        uk(k) = ukk
+        val inv = 1.0 / ukk
+        var j = k + 1
+        while (j < c) { uk(j) *= inv; j += 1 }
+        var i = k + 1
+        while (i < c) {
+          val ai = a(i)
+          val uki = uk(i)
+          j = i
+          while (j < c) { ai(j) -= uki * uk(j); j += 1 }
+          i += 1
+        }
+        k += 1
+      }
+      lnDet
+    }
+  }
+
   // ---------------------------------------------------------- fit machinery
 
   /** Fit configuration: Fourier sizes and the coordinate-ascent grids.
@@ -260,54 +468,90 @@ object TimingModel {
       gammaGrid: Seq[Double] = (2 to 12).map(_ * 0.5), // 1.0 .. 6.0
       passes: Int = 2)
 
-  /** Per-pulsar noise fit: coordinate ascent of [[MarginalizedLikelihood]]
-    * over per-backend (efac, log10_equad) and the red/DM hyperpriors.
-    * Pure function of the TOA slice — called inside `mapGroups`. */
-  def fitOne(rows: Array[ToaFit], par: ParInfo, cfg: FitConfig)
-      : Map[String, Double] = {
+  /** One pulsar's likelihood inputs as [[fitOne]] builds them from its
+    * TOA rows: TOAs sorted by time, M stabilized per `cfg.useSvd`, red and
+    * DM Fourier bases over the TOA span. */
+  case class PulsarModel(psr: String, resid: DenseVector[Double],
+      sigmaSec: DenseVector[Double], backends: Array[String],
+      m: DenseMatrix[Double], red: Option[GpBasis], dm: Option[GpBasis]) {
+    def marginalized: MarginalizedLikelihood =
+      new MarginalizedLikelihood(psr, resid, sigmaSec, backends, m, red, dm)
+    def incremental: IncrementalLikelihood =
+      new IncrementalLikelihood(psr, resid, sigmaSec, backends, m, red, dm)
+  }
+
+  /** The [[PulsarModel]] of one pulsar's TOA rows. Red and DM noise need
+    * a time span: a pulsar whose TOAs all share one epoch is rejected with
+    * [[IllegalArgumentException]] when either is fit. */
+  def pulsarModel(rows: Array[ToaFit], par: ParInfo, cfg: FitConfig): PulsarModel = {
     val sorted = rows.sortBy(_.t_sec)
     val tSec = sorted.map(_.t_sec)
     val freq = sorted.map(_.freq_mhz)
-    val flags = sorted.map(_.flags)
-    val backs = sorted.map(_.backend)
-    val sigma = DenseVector(sorted.map(_.toaerr_us * 1e-6))
-    val resid = DenseVector(sorted.map(_.resid_sec))
     val tspan = tSec.max - tSec.min
-    val m0 = designMatrix(tSec, freq, flags, par)
-    val m = if (cfg.useSvd) svdStabilize(m0) else normalizeColumns(m0)
+    val fitDm = cfg.fitDm && par.includeDm
+    if ((cfg.fitRed || fitDm) && !(tspan > 0))
+      throw new IllegalArgumentException(
+        s"pulsar ${par.psr}: all ${rows.length} TOAs share one epoch, so there is " +
+          "no time span to fit red or DM noise over")
+    val m0 = designMatrix(tSec, freq, sorted.map(_.flags), par)
     val red = if (cfg.fitRed) {
       val (fr, fs) = fourierDesign(tSec, tspan, cfg.nFreqRed)
       Some((fr, fs, tspan))
     } else None
-    val dm = if (cfg.fitDm && par.includeDm) {
+    val dm = if (fitDm) {
       val (fd, fs) = dmDesign(tSec, freq, tspan, cfg.nFreqDm)
       Some((fd, fs, tspan))
     } else None
-    val psr = par.psr
-    val lik = new MarginalizedLikelihood(psr, resid, sigma, backs, m, red, dm)
+    PulsarModel(par.psr,
+      resid = DenseVector(sorted.map(_.resid_sec)),
+      sigmaSec = DenseVector(sorted.map(_.toaerr_us * 1e-6)),
+      backends = sorted.map(_.backend),
+      m = if (cfg.useSvd) svdStabilize(m0) else normalizeColumns(m0),
+      red = red, dm = dm)
+  }
 
-    val backendList = backs.distinct.sorted
-    val dims: Seq[(String, Seq[Double])] =
-      backendList.flatMap(b => Seq(
-        (s"${psr}_${b}_efac", cfg.efacGrid),
-        (s"${psr}_${b}_log10_equad", cfg.equadGrid))) ++
-        (if (red.isDefined) Seq(
-          (s"${psr}_red_noise_log10_A", cfg.lgAGrid),
-          (s"${psr}_red_noise_gamma", cfg.gammaGrid)) else Nil) ++
-        (if (dm.isDefined) Seq(
-          (s"${psr}_dm_gp_log10_A", cfg.lgAGrid),
-          (s"${psr}_dm_gp_gamma", cfg.gammaGrid)) else Nil)
+  /** Per-pulsar noise fit: coordinate ascent of [[MarginalizedLikelihood]]
+    * over per-backend (efac, log10_equad) and the red/DM hyperpriors, on
+    * the inputs of [[pulsarModel]]. Pure function of the TOA slice —
+    * called inside `mapGroups`.
+    *
+    * The dimensions are swept in [[IncrementalLikelihood.names]] order,
+    * `passes` times; each takes the first grid value with the highest
+    * likelihood, the others held at their current values (efac starts at
+    * 1, every other parameter at its grid's middle). The objective is
+    * evaluated incrementally: while one backend's efac or equad is swept
+    * only that backend's blocks of TᵀN⁻¹T, TᵀN⁻¹r, rᵀN⁻¹r and ln|N| are
+    * rebuilt, and while a red or DM parameter is swept the blocks are
+    * reused and only B⁻¹ and the Cholesky factor of A are rebuilt. */
+  def fitOne(rows: Array[ToaFit], par: ParInfo, cfg: FitConfig)
+      : Map[String, Double] = {
+    val lik = pulsarModel(rows, par, cfg).incremental
 
-    var cur: Map[String, Double] = dims.map { case (name, grid) =>
-      name -> (if (name.endsWith("_efac")) 1.0 else grid(grid.length / 2))
-    }.toMap
+    val nb = lik.backendNames.length
+    val grids: Array[Array[Double]] =
+      (Array.fill(nb)(Array(cfg.efacGrid, cfg.equadGrid)).flatten ++
+        Array.fill(lik.names.length / 2 - nb)(Array(cfg.lgAGrid, cfg.gammaGrid)).flatten)
+        .map(_.toArray)
+    val cur = Array.tabulate(grids.length) { k =>
+      if (k < 2 * nb && k % 2 == 0) 1.0 else grids(k)(grids(k).length / 2)
+    }
+    cur.indices.foreach(k => lik.update(k, cur(k)))
     (1 to cfg.passes).foreach { _ =>
-      dims.foreach { case (name, grid) =>
-        val best = grid.maxBy(v => lik(cur.updated(name, v)))
-        cur = cur.updated(name, best)
+      cur.indices.foreach { k =>
+        val grid = grids(k)
+        var best = 0
+        var bestL = 0.0
+        grid.indices.foreach { i =>
+          lik.update(k, grid(i))
+          val l = lik()
+          // Double's implicit Ordering is the total order, as in maxBy
+          if (i == 0 || java.lang.Double.compare(l, bestL) > 0) { best = i; bestL = l }
+        }
+        cur(k) = grid(best)
+        lik.update(k, cur(k))
       }
     }
-    cur
+    lik.names.zip(cur).toMap
   }
 
   // ----------------------------------------------------------- Spark boundary
@@ -315,24 +559,55 @@ object TimingModel {
   /** Distributed per-pulsar fit: shuffle is (psr → TOA rows) only; design
     * matrices, SVDs and Cholesky factors are task-local; output is the
     * aggregate-sized (psr, param, value) noise summary that
-    * [[graft.sinks.NoiseFileWriter.writeNoiseFiles]] consumes (K2). */
+    * [[graft.sinks.NoiseFileWriter.writeNoiseFiles]] consumes (K2).
+    *
+    * Each pulsar of `pars` is fit in its own task. A pulsar's TOA rows are
+    * a few KB, so the shuffle of a plain `groupByKey(_.psr)` is small
+    * enough for AQE to coalesce into one reducer, which then fits every
+    * pulsar one after another; `repartition(n, psr)` keeps the partitions
+    * but lets two names hash to one of them. Instead, before the job,
+    * pulsar i (sorted by name) gets the key [[partitionKeys]]`(n)(i)`, whose
+    * hash partition among n is exactly i, and the rows are repartitioned
+    * on that key into n partitions. A shuffle with a caller-given
+    * partition count is never coalesced by AQE, and the group-by on the
+    * same key needs no second exchange. TOA rows of pulsars without a
+    * [[ParInfo]] are dropped before the shuffle. */
   def fitNoise(toas: Dataset[ToaFit], pars: Map[String, ParInfo],
       cfg: FitConfig = FitConfig()): DataFrame = {
+    import org.apache.spark.sql.functions.{col, typedLit}
     val spark = toas.sparkSession
     import spark.implicits._
     implicit val enc: Encoder[(String, String, Double)] =
       Encoders.product[(String, String, Double)]
-    toas.groupByKey(_.psr)
-      .flatMapGroups { (psr, it) =>
-        pars.get(psr) match {
-          case None => Iterator.empty
-          case Some(par) =>
-            fitOne(it.toArray, par, cfg).iterator.map {
-              case (k, v) => (psr, k, v)
-            }
-        }
+    val psrs = pars.keys.toArray.sorted
+    val keys = partitionKeys(psrs.length)
+    val psrOf = keys.zip(psrs).toMap
+    toas.withColumn("slot", typedLit(psrs.zip(keys).toMap).apply(col("psr")))
+      .where(col("slot").isNotNull)
+      .repartition(math.max(1, psrs.length), col("slot"))
+      .groupBy("slot").as[Int, ToaFit]
+      .flatMapGroups { (key, it) =>
+        val psr = psrOf(key)
+        fitOne(it.toArray, pars(psr), cfg).iterator.map { case (k, v) => (psr, k, v) }
       }
       .toDF("psr", "param", "value")
+  }
+
+  /** `keys(i)` is the smallest int that Spark's hash partitioning among
+    * `n` partitions sends to partition i, found by evaluating Spark's own
+    * partition-id expression, so the placement holds by construction. */
+  private[signals] def partitionKeys(n: Int): Array[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val keys = Array.fill(n)(-1)
+    var left = n
+    var k = 0
+    while (left > 0) {
+      val p = HashPartitioning(Seq(Literal(k)), n).partitionIdExpression.eval().asInstanceOf[Int]
+      if (keys(p) < 0) { keys(p) = k; left -= 1 }
+      k += 1
+    }
+    keys
   }
 
   /** Adapter from the [[graft.sources.TimReader]] schema + a residual

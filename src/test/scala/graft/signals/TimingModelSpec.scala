@@ -202,4 +202,193 @@ class TimingModelSpec extends SparkTestBase {
     val m = fit.collect().map(r => r.getString(1) -> r.getDouble(2)).toMap
     assert(m.keySet === Set("fake_none_efac", "fake_none_log10_equad"))
   }
+
+  // ------------------------------------- incremental evaluator and fitNoise
+
+  private val Backends = Seq("PDFB_10CM", "PDFB_20CM", "CASPSR_40CM", "WBCORR_10CM")
+
+  /** Seeded PPTA-shaped pulsar: `n` TOAs over ~13 yr on four backends
+    * (each at least once) at their own frequencies, errors 0.1–3 µs, and
+    * white residuals scaled by a per-backend efac, plus a red-noise
+    * realization on odd seeds. */
+  private def synthPulsar(psr: String, n: Int, seed: Long): Array[TimingModel.ToaFit] = {
+    val rng = new java.util.Random(seed)
+    val t = Array.fill(n)(53000.0 + 5000.0 * rng.nextDouble()).sorted.map(_ * 86400.0)
+    val back = Array.tabulate(n)(i => if (i < Backends.size) i else rng.nextInt(Backends.size))
+    val freqOf = Seq(3100.0, 1400.0, 732.0, 3100.0)
+    val redAmp = if (seed % 2 == 1) 3e-6 else 0.0
+    val phase = rng.nextDouble() * 2 * math.Pi
+    Array.tabulate(n) { i =>
+      val b = back(i)
+      val err = 0.1 + 2.9 * rng.nextDouble()
+      val red = redAmp * math.sin(2 * math.Pi * t(i) / (9.0 * 3.15e7) + phase)
+      TimingModel.ToaFit(psr, t(i), err, freqOf(b) + 64.0 * (rng.nextDouble() - 0.5),
+        Backends(b), Map("group" -> Backends(b)),
+        red + (0.8 + 0.2 * b) * err * 1e-6 * rng.nextGaussian())
+    }
+  }
+
+  private def synthPar(psr: String, jumps: Boolean = true) =
+    TimingModel.ParInfo(psr, pepochMjd = 55500.0,
+      jumpGroups = if (jumps) Seq(("group", Backends(1)), ("group", Backends(3))) else Nil,
+      includeDm = true)
+
+  /** The fit as coordinate ascent over `MarginalizedLikelihood.apply`,
+    * built from scratch at every grid point: the reference `fitOne` must
+    * reproduce exactly. */
+  private def referenceFit(rows: Array[TimingModel.ToaFit], par: TimingModel.ParInfo,
+      cfg: TimingModel.FitConfig): Map[String, Double] = {
+    val model = TimingModel.pulsarModel(rows, par, cfg)
+    val lik = model.marginalized
+    val psr = par.psr
+    val dims: Seq[(String, Seq[Double])] =
+      model.backends.distinct.sorted.toSeq.flatMap(b => Seq(
+        (s"${psr}_${b}_efac", cfg.efacGrid),
+        (s"${psr}_${b}_log10_equad", cfg.equadGrid))) ++
+        (if (model.red.isDefined) Seq(
+          (s"${psr}_red_noise_log10_A", cfg.lgAGrid),
+          (s"${psr}_red_noise_gamma", cfg.gammaGrid)) else Nil) ++
+        (if (model.dm.isDefined) Seq(
+          (s"${psr}_dm_gp_log10_A", cfg.lgAGrid),
+          (s"${psr}_dm_gp_gamma", cfg.gammaGrid)) else Nil)
+    var cur: Map[String, Double] = dims.map { case (name, grid) =>
+      name -> (if (name.endsWith("_efac")) 1.0 else grid(grid.length / 2))
+    }.toMap
+    (1 to cfg.passes).foreach { _ =>
+      dims.foreach { case (name, grid) =>
+        cur = cur.updated(name, grid.maxBy(v => lik(cur.updated(name, v))))
+      }
+    }
+    cur
+  }
+
+  test("incremental likelihood equals MarginalizedLikelihood at 208 random points") {
+    val rng = new java.util.Random(5)
+    var points = 0
+    for {
+      (fitRed, fitDm) <- Seq((false, false), (true, false), (false, true), (true, true))
+      jumps <- Seq(false, true)
+      useSvd <- Seq(true, false)
+    } {
+      val psr = s"J$points"
+      val cfg = TimingModel.FitConfig(fitRed = fitRed, fitDm = fitDm, useSvd = useSvd)
+      val model = TimingModel.pulsarModel(synthPulsar(psr, 40, points), synthPar(psr, jumps), cfg)
+      val ref = model.marginalized
+      val inc = model.incremental
+      assert(inc.names.length === 8 + (if (fitRed) 2 else 0) + (if (fitDm) 2 else 0))
+      val cur = scala.collection.mutable.Map[String, Double]()
+      (1 to 13).foreach { _ =>
+        // move a random subset of the parameters: blocks not touched since
+        // the previous point must be reused correctly
+        inc.names.indices.filter(_ => cur.isEmpty || rng.nextInt(3) == 0).foreach { k =>
+          val name = inc.names(k)
+          val u = rng.nextDouble()
+          val v =
+            if (name.endsWith("_efac")) 0.1 + 2.9 * u
+            else if (name.endsWith("_log10_equad")) -9.0 + 4.0 * u
+            else if (name.endsWith("_log10_A")) -16.0 + 5.0 * u
+            else 1.0 + 5.0 * u
+          cur(name) = v
+          inc.update(k, v)
+        }
+        val want = ref(cur.toMap)
+        val got = inc()
+        assert(math.abs(got - want) <= 1e-9 * math.abs(want),
+          s"$psr red=$fitRed dm=$fitDm jumps=$jumps svd=$useSvd: $got vs $want at $cur")
+        points += 1
+      }
+    }
+    assert(points === 208)
+  }
+
+  test("fitOne chooses exactly what coordinate ascent over MarginalizedLikelihood does") {
+    val cfg = TimingModel.FitConfig()
+    for {
+      n <- Seq(16, 48, 123)
+      seed <- 1L to 7L
+    } {
+      val psr = s"J${n}_$seed"
+      val rows = synthPulsar(psr, n, 100 * n + seed)
+      val par = synthPar(psr)
+      assert(TimingModel.fitOne(rows, par, cfg) === referenceFit(rows, par, cfg), psr)
+    }
+  }
+
+  test("fitOne: a pulsar whose TOAs share one epoch names itself when red/DM noise is fit") {
+    val rows = synthPulsar("J0000+0001", 1, 3L)
+    val par = synthPar("J0000+0001", jumps = false)
+    val e = intercept[IllegalArgumentException](
+      TimingModel.fitOne(rows, par, TimingModel.FitConfig(fitDm = false)))
+    assert(e.getMessage.contains("J0000+0001") && e.getMessage.contains("all 1 TOAs"))
+    val twoAtOnce = synthPulsar("J0000+0002", 2, 4L).map(_.copy(t_sec = 4.6e9))
+    val e2 = intercept[IllegalArgumentException](TimingModel.fitOne(twoAtOnce,
+      synthPar("J0000+0002"), TimingModel.FitConfig(fitRed = false)))
+    assert(e2.getMessage.contains("J0000+0002") && e2.getMessage.contains("all 2 TOAs"))
+    // white noise alone needs no span
+    val white = TimingModel.fitOne(rows, par,
+      TimingModel.FitConfig(fitRed = false, fitDm = false))
+    assert(white.keySet.forall(_.startsWith("J0000+0001_PDFB_10CM_")))
+  }
+
+  test("fitNoise: every pulsar is fit in its own task, over an uncoalesced exchange") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AQEShuffleReadExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+    import spark.implicits._
+    // skewed TOA counts; the last pulsar has no ParInfo and is not fit
+    val counts = Seq("J0437-4715" -> 90, "J1713+0747" -> 24, "J1909-3744" -> 12)
+    val all = counts.zipWithIndex.flatMap { case ((psr, n), i) =>
+      synthPulsar(psr, n, 10L + i).toSeq } ++ synthPulsar("J2145-0750", 20, 13L)
+    val pars = counts.map { case (psr, _) => psr -> synthPar(psr) }.toMap
+    val cfg = TimingModel.FitConfig(nFreqRed = 5, nFreqDm = 5,
+      efacGrid = Seq(0.5, 1.0, 1.5, 2.0), equadGrid = Seq(-8.0, -7.0, -6.0),
+      lgAGrid = Seq(-15.0, -13.0), gammaGrid = Seq(2.0, 4.0), passes = 1)
+
+    val reduceTasks = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null && m.shuffleReadMetrics.recordsRead > 0)
+          reduceTasks.merge(t.stageId, 1, (a, b) => a + b)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val fit = try {
+      val df = TimingModel.fitNoise(spark.createDataset(all), pars, cfg)
+      val rows = df.collect()
+      org.apache.spark.sql.GraftSqlBridge.waitForListenerBus(spark)
+      assert(reduceTasks.size === 1, s"shuffle-reading stages: $reduceTasks")
+      assert(reduceTasks.values.iterator.next() === counts.size)
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      assert(plan.toString.contains("MapGroups"))
+      assert(plan.collect { case r: AQEShuffleReadExec => r }.isEmpty, plan.toString)
+      val stages = plan.collect { case s: ShuffleQueryStageExec => s.shuffle }
+      assert(stages.map(s => (s.shuffleOrigin, s.numPartitions)) ===
+        Seq((REPARTITION_BY_NUM, counts.size)), plan.toString)
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val got = fit.groupBy(_.getString(0)).map { case (psr, rs) =>
+      psr -> rs.map(r => r.getString(1) -> r.getDouble(2)).toMap }
+    assert(got.keySet === pars.keySet)
+    pars.foreach { case (psr, par) =>
+      assert(got(psr) === TimingModel.fitOne(all.filter(_.psr == psr).toArray, par, cfg), psr)
+    }
+  }
+
+  test("partitionKeys: key i lands in hash partition i") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    import spark.implicits._
+    Seq(1, 3, 7, 64).foreach { n =>
+      val keys = TimingModel.partitionKeys(n)
+      assert(keys.distinct.length === n)
+      val placed = keys.toSeq.toDF("k").repartition(n, col("k"))
+        .select(col("k"), spark_partition_id()).as[(Int, Int)].collect().toMap
+      assert(keys.indices.forall(i => placed(keys(i)) === i), s"n=$n")
+    }
+  }
 }
