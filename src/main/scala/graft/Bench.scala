@@ -132,25 +132,27 @@ object Bench {
       cleanSamples: Int, stolen: Int, cpuStolen: Int, ratioMin: Double,
       err: Option[String])
 
+  /** Warm the JVM/codegen path and the OS page cache for EVERY base table
+    * once (one cheap query per table family) so per-query numbers measure
+    * the engine, not first-call classloading or cold parquet reads. */
+  val warmUp: Seq[String] = Seq(
+    "q1_pricing_summary", // lineitem
+    "q13_customer_distribution", // orders + customer
+    "q5_local_supplier", // supplier + nation + region
+    "q19_disjunctive_revenue", // part
+    "t3_token_stats", // documents
+    "s1_ann_brute_topk", // embeddings
+    "a4_model_counts") // events
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.local()
     val cpuListener = new TaskCpuListener
     spark.sparkContext.addSparkListener(cpuListener)
-    // Warm the JVM/codegen path and the OS page cache for EVERY base table
-    // once (one cheap query per table family) so per-query numbers measure
-    // the engine, not first-call classloading or cold parquet reads.
-    Seq("q1_pricing_summary", // lineitem
-        "q13_customer_distribution", // orders + customer
-        "q5_local_supplier", // supplier + nation + region
-        "q19_disjunctive_revenue", // part
-        "t3_token_stats", // documents
-        "s1_ann_brute_topk", // embeddings
-        "a4_model_counts") // events
-      .foreach { name =>
-        val fn = SparkEntry.queries(name)
-        try fn(spark, sfDir).collect() catch { case _: Throwable => () }
-      }
+    warmUp.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      try fn(spark, sfDir).collect() catch { case _: Throwable => () }
+    }
 
     val sentinelBase = calibrateSentinel()
     // 2× floor, with a 5 ms absolute allowance so scheduler jitter on a

@@ -980,12 +980,14 @@ object AnalyticsQueries extends graft.core.QueryModule {
       |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // AT1: last-touch attribution — each purchase attributed to the user's
-  // most recent click within 24 h, via the [[graft.operators.AsOfJoin]]
-  // union+window technique (one user-keyed shuffle, linear per-partition
-  // work; a theta-join would plan nested-loop and die at scale), then one
-  // day-keyed rollup. Latency sums are exact integer µs; the two ratios
-  // are one double division each. Oracle = DuckDB's native ASOF LEFT JOIN
-  // with the tolerance applied post-match — engine-independent semantics.
+  // most recent click within 24 h, via the native as-of exec
+  // ([[graft.plans.NativeAsOf]]: one user-keyed shuffle per side, linear
+  // per-partition merge; a theta-join would plan nested-loop and die at
+  // scale), then one day-keyed rollup. The payload carries the click's own
+  // µs ts, so the tolerance is one comparison after the match. Latency sums
+  // are exact integer µs; the two ratios are one double division each.
+  // Oracle = DuckDB's native ASOF LEFT JOIN with the tolerance applied
+  // post-match — engine-independent semantics.
   def at1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // the attribution window and the latency are MICROSECOND semantics on
@@ -1000,13 +1002,15 @@ object AnalyticsQueries extends graft.core.QueryModule {
     val clicks = ev.filter($"event_type" === "click")
       .select($"user_id", expr("ts_ns div 1000").as("ts_us"),
         $"event_id".as("click_id"), expr("ts_ns div 1000").as("click_ts_us"))
-    graft.operators.AsOfJoin.backwardWithin(purchases, clicks, "user_id",
-        "ts_us", Seq("click_id", "click_ts_us"), 86400L * 1000000L)
-      .withColumn("lat_us", expr("ts_us - click_ts_us"))
+    val lat = $"ts_us" - $"click_ts_us"
+    // null when unmatched, false when the latest click is stale
+    val fresh = lat <= 86400L * 1000000L
+    graft.plans.NativeAsOf.backward(purchases, clicks, "user_id",
+        "ts_us", Seq("click_id", "click_ts_us"))
       .groupBy(date_format($"ts", "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("n_purchases"),
-        count($"click_id").as("n_attributed"),
-        sum($"lat_us").as("slat"))
+        count(when(fresh, $"click_id")).as("n_attributed"),
+        sum(when(fresh, lat)).as("slat"))
       // both ratios stay UNROUNDED: the operand-ordered IEEE divisions are
       // bit-identical across engines, while round(x, 6) can disagree by
       // one ulp when x sits on a 6-dp halfway point (observed at sf0.001)
@@ -1645,35 +1649,12 @@ object AnalyticsQueries extends graft.core.QueryModule {
        |ORDER BY k""".stripMargin
   }
 
-  // As-of join: enrich every non-signup event with the user's most recent
-  // prior (or simultaneous) signup event — oracle is DuckDB's native ASOF
-  // LEFT JOIN; Spark side is the scalable union+window implementation.
-  def asof(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = Tables.events(s, dir).withColumn("us", unix_micros($"ts"))
-    val left = ev.filter($"event_type" =!= "signup")
-      .select($"user_id", $"us", $"event_id")
-    val right = ev.filter($"event_type" === "signup")
-      .select($"user_id", $"us", $"event_id".as("signup_id"))
-    graft.operators.AsOfJoin.backward(left, right, "user_id", "us", Seq("signup_id"))
-      .select($"event_id", $"signup_id")
-      .orderBy($"event_id")
-  }
-  val asofSql: String =
-    """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events),
-      |l AS (SELECT event_id, user_id, us FROM ev WHERE event_type <> 'signup'),
-      |r AS (SELECT event_id AS signup_id, user_id, us FROM ev WHERE event_type = 'signup')
-      |SELECT l.event_id, r.signup_id
-      |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.us >= r.us
-      |ORDER BY l.event_id""".stripMargin
-
-  // AO3: the SAME as-of enrichment as ao_asof_join, through the native
+  // AO3: as-of enrichment — every non-signup event gets the user's most
+  // recent prior (or simultaneous) signup, through the native
   // whole-operator path (graft.plans.AsOfJoinExec: custom logical node →
-  // planner strategy → streaming two-pointer merge exec) — hash-checked
-  // against the identical DuckDB ASOF oracle, so the physical operator is
-  // correctness-gated, not just spec-tested. Cheaper shape than ao's
-  // union+window: each side shuffles at its own width and the merge holds
-  // one payload row instead of window buffers.
+  // planner strategy → streaming two-pointer merge exec), hash-checked
+  // against DuckDB's native ASOF LEFT JOIN. Each side shuffles at its own
+  // width and the merge holds one payload row.
   def asofNative(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir).withColumn("us", unix_micros($"ts"))
@@ -1685,6 +1666,13 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .select($"event_id", $"signup_id")
       .orderBy($"event_id")
   }
+  val asofSql: String =
+    """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events),
+      |l AS (SELECT event_id, user_id, us FROM ev WHERE event_type <> 'signup'),
+      |r AS (SELECT event_id AS signup_id, user_id, us FROM ev WHERE event_type = 'signup')
+      |SELECT l.event_id, r.signup_id
+      |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.us >= r.us
+      |ORDER BY l.event_id""".stripMargin
 
   // AO2: FORWARD as-of join — each non-signup event enriched with the next
   // (or simultaneous) signup. Oracle trick: DuckDB ASOF is backward-only,
@@ -1696,7 +1684,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .select($"user_id", $"us", $"event_id")
     val right = ev.filter($"event_type" === "signup")
       .select($"user_id", $"us", $"event_id".as("next_signup_id"))
-    graft.operators.AsOfJoin.forward(left, right, "user_id", "us", Seq("next_signup_id"))
+    graft.plans.NativeAsOf.forward(left, right, "user_id", "us", Seq("next_signup_id"))
       .select($"event_id", $"next_signup_id")
       .orderBy($"event_id")
   }
@@ -2151,9 +2139,9 @@ object AnalyticsQueries extends graft.core.QueryModule {
 
   /** gf1: time-series gap filling — a regular 6-hour grid per user,
     * forward-filled with the user's most recent reading (sensor/metric
-    * densification). The fill is [[graft.operators.AsOfJoin.backward]] —
-    * the same single-shuffle union+window operator as ao_asof_join, on a
-    * second use case; rows before a user's first reading stay null →
+    * densification). The fill is [[graft.plans.NativeAsOf.backward]] —
+    * the same as-of exec as ao3_asof_native, on a second use case; grid
+    * rows before a user's first reading stay null →
     * filled flag false. Readings collapse to one per (user, µs) first so
     * the as-of match is deterministic under timestamp ties.
     */
@@ -2168,7 +2156,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
     val grid = readings.select($"user_id").distinct()
       .select($"user_id", explode(sequence(lit(0L), lit(119L))).as("i"))
       .select($"user_id", (lit(start) + $"i" * lit(step)).as("us"))
-    graft.operators.AsOfJoin.backward(grid, readings, "user_id", "us", Seq("v"))
+    graft.plans.NativeAsOf.backward(grid, readings, "user_id", "us", Seq("v"))
       .select($"user_id", $"us",
         coalesce($"v", lit(0.0)).as("v_filled"),
         $"v".isNotNull.as("filled"))
@@ -2864,7 +2852,6 @@ object AnalyticsQueries extends graft.core.QueryModule {
     Query("sk2_sketch_bounds", sk2, sk2Sql),
     Query("sm1_bottomk_sample", sm1, sm1Sql),
     Query("w9_percent_rank", w9, w9Sql),
-    Query("ao_asof_join", asof, asofSql),
     Query("ao3_asof_native", asofNative, asofSql),
     Query("ao2_asof_forward", asofForward, asofForwardSql),
     Query("x1_powerlaw_psd", x1, x1Sql),

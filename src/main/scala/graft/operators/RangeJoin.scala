@@ -50,35 +50,4 @@ object RangeJoin {
         pt("__pts") > iv("__lo") && pt("__pts") <= iv("__hi"), joinType)
       .drop("__bk", "__lo", "__hi", "__pts")
   }
-
-  /** Interval×interval OVERLAP join: inner-joins `left` [llo, lhi) to
-    * `right` [rlo, rhi) pairs with `llo < rhi && rlo < lhi` (half-open
-    * overlap), as a bucketed equijoin — the device that makes the
-    * inequality-only join (BroadcastNestedLoopJoin in stock Spark, O(n·m))
-    * a shuffle join when both sides are fact-sized.
-    *
-    * Both sides explode into the fixed-width buckets they cover. A pair
-    * overlapping within several SHARED buckets would emit once per bucket,
-    * so each pair is CLAIMED by exactly one: the bucket containing
-    * `max(llo, rlo)` — the overlap's left edge, which lies inside both
-    * sides' covered ranges (llo ≤ max < lhi since rlo < lhi, and
-    * symmetrically), so the claim never loses a pair and never double
-    * counts. Exactly-once is property-tested against the brute-force
-    * definition in RangeJoinSpec.
-    */
-  def intervalOverlap(left: DataFrame, llo: Column, lhi: Column,
-      right: DataFrame, rlo: Column, rhi: Column, bucketWidth: Long): DataFrame = {
-    val a = left
-      .withColumn("__alo", llo).withColumn("__ahi", lhi)
-      .withColumn("__bk", explode(sequence(floorDiv(llo, bucketWidth),
-        floorDiv(lhi, bucketWidth))))
-    val b = right
-      .withColumn("__blo", rlo).withColumn("__bhi", rhi)
-      .withColumn("__bk", explode(sequence(floorDiv(rlo, bucketWidth),
-        floorDiv(rhi, bucketWidth))))
-    a.join(b, a("__bk") === b("__bk") &&
-        a("__alo") < b("__bhi") && b("__blo") < a("__ahi") &&
-        a("__bk") === floorDiv(greatest(a("__alo"), b("__blo")), bucketWidth))
-      .drop("__bk", "__alo", "__ahi", "__blo", "__bhi")
-  }
 }

@@ -15,24 +15,22 @@ import org.apache.spark.sql.types.LongType
   * [[AsOfJoinExec]], registered through `SparkSessionExtensions` by
   * [[graft.ext.GraftExtensions]]).
   *
-  * The declarative [[graft.operators.AsOfJoin]] realizes the same
-  * semantics as union + window: it pads BOTH sides to the union schema,
-  * sorts the combined relation, and runs a `last(_, ignoreNulls)` window
-  * frame per payload column. This exec states the operator's ACTUAL
-  * requirements to Catalyst instead — children hash-clustered on the key
-  * and sorted by (key, ts) — and EnsureRequirements plans the minimal
-  * exchanges/sorts (each side shuffled at its own width, no union schema,
-  * no window buffers). The per-partition merge is then a single
-  * O(|left| + |right|) two-pointer pass holding ONE payload row, the
-  * sort-merge-join shape with a "latest so far" register instead of a
-  * buffered match set — streaming, spill-free, 100 TB-safe.
+  * The exec states the operator's requirements to Catalyst — children
+  * hash-clustered on the key and sorted by (key, ts) — and
+  * EnsureRequirements plans the minimal exchanges/sorts (each side
+  * shuffled at its own width, no union schema, no window buffers). The
+  * per-partition merge is then a single O(|left| + |right|) two-pointer
+  * pass holding ONE payload row, the sort-merge-join shape with a "latest
+  * so far" register instead of a buffered match set — streaming,
+  * spill-free, 100 TB-safe.
   *
-  * Semantics (matching DuckDB `ASOF LEFT JOIN` and the declarative
-  * operator): backward = latest right row with `r.ts <= l.ts` per key,
-  * forward = earliest with `r.ts >= l.ts`; unmatched left rows keep null
-  * payload; null keys/timestamps never match. Keys and timestamps are
-  * LongType by contract (the engine's event time is integer epoch
-  * micros/nanos throughout) — enforced at construction, cast upstream.
+  * Semantics (matching DuckDB `ASOF LEFT JOIN`): backward = latest right
+  * row with `r.ts <= l.ts` per key, forward = earliest with `r.ts >= l.ts`;
+  * the payload is the matched row's, nulls included; unmatched left rows
+  * keep null payload; null keys/timestamps never match. Keys and
+  * timestamps are LongType by contract (the engine's event time is
+  * integer epoch micros/nanos throughout) — enforced at construction,
+  * cast upstream.
   */
 case class AsOfJoinNode(
     left: LogicalPlan, right: LogicalPlan,

@@ -16,16 +16,15 @@ import org.apache.spark.sql.types.LongType
   * [[graft.ext.GraftExtensions]]).
   *
   * Semantics: inner-join left `[llo, lhi)` to right `[rlo, rhi)` where
-  * `llo < rhi && rlo < lhi` — the same contract as
-  * [[graft.operators.RangeJoin.intervalOverlap]]. That bucketed route
-  * explodes BOTH sides into window-sized buckets and equijoins, paying
-  * per-bucket occupancy² candidate fan-out plus the exactly-once claim
-  * filter, and its bucket width is a real tuning knob (too narrow →
-  * replication, too wide → quadratic candidates). This exec keeps a knob
-  * only for PARALLELISM: both sides are chunked by a coarse time range
-  * (`chunkWidth` ≫ interval length, so replication ≈ 1), and inside each
-  * chunk a single sweep-line pass enumerates pairs in
-  * O(rows + output) — no candidate blow-up, no post-filter.
+  * `llo < rhi && rlo < lhi`. A bucketed equijoin (both sides exploded
+  * into window-sized buckets) pays per-bucket occupancy² candidate
+  * fan-out plus an exactly-once claim filter, and its bucket width is a
+  * real tuning knob (too narrow → replication, too wide → quadratic
+  * candidates). This exec keeps a knob only for PARALLELISM: both sides
+  * are chunked by a coarse time range (`chunkWidth` ≫ interval length, so
+  * replication ≈ 1), and inside each chunk a single sweep-line pass
+  * enumerates pairs in O(rows + output) — no candidate blow-up, no
+  * post-filter.
   *
   * Sweep invariant: rows arrive merged by (chunk, lo, side — left first on
   * ties). Each side keeps the ACTIVE set of intervals whose `hi` exceeds

@@ -224,50 +224,14 @@ object Extras extends graft.core.QueryModule {
       |  AND e.us > s.us AND e.us <= s.us + 3600000000
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // OI1: interval×interval overlap join — signup attention windows (1 h)
-  // overlapping purchase windows (30 min), via
-  // [[graft.operators.RangeJoin.intervalOverlap]] (both sides explode into
-  // covered buckets, equijoin on the bucket, each pair claimed by the
-  // bucket of the overlap's left edge — exactly-once without a distinct).
-  // The oracle runs the plain inequality join (DuckDB IEJoin); in stock
-  // Spark that join shape is a BroadcastNestedLoopJoin, unusable with two
-  // fact-sized sides.
-  def oi1(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = Tables.events(s, dir).withColumn("us", unix_micros($"ts"))
-    val su = ev.filter($"event_type" === "signup")
-      .select($"event_id".as("signup_id"), $"us".as("slo"),
-        ($"us" + 3600000000L).as("shi"))
-    val pu = ev.filter($"event_type" === "purchase")
-      .select($"event_id".as("purchase_id"), $"us".as("plo"),
-        ($"us" + 1800000000L).as("phi"))
-    graft.operators.RangeJoin.intervalOverlap(
-        su, $"slo", $"shi", pu, $"plo", $"phi", bucketWidth = 3600000000L)
-      .groupBy(expr("(slo div 3600000000) % 24").as("hour"))
-      .agg(count(lit(1)).as("n_pairs"),
-        countDistinct($"signup_id").as("n_signups"),
-        countDistinct($"purchase_id").as("n_purchases"))
-      .orderBy($"hour")
-  }
-  val oi1Sql: String =
-    """WITH ev AS (SELECT event_id, epoch_us(ts) AS us, event_type FROM events),
-      |s AS (SELECT event_id AS signup_id, us AS slo, us + 3600000000 AS shi
-      |      FROM ev WHERE event_type = 'signup'),
-      |p AS (SELECT event_id AS purchase_id, us AS plo, us + 1800000000 AS phi
-      |      FROM ev WHERE event_type = 'purchase')
-      |SELECT (slo // 3600000000) % 24 AS hour, COUNT(*) AS n_pairs,
-      |  COUNT(DISTINCT signup_id) AS n_signups,
-      |  COUNT(DISTINCT purchase_id) AS n_purchases
-      |FROM s JOIN p ON slo < phi AND plo < shi
-      |GROUP BY 1 ORDER BY hour""".stripMargin
-
-  // OI2: the same overlap semantics as oi1 via the NATIVE sweep exec
+  // OI2: interval×interval overlap join — signup attention windows (1 h)
+  // overlapping purchase windows (30 min), via the native sweep exec
   // ([[graft.plans.IntervalJoinExec]]): coarse 6 h chunks set parallelism
   // only (replication ≈ 1 for ≤1 h intervals), and pair enumeration inside
   // a chunk is one sweep-line pass, O(rows + output) — no bucket-width
-  // candidate fan-out, no claim post-filter. Same DuckDB IEJoin oracle as
-  // oi1 (identical output contract proves the exec against an engine that
-  // plans the inequality join natively).
+  // candidate fan-out, no claim post-filter. The oracle runs the plain
+  // inequality join (DuckDB IEJoin); in stock Spark that join shape is a
+  // BroadcastNestedLoopJoin, unusable with two fact-sized sides.
   def oi2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir).withColumn("us", unix_micros($"ts"))
@@ -286,7 +250,17 @@ object Extras extends graft.core.QueryModule {
         countDistinct($"purchase_id").as("n_purchases"))
       .orderBy($"hour")
   }
-  val oi2Sql: String = oi1Sql
+  val oi2Sql: String =
+    """WITH ev AS (SELECT event_id, epoch_us(ts) AS us, event_type FROM events),
+      |s AS (SELECT event_id AS signup_id, us AS slo, us + 3600000000 AS shi
+      |      FROM ev WHERE event_type = 'signup'),
+      |p AS (SELECT event_id AS purchase_id, us AS plo, us + 1800000000 AS phi
+      |      FROM ev WHERE event_type = 'purchase')
+      |SELECT (slo // 3600000000) % 24 AS hour, COUNT(*) AS n_pairs,
+      |  COUNT(DISTINCT signup_id) AS n_signups,
+      |  COUNT(DISTINCT purchase_id) AS n_purchases
+      |FROM s JOIN p ON slo < phi AND plo < shi
+      |GROUP BY 1 ORDER BY hour""".stripMargin
 
   // W8: lead/lag navigation — per-user delta to the previous value and the
   // next event's type.
@@ -973,7 +947,6 @@ object Extras extends graft.core.QueryModule {
     Query("rj1_range_join_count", rj1, rj1Sql),
     Query("rj2_band_join_native", rj2, rj2Sql),
     Query("ams1_f2_sketch", ams1, ams1Sql),
-    Query("oi1_interval_overlap", oi1, oi1Sql),
     Query("oi2_interval_native", oi2, oi2Sql),
     Query("w8_lead_lag", w8, w8Sql),
     Query("g3_grouping_sets", g3, g3Sql),

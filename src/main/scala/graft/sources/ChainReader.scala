@@ -32,7 +32,8 @@ object ChainReader {
     }.sortBy(_._1).map { case (_, n) => s"$dir/$n" }
   }
 
-  /** S11: parameter names, in file order. */
+  /** S11: parameter names, in file order — one name per non-blank line,
+    * trimmed. Also reads S4 psrlists, which share the format. */
   def readPars(spark: SparkSession, path: String): Seq[String] = {
     import spark.implicits._
     spark.read.textFile(path).as[String].collect().toSeq
@@ -89,9 +90,11 @@ object ChainReader {
   /** F8: burn-in — drop the first 25% of steps (results.py:499). Uses the
     * dense step column (no global sort; scale-safe). */
   def burned(chainLong: DataFrame, frac: Double = 0.25): DataFrame = {
-    val maxStep = chainLong.agg(max(col("step"))).head().getLong(0)
-    val burn = math.floor(frac * (maxStep + 1)).toLong
-    chainLong.filter(col("step") >= burn)
+    val maxStep = chainLong.agg(max(col("step"))).head()
+    // no step at all (every line garbled): numpy's chain[burn:] of an
+    // empty chain is empty, not an error
+    if (maxStep.isNullAt(0)) chainLong
+    else chainLong.filter(col("step") >= math.floor(frac * (maxStep.getLong(0) + 1)).toLong)
   }
 
   /** F6: parameter-name mask — OR of substring matches (results.py:516-524). */

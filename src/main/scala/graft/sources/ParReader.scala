@@ -15,10 +15,8 @@ import org.apache.spark.sql.functions._
 object ParReader {
 
   private def rawLines(spark: SparkSession, path: String): DataFrame = {
-    val base = element_at(split(input_file_name(), "/"), -1)
-    val psr = element_at(split(element_at(split(base, "_"), 1), "\\."), 1)
     spark.read.textFile(path).toDF("value")
-      .withColumn("psr", psr)
+      .withColumn("psr", graft.core.Labels.psrFromPath(input_file_name()))
       .withColumn("f", split(trim(col("value")), "\\s+"))
       .filter(size(col("f")) >= 2 && !col("value").startsWith("#"))
   }

@@ -5,17 +5,12 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** The long tail of §2.1 scans: S4 psrlist, S7 two-column KV, S8 covariance
-  * CSV, S13 bilby result JSON, S14 result-dir discovery, S16 truths JSON.
+/** The long tail of §2.1 scans: S7 two-column KV, S8 covariance CSV, S13
+  * bilby result JSON, S14 result-dir discovery, S16 truths JSON. S4
+  * psrlists share pars.txt's format and are read by
+  * [[ChainReader.readPars]].
   */
 object SmallReaders {
-
-  /** S4: psrlist — one pulsar name per line. */
-  def readPsrList(spark: SparkSession, path: String): Seq[String] = {
-    import spark.implicits._
-    spark.read.textFile(path).as[String].collect().toSeq
-      .map(_.trim).filter(_.nonEmpty)
-  }
 
   /** S7: `load_to_dict` (enterprise_warp.py:614-623) — space-separated
     * key value pairs. */

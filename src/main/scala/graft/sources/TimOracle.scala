@@ -118,8 +118,7 @@ object TimOracle extends graft.core.QueryModule {
     val parGlob = "/root/reference/examples/data/*.par"
     val raw = s.read.textFile(parGlob).toDF("value")
       .withColumn("file_path", input_file_name())
-    val base = element_at(split(col("file_path"), "/"), -1)
-    val psr = element_at(split(element_at(split(base, "_"), 1), "\\."), 1)
+    val psr = graft.core.Labels.psrFromPath(col("file_path"))
     raw
       .withColumn("f", split(trim(col("value")), "\\s+"))
       .filter(size(col("f")) >= 2)

@@ -48,8 +48,7 @@ object TimReader {
   def readRaw(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.textFile(path).toDF("value")
       .withColumn("file_path", input_file_name())
-    val base = element_at(split(col("file_path"), "/"), -1)
-    val psr = element_at(split(element_at(split(base, "_"), 1), "\\."), 1)
+    val psr = graft.core.Labels.psrFromPath(col("file_path"))
     val parsed = raw
       .filter(substring(col("value"), 1, 1) === " ")
       .withColumn("f", split(trim(col("value")), "\\s+"))

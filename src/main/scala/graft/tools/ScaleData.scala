@@ -86,7 +86,7 @@ object ScaleData {
     // Replica timestamps shift by i whole periods (span + 2-day buffer,
     // day-aligned): identical replica timestamps would otherwise
     // manufacture ×k² interval-overlap output (round-5 slope table needed
-    // a prose apology for oi1). Day alignment preserves hour-of-day
+    // a prose apology for it). Day alignment preserves hour-of-day
     // distributions; disjoint periods model "k× longer retention at the
     // same traffic rate" — constant density, the scale model under which
     // a plan slope is attributable to the plan.

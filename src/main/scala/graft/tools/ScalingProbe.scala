@@ -14,6 +14,77 @@ package graft.tools
   * Usage: runMain graft.tools.ScalingProbe [outFile] [sf1Dir]
   */
 object ScalingProbe {
+  /** The tri-SF sweep: one representative query per operator shape. */
+  val sweepQueries: Seq[String] = Seq(
+    "q1_pricing_summary", "q3_shipping_priority", "q9_profit_by_nation",
+    "q18_large_orders", "d1_exact_dedup", "d2_minhash_lsh",
+    "d6_simhash_hamming", "c1_dedup_clusters", "s1_ann_brute_topk",
+    "t2_quality_score", "w_sessionize", "sj1_salted_join",
+    "t6_bm25_score", "t8_unigram_logprob", "t9_tfidf_topterms",
+    "d7_decontaminate", "s4_kmeans_update", "sm2_stratified_sample",
+    "hh1_heavy_hitters", "fn1_funnel_steps", "rt1_retention_cohorts",
+    "twa1_time_weighted", "o1_ohlc_bars", "g4_cube", "ds1_dup_spans",
+    "pr1_pagerank", "bf1_bloom_semijoin", "pack1_sequence_packing",
+    "mix1_domain_mixture", "z1_event_anomaly",
+    "d5_embedding_neardup", "cdc1_merge_snapshot", "ii1_inverted_index",
+    "bpe1_pair_counts", "t10_bigram_logprob", "spl1_hash_split",
+    "sk1_sketches", "ol1_max_concurrency", "bpe2_merge_train",
+    "pf1_column_profile", "ts1_gapfill_locf", "wsm1_weighted_sample",
+    "s5_ann_ivf_multiprobe", "ka1_k_anonymity", "ch1_token_windows",
+    "pf2_numeric_profile", "gq1_gopher_rules", "pii1_redaction",
+    "sem1_semantic_dedup", "dsir1_importance_resample", "bpe4_encode",
+    "tc1_triangle_count", "d9_prefix_filter_join",
+    "ld1_segment_dedup", "lr1_quality_classifier", "qz1_int8_quant_ann",
+    "cms1_countmin_freq", "kc1_kcore_peel", "oi2_interval_native",
+    "t12_vocab_coverage", "rp1_random_projection", "mix2_quota_sample",
+    "pi1_phrase_search", "nv1_novelty_score", "knn1_knn_graph",
+    "cdk1_content_chunking", "qf1_adaptive_floor", "mix3_epoch_schedule",
+    "ord1_global_shuffle",
+    "tm1_training_manifest", "mf1_manifest_fingerprint",
+    "ev1_embedding_moments", "cal1_score_calibration", "sky1_pareto_front",
+    "lp1_label_propagation",
+    "q8_market_share", "q13_customer_distribution", "ec1_embedding_gram",
+    "ent1_char_entropy", "reg1_linear_trend", "mk1_markov_transitions",
+    "at1_attribution", "au1_rolling_active_users", "cp1_cusum_changepoint",
+    "pca1_reconstruction_audit", "th1_theta_sketch_ops", "fc1_naive_backtest",
+    "ao3_asof_native", "dl1_damerau_linkage", "skew1_key_skew_audit",
+    "rb1_mad_outliers", "fh1_feature_hashing", "cl1_text_clean",
+    "bfs1_reachability_levels", "mb1_market_basket",
+    "path1_user_journeys", "gini1_activity_concentration",
+    "cf1_item_similarity")
+
+  /** One more decade for the steepest-slope queries from the 0.01→0.1
+    * fit (plus pr1/d2, the two most expensive operators overall). */
+  val decadeQueries: Seq[String] = Seq(
+    "pf2_numeric_profile", "g4_cube", "d6_simhash_hamming", "ds1_dup_spans", "pr1_pagerank", "q18_large_orders", "d2_minhash_lsh",
+    // round-5 additions: the quadratic-within-cell (sem1) and
+    // vocabulary-encode (bpe4/dsir1) shapes need the honest decade
+    "sem1_semantic_dedup", "bpe4_encode", "dsir1_importance_resample",
+    "tc1_triangle_count", "d9_prefix_filter_join",
+    // iterative / join-heavy shapes
+    "kc1_kcore_peel", "oi2_interval_native", "d6b_simhash128_scale",
+    "ld1_segment_dedup",
+    // single-pass moment/sketch and prefix-sum shapes added late in
+    // round 5 — expected ≈1 (scan-bound) but measured, not assumed
+    "ec1_embedding_gram", "pca1_reconstruction_audit",
+    "cp1_cusum_changepoint", "au1_rolling_active_users",
+    // the native as-of exec, the basket self-join, the session-path
+    // windows, and the global-rank Gini — all join/sort-bound shapes
+    "ao3_asof_native", "mb1_market_basket", "path1_user_journeys",
+    "gini1_activity_concentration",
+    // r7 (verdict directive 5): the full graph family — bfs1's
+    // bounded-round frontier expansion and cf1's capped-profile
+    // self-join join tc1/kc1/d9 so every graph-shaped operator has a
+    // decade on record
+    "bfs1_reachability_levels", "cf1_item_similarity",
+    // r9: lp1 joins the graph family (its prepartitioned-edge probe
+    // is a decade decision); d6c is the new output-bounded dedup cap
+    "lp1_label_propagation", "d6c_simhash_capped",
+    // r10 (verdict directive 4): decade coverage for every query whose
+    // sf1 best exceeded 2.5 s — knn1 (the r9 #2 sf1 cost, now on the
+    // corpus-sized IVF dial) and d5's label-blocked bounded self-join
+    "knn1_knn_graph", "d5_embedding_neardup")
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SCALING.md")
     val sf1Dir = args.lift(1)
@@ -26,46 +97,9 @@ object ScalingProbe {
     val decadeOnly = args.contains("--decade-only")
     val spark = graft.core.GraftSession.local()
     val sfs = Seq("0.001", "0.01", "0.1")
-    val queries = Seq(
-      "q1_pricing_summary", "q3_shipping_priority", "q9_profit_by_nation",
-      "q18_large_orders", "d1_exact_dedup", "d2_minhash_lsh",
-      "d6_simhash_hamming", "c1_dedup_clusters", "s1_ann_brute_topk",
-      "t2_quality_score", "ao_asof_join", "w_sessionize", "sj1_salted_join",
-      "t6_bm25_score", "t8_unigram_logprob", "t9_tfidf_topterms",
-      "d7_decontaminate", "s4_kmeans_update", "sm2_stratified_sample",
-      "hh1_heavy_hitters", "fn1_funnel_steps", "rt1_retention_cohorts",
-      "twa1_time_weighted", "o1_ohlc_bars", "g4_cube", "ds1_dup_spans",
-      "pr1_pagerank", "bf1_bloom_semijoin", "pack1_sequence_packing",
-      "mix1_domain_mixture", "z1_event_anomaly",
-      "d5_embedding_neardup", "cdc1_merge_snapshot", "ii1_inverted_index",
-      "bpe1_pair_counts", "t10_bigram_logprob", "spl1_hash_split",
-      "sk1_sketches", "ol1_max_concurrency", "bpe2_merge_train",
-      "pf1_column_profile", "ts1_gapfill_locf", "wsm1_weighted_sample",
-      "s5_ann_ivf_multiprobe", "ka1_k_anonymity", "ch1_token_windows",
-      "pf2_numeric_profile", "gq1_gopher_rules", "pii1_redaction",
-      "sem1_semantic_dedup", "dsir1_importance_resample", "bpe4_encode",
-      "tc1_triangle_count", "d9_prefix_filter_join",
-      "ld1_segment_dedup", "lr1_quality_classifier", "qz1_int8_quant_ann",
-      "cms1_countmin_freq", "kc1_kcore_peel", "oi1_interval_overlap",
-      "t12_vocab_coverage", "rp1_random_projection", "mix2_quota_sample",
-      "pi1_phrase_search", "nv1_novelty_score", "knn1_knn_graph",
-      "cdk1_content_chunking", "qf1_adaptive_floor", "mix3_epoch_schedule",
-      "ord1_global_shuffle",
-      "tm1_training_manifest", "mf1_manifest_fingerprint",
-      "ev1_embedding_moments", "cal1_score_calibration", "sky1_pareto_front",
-      "lp1_label_propagation",
-      "q8_market_share", "q13_customer_distribution", "ec1_embedding_gram",
-      "ent1_char_entropy", "reg1_linear_trend", "mk1_markov_transitions",
-      "at1_attribution", "au1_rolling_active_users", "cp1_cusum_changepoint",
-      "pca1_reconstruction_audit", "th1_theta_sketch_ops", "fc1_naive_backtest",
-      "ao3_asof_native", "dl1_damerau_linkage", "skew1_key_skew_audit",
-      "rb1_mad_outliers", "fh1_feature_hashing", "cl1_text_clean",
-      "bfs1_reachability_levels", "mb1_market_basket",
-      "path1_user_journeys", "gini1_activity_concentration",
-      "cf1_item_similarity")
     // warm codegen/classloading once
     graft.SparkEntry.queries("q1_pricing_summary")(spark, s"/root/testdata/sf0.1").collect()
-    val rows = (if (decadeOnly) Seq.empty[String] else queries).map { name =>
+    val rows = (if (decadeOnly) Seq.empty[String] else sweepQueries).map { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = sfs.map { sf =>
         val dir = s"/root/testdata/sf$sf"
@@ -103,40 +137,7 @@ object ScalingProbe {
     }
     val decadeText: Option[String] = sf1Dir.map { dir =>
       val sb = new StringBuilder
-      // One more decade for the steepest-slope queries from the 0.01→0.1
-      // fit (plus pr1/d2, the two most expensive operators overall).
-      val steep = Seq("pf2_numeric_profile", "g4_cube", "d6_simhash_hamming",
-        "ds1_dup_spans", "pr1_pagerank", "q18_large_orders", "d2_minhash_lsh",
-        // round-5 additions: the quadratic-within-cell (sem1) and
-        // vocabulary-encode (bpe4/dsir1) shapes need the honest decade
-        "sem1_semantic_dedup", "bpe4_encode", "dsir1_importance_resample",
-        "tc1_triangle_count", "d9_prefix_filter_join",
-        // this session's additions with iterative / join-heavy shapes
-        "kc1_kcore_peel", "oi1_interval_overlap", "oi2_interval_native",
-        "d6b_simhash128_scale",
-        "ld1_segment_dedup",
-        // single-pass moment/sketch and prefix-sum shapes added late in
-        // round 5 — expected ≈1 (scan-bound) but measured, not assumed
-        "ec1_embedding_gram", "pca1_reconstruction_audit",
-        "cp1_cusum_changepoint", "au1_rolling_active_users",
-        // this session's additions: the native as-of exec (vs ao's
-        // union+window row above), the basket self-join, the session-path
-        // windows, and the global-rank Gini — all join/sort-bound shapes
-        "ao3_asof_native", "mb1_market_basket", "path1_user_journeys",
-        "gini1_activity_concentration",
-        // r7 (verdict directive 5): the full graph family — bfs1's
-        // bounded-round frontier expansion and cf1's capped-profile
-        // self-join join tc1/kc1/d9 so every graph-shaped operator has a
-        // decade on record
-        "bfs1_reachability_levels", "cf1_item_similarity",
-        // r9: lp1 joins the graph family (its prepartitioned-edge probe
-        // is a decade decision); d6c is the new output-bounded dedup cap
-        "lp1_label_propagation", "d6c_simhash_capped",
-        // r10 (verdict directive 4): decade coverage for every query whose
-        // sf1 best exceeded 2.5 s — knn1 (the r9 #2 sf1 cost, now on the
-        // corpus-sized IVF dial) and d5's label-blocked bounded self-join
-        "knn1_knn_graph", "d5_embedding_neardup")
-      val decade = steep.map { name =>
+      val decade = decadeQueries.map { name =>
         val fn = graft.SparkEntry.queries(name)
         def best(d: String): Double = {
           fn(spark, d).collect() // untimed warm-up: memoized intermediates

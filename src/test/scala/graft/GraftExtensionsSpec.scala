@@ -61,10 +61,16 @@ class GraftExtensionsSpec extends SparkTestBase {
   test("rewritten dot is bit-identical to the native route on real embeddings") {
     import spark.implicits._
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001").limit(50)
-    val viaHof = e.select($"vec_id", VectorOps.dot($"embedding", $"embedding").as("d"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val viaNative = e.select($"vec_id", VectorOps.dotNative($"embedding", $"embedding").as("d"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(viaHof === viaNative)
+    def dots(d: org.apache.spark.sql.Column): Map[Long, Double] =
+      e.select($"vec_id", d.as("d")).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // reference: the same fold over the embeddings widened to ARRAY<DOUBLE>,
+    // which the float-only rule leaves a HOF (see the case above)
+    val wide = transform($"embedding", _.cast("double"))
+    val viaHof = dots(VectorOps.dot(wide, wide))
+    val viaRewrite = dots(VectorOps.dot($"embedding", $"embedding"))
+    val viaNative = dots(VectorOps.dotNative($"embedding", $"embedding"))
+    assert(viaHof.nonEmpty)
+    assert(viaRewrite === viaHof)
+    assert(viaNative === viaHof)
   }
 }

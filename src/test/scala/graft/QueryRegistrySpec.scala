@@ -32,6 +32,18 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
+  test("every query the tools and the Bench warm-up name is registered") {
+    val named = Map(
+      "ScalingProbe.sweepQueries" -> graft.tools.ScalingProbe.sweepQueries,
+      "ScalingProbe.decadeQueries" -> graft.tools.ScalingProbe.decadeQueries,
+      "ExplainDump.headline" -> graft.tools.ExplainDump.headline,
+      "Bench.warmUp" -> Bench.warmUp)
+    val unknown = named.flatMap { case (list, names) =>
+      names.filterNot(SparkEntry.queries.contains).map(n => s"$list: $n")
+    }
+    assert(unknown.isEmpty, unknown.mkString(", "))
+  }
+
   test("q8_market_share is Extras.q8 with its own oracle") {
     assert(SparkEntry.oracleSql("q8_market_share") == graft.relational.Extras.q8Sql)
   }

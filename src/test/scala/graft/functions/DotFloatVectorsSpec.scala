@@ -10,10 +10,18 @@ class DotFloatVectorsSpec extends SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
 
   test("native expression matches the HOF fold bit-for-bit on real embeddings") {
+    // the reference folds the embeddings widened to ARRAY<DOUBLE> (the same
+    // products and summation order): the test session installs
+    // NativeDotRewrite, which turns a fold over ARRAY<FLOAT> into this very
+    // expression and would compare it with itself
     val e = Tables.embeddings(spark, dir)
+    val wide = transform(col("embedding"), _.cast("double"))
     val both = e.select(
-      VectorOps.dot(col("embedding"), col("embedding")).as("hof"),
+      VectorOps.dot(wide, wide).as("hof"),
       VectorOps.dotNative(col("embedding"), col("embedding")).as("native"))
+    val opt = both.queryExecution.optimizedPlan.toString
+    assert(opt.contains("aggregate("), s"reference must stay a HOF fold:\n$opt")
+    assert(both.count() > 0)
     assert(both.filter(col("hof") =!= col("native")).count() === 0)
   }
 

@@ -62,29 +62,6 @@ class RangeJoinSpec extends SparkTestBase {
     assert(got.toSeq === Seq(10L, 11L))
   }
 
-  test("intervalOverlap: random interval sets match the naive theta join, exactly once") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(99L)
-    for (width <- Seq(5L, 37L, 400L)) {
-      val a = Seq.tabulate(40) { i =>
-        val lo = rnd.nextInt(600).toLong
-        (i.toLong, lo, lo + 1 + rnd.nextInt(150).toLong)
-      }.toDF("aid", "alo", "ahi")
-      val b = Seq.tabulate(40) { i =>
-        val lo = rnd.nextInt(600).toLong
-        (i.toLong, lo, lo + 1 + rnd.nextInt(90).toLong)
-      }.toDF("bid", "blo", "bhi")
-      val got = RangeJoin.intervalOverlap(a, col("alo"), col("ahi"),
-          b, col("blo"), col("bhi"), bucketWidth = width)
-        .select($"aid", $"bid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      val want = a.as("x").join(b.as("y"),
-          col("x.alo") < col("y.bhi") && col("y.blo") < col("x.ahi"))
-        .select($"aid", $"bid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      assert(got === want, s"width=$width")
-      assert(got.distinct.length === got.length, s"duplicates at width=$width")
-    }
-  }
-
   test("random intervals/points match the naive theta join at odd bucket widths") {
     import spark.implicits._
     val rnd = new scala.util.Random(4242L)

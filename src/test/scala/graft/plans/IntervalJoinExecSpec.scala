@@ -94,11 +94,4 @@ class IntervalJoinExecSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("Exchange hashpartitioning"), p)
   }
-
-  test("oi2 ≡ oi1 on the sf0.001 events table (native vs bucketed route)") {
-    val dir = "/root/testdata/sf0.001"
-    val a = graft.relational.Extras.oi1(spark, dir).collect().map(_.toSeq)
-    val b = graft.relational.Extras.oi2(spark, dir).collect().map(_.toSeq)
-    assert(a.toSeq === b.toSeq)
-  }
 }

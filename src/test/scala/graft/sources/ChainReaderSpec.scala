@@ -63,4 +63,14 @@ class ChainReaderSpec extends SparkTestBase {
     val chain = ChainReader.readChain(spark, d2.toString)
     assert(chain.count() === 2)
   }
+
+  test("burn-in of a chain with no parseable line is empty, not an error") {
+    val d3 = tmpDir("chain3")
+    write(d3, "chain_1.txt", "not numbers here\n\n1.0 oops\n")
+    val long = ChainReader.toLong(ChainReader.readChain(spark, d3.toString),
+      Seq("par_alpha"))
+    val burned = ChainReader.burned(long)
+    assert(burned.columns.toSeq === Seq("step", "par", "value"))
+    assert(burned.count() === 0)
+  }
 }

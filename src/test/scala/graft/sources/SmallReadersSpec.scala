@@ -36,7 +36,7 @@ class SmallReadersSpec extends SparkTestBase {
     val p = write(d, "truths.json", """{"gw_log10_A": -14.5, "nmodel": 1}""")
     assert(SmallReaders.readTruths(p) === Map("gw_log10_A" -> -14.5, "nmodel" -> 1.0))
     val pl = write(d, "psrs.txt", "J0437-4715\n\nJ1832-0836\n")
-    assert(SmallReaders.readPsrList(spark, pl) === Seq("J0437-4715", "J1832-0836"))
+    assert(ChainReader.readPars(spark, pl) === Seq("J0437-4715", "J1832-0836"))
   }
 
   test("injection helpers: psd vector, backend reconciliation (X16/A18)") {
