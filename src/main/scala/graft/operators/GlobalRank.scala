@@ -24,8 +24,11 @@ import org.apache.spark.sql.types.LongType
   * range boundary, tie order — like any engine's ROW_NUMBER — is unspecified.
   *
   * Reference behavior this replaces: numpy row-order slicing of MCMC chains
-  * (burn-in / thinning / fraction splits, results.py:499,664-691) and
-  * equal-count binning (results.py:305-347).
+  * that have no dense step column ([[graft.analytics.Chain.burnThin]] and
+  * the fraction splits, results.py:664-691) and equal-count binning
+  * (results.py:305-347). The chain loader does not rank:
+  * [[graft.sources.ChainReader.readChain]] numbers its steps from
+  * per-split line counts of its one scan.
   */
 object GlobalRank {
 

@@ -629,20 +629,24 @@ object TimingModel {
   }
 
   /** [[ParInfo]] from ParReader output — driver-side, dimension-table
-    * sized (a handful of rows per pulsar). */
+    * sized (a handful of rows per pulsar). One job collects both tables:
+    * their rows are tagged by kind and unioned, and a union keeps each
+    * side's row order, so JUMP selectors keep their file order. */
   def parInfo(params: DataFrame, jumps: DataFrame): Map[String, ParInfo] = {
-    val kv = params.select("psr", "key", "value").collect()
-      .groupBy(_.getString(0))
-    val jm = jumps.select("psr", "flag", "flagval").collect()
-      .groupBy(_.getString(0))
+    import org.apache.spark.sql.functions.{col, lit}
+    val (jumpRows, kvRows) = params.select(lit(false).as("jump"), col("psr"), col("key"), col("value"))
+      .union(jumps.select(lit(true), col("psr"), col("flag"), col("flagval")))
+      .collect().partition(_.getBoolean(0))
+    val kv = kvRows.groupBy(_.getString(1))
+    val jm = jumpRows.groupBy(_.getString(1))
     kv.map { case (psr, rows) =>
-      val m = rows.map(r => r.getString(1) -> r.getString(2)).toMap
+      val m = rows.map(r => r.getString(2) -> r.getString(3)).toMap
       psr -> ParInfo(
         psr = psr,
         pepochMjd = m.get("PEPOCH").map(_.toDouble).getOrElse(
           m.get("START").map(_.toDouble).getOrElse(0.0)),
         jumpGroups = jm.getOrElse(psr, Array.empty[org.apache.spark.sql.Row])
-          .map(r => (r.getString(1), r.getString(2))).toSeq,
+          .map(r => (r.getString(2), r.getString(3))).toSeq,
         includeDm = m.contains("DM"))
     }
   }

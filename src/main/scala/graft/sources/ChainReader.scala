@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 /** Posterior-chain loader (SURVEY §1.5, §2.1 S9/S10/S11).
   *
@@ -21,6 +25,15 @@ object ChainReader {
 
   private val SeparatedRe = """chain_(\d{14})(_.*)?\.txt""".r
 
+  /** Metadata key on [[readChain]]'s `step` column: the chain's total step
+    * count. It survives projections and filters ([[toLong]], [[parMask]]),
+    * and [[burned]] reads it instead of running a job for `max(step)`. */
+  val StepsKey = "chain_steps"
+
+  /** One split of a chain piece: its first id, its parseable lines and the
+    * step of its first line. */
+  private case class Split(first: Long, lines: Long, start: Long)
+
   /** S10: discover separated chain pieces in a directory, sorted by their
     * 14-digit timestamp. Driver-side listing (directory metadata, not data). */
   def discoverSeparated(dir: String): Seq[String] = {
@@ -33,46 +46,82 @@ object ChainReader {
   }
 
   /** S11: parameter names, in file order — one name per non-blank line,
-    * trimmed. Also reads S4 psrlists, which share the format. */
-  def readPars(spark: SparkSession, path: String): Seq[String] = {
-    import spark.implicits._
-    spark.read.textFile(path).as[String].collect().toSeq
-      .map(_.trim).filter(_.nonEmpty)
-  }
+    * trimmed. Also reads S4 psrlists, which share the format. The file is
+    * a handful of names, read on the driver: no Spark job (`spark` is
+    * not used). */
+  def readPars(spark: SparkSession, path: String): Seq[String] =
+    new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
+      .lines().iterator().asScala.map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** S9: one chain file → (step, values ARRAY<DOUBLE>); empty/garbled lines
-    * dropped (the reference tolerates them via np.loadtxt retry,
-    * results.py:481-497). Step numbering = line order within the file.
+  /** S9/E4: main chain + separated pieces → (step, vals ARRAY<DOUBLE>), in
+    * one text scan over every piece. Empty/garbled lines are dropped (the
+    * reference tolerates them via np.loadtxt retry, results.py:481-497).
+    *
+    * `step` is a line's index among the parseable lines of the
+    * concatenation: main chain first, then the pieces in timestamp order.
+    * Each parseable line is tagged with its file, its split's byte offset
+    * in that file and a `monotonically_increasing_id`, taken after the
+    * garbled-line filter so a split's ids are consecutive. One job then
+    * counts each split's lines and takes its first id, one row per split
+    * (a split is read by one task, so this needs no shuffle). On the
+    * driver the splits are ordered by (piece, byte offset); a line's step
+    * is its split's start step plus its id minus the split's first id. A
+    * literal map carries the per-split numbers into the plan: no sort, no
+    * range shuffle, no collect of chain rows. Every row checks that its id
+    * falls inside its split's counted range, so an action whose scan
+    * splits or packs the pieces differently (a piece that grew, a changed
+    * `spark.sql.files.*` setting) fails instead of misnumbering.
+    *
+    * The total step count is stamped on `step`'s metadata ([[StepsKey]]).
     */
-  def readChainFile(spark: SparkSession, path: String, stepOffset: Long = 0L): DataFrame = {
-    val lines = spark.read.textFile(path).toDF("value")
-      .withColumn("rid", monotonically_increasing_id())
-    val parsed = lines
-      .filter(length(trim(col("value"))) > 0)
-      .withColumn("vals",
-        expr("transform(split(trim(value), '\\\\s+'), x -> try_cast(x AS double))"))
-      .filter(!exists(col("vals"), _.isNull))
-    graft.operators.GlobalRank.withRowNumber(parsed, Seq(col("rid")), nTotal = None)
-      .withColumn("step", (col("rn") - 1 + stepOffset).cast("long"))
-      .select(col("step"), col("vals"))
-  }
-
-  /** Main chain + separated pieces, concatenated in order (E4). */
   def readChain(spark: SparkSession, dir: String, mainFile: String = "chain_1.txt"): DataFrame = {
+    import spark.implicits._
     val paths = {
       val main = s"$dir/$mainFile"
       val sep = discoverSeparated(dir)
       (if (new java.io.File(main).exists()) Seq(main) else Seq.empty) ++ sep
     }
     require(paths.nonEmpty, s"no chain files in $dir")
-    // offsets are per-file row counts; files are MB-sized text (the
-    // reference prints their size at load, results.py:459-461)
-    val dfs = paths.foldLeft((Seq.empty[DataFrame], 0L)) { case ((acc, off), p) =>
-      val df = readChainFile(spark, p, off)
-      val n = df.count()
-      (acc :+ df, off + n)
-    }._1
-    dfs.reduce(_ unionByName _)
+    val lines = spark.read.textFile(paths: _*).toDF("value")
+      .filter(length(trim(col("value"))) > 0)
+      .withColumn("vals",
+        expr("transform(split(trim(value), '\\\\s+'), x -> try_cast(x AS double))"))
+      .filter(!exists(col("vals"), _.isNull))
+      .select(input_file_name().as("file"), input_file_block_start().as("block"),
+        monotonically_increasing_id().as("id"), col("vals"))
+
+    // (file URI, split offset, lines, first id): one row per split; a
+    // task's ids increase, so a split's first id is the first one seen
+    val splits = lines.select("file", "block", "id").as[(String, Long, Long)]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.LinkedHashMap.empty[(String, Long), (Long, Long)]
+        rows.foreach { case (f, b, id) =>
+          val (n, first) = acc.getOrElse((f, b), (0L, id))
+          acc((f, b)) = (n + 1, first)
+        }
+        acc.iterator.map { case ((f, b), (n, first)) => (f, b, n, first) }
+      }.collect()
+
+    // input_file_name() is a URL-encoded URI; pieces are matched by name
+    val pieceOf = paths.map(p => Paths.get(p).getFileName.toString).zipWithIndex.toMap
+    def piece(uri: String): Int = pieceOf(new org.apache.hadoop.fs.Path(new java.net.URI(uri)).getName)
+    val ordered = splits.sortBy { case (f, b, _, _) => (piece(f), b) }
+    val starts = ordered.scanLeft(0L)(_ + _._3)
+    val table: Map[String, Map[Long, Split]] =
+      ordered.zip(starts).groupBy(_._1._1).map { case (f, ss) =>
+        f -> ss.map { case ((_, b, n, first), start) => b -> Split(first, n, start) }.toMap }
+
+    // the lookup is its own projection so that it runs once per row
+    val split = col("split")
+    val rel = col("id") - split("first")
+    val step = when(rel >= 0 && rel < split("lines"), split("start") + rel)
+      .otherwise(raise_error(lit(
+        s"the chain files in $dir changed, or are split differently, since they were counted: read the chain again")))
+    val stamp = new MetadataBuilder().putLong(StepsKey, starts.last).build()
+    lines
+      .select(col("id"), col("vals"),
+        element_at(element_at(typedLit(table), col("file")), col("block")).as("split"))
+      .select(step.cast("long").as("step", stamp), col("vals"))
   }
 
   /** J5: wide→long pivot. Drops the trailing `nDiag` diagnostic columns
@@ -87,14 +136,14 @@ object ChainReader {
       .select(col("step"), col("par"), col("value"))
   }
 
-  /** F8: burn-in — drop the first 25% of steps (results.py:499). Uses the
-    * dense step column (no global sort; scale-safe). */
+  /** F8: burn-in — drop the first `frac` of steps (results.py:499). The
+    * step count comes from the [[StepsKey]] stamp [[readChain]] put on
+    * `step`, so this runs no job; a frame without it is rejected. */
   def burned(chainLong: DataFrame, frac: Double = 0.25): DataFrame = {
-    val maxStep = chainLong.agg(max(col("step"))).head()
-    // no step at all (every line garbled): numpy's chain[burn:] of an
-    // empty chain is empty, not an error
-    if (maxStep.isNullAt(0)) chainLong
-    else chainLong.filter(col("step") >= math.floor(frac * (maxStep.getLong(0) + 1)).toLong)
+    val stamp = chainLong.schema("step").metadata
+    require(stamp.contains(StepsKey),
+      s"`step` has no '$StepsKey' metadata: read the chain with ChainReader.readChain")
+    chainLong.filter(col("step") >= math.floor(frac * stamp.getLong(StepsKey)).toLong)
   }
 
   /** F6: parameter-name mask — OR of substring matches (results.py:516-524). */

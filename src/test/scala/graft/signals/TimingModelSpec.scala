@@ -391,4 +391,23 @@ class TimingModelSpec extends SparkTestBase {
       assert(keys.indices.forall(i => placed(keys(i)) === i), s"n=$n")
     }
   }
+
+  test("parInfo: one job; PEPOCH/START, DM and JUMP selectors in file order") {
+    val d = tmpDir("parinfo")
+    java.nio.file.Files.writeString(d.resolve("J0437-4715.par"), Seq(
+      "PSRJ J0437-4715", "PEPOCH 55000.5", "F0 173.6879 1 1e-12", "DM 2.64 1",
+      "JUMP -group PDFB_20CM 1e-6 1", "# comment", "JUMP -be CASPSR 2e-6 1",
+      "JUMP -group CPSR2_50CM 0.0 0").mkString("", "\n", "\n"))
+    java.nio.file.Files.writeString(d.resolve("J1909-3744.par"),
+      "PSRJ J1909-3744\nSTART 53000.0\nF0 339.3 1\n")
+    val params = ParReader.readParams(spark, s"$d/*.par")
+    val jumps = ParReader.readJumps(spark, s"$d/*.par")
+    val (got, jobs) = countingJobs(TimingModel.parInfo(params, jumps))
+    assert(jobs === 1)
+    assert(got === Map(
+      "J0437-4715" -> TimingModel.ParInfo("J0437-4715", 55000.5,
+        Seq("group" -> "PDFB_20CM", "be" -> "CASPSR", "group" -> "CPSR2_50CM"),
+        includeDm = true),
+      "J1909-3744" -> TimingModel.ParInfo("J1909-3744", 53000.0)))
+  }
 }
