@@ -116,7 +116,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
   // W3/K4: earliest-fraction split — first 10% of rows vs rest, per type.
   def w3(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Chain.withRank(Tables.events(s, dir), $"event_id")
+    graft.operators.GlobalRank.withRowNumber(Tables.events(s, dir), Seq($"event_id"))
       .withColumn("early",
         when($"rn" <= floor(lit(0.1) * $"n").cast("long"), 1L).otherwise(0L))
       .groupBy($"event_type")

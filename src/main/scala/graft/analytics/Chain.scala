@@ -29,17 +29,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Chain {
 
-  /** Rows of `df` with global row rank (1-based) by `order`, plus total
-    * count `n` — the building block for fraction-based splits. Delegates to
-    * [[graft.operators.GlobalRank]]: distributed range-partitioned ranking,
-    * not a single-partition window. */
-  def withRank(df: DataFrame, order: Column*): DataFrame =
-    graft.operators.GlobalRank.withRowNumber(df, order)
-
   /** numpy `chain[floor(frac*n)::k]`: drop the first `frac` of rows by
     * `order`, keep every k-th of the remainder (first survivor kept). */
   def burnThin(df: DataFrame, frac: Double, k: Int, order: Column*): DataFrame =
-    withRank(df, order: _*)
+    graft.operators.GlobalRank.withRowNumber(df, order)
       .filter(col("rn") > floor(lit(frac) * col("n")).cast("long") &&
         (col("rn") - floor(lit(frac) * col("n")).cast("long")) % k === 1)
       .drop("rn", "n")

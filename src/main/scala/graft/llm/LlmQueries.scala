@@ -2595,19 +2595,16 @@ object LlmQueries extends graft.core.QueryModule {
     * argument is assembled as ONE left-associated double product on both
     * engines (cab·Nt·Nt / (Nb·ca·cb)) — identical operand order gives the
     * bit-identical IEEE result t8/t10 already rely on.
-    */
-  def t11(s: SparkSession, dir: String): DataFrame =
-    t11Shape(s, dir, arrayzip = true)
-
-  /** The total bigram count `nb` aggregates the bigram stream a second
+    *
+    * The total bigram count `nb` aggregates the bigram stream a second
     * time; deriving it from the (w1, w2) count table (Σ cab) so the stream
     * is computed once was measured a loss: OPTIMIZATION_r11.md §6, sf1
-    * local[32] 0.686 → 0.725 s. */
-  private[llm] def t11Shape(s: SparkSession, dir: String,
-      arrayzip: Boolean): DataFrame = {
+    * local[32] 0.686 → 0.725 s.
+    */
+  def t11(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pt = docTokens(s, dir)
-    val bg = bigrams(s, dir, arrayzip).select($"w1", $"w2")
+    val bg = bigrams(s, dir).select($"w1", $"w2")
     val bc = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("cab"))
     val ug = pt.groupBy($"tok").agg(count(lit(1)).as("cu"))
     val nt = pt.agg(count(lit(1)).as("nt"))
@@ -2640,49 +2637,34 @@ object LlmQueries extends graft.core.QueryModule {
        |WHERE cab >= 5
        |ORDER BY pmi DESC, bc.w1, bc.w2 LIMIT 20""".stripMargin
 
-  /** Bigram stream (doc_id, w1, w2) for t10/t11. `arrayzip = true` (the
-    * r10-adopted shape, OPTIMIZATION_r10.md §6) builds consecutive pairs
-    * ARRAY-SIDE before the explode — zip_with over the token array, the
-    * tc1 edge-build device — so there is NO doc-keyed exchange and no
-    * per-doc sort at all; the window form paid Exchange(doc_id)+Sort+
-    * WindowExec once per consumer (t10 consumes the stream twice: global
-    * bigram counts AND per-doc counts — duplicated subtrees in the r9
-    * plan). The pair multiset is identical by construction: lead(tok)
-    * over (doc_id ORDER BY pos) on posexplode output ≡ zip of the same
-    * array with its own tail, and every consumer aggregates (order never
-    * observed). */
-  private[llm] def bigrams(s: SparkSession, dir: String,
-      arrayzip: Boolean): DataFrame = {
+  /** Bigram stream (doc_id, w1, w2) for t10/t11: consecutive pairs are
+    * built ARRAY-SIDE before the explode — zip_with over the token array,
+    * the tc1 edge-build device — so there is NO doc-keyed exchange and no
+    * per-doc sort (adopted r10 over the oracle's window-`lead` form;
+    * OPTIMIZATION_r10.md §6). The pair multiset is the window form's:
+    * lead(tok) over (doc_id ORDER BY pos) ≡ zip of the same array with its
+    * own tail, and every consumer aggregates (order never observed);
+    * ShapeEquivalenceSpec compares the two streams. */
+  private[llm] def bigrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (arrayzip)
-      Tables.documents(s, dir)
-        .select($"doc_id", TextOps.tokens($"text").as("toks"))
-        .filter(size($"toks") >= 2)
-        .select($"doc_id", explode(expr(
-          """zip_with(slice(toks, 1, size(toks) - 1),
-            |         slice(toks, 2, size(toks) - 1),
-            |         (a, b) -> struct(a AS w1, b AS w2))""".stripMargin)).as("bg"))
-        .select($"doc_id", $"bg.w1", $"bg.w2")
-    else {
-      val pt = docTokens(s, dir)
-      val w = Window.partitionBy($"doc_id").orderBy($"pos")
-      pt.select($"doc_id", $"tok".as("w1"), lead($"tok", 1).over(w).as("w2"))
-        .filter($"w2".isNotNull)
-    }
+    Tables.documents(s, dir)
+      .select($"doc_id", TextOps.tokens($"text").as("toks"))
+      .filter(size($"toks") >= 2)
+      .select($"doc_id", explode(expr(
+        """zip_with(slice(toks, 1, size(toks) - 1),
+          |         slice(toks, 2, size(toks) - 1),
+          |         (a, b) -> struct(a AS w1, b AS w2))""".stripMargin)).as("bg"))
+      .select($"doc_id", $"bg.w1", $"bg.w2")
   }
-
-  def t10(s: SparkSession, dir: String): DataFrame =
-    t10Shape(s, dir, arrayzip = true)
 
   /** The bigram stream is consumed twice: for the global (w1, w2) counts
     * and for the per-doc counts. Deriving the global table from the
     * per-doc one (one shared exchange) was measured a loss:
     * OPTIMIZATION_r11.md §6, sf1 local[32] 2.167 → 2.743 s. */
-  private[llm] def t10Shape(s: SparkSession, dir: String,
-      arrayzip: Boolean): DataFrame = {
+  def t10(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pt = docTokens(s, dir)
-    val bg = bigrams(s, dir, arrayzip)
+    val bg = bigrams(s, dir)
     val dc = bg.groupBy($"doc_id", $"w1", $"w2").agg(count(lit(1)).as("c"))
     val bc = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("cb"))
     val uc = bc.groupBy($"w1").agg(sum($"cb").as("cu"))
@@ -3035,85 +3017,54 @@ object LlmQueries extends graft.core.QueryModule {
           + 1).cast("int"))
       .withColumn("iprefix", slice($"arr", lit(1), $"ilen"))
   }
-  /** Candidate pair generation for d9, both A/B arms of the r8 probe.
-    * Both arms join on the 8-byte hashed shingle keys the d9Docs arrays
-    * carry (r9 — the r8 positional arm hashed per exploded row, the naive
-    * arm joined on strings). `positional = true` adds one EXACT cut on
-    * top of the length filter:
+  /** Candidate pairs for d9: an asymmetric probe×index join on the 8-byte
+    * hashed shingle keys the d9Docs arrays carry. The pair's LARGER set
+    * (ties: larger id) probes with its full Jaccard prefix; the smaller
+    * set is indexed by its short index prefix (~|y|/3 vs ~|y|/2 at τ=0.5
+    * — see d9Docs.iprefix). Complete for J ≥ τ by the PPJoin index-prefix
+    * theorem: the pair's first shared element in canonical order lies
+    * inside BOTH prefixes. Each pair is matched from one side only, so no
+    * direction double-count reaches the distinct. Two exact cuts run
+    * before the distinct shuffle:
+    *  - the LENGTH filter (the second AllPairs pruner): J ≥ τ forces
+    *    τ·|x| ≤ |y| ≤ |x|/τ — a necessary condition, not a heuristic;
     *  - PPJoin's POSITIONAL filter (Xiao et al. 2008 §3.2): for a match on
     *    prefix positions (pa, pb) (0-based in the canonical sort), the
     *    overlap is bounded by min(na−pa, nb−pb) — everything before the
     *    match in either array is non-shared by construction of the FIRST
-    *    shared element, and a true pair's first shared prefix element
-    *    always passes (its bound ≥ the real overlap ≥ α). Matches whose
-    *    bound < α = ⌈τ·(na+nb)/(1+τ)⌉ are pruned BEFORE the distinct
-    *    shuffle — the fan-out term the sf1 decade measured as slope 0.68.
+    *    shared element. Matches whose bound < α = ⌈τ·(na+nb)/(1+τ)⌉ are
+    *    pruned.
+    * Adopted from the r9 interleaved A/B over the naive any-shared-prefix
+    * join (SCALING.md "r9 decision probes", d9 rows); PrefixFilterSpec
+    * keeps that naive join as its reference.
     */
-  private[llm] def d9Pairs(docs: DataFrame, shape: String): DataFrame = {
+  private[llm] def d9Pairs(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val alpha = ceil(($"na" + $"nb").cast("double") * lit(D9Tau / (1 + D9Tau)))
-    shape match {
-      case "naive" =>
-        val cand = docs.select($"doc_id", $"ns", explode($"prefix").as("pe"))
-          .select($"doc_id", $"ns", $"pe.shh".as("shh"))
-        cand.select($"doc_id".as("da"), $"shh", $"ns".as("na"))
-          .join(cand.select($"doc_id".as("db"), $"shh", $"ns".as("nb")), Seq("shh"))
-          .filter($"da" < $"db" &&
-            $"nb".cast("double") >= $"na".cast("double") * D9Tau &&
-            $"nb".cast("double") <= $"na".cast("double") / D9Tau)
-          .select($"da", $"db").distinct()
-      case "positional" =>
-        val cand = docs.select($"doc_id", $"ns",
-            posexplode($"prefix").as(Seq("pos", "pe")))
-          .select($"doc_id", $"ns", $"pos", $"pe.shh".as("shh"))
-        cand.select($"doc_id".as("da"), $"shh", $"ns".as("na"), $"pos".as("pa"))
-          .join(cand.select($"doc_id".as("db"), $"shh", $"ns".as("nb"),
-            $"pos".as("pb")), Seq("shh"))
-          .filter($"da" < $"db" &&
-            $"nb".cast("double") >= $"na".cast("double") * D9Tau &&
-            $"nb".cast("double") <= $"na".cast("double") / D9Tau &&
-            least($"na" - $"pa", $"nb" - $"pb").cast("double") >= alpha)
-          .select($"da", $"db").distinct()
-      case "indexed" =>
-        // Asymmetric probe×index join: the pair's LARGER set (ties: larger
-        // id) probes with its full Jaccard prefix; the smaller set is
-        // indexed by its short index prefix (~|y|/3 vs ~|y|/2 at τ=0.5 —
-        // see d9Docs.iprefix). Complete for J ≥ τ by the PPJoin index-
-        // prefix theorem: the pair's first shared element in canonical
-        // order lies inside BOTH prefixes. Also kills the symmetric
-        // arm's direction double-count (each pair matched from one side
-        // only), so the pre-distinct stream is strictly smaller.
-        val probe = docs.select($"doc_id".as("da"), $"ns".as("na"),
-            posexplode($"prefix").as(Seq("pa", "pe")))
-          .select($"da", $"na", $"pa", $"pe.shh".as("shh"))
-        val index = docs.select($"doc_id".as("db"), $"ns".as("nb"),
-            posexplode($"iprefix").as(Seq("pb", "pe")))
-          .select($"db", $"nb", $"pb", $"pe.shh".as("shh"))
-        probe.join(index, Seq("shh"))
-          .filter(($"nb" < $"na" || ($"nb" === $"na" && $"db" < $"da")) &&
-            $"nb".cast("double") >= $"na".cast("double") * D9Tau &&
-            least($"na" - $"pa", $"nb" - $"pb").cast("double") >= alpha)
-          .select(least($"da", $"db").as("da"), greatest($"da", $"db").as("db"))
-          .distinct()
-      case other => sys.error(s"unknown d9 candidate shape: $other")
-    }
+    val probe = docs.select($"doc_id".as("da"), $"ns".as("na"),
+        posexplode($"prefix").as(Seq("pa", "pe")))
+      .select($"da", $"na", $"pa", $"pe.shh".as("shh"))
+    val index = docs.select($"doc_id".as("db"), $"ns".as("nb"),
+        posexplode($"iprefix").as(Seq("pb", "pe")))
+      .select($"db", $"nb", $"pb", $"pe.shh".as("shh"))
+    probe.join(index, Seq("shh"))
+      .filter(($"nb" < $"na" || ($"nb" === $"na" && $"db" < $"da")) &&
+        $"nb".cast("double") >= $"na".cast("double") * D9Tau &&
+        least($"na" - $"pa", $"nb" - $"pb").cast("double") >= alpha)
+      .select(least($"da", $"db").as("da"), greatest($"da", $"db").as("db"))
+      .distinct()
   }
 
   def d9(s: SparkSession, dir: String): DataFrame =
-    d9From(d9Docs(s, dir).localCheckpoint(), shape = "indexed")
+    d9From(d9Docs(s, dir).localCheckpoint())
 
-  /** Full d9 pipeline from a checkpointed d9Docs frame — every candidate
-    * arm shares the verify stage (PrefixFilterSpec compares the arms).
-    * LENGTH FILTER at candidate time (the second AllPairs pruner):
-    * J ≥ τ forces τ·|x| ≤ |y| ≤ |x|/τ, so size-incompatible pairs never
-    * leave the join. Still complete — it's a necessary condition of the
-    * threshold, not a heuristic. Indexed arm adopted from the r9
-    * interleaved A/B (SCALING.md "r9 decision probes", d9 rows). */
-  private[llm] def d9From(docs: DataFrame, shape: String): DataFrame = {
+  /** Full d9 pipeline from a checkpointed d9Docs frame: [[d9Pairs]]
+    * candidates, then exact Jaccard verification. */
+  private[llm] def d9From(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val pairs = d9Pairs(docs, shape)
+    val pairs = d9Pairs(docs)
     // verification intersects the 64-bit shingle hashes the arrays
     // already carry (r9: hashed once in d9Docs — no per-row re-hash
     // here) — ~1/3 the shuffle bytes of strings and a primitive-array

@@ -474,31 +474,24 @@ object QualityQueries extends graft.core.QueryModule {
   // rounding guard.
   private val NoveltyTau = 0.5
 
-  def nv1(s: SparkSession, dir: String): DataFrame =
-    nv1Shape(s, dir, copartition = true)
-
-  /** `copartition = true` is the d9Docs device, adopted r10
-    * (OPTIMIZATION_r10.md §5): the r9 agg+join-back shape computed the
-    * tokenize→shingle→explode stream TWICE (duplicated subtrees feeding
-    * the df aggregation and the join probe) and exchanged the ~25-byte
-    * shingle strings twice; ONE explicit repartition(sh) feeds both — the
-    * df agg and the shuffle-hash join-back are co-partitioned on top of
-    * it, the stream is computed once (AQE stage reuse dedupes the second
-    * read into a ReusedExchange), and the join stays sort-free with a
+  /** ONE explicit repartition(sh) feeds both the df aggregation and the
+    * shuffle-hash join-back, which are co-partitioned on top of it (the
+    * d9Docs device, adopted r10): the tokenize→shingle→explode stream is
+    * computed once (AQE stage reuse dedupes the second read into a
+    * ReusedExchange), and the join stays sort-free with a
     * distinct-shingle-bounded build side (a hot boilerplate shingle is ONE
-    * build entry; AQE skew-split applies to SHJ probe streams).
+    * build entry; AQE skew-split applies to SHJ probe streams). Numbers:
+    * OPTIMIZATION_r10.md §5.
     */
-  private[llm] def nv1Shape(s: SparkSession, dir: String,
-      copartition: Boolean): DataFrame = {
+  def nv1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sh = Tables.documents(s, dir)
       .select($"doc_id", TextOps.tokens($"text").as("toks"))
       .filter(size($"toks") >= 3)
       .select($"doc_id", explode(array_distinct(TextOps.shingles3($"toks"))).as("sh"))
-    val part = if (copartition) sh.repartition($"sh") else sh
+    val part = sh.repartition($"sh")
     val df = part.groupBy($"sh").agg(count(lit(1)).as("sdf"))
-    (if (copartition) part.join(df.hint("shuffle_hash"), "sh")
-     else part.join(df, "sh"))
+    part.join(df.hint("shuffle_hash"), "sh")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(when($"sdf" === 1L, 1L).otherwise(0L)).as("n_novel"))

@@ -19,18 +19,20 @@ import org.apache.spark.sql.functions._
   * graph.
   *
   * Scale notes: labels are localCheckpoint'ed every round — iterative joins
-  * otherwise stack lineage (and re-plan cost) linearly in round count; on a
-  * cluster with a checkpoint dir, `reliable = true` uses fault-tolerant
-  * checkpoints instead.
+  * otherwise stack lineage (and re-plan cost) linearly in round count.
   */
 object ConnectedComponents {
+
+  /** Checkpointed rounds (each two fused super-rounds) before [[run]] gives
+    * up without a fixed point. */
+  private val MaxIter = 25
 
   /** Components of the undirected graph given by `edges` (two long columns
     * `a`, `b`). Returns (v, root) with root = min node id reachable from v.
     * Nodes appear iff they occur in some edge; callers union isolated nodes
     * as (v, v) themselves.
     */
-  def run(edges: DataFrame, maxIter: Int = 25, reliable: Boolean = false): DataFrame = {
+  def run(edges: DataFrame): DataFrame = {
     // materialize the (possibly expensive) upstream edge pipeline ONCE —
     // every round joins against it. RDD-level checkpoint, deliberately not
     // persist(): a CacheManager entry leaked from here would plan-match
@@ -43,7 +45,7 @@ object ConnectedComponents {
     val sym0 = bidir
       .union(bidir.select(col("a")).distinct().select(col("a"), col("a").as("b")))
       .distinct()
-    val sym = if (reliable) sym0.checkpoint() else sym0.localCheckpoint()
+    val sym = sym0.localCheckpoint()
     var labels = sym.filter(col("a") === col("b"))
       .select(col("a").as("v"), col("a").as("lbl"))
     // Labels only ever decrease (new = min over self+neighbors), so the
@@ -78,10 +80,10 @@ object ConnectedComponents {
       shortcut(shortcut(prop))
     }
     val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    while (!converged && it < maxIter) {
+    while (!converged && it < MaxIter) {
       val t0 = System.nanoTime()
       val next0 = round(round(labels))
-      val next = if (reliable) next0.checkpoint() else next0.localCheckpoint()
+      val next = next0.localCheckpoint()
       val t1 = System.nanoTime()
       val s = lblSum(next)
       converged = s.compareTo(prevSum) == 0
@@ -90,20 +92,20 @@ object ConnectedComponents {
       // them instead of waiting for a full GC to drive the ContextCleaner
       // (a long-lived session otherwise accumulates every round of every
       // run; no-op on round 0's derived frame)
-      if (!reliable) org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
+      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
       labels = next
       it += 1
       if (dbg) println(f"[cc] round $it: ckpt ${(t1 - t0) / 1e9}%.3f s, sum ${(System.nanoTime() - t1) / 1e9}%.3f s")
     }
-    if (!converged && !reliable) {
+    if (!converged) {
       // failure path: nothing backs a returned frame — release everything
       // (otherwise each failed/retried run strands sym + the last round)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(sym)
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
+    require(converged, s"connected components did not converge in $MaxIter rounds")
     // the returned frame reads only the final labels checkpoint
-    if (!reliable) org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(sym)
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(sym)
     labels.select(col("v"), col("lbl").as("root"))
   }
 

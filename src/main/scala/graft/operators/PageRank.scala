@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: one `groupBy(node)` degree aggregation up front, then one
   * shuffle-hash join + one aggregation per iteration, all keyed on node id —
   * never quadratic, no driver-side graph. Like [[ConnectedComponents.run]],
-  * ranks are localCheckpoint'ed every `checkpointEvery` iterations so
-  * lineage/plan depth stays O(1) in iteration count — but NOT every
-  * iteration: a checkpoint is an eager job, and for short chains the
-  * un-materialized plan (executed once by the final action) is cheaper.
+  * ranks are localCheckpoint'ed every 4 iterations so lineage/plan depth
+  * stays O(1) in iteration count — but NOT every iteration: a checkpoint
+  * is an eager job, and for short chains the un-materialized plan
+  * (executed once by the final action) is cheaper.
   *
   * The reference has no graph operator; this is north-star widening (the
   * dedup→cluster→rank chain a curation pipeline uses to pick canonical
@@ -39,43 +39,37 @@ object PageRank {
 
   val Scale = 1000000000000L // 1e12 µrank units = total mass 1.0
 
-  /** Ranks after `iters` damped iterations over the undirected graph
-    * `edges(a, b)`. Returns (v LONG, rank LONG) in µrank units; every node
-    * appearing in any edge is present (degree ≥ 1 after symmetrisation, so
-    * there are no dangling nodes by construction).
-    */
-  /** Edge-row threshold for the pinned-partitioning upgrade below: the dial
-    * IS the measured crossover (SCALING.md "r11 decision probes", pr1 row;
-    * interleaved, local[32], ranks asserted bit-identical): at sf0.1 (1.17M
-    * symmetric rows) pinning LOSES 0.609 → 0.804 s — un-coalesced
+  /** Edge-row threshold for the pinned-partitioning upgrade in [[run]]: the
+    * dial IS the measured crossover (SCALING.md "r11 decision probes", pr1
+    * row; interleaved, local[32], ranks asserted bit-identical): at sf0.1
+    * (1.17M symmetric rows) pinning LOSES 0.609 → 0.804 s — un-coalesced
     * 32-partition stages cost more task floor than the cheap per-round
     * re-exchange of a small edge table — while at sf1 (11.7M rows) it WINS
     * 2.173 → 1.654 s. 4M splits the probe points; above it the per-round
     * exchange is the dominant term and only grows. */
   val PinMinEdgeRows: Long = 4000000L
 
-  /** `pinnedBuildPartitions` (r11, VERDICT r10 directive 6): when the
-    * materialized edge table reaches [[PinMinEdgeRows]], re-shuffle it
-    * ONCE onto an EXPLICIT partition count and re-assert that partitioning
-    * on the checkpoint (GraftSqlBridge.assertHashPartitioned — under AQE a
+  /** Ranks after `iters` damped iterations over the undirected graph
+    * `edges(a, b)`. Returns (v LONG, rank LONG) in µrank units; every node
+    * appearing in any edge is present (degree ≥ 1 after symmetrisation, so
+    * there are no dangling nodes by construction).
+    *
+    * Pinned build partitioning (r11): when the materialized edge table
+    * reaches [[PinMinEdgeRows]], it is re-shuffled ONCE onto an EXPLICIT
+    * partition count and that partitioning is re-asserted on the
+    * checkpoint (GraftSqlBridge.assertHashPartitioned — under AQE a
     * localCheckpoint comes back UnknownPartitioning, so the per-iteration
-    * rank joins re-exchanged the full edge checkpoint on `b` EVERY round:
-    * plans/r11/pr1_iteration_executed_before.txt, ShuffleQueryStages over
-    * `Scan ExistingRDD[a,b,deg_b]`). With the pin, each round only
-    * exchanges the node-sized rank table (..._after.txt: the edge side
-    * sits directly under the join). Below the threshold the r10 bare
-    * build is kept unchanged — the upgrade decision piggybacks on the
-    * node-count aggregation the build already pays, so the small-scale
-    * path costs nothing extra. Bit-identical ranks are asserted in
-    * ShapeEquivalenceSpec.
+    * rank joins would re-exchange the full edge checkpoint on `b` EVERY
+    * round). With the pin, each round only exchanges the node-sized rank
+    * table. Below the threshold the bare coalesced build runs; the
+    * decision piggybacks on the node-count aggregation the build already
+    * pays. Plans and numbers: OPTIMIZATION_r11.md §1.
     *
     * The symmetrisation dedup runs exchange-free on the build's
     * repartition(b) clustering, so callers should pass raw duplicated
     * edges as-is rather than pay their own upstream distinct exchange
     * (SCALING.md "r10 decision probes", pr1 build row). */
-  def run(edges: DataFrame, iters: Int = 3, reliable: Boolean = false,
-      checkpointEvery: Int = 4,
-      pinnedBuildPartitions: Boolean = true): DataFrame = {
+  def run(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val doubled = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
@@ -104,8 +98,7 @@ object PageRank {
     val degB = sym.groupBy(col("b")).agg(count(lit(1)).as("deg_b"))
     val symDeg0 = sym.join(degB.hint("shuffle_hash"), "b")
       .select(col("a"), col("b"), col("deg_b"))
-    val symDeg0Ck =
-      if (reliable) symDeg0.checkpoint() else symDeg0.localCheckpoint()
+    val symDeg0Ck = symDeg0.localCheckpoint()
     // map-side-combined distinct over the materialized edges; an O(1)
     // driver scalar (the old node-table distinct shuffled (v, deg) pairs).
     // The edge-row count rides the same aggregation for free — it is the
@@ -120,10 +113,10 @@ object PageRank {
     // iteration join re-exchanged the edge table; see scaladoc). Below
     // it, the r10 bare coalesced checkpoint is strictly cheaper.
     val symDeg =
-      if (pinnedBuildPartitions && edgeRows >= PinMinEdgeRows) {
+      if (edgeRows >= PinMinEdgeRows) {
         val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
         val rep = symDeg0Ck.repartition(p, col("b"))
-        val c = if (reliable) rep.checkpoint() else rep.localCheckpoint()
+        val c = rep.localCheckpoint()
         org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(symDeg0Ck)
         org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(c, Seq("b"), p)
       } else symDeg0Ck
@@ -145,9 +138,9 @@ object PageRank {
         .agg(expr(s"$base + (85 * sum(rank div deg_b)) div 100").as("rank"))
       it += 1
       ranks =
-        if (it < iters && it % checkpointEvery == 0) {
-          val c = if (reliable) next.checkpoint() else next.localCheckpoint()
-          if (!reliable && prevCkpt != null)
+        if (it < iters && it % 4 == 0) {
+          val c = next.localCheckpoint()
+          if (prevCkpt != null)
             org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(prevCkpt)
           prevCkpt = c
           c

@@ -22,27 +22,22 @@ object TriangleCount {
   /** One-row stats for the undirected simple graph `edges(u, v)` (callers
     * guarantee u ≠ v and no duplicate edge in either direction):
     * (n_nodes, n_edges, n_wedges, n_triangles, clustering) where
-    * clustering = 3·triangles / wedges (the global transitivity). */
-  /** `pinnedPartitions` (r11): when the oriented edge list is `big`
+    * clustering = 3·triangles / wedges (the global transitivity).
+    *
+    * Pinned partitioning (r11): when the oriented edge list is `big`
     * (> 500k rows — the SAME dial that forces the triangle joins to
-    * SHUFFLE_HASH), re-shuffle it once onto an EXPLICIT partition count on
-    * the probe key `src` and re-assert that partitioning on the o and adj
-    * checkpoints (GraftSqlBridge.assertHashPartitioned — under AQE a
-    * localCheckpoint comes back UnknownPartitioning, so the r10 plan
-    * re-exchanged BOTH sides of both SHUFFLE_HASH triangle joins AND paid
-    * the adjacency groupBy's exchange). With the pin: the adjacency
-    * aggregation runs exchange-free on o's partitioning, the first
-    * triangle join is zero-exchange on both sides, and the second only
-    * re-keys the probe stream on `dst` (its build side — adj renamed to
-    * dst — stays exchange-free). Below the dial the r10 bare shape is
-    * kept: there the joins broadcast the adjacency anyway, and the pin's
-    * extra exchange + un-coalesced task floor measured a 2× LOSS at
-    * sf0.1/local[32] (0.254 → 0.457 s) against a 26% win at sf1
-    * (1.039 → 0.768 s, where big=true). The dial tying the pin to the
-    * SHJ path is exactly the condition under which the exchanges exist
-    * (OPTIMIZATION_r11.md §5). Orientation semantics untouched;
-    * ShapeEquivalenceSpec asserts the one-row output identical. */
-  def run(edges: DataFrame, pinnedPartitions: Boolean = true): DataFrame = {
+    * SHUFFLE_HASH), it is re-shuffled once onto an EXPLICIT partition
+    * count on the probe key `src`, and that partitioning is re-asserted on
+    * the o and adj checkpoints (GraftSqlBridge.assertHashPartitioned —
+    * under AQE a localCheckpoint comes back UnknownPartitioning, so both
+    * sides of both SHUFFLE_HASH triangle joins and the adjacency groupBy
+    * would each pay an exchange). With the pin the adjacency aggregation
+    * runs exchange-free on o's partitioning, the first triangle join is
+    * zero-exchange on both sides, and the second only re-keys the probe
+    * stream on `dst`. Below the dial the joins broadcast the adjacency and
+    * the bare shape runs: there the pin only adds task floor. Plans and
+    * numbers: OPTIMIZATION_r11.md §5. */
+  def run(edges: DataFrame): DataFrame = {
     val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // ids normalized to LONG at the boundary (the KCore discipline): key
     // columns are Integral-class under the testdata drift contract, and
@@ -71,9 +66,8 @@ object TriangleCount {
     // construction — the checkpoint materializes the REPARTITION_BY_NUM
     // output partition-for-partition (never AQE-coalesced or skew-split)
     val big = o1.count() > 500000L
-    val pin = pinnedPartitions && big
     val o =
-      if (pin) {
+      if (big) {
         val c = o1.repartition(p, col("src")).localCheckpoint()
         org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(o1)
         org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(c, Seq("src"), p)
@@ -100,7 +94,7 @@ object TriangleCount {
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       .localCheckpoint()
     val adj =
-      if (pin)
+      if (big)
         org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(adj0, Seq("src"), p)
       else adj0
     // Beyond broadcast size, SHUFFLE_HASH: build on the node-keyed

@@ -161,49 +161,27 @@ object GraphQueries extends graft.core.QueryModule {
     * (table-statistics material in a real deployment), computed with
     * identical exact-integer→one-double-division arithmetic on both
     * engines.
+    *
+    * The canonical co-supply edge set and its degree table are
+    * materialized ONCE and feed both the threshold scalar and the peel
+    * (ownership of the edge checkpoint transfers to the peel; the degree
+    * checkpoint is released here once the peel returns — the profile is
+    * driver-side rows by then). Numbers: OPTIMIZATION_r11.md §3.
     */
   private val KcRounds = 6
-  def kc1(s: SparkSession, dir: String): DataFrame =
-    kc1Shape(s, dir, sharedBuild = true)
-
-  /** r11 (VERDICT r10 directive 4): `sharedBuild = true` materializes the
-    * canonical co-supply edge set and its degree table ONCE. The r10 shape
-    * built coSupplyEdges TWICE (the k-derivation degree scalar consumed it,
-    * then peelRounds' round-0 checkpoint re-derived the whole
-    * lineitem-repartition → window → dedup chain) and paid the SAME
-    * edge-wide degree aggregation twice (the threshold scalar and peel
-    * round 1). Now the edge checkpoint and the checkpointed degree table
-    * feed the scalar AND the peel (ownership of the edge checkpoint
-    * transfers to the peel; the degree checkpoint is released here once
-    * the peel returns — the profile is driver-side rows by then).
-    * Measured in OPTIMIZATION_r11.md §3 (sf1 local[32] 3.70 → 2.42 s);
-    * ShapeEquivalenceSpec pins full-profile identity between the shapes. */
-  private[graft] def kc1Shape(s: SparkSession, dir: String,
-      sharedBuild: Boolean): DataFrame = {
+  def kc1(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (sharedBuild) {
-      val e = coSupplyEdges(s, dir)
-        .select($"u".cast("long").as("u"), $"v".cast("long").as("v"))
-        .localCheckpoint()
-      val deg = graft.operators.KCore.degrees(e).localCheckpoint()
-      val d0 = deg.agg(sum($"dg").cast("long").as("s"), count(lit(1)).as("c")).head()
-      val k = math.ceil(d0.getLong(0).toDouble / d0.getLong(1).toDouble).toLong + 1
-      val profile = graft.operators.KCore.peelRounds(e, k.toInt, rounds = KcRounds,
-        nVertices = Some(d0.getLong(1)),
-        inputCheckpointed = true, deg0 = Some(deg))
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(deg)
-      profile
-    } else {
-      val e = coSupplyEdges(s, dir)
-      val d0 = e.select($"u".as("x")).unionAll(e.select($"v".as("x")))
-        .groupBy($"x").agg(count(lit(1)).as("dg"))
-        .agg(sum($"dg").cast("long").as("s"), count(lit(1)).as("c")).head()
-      val k = math.ceil(d0.getLong(0).toDouble / d0.getLong(1).toDouble).toLong + 1
-      // d0's count IS the vertex count — hand it over so the peel doesn't
-      // rerun the same edge-wide degree aggregation for its round-0 size
-      graft.operators.KCore.peelRounds(e, k.toInt, rounds = KcRounds,
-        nVertices = Some(d0.getLong(1)))
-    }
+    val e = coSupplyEdges(s, dir)
+      .select($"u".cast("long").as("u"), $"v".cast("long").as("v"))
+      .localCheckpoint()
+    val deg = graft.operators.KCore.degrees(e).localCheckpoint()
+    val d0 = deg.agg(sum($"dg").cast("long").as("s"), count(lit(1)).as("c")).head()
+    val k = math.ceil(d0.getLong(0).toDouble / d0.getLong(1).toDouble).toLong + 1
+    val profile = graft.operators.KCore.peelRounds(e, k.toInt, rounds = KcRounds,
+      nVertices = Some(d0.getLong(1)),
+      inputCheckpointed = true, deg0 = Some(deg))
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(deg)
+    profile
   }
 
   val kc1Sql: String = {

@@ -18,8 +18,10 @@ import org.apache.spark.sql.types.MetadataBuilder
   *    484-489).
   *
   * The wide matrix immediately becomes LONG form (step, par, value) via
-  * `posexplode` + a broadcast par-index join (SURVEY J5) — every downstream
-  * per-parameter loop is then one `groupBy("par")`.
+  * `posexplode` + a literal par-name lookup (SURVEY J5) — every downstream
+  * per-parameter loop is then one `groupBy("par")`. [[parse]] and [[pivot]]
+  * are plain DataFrame transforms, shared with the streaming reader
+  * ([[graft.streaming.ChainStream]]).
   */
 object ChainReader {
 
@@ -53,9 +55,27 @@ object ChainReader {
     new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
       .lines().iterator().asScala.map(_.trim).filter(_.nonEmpty).toSeq
 
+  /** Whitespace-float text lines (`value`) → `vals` ARRAY<DOUBLE>, other
+    * columns kept. Empty/garbled lines are dropped (the reference tolerates
+    * them via np.loadtxt retry, results.py:481-497). */
+  def parse(raw: DataFrame): DataFrame =
+    raw.filter(length(trim(col("value"))) > 0)
+      .withColumn("vals",
+        expr("transform(split(trim(value), '\\\\s+'), x -> try_cast(x AS double))"))
+      .filter(!exists(col("vals"), _.isNull))
+
+  /** J5: wide → long, keyed by `key`. Position i of `vals` is labelled
+    * `pars(i)`; positions past the names — the trailing sampler
+    * diagnostics (results.py:500) — are dropped. A literal array lookup,
+    * so no join and no broadcast job; stream-safe. */
+  def pivot(wide: DataFrame, key: String, pars: Seq[String]): DataFrame =
+    wide.select(col(key), posexplode(col("vals")).as(Seq("pos", "value")))
+      .filter(col("pos") < pars.size)
+      .select(col(key), element_at(typedLit(pars), col("pos") + 1).as("par"), col("value"))
+
   /** S9/E4: main chain + separated pieces → (step, vals ARRAY<DOUBLE>), in
-    * one text scan over every piece. Empty/garbled lines are dropped (the
-    * reference tolerates them via np.loadtxt retry, results.py:481-497).
+    * one text scan over every piece. Empty/garbled lines are dropped
+    * ([[parse]]).
     *
     * `step` is a line's index among the parseable lines of the
     * concatenation: main chain first, then the pieces in timestamp order.
@@ -82,11 +102,7 @@ object ChainReader {
       (if (new java.io.File(main).exists()) Seq(main) else Seq.empty) ++ sep
     }
     require(paths.nonEmpty, s"no chain files in $dir")
-    val lines = spark.read.textFile(paths: _*).toDF("value")
-      .filter(length(trim(col("value"))) > 0)
-      .withColumn("vals",
-        expr("transform(split(trim(value), '\\\\s+'), x -> try_cast(x AS double))"))
-      .filter(!exists(col("vals"), _.isNull))
+    val lines = parse(spark.read.textFile(paths: _*).toDF("value"))
       .select(input_file_name().as("file"), input_file_block_start().as("block"),
         monotonically_increasing_id().as("id"), col("vals"))
 
@@ -124,17 +140,10 @@ object ChainReader {
       .select(step.cast("long").as("step", stamp), col("vals"))
   }
 
-  /** J5: wide→long pivot. Drops the trailing `nDiag` diagnostic columns
-    * (results.py:500) and labels positions with par names. */
-  def toLong(chain: DataFrame, pars: Seq[String], nDiag: Int = 4): DataFrame = {
-    val spark = chain.sparkSession
-    import spark.implicits._
-    val parDf = broadcast(pars.zipWithIndex.map { case (p, i) => (i, p) }.toDF("pos", "par"))
-    chain
-      .select(col("step"), posexplode(col("vals")).as(Seq("pos", "value")))
-      .join(parDf, Seq("pos"))
-      .select(col("step"), col("par"), col("value"))
-  }
+  /** J5: (step, vals) → (step, par, value) by [[pivot]]; the diagnostic
+    * columns past `pars` are dropped and the [[StepsKey]] stamp is kept. */
+  def toLong(chain: DataFrame, pars: Seq[String]): DataFrame =
+    pivot(chain, "step", pars)
 
   /** F8: burn-in — drop the first `frac` of steps (results.py:499). The
     * step count comes from the [[StepsKey]] stamp [[readChain]] put on

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ChainReader
 
 /** Incremental chain-directory stream (SURVEY §2.10 ↔ S9/S10): the
   * reference's one incremental pattern is a sampler APPENDING separated
@@ -37,34 +38,21 @@ object ChainStream {
     parse(spark.read.text(s"$dir/chain_*.txt")
       .withColumn("piece", col("_metadata.file_path")))
 
-  /** Whitespace-float line → vals ARRAY<DOUBLE>, garbled/empty lines
-    * dropped (the reference tolerates them via np.loadtxt retry,
-    * results.py:481-497). The 14-digit piece timestamp is carried so
-    * downstream can order or window by sampler progress. No global step
-    * number: a monotonic rank is not streamable, and nothing downstream
-    * of the streaming path needs one (summaries group by par). */
+  /** The batch reader's line parse ([[graft.sources.ChainReader.parse]]),
+    * plus the 14-digit piece timestamp so downstream can order or window
+    * by sampler progress. No global step number: a monotonic rank is not
+    * streamable, and nothing downstream of the streaming path needs one
+    * (summaries group by par). */
   def parse(raw: DataFrame): DataFrame =
-    raw
-      .filter(length(trim(col("value"))) > 0)
-      .withColumn("vals",
-        expr("transform(split(trim(value), '\\\\s+'), x -> try_cast(x AS double))"))
-      .filter(!exists(col("vals"), _.isNull))
+    ChainReader.parse(raw)
       .withColumn("piece_ts",
         regexp_extract(col("piece"), """chain_(\d{14})""", 1))
       .select(col("piece_ts"), col("vals"))
 
-  /** Wide → long with par labels (J5 shape, stream-safe: broadcast join,
-    * no window). Diagnostics columns (last `nDiag`) are dropped. */
-  def toLong(parsed: DataFrame, pars: Seq[String]): DataFrame = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val parDf = broadcast(
-      pars.zipWithIndex.map { case (p, i) => (i, p) }.toDF("pos", "par"))
-    parsed
-      .select(col("piece_ts"), posexplode(col("vals")).as(Seq("pos", "value")))
-      .join(parDf, Seq("pos"))
-      .select(col("piece_ts"), col("par"), col("value"))
-  }
+  /** Wide → long with par labels: the batch reader's pivot
+    * ([[graft.sources.ChainReader.pivot]]) keyed by `piece_ts`. */
+  def toLong(parsed: DataFrame, pars: Seq[String]): DataFrame =
+    ChainReader.pivot(parsed, "piece_ts", pars)
 
   /** Running per-parameter summary (count / mean / min / max) — the
     * monitor-while-sampling readout. Mergeable aggregates only, so each

@@ -26,7 +26,7 @@ object ExplainDump {
     "rp1_random_projection",
     "pi1_phrase_search", "nv1_novelty_score", "knn1_knn_graph",
     "cdk1_content_chunking", "qf1_adaptive_floor", "mix3_epoch_schedule",
-    "ord1_global_shuffle",
+    "ord1_global_shuffle", "kc1_kcore_peel", "t11_pmi_collocations",
     "tm1_training_manifest", "mf1_manifest_fingerprint",
     "ev1_embedding_moments", "cal1_score_calibration", "sky1_pareto_front",
     "lp1_label_propagation",

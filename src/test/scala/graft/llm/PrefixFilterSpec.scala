@@ -11,16 +11,32 @@ class PrefixFilterSpec extends SparkTestBase {
     val session = spark
     import session.implicits._
     val docs = LlmQueries.d9Docs(session, sf).localCheckpoint()
-    def result(shape: String) = LlmQueries.d9From(docs, shape)
-      .collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(1)))
-    val a = result("naive")
-    val b = result("positional")
-    val c = result("indexed")
-    assert(a.nonEmpty && a === b && a === c)
-    val cn = LlmQueries.d9Pairs(docs, "naive").count()
-    val cp = LlmQueries.d9Pairs(docs, "positional").count()
-    val ci = LlmQueries.d9Pairs(docs, "indexed").count()
-    assert(cp <= cn, s"positional filter must not add candidates ($cp > $cn)")
+    val tau = 0.5 // LlmQueries.D9Tau
+    // reference: the naive candidate join (any shared Jaccard-prefix
+    // shingle, length filter only) verified here by array_intersect
+    val cand = docs.select($"doc_id", $"ns", explode($"prefix").as("pe"))
+      .select($"doc_id", $"ns", $"pe.shh".as("shh"))
+    val naive = cand.select($"doc_id".as("da"), $"shh", $"ns".as("na"))
+      .join(cand.select($"doc_id".as("db"), $"shh", $"ns".as("nb")), Seq("shh"))
+      .filter($"da" < $"db" &&
+        $"nb".cast("double") >= $"na".cast("double") * tau &&
+        $"nb".cast("double") <= $"na".cast("double") / tau)
+      .select($"da", $"db").distinct()
+    val side = docs.select($"doc_id", $"arr.shh".as("shs"), $"ns")
+    val verified = naive
+      .join(side.select($"doc_id".as("da"), $"shs".as("sa"), $"ns".as("na")), "da")
+      .join(side.select($"doc_id".as("db"), $"shs".as("sb"), $"ns".as("nb")), "db")
+      .withColumn("inter", size(array_intersect($"sa", $"sb")))
+      .withColumn("jacc", $"inter".cast("double") /
+        ($"na" + $"nb" - $"inter").cast("double"))
+      .filter($"jacc" >= tau)
+      .select($"da", $"db", round($"jacc", 6).as("jacc"))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(1)))
+    val a = sorted(verified)
+    assert(a.nonEmpty && a === sorted(LlmQueries.d9From(docs)))
+    val cn = naive.count()
+    val ci = LlmQueries.d9Pairs(docs).count()
     assert(ci <= cn, s"index-prefix join must not add candidates ($ci > $cn)")
   }
 

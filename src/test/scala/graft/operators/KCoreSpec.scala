@@ -27,6 +27,18 @@ class KCoreSpec extends SparkTestBase {
     (out.result(), keep)
   }
 
+  /** 12 random simple graphs on up to 15 vertices, none empty. */
+  private def randomGraphs: Seq[Seq[(Long, Long)]] = {
+    val gen = for {
+      n <- Gen.choose(4, 14)
+      m <- Gen.choose(3, 30)
+      es <- Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n.toLong); b <- Gen.choose(0L, n.toLong) if a != b
+      } yield (math.min(a, b), math.max(a, b)))
+    } yield es.distinct
+    Gen.listOfN(12, gen).sample.get.filter(_.nonEmpty)
+  }
+
   private def runSpark(edges: Seq[(Long, Long)], k: Int, rounds: Int): Seq[(Long, Long, Long)] = {
     import spark.implicits._
     KCore.peelRounds(edges.toDF("u", "v"), k, rounds)
@@ -46,17 +58,23 @@ class KCoreSpec extends SparkTestBase {
   }
 
   test("profile matches the driver reference on random graphs") {
-    val gen = for {
-      n <- Gen.choose(4, 14)
-      m <- Gen.choose(3, 30)
-      es <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong); b <- Gen.choose(0L, n.toLong) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
-    } yield es.distinct
-    val samples = Gen.listOfN(12, gen).sample.get
-    for (edges <- samples if edges.nonEmpty) {
+    for (edges <- randomGraphs) {
       val (want, _) = refPeel(edges, k = 2, rounds = 5)
       val got = runSpark(edges, k = 2, rounds = 5)
+      assert(got === want, s"edges=$edges")
+    }
+  }
+
+  test("kc1 path (checkpointed input, given degrees) matches the reference") {
+    import spark.implicits._
+    for (edges <- randomGraphs) {
+      val (want, _) = refPeel(edges, k = 2, rounds = 5)
+      val e = edges.toDF("u", "v").localCheckpoint()
+      val deg = KCore.degrees(e).localCheckpoint()
+      val nVertices = edges.flatMap(p => Seq(p._1, p._2)).distinct.size.toLong
+      val got = KCore.peelRounds(e, k = 2, rounds = 5, nVertices = Some(nVertices),
+          inputCheckpointed = true, deg0 = Some(deg))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(got === want, s"edges=$edges")
     }
   }

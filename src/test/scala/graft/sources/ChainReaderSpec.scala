@@ -147,6 +147,26 @@ class ChainReaderSpec extends SparkTestBase {
       ((20L, 79L, 120L)))
   }
 
+  test("Bayes-factor collect runs no par-name broadcast job") {
+    val d = tmpDir("chainbf")
+    // nmodel in column 0 cycles 0, 1, 2: after burn-in (steps 15..59) each
+    // model holds 15 steps
+    def row(i: Int) = s"${i % 3}.0 ${i * 1.0} -1.0 -2.0 0.5 0.25"
+    write(d, "chain_1.txt", (0 until 30).map(row).mkString("", "\n", "\n"))
+    write(d, "chain_20240101120000.txt", (30 until 60).map(row).mkString("", "\n", "\n"))
+    val burned = ChainReader.burned(ChainReader.toLong(ChainReader.readChain(spark, d.toString),
+      Seq("nmodel", "par_beta")))
+    val (bf, jobs) = countingJobs {
+      graft.analytics.Chain.logBayesFactors(graft.analytics.Chain.modelCounts(
+        burned.filter(col("par") === "nmodel"), col("value"))).collect()
+    }
+    // a join against a broadcast par-name table makes this 4: broadcasting
+    // its LocalTableScan is a job of its own
+    assert(jobs === 3)
+    assert(bf.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq ===
+      Seq((0L, 1L, 0.0), (0L, 2L, 0.0), (1L, 2L, 0.0)))
+  }
+
   test("the step-count stamp survives toLong and parMask; burned rejects an unstamped frame") {
     val d = tmpDir("chainstamp")
     write(d, "chain_1.txt", ((0 until 10).map(line) :+ "garbled").mkString("", "\n", "\n"))

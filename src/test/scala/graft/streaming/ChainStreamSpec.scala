@@ -87,7 +87,7 @@ class ChainStreamSpec extends SparkTestBase {
     assert(batchBytes.contains("\"J0001+0001_alpha\": 3.0"))
   }
 
-  test("garbled lines are dropped, diagnostics columns survive to toLong's nDiag drop") {
+  test("garbled lines are dropped; toLong keeps only the named positions") {
     val d = tmpDir("chain-garbled")
     write(d, "chain_20260101000000.txt",
       "1.0 10.0 0.1 0.2 0.3 0.4\nnot a number line\n\n2.0 20.0 0.1 0.2 0.3 0.4\n")
