@@ -53,15 +53,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.functions.SimHash16(children.head)
       }))
     ext.injectOptimizerRule(_ => NativeDotRewrite)
-    // whole-operator escalation (SURVEY §2.9 path c): plans
-    // graft.plans.AsOfJoinNode into the streaming-merge AsOfJoinExec
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // second native-exec family member: keyed band join with band-bounded
-    // buffering (graft.plans.BandJoinNode -> BandJoinExec)
-    ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
-    // third member: interval-overlap sweep join with occupancy-bounded
-    // buffering (graft.plans.IntervalJoinNode -> IntervalJoinExec)
-    ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
+    // whole-operator escalation (SURVEY §2.9 path c): plans every
+    // graft.plans.MergeJoinNode (as-of, band, interval overlap) into its
+    // streaming-merge exec
+    ext.injectPlannerStrategy(_ => graft.plans.MergeJoinStrategy)
   }
 }
 

@@ -79,12 +79,8 @@ object ConnectedComponents {
         .agg(min(col("lbl")).as("lbl"))
       shortcut(shortcut(prop))
     }
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && it < MaxIter) {
-      val t0 = System.nanoTime()
-      val next0 = round(round(labels))
-      val next = next0.localCheckpoint()
-      val t1 = System.nanoTime()
+      val next = round(round(labels)).localCheckpoint()
       val s = lblSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -95,7 +91,6 @@ object ConnectedComponents {
       org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
       labels = next
       it += 1
-      if (dbg) println(f"[cc] round $it: ckpt ${(t1 - t0) / 1e9}%.3f s, sum ${(System.nanoTime() - t1) / 1e9}%.3f s")
     }
     if (!converged) {
       // failure path: nothing backs a returned frame — release everything

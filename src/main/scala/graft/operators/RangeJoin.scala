@@ -27,7 +27,7 @@ object RangeJoin {
     * modulus first (the remainder-free value divides exactly; `round` clears
     * the double-division ulps that a plain `floor(a/w)` accumulates for
     * ns-epoch magnitudes beyond 2^53). */
-  private def floorDiv(a: Column, w: Long): Column =
+  private[graft] def floorDiv(a: Column, w: Long): Column =
     round((a - pmod(a, lit(w))) / lit(w)).cast("long")
 
   /** Join `points` (timestamp column `pts`) into `intervals` rows whose

@@ -2,18 +2,12 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 
-/** Whole-operator keyed band join — the second member of the native-exec
-  * family after [[AsOfJoinExec]] (same SURVEY §2.9 path-c ladder: logical
-  * node → planner strategy → physical exec, registered through
-  * `SparkSessionExtensions` by [[graft.ext.GraftExtensions]]).
+/** Whole-operator keyed band join on the [[MergeJoinExec]] scaffold.
   *
   * Semantics: for each left row (k, t), every right row with the same key
   * and `t < r.ts <= t + band` — the batch analog of a stream–stream
@@ -22,96 +16,54 @@ import org.apache.spark.sql.types.LongType
   * inequality half of this predicate falls out of the sort-merge planner:
   * an unkeyed version plans BroadcastNestedLoopJoin, and the keyed version
   * buffers the WHOLE key group under SMJ when keys are hot. This exec
-  * declares hash clustering on the key and (key, ts) ordering on both
-  * sides, then streams a single two-pointer pass per partition holding
-  * only the rows inside the band window — memory bounded by band
-  * occupancy (rows per `band` interval), NOT by key-group size, the
-  * property that survives hot keys at 100 TB.
+  * streams a single two-pointer pass per partition holding only the rows
+  * inside the band window — memory bounded by band occupancy (rows per
+  * `band` interval), NOT by key-group size, the property that survives
+  * hot keys at 100 TB.
   *
   * Matched-only (inner) semantics: left rows with an empty band emit
-  * nothing; null keys/timestamps never match. Key and ts are LongType by
-  * contract (integer epoch micros/nanos throughout the engine).
+  * nothing; null keys/timestamps never match.
   */
 case class BandJoinNode(
     left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, rightKey: Attribute,
     leftTs: Attribute, rightTs: Attribute,
-    payload: Seq[Attribute], band: Long) extends BinaryNode {
-  override def output: Seq[Attribute] = left.output ++ payload
+    payload: Seq[Attribute], band: Long) extends MergeJoinNode {
+  override def exec(left: SparkPlan, right: SparkPlan): SparkPlan =
+    BandJoinExec(leftKey, rightKey, leftTs, rightTs, payload, band, left, right)
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): BandJoinNode =
     copy(left = newLeft, right = newRight)
-}
-
-/** Plans [[BandJoinNode]] → [[BandJoinExec]] (injectPlannerStrategy, so AQE
-  * re-planning sees it like any built-in join). */
-object BandJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case BandJoinNode(l, r, lk, rk, lt, rt, pay, band) =>
-      BandJoinExec(lk, rk, lt, rt, pay, band, planLater(l), planLater(r)) :: Nil
-    case _ => Nil
-  }
 }
 
 case class BandJoinExec(
     leftKey: Attribute, rightKey: Attribute,
     leftTs: Attribute, rightTs: Attribute,
     payload: Seq[Attribute], band: Long,
-    left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
+    left: SparkPlan, right: SparkPlan) extends MergeJoinExec {
 
   require(band > 0, "BandJoinExec requires a positive band")
-  require(Seq(leftKey, rightKey, leftTs, rightTs).forall(_.dataType == LongType),
-    "BandJoinExec requires LongType key and ts on both sides")
 
-  override def output: Seq[Attribute] = left.output ++ payload
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey)) :: ClusteredDistribution(Seq(rightKey)) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, Ascending)),
-      Seq(SortOrder(rightKey, Ascending), SortOrder(rightTs, Ascending)))
+  override def leftCols: Seq[Attribute] = Seq(leftKey, leftTs)
+  override def rightCols: Seq[Attribute] = Seq(rightKey, rightTs)
 
   /** Left side passes through in (key, ts) order; downstream per-key aggs
     * reuse this shuffle with no new exchange. */
-  override def outputPartitioning: Partitioning = left.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lKeyIdx = left.output.indexWhere(_.exprId == leftKey.exprId)
-    val lTsIdx = left.output.indexWhere(_.exprId == leftTs.exprId)
-    val rKeyIdx = right.output.indexWhere(_.exprId == rightKey.exprId)
-    val rTsIdx = right.output.indexWhere(_.exprId == rightTs.exprId)
-    val payIdx = payload.map(p => right.output.indexWhere(_.exprId == p.exprId))
-    require((Seq(lKeyIdx, lTsIdx, rKeyIdx, rTsIdx) ++ payIdx).forall(_ >= 0),
-      "band-join attributes must come from the respective child")
-    val payTypes = payload.map(_.dataType)
+    val Seq(lKeyIdx, lTsIdx) = ordinals(leftCols, left)
+    val Seq(rKeyIdx, rTsIdx) = ordinals(rightCols, right)
+    val payExprs = payloadProjection
     val w = band
     val outAttrs = output
 
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
-      val payProj = UnsafeProjection.create(
-        payIdx.zip(payTypes).map { case (i, t) => BoundReference(i, t, true) })
+      val r = new KeyedHeads(ri, rKeyIdx, rTsIdx, UnsafeProjection.create(payExprs))
       val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
       val joined = new JoinedRow
 
       new Iterator[InternalRow] {
-        // right head, decoded; payload copied (shuffle rows are reused)
-        private var rHas = false
-        private var rKey = 0L
-        private var rTs = 0L
-        private var rPay: UnsafeRow = _
-        private def advanceRight(): Unit = {
-          rHas = false
-          while (!rHas && ri.hasNext) {
-            val r = ri.next()
-            if (!r.isNullAt(rKeyIdx) && !r.isNullAt(rTsIdx)) {
-              rKey = r.getLong(rKeyIdx); rTs = r.getLong(rTsIdx)
-              rPay = payProj(r).copy()
-              rHas = true
-            }
-          }
-        }
-        advanceRight()
         // the sliding band window for the current left key: right rows with
         // ts in (lastLeftTs, lastLeftTs + band]. Bounded by band occupancy.
         private var bufKey = 0L
@@ -129,14 +81,14 @@ case class BandJoinExec(
               val lt = l.getLong(lTsIdx)
               if (!bufValid || lk != bufKey) { buf.clear(); bufKey = lk; bufValid = true }
               // fast-forward right past keys with no remaining left partner
-              while (rHas && rKey < lk) advanceRight()
+              while (r.has && r.key < lk) r.advance()
               // evict rows that left the band (rTs <= lt can never match a
               // later left row either: later lt' >= lt only moves the band up)
               while (!buf.isEmpty && buf.peekFirst()._1 <= lt) buf.removeFirst()
               // absorb right rows up to the band's upper edge
-              while (rHas && rKey == lk && rTs <= lt + w) {
-                if (rTs > lt) buf.addLast((rTs, rPay))
-                advanceRight()
+              while (r.has && r.key == lk && r.ts <= lt + w) {
+                if (r.ts > lt) buf.addLast((r.ts, r.pay))
+                r.advance()
               }
               if (!buf.isEmpty) {
                 curLeft = l.copy() // child iterators reuse row objects
@@ -169,22 +121,8 @@ object NativeBandJoin {
     * with an empty band are dropped (inner semantics). Both sides must
     * carry LongType columns named `key` and `ts`. */
   def after(left: DataFrame, right: DataFrame, key: String, ts: String,
-      payload: Seq[String], band: Long): DataFrame = {
-    val lp = left.queryExecution.analyzed
-    val rp0 = right.queryExecution.analyzed
-    // self-join safety (same memoized scan on both sides): re-alias right
-    val rp = if (lp.outputSet.intersect(rp0.outputSet).nonEmpty)
-      Project(rp0.output.map(a => Alias(a, a.name)()), rp0)
-    else rp0
-    def attr(out: Seq[Attribute], n: String, side: String): Attribute =
-      out.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"column $n not found on $side side"))
-    require(payload.forall(p => !left.columns.contains(p)),
-      s"payload names collide with left columns: ${payload.intersect(left.columns)}")
-    GraftSqlBridge.ofRows(left.sparkSession,
-      BandJoinNode(lp, rp,
-        attr(lp.output, key, "left"), attr(rp.output, key, "right"),
-        attr(lp.output, ts, "left"), attr(rp.output, ts, "right"),
-        payload.map(attr(rp.output, _, "right")), band))
-  }
+      payload: Seq[String], band: Long): DataFrame =
+    MergeJoin(left, right, payload) { (lp, rp, l, r, pay) =>
+      BandJoinNode(lp, rp, l(key), r(key), l(ts), r(ts), pay, band)
+    }
 }

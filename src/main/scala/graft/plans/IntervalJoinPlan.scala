@@ -2,18 +2,13 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 
-/** Whole-operator interval×interval overlap join — third member of the
-  * native-exec family ([[AsOfJoinExec]], [[BandJoinExec]]; SURVEY §2.9
-  * path c: logical node → planner strategy → physical exec, registered by
-  * [[graft.ext.GraftExtensions]]).
+/** Whole-operator interval×interval overlap join on the [[MergeJoinExec]]
+  * scaffold.
   *
   * Semantics: inner-join left `[llo, lhi)` to right `[rlo, rhi)` where
   * `llo < rhi && rlo < lhi`. A bucketed equijoin (both sides exploded
@@ -41,63 +36,37 @@ case class IntervalJoinNode(
     left: LogicalPlan, right: LogicalPlan,
     leftChunk: Attribute, leftLo: Attribute, leftHi: Attribute,
     rightChunk: Attribute, rightLo: Attribute, rightHi: Attribute,
-    payload: Seq[Attribute], chunkWidth: Long) extends BinaryNode {
-  override def output: Seq[Attribute] = left.output ++ payload
+    payload: Seq[Attribute], chunkWidth: Long) extends MergeJoinNode {
+  override def exec(left: SparkPlan, right: SparkPlan): SparkPlan =
+    IntervalJoinExec(leftChunk, leftLo, leftHi, rightChunk, rightLo, rightHi,
+      payload, chunkWidth, left, right)
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): IntervalJoinNode =
     copy(left = newLeft, right = newRight)
-}
-
-object IntervalJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case IntervalJoinNode(l, r, lc, llo, lhi, rc, rlo, rhi, pay, w) =>
-      IntervalJoinExec(lc, llo, lhi, rc, rlo, rhi, pay, w,
-        planLater(l), planLater(r)) :: Nil
-    case _ => Nil
-  }
 }
 
 case class IntervalJoinExec(
     leftChunk: Attribute, leftLo: Attribute, leftHi: Attribute,
     rightChunk: Attribute, rightLo: Attribute, rightHi: Attribute,
     payload: Seq[Attribute], chunkWidth: Long,
-    left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
+    left: SparkPlan, right: SparkPlan) extends MergeJoinExec {
 
   require(chunkWidth > 0, "IntervalJoinExec requires a positive chunkWidth")
-  require(Seq(leftChunk, leftLo, leftHi, rightChunk, rightLo, rightHi)
-      .forall(_.dataType == LongType),
-    "IntervalJoinExec requires LongType chunk/lo/hi on both sides")
 
-  override def output: Seq[Attribute] = left.output ++ payload
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftChunk)) ::
-      ClusteredDistribution(Seq(rightChunk)) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(Seq(SortOrder(leftChunk, Ascending), SortOrder(leftLo, Ascending)),
-      Seq(SortOrder(rightChunk, Ascending), SortOrder(rightLo, Ascending)))
-
-  override def outputPartitioning: Partitioning = left.outputPartitioning
+  override def leftCols: Seq[Attribute] = Seq(leftChunk, leftLo, leftHi)
+  override def rightCols: Seq[Attribute] = Seq(rightChunk, rightLo, rightHi)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lcIdx = left.output.indexWhere(_.exprId == leftChunk.exprId)
-    val lloIdx = left.output.indexWhere(_.exprId == leftLo.exprId)
-    val lhiIdx = left.output.indexWhere(_.exprId == leftHi.exprId)
-    val rcIdx = right.output.indexWhere(_.exprId == rightChunk.exprId)
-    val rloIdx = right.output.indexWhere(_.exprId == rightLo.exprId)
-    val rhiIdx = right.output.indexWhere(_.exprId == rightHi.exprId)
-    val payIdx = payload.map(p => right.output.indexWhere(_.exprId == p.exprId))
-    require((Seq(lcIdx, lloIdx, lhiIdx, rcIdx, rloIdx, rhiIdx) ++ payIdx)
-      .forall(_ >= 0), "interval-join attributes must come from the children")
-    val payTypes = payload.map(_.dataType)
+    val Seq(lcIdx, lloIdx, lhiIdx) = ordinals(leftCols, left)
+    val Seq(rcIdx, rloIdx, rhiIdx) = ordinals(rightCols, right)
+    val payExprs = payloadProjection
     val leftAttrs = left.output
     val outAttrs = output
     val w = chunkWidth
 
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
       val copyLeft = UnsafeProjection.create(leftAttrs, leftAttrs)
-      val payProj = UnsafeProjection.create(
-        payIdx.zip(payTypes).map { case (i, t) => BoundReference(i, t, true) })
+      val payProj = UnsafeProjection.create(payExprs)
       val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
       val joined = new JoinedRow
 
@@ -212,10 +181,7 @@ case class IntervalJoinExec(
 object NativeIntervalJoin {
 
   import org.apache.spark.sql.functions._
-
-  /** floor(a / w) exact over the long range (see RangeJoin.floorDiv). */
-  private def floorDiv(a: Column, w: Long): Column =
-    round((a - pmod(a, lit(w))) / lit(w)).cast("long")
+  import graft.operators.RangeJoin.floorDiv
 
   /** Inner overlap join of `left` `[llo, lhi)` with `right` `[rlo, rhi)`
     * (`llo < rhi && rlo < lhi`), appending `payload` columns from the
@@ -227,37 +193,17 @@ object NativeIntervalJoin {
       payload: Seq[String], chunkWidth: Long): DataFrame = {
     // cover chunks [chunk(lo), chunk(hi - 1)]: a partner's claiming lo is
     // strictly below hi, so no later chunk can ever claim a pair with us
-    val l = left
-      .withColumn("__ijlo", llo.cast("long"))
-      .withColumn("__ijhi", lhi.cast("long"))
+    def cover(df: DataFrame, lo: Column, hi: Column): DataFrame = df
+      .withColumn("__ijlo", lo.cast("long"))
+      .withColumn("__ijhi", hi.cast("long"))
       .filter(col("__ijlo") < col("__ijhi"))
       .withColumn("__ijck", explode(sequence(
         floorDiv(col("__ijlo"), chunkWidth),
         floorDiv(col("__ijhi") - 1, chunkWidth))))
-    val r = right
-      .withColumn("__ijlo", rlo.cast("long"))
-      .withColumn("__ijhi", rhi.cast("long"))
-      .filter(col("__ijlo") < col("__ijhi"))
-      .withColumn("__ijck", explode(sequence(
-        floorDiv(col("__ijlo"), chunkWidth),
-        floorDiv(col("__ijhi") - 1, chunkWidth))))
-    val lp = l.queryExecution.analyzed
-    val rp0 = r.queryExecution.analyzed
-    val rp = if (lp.outputSet.intersect(rp0.outputSet).nonEmpty)
-      Project(rp0.output.map(a => Alias(a, a.name)()), rp0)
-    else rp0
-    def attr(out: Seq[Attribute], n: String, side: String): Attribute =
-      out.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"column $n not found on $side side"))
-    require(payload.forall(p => !left.columns.contains(p)),
-      s"payload names collide with left columns: ${payload.intersect(left.columns)}")
-    GraftSqlBridge.ofRows(left.sparkSession,
-      IntervalJoinNode(lp, rp,
-        attr(lp.output, "__ijck", "left"), attr(lp.output, "__ijlo", "left"),
-        attr(lp.output, "__ijhi", "left"),
-        attr(rp.output, "__ijck", "right"), attr(rp.output, "__ijlo", "right"),
-        attr(rp.output, "__ijhi", "right"),
-        payload.map(attr(rp.output, _, "right")), chunkWidth))
-      .drop("__ijck", "__ijlo", "__ijhi")
+    MergeJoin(cover(left, llo, lhi), cover(right, rlo, rhi), payload) {
+      (lp, rp, l, r, pay) =>
+        IntervalJoinNode(lp, rp, l("__ijck"), l("__ijlo"), l("__ijhi"),
+          r("__ijck"), r("__ijlo"), r("__ijhi"), pay, chunkWidth)
+    }.drop("__ijck", "__ijlo", "__ijhi")
   }
 }

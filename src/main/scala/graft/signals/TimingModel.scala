@@ -96,6 +96,15 @@ object TimingModel {
     u(::, 0 until r).copy
   }
 
+  // The pure-Java F2J LAPACK fills `Dlamch`'s machine constants on first
+  // use and clears its static `first` flag only afterwards, while `Dlamc2`
+  // fills shared static holders in place: threads making their first LAPACK
+  // call at once can read half-written constants, and a scale bound read as
+  // inf or 0 never ends `Dlascl`'s loop. One SVD here, in the object's
+  // initializer, makes that first call alone: JVM class init orders it
+  // before any fit, on the driver and on every executor.
+  svd.reduced(DenseMatrix((2.0, 1.0), (1.0, 3.0), (0.0, 1.0)))
+
   /** Scalar twin of [[graft.functions.Psd.powerlaw]] (same formula, same
     * constants) for driver/executor-side φ assembly:
     * `10^{2 lgA} / (12π²) · yr³ · (f·yr)^{−γ}`. */

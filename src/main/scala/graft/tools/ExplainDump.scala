@@ -37,7 +37,8 @@ object ExplainDump {
     "fc1_naive_backtest", "au2_rolling_sketch_mau", "ia1_interarrival_profile",
     "w13_running_ltv", "up1_user_profile", "hm1_dow_hour_heatmap",
     "ab1_ab_test_zscore", "rt2_cohort_ltv",
-    "ao3_asof_native", "dl1_damerau_linkage", "skew1_key_skew_audit",
+    "ao3_asof_native", "ao2_asof_forward", "gf1_gap_fill",
+    "dl1_damerau_linkage", "skew1_key_skew_audit",
     "rb1_mad_outliers", "fh1_feature_hashing", "cl1_text_clean",
     "bfs1_reachability_levels", "mb1_market_basket",
     "path1_user_journeys", "gini1_activity_concentration",
@@ -81,7 +82,7 @@ object ExplainDump {
         s" | ${n("\\(\\d+\\) Scan parquet")} | ${n("\\(\\d+\\) BroadcastNestedLoopJoin")} |\n"
       sb ++= s"\n## $name\n\n```\n"
       sb ++= full
-        .split("\n").takeWhile(!_.startsWith("===== Subqueries")).take(80).mkString("\n")
+        .split("\n").takeWhile(!_.startsWith("===== Subqueries")).mkString("\n")
       sb ++= "\n```\n"
     }
     sb ++= census

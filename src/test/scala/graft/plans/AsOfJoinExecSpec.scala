@@ -120,11 +120,46 @@ class AsOfJoinExecSpec extends SparkTestBase {
     assert(run(fwd = true) === Map(1L -> (Some(300L), 202L), 2L -> (None, 201L)))
   }
 
+  /** The message of the IllegalArgumentException `body` throws. */
+  private def rejection(body: => Any): String =
+    intercept[IllegalArgumentException](body).getMessage
+
   test("payload name collision is rejected") {
     import spark.implicits._
     val df = Seq((1L, 1L, "a")).toDF("k", "ts", "quote")
-    assertThrows[IllegalArgumentException] {
-      NativeAsOf.backward(df, df, "k", "ts", Seq("quote"))
+    val iv = Seq((1L, 0L, 5L)).toDF("id", "lo", "hi")
+    val entries: Seq[(String, () => DataFrame)] = Seq(
+      "as-of" -> (() => NativeAsOf.backward(df, df, "k", "ts", Seq("quote"))),
+      "band" -> (() => NativeBandJoin.after(df, df, "k", "ts", Seq("quote"), 5L)),
+      "interval" -> (() => NativeIntervalJoin.overlap(iv, col("lo"), col("hi"),
+        iv, col("lo"), col("hi"), Seq("id"), 8L)))
+    for ((entry, join) <- entries)
+      assert(rejection(join()).contains("collide"), entry)
+  }
+
+  test("a non-Long join column or an unknown column name is rejected") {
+    import spark.implicits._
+    val df = Seq((1L, 1L, "a")).toDF("k", "ts", "quote")
+    val strKey = Seq(("1", 1L, 7L)).toDF("k", "ts", "id")
+    val intTs = Seq((1L, 1, 7L)).toDF("k", "ts", "id")
+    val iv = Seq((1L, 0L, 5L)).toDF("id", "lo", "hi")
+    // (entry, join, a fragment of the rejection); the LongType contract is
+    // checked when the exec is planned
+    val cases: Seq[(String, () => Any, String)] = Seq(
+      ("as-of, String key", () => NativeAsOf.backward(strKey, df, "k", "ts", Seq("quote"))
+        .queryExecution.executedPlan, "LongType"),
+      ("band, Int ts", () => NativeBandJoin.after(intTs, df, "k", "ts", Seq("quote"), 5L)
+        .queryExecution.executedPlan, "LongType"),
+      ("as-of, unknown key", () => NativeAsOf.forward(df, strKey, "user", "ts", Seq("id")),
+        "column user not found on left side"),
+      ("band, unknown payload", () => NativeBandJoin.after(df, intTs, "k", "ts", Seq("pay"), 5L),
+        "column pay not found on right side"),
+      ("interval, unknown payload", () => NativeIntervalJoin.overlap(iv, col("lo"), col("hi"),
+        iv.select($"id".as("rid"), $"lo", $"hi"), col("lo"), col("hi"), Seq("pay"), 8L),
+        "column pay not found on right side"))
+    for ((entry, join, fragment) <- cases) {
+      val msg = rejection(join())
+      assert(msg.contains(fragment), s"$entry: $msg")
     }
   }
 

@@ -94,4 +94,15 @@ class IntervalJoinExecSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("Exchange hashpartitioning"), p)
   }
+
+  test("self-join lineage (same frame on both sides) is re-aliased safely") {
+    import spark.implicits._
+    val base = mkL(Seq((1L, 0L, 10L), (2L, 5L, 15L), (3L, 20L, 30L)))
+    val r = base.select($"lid".as("rid"), $"slo", $"shi")
+    val got = NativeIntervalJoin.overlap(base, col("slo"), col("shi"),
+        r, col("slo"), col("shi"), payload = Seq("rid"), chunkWidth = Chunk)
+      .select($"lid", $"rid").as[(Long, Long)].collect().toSet
+    // each interval overlaps itself; [0, 10) and [5, 15) overlap each other
+    assert(got === Set((1L, 1L), (2L, 2L), (3L, 3L), (1L, 2L), (2L, 1L)))
+  }
 }

@@ -189,7 +189,13 @@ class TimingModelSpec extends SparkTestBase {
   test("fitNoise: matrices stay inside mapGroups — shuffle carries rows only") {
     // the executed plan between the scan and the fit must contain exactly
     // one exchange (psr grouping); no matrix-typed column ever appears
-    val toas = TimReader.read(spark, s"$RefData/fake_psr_0.tim")
+    // FIXTURES.md tier (a), fake_psr_0-style: 122 monthly TOAs, constant
+    // 0.5 us errors, no flags beyond the site
+    val tim = tmpDir("fakepsr").resolve("fake_psr_0.tim")
+    java.nio.file.Files.writeString(tim, (0 until 122).map { i =>
+      f" fake_psr_0_$i%03d 1440.000000 ${53000.0 + 30.0 * i + 0.123456789}%.15f 0.50000 AXIS"
+    }.mkString("FORMAT 1\n", "\n", "\n"))
+    val toas = TimReader.read(spark, tim.toString)
       .withColumn("resid_sec", (rand(3) * 2 - 1) * col("toaerr_us") * lit(1e-6))
     val rows = TimingModel.toaFitRows(toas, "resid_sec")
     val pars = Map("fake" -> TimingModel.ParInfo("fake", pepochMjd = 54500.0))
