@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   *     likelihood sanity),
   *  2. parameter RECOVERY on fake_psr_0-shaped fixtures — seeded injected
   *     noise in, argmax of the marginalized likelihood out,
-  *  3. a GOLDEN end-to-end run on the reference's own
-  *     examples/data/J1832-0836.{par,tim} emitting a K2 noise file whose
-  *     key set equals examples/example_noisefiles/J1832-0836_noise.json.
+  *  3. a GOLDEN end-to-end run on a committed PPTA-style
+  *     J1832-0836.{par,tim} pair (FIXTURES.md tier (b), under
+  *     `src/test/resources/ppta`) emitting a K2 noise file whose key set is
+  *     the fixture's `-group` backends plus the red and DM keys, and
+  *     byte-for-byte goldens of [[TimingModel.fitOne]]'s noise files.
   *
   * Residuals are an input column throughout: the reference obtains them
   * from libstempo/PINT inside enterprise.Pulsar (no such binary exists in
@@ -24,7 +26,7 @@ import org.apache.spark.sql.functions._
   */
 class TimingModelSpec extends SparkTestBase {
 
-  private val RefData = "/root/reference/examples/data"
+  private def resource(name: String): String = getClass.getResource(name).getPath
 
   // ------------------------------------------------------------ pure core
 
@@ -151,10 +153,11 @@ class TimingModelSpec extends SparkTestBase {
   // --------------------------------------------------- golden: J1832-0836
 
   test("golden: J1832-0836 end-to-end emits the reference noise-file key set") {
-    val toas = TimReader.read(spark, s"$RefData/J1832-0836.tim")
+    val tim = resource("/ppta/J1832-0836.tim")
+    val parFile = resource("/ppta/J1832-0836.par")
+    val toas = TimReader.read(spark, tim)
     val pars = TimingModel.parInfo(
-      ParReader.readParams(spark, s"$RefData/J1832-0836.par"),
-      ParReader.readJumps(spark, s"$RefData/J1832-0836.par"))
+      ParReader.readParams(spark, parFile), ParReader.readJumps(spark, parFile))
     assert(pars("J1832-0836").includeDm)
     assert(pars("J1832-0836").pepochMjd === 57246.0)
 
@@ -179,10 +182,14 @@ class TimingModelSpec extends SparkTestBase {
       java.nio.file.Paths.get(s"$out/J1832-0836_noise.json"))
     val keyRe = "\"([^\"]+)\"".r
     val gotKeys = keyRe.findAllMatchIn(written).map(_.group(1)).toSet
-    val refKeys = keyRe.findAllMatchIn(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(
-        "/root/reference/examples/example_noisefiles/J1832-0836_noise.json")))
-      .map(_.group(1)).toSet
+    // the reference noise-file convention: efac and log10_equad per
+    // `-group` backend of the .tim, plus the red and DM GP hyperparameters
+    val groups = "-group (\\S+)".r.findAllMatchIn(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(tim))).map(_.group(1)).toSet
+    assert(groups.size === 3)
+    val refKeys = groups.flatMap(g => Seq(s"J1832-0836_${g}_efac", s"J1832-0836_${g}_log10_equad")) ++
+      Seq("red_noise_log10_A", "red_noise_gamma", "dm_gp_log10_A", "dm_gp_gamma")
+        .map(p => s"J1832-0836_$p")
     assert(gotKeys === refKeys)
   }
 
@@ -216,11 +223,18 @@ class TimingModelSpec extends SparkTestBase {
   /** Seeded PPTA-shaped pulsar: `n` TOAs over ~13 yr on four backends
     * (each at least once) at their own frequencies, errors 0.1–3 µs, and
     * white residuals scaled by a per-backend efac, plus a red-noise
-    * realization on odd seeds. */
-  private def synthPulsar(psr: String, n: Int, seed: Long): Array[TimingModel.ToaFit] = {
+    * realization on odd seeds. With `big` > 0, `big` more TOAs, spread
+    * over the span, go to PDFB_20CM and the rest to random backends. */
+  private def synthPulsar(psr: String, n: Int, seed: Long,
+      big: Int = 0): Array[TimingModel.ToaFit] = {
     val rng = new java.util.Random(seed)
     val t = Array.fill(n)(53000.0 + 5000.0 * rng.nextDouble()).sorted.map(_ * 86400.0)
-    val back = Array.tabulate(n)(i => if (i < Backends.size) i else rng.nextInt(Backends.size))
+    val back = Array.tabulate(n)(i =>
+      if (i < Backends.size) i else if (i < Backends.size + big) 1 else rng.nextInt(Backends.size))
+    if (big > 0) (n - 1 until Backends.size by -1).foreach { i =>
+      val j = Backends.size + rng.nextInt(i - Backends.size + 1)
+      val b = back(i); back(i) = back(j); back(j) = b
+    }
     val freqOf = Seq(3100.0, 1400.0, 732.0, 3100.0)
     val redAmp = if (seed % 2 == 1) 3e-6 else 0.0
     val phase = rng.nextDouble() * 2 * math.Pi
@@ -309,14 +323,30 @@ class TimingModelSpec extends SparkTestBase {
 
   test("fitOne chooses exactly what coordinate ascent over MarginalizedLikelihood does") {
     val cfg = TimingModel.FitConfig()
-    for {
+    val pulsars = (for {
       n <- Seq(16, 48, 123)
       seed <- 1L to 7L
-    } {
-      val psr = s"J${n}_$seed"
-      val rows = synthPulsar(psr, n, 100 * n + seed)
+    } yield (s"J${n}_$seed", synthPulsar(s"J${n}_$seed", n, 100 * n + seed))) :+
+      // one backend with more TOAs than T has columns
+      ("J270_big", synthPulsar("J270_big", 270, 27001L, big = 250))
+    pulsars.foreach { case (psr, rows) =>
       val par = synthPar(psr)
       assert(TimingModel.fitOne(rows, par, cfg) === referenceFit(rows, par, cfg), psr)
+    }
+  }
+
+  /** The pulsars whose noise files are pinned byte for byte under
+    * `src/test/resources/fit_golden`. */
+  private val goldenPulsars = Seq(
+    ("J0016+0016", 16, 16L, 0), ("J0048+0048", 48, 48L, 0), ("J0270+0270", 270, 270L, 250))
+
+  test("fitOne's noise files match the committed golden byte for byte") {
+    goldenPulsars.foreach { case (psr, n, seed, big) =>
+      val got = graft.sinks.NoiseFileWriter.renderSorted(TimingModel.fitOne(
+        synthPulsar(psr, n, seed, big), synthPar(psr), TimingModel.FitConfig()))
+      val want = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(resource(s"/fit_golden/${psr}_noise.json")))
+      assert(got === want, psr)
     }
   }
 
