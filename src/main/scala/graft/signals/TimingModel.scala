@@ -259,21 +259,41 @@ object TimingModel {
   }
 
   /** The [[MarginalizedLikelihood]] objective as coordinate ascent needs
-    * it: the parameters live in an array, ordered as [[names]], and an
-    * evaluation recomputes only what the parameters changed since the
-    * previous one. Starts at the defaults of an empty parameter map.
+    * it: the parameters live in an array, ordered as [[names]], and
+    * [[sweep]] scores every value of one parameter's grid with the others
+    * held at their current values ([[set]] moves one). Starts at the
+    * defaults of an empty parameter map.
     *
     * N is diagonal and a backend's efac and equad touch only that
     * backend's TOAs, so TᵀN⁻¹T, TᵀN⁻¹r, rᵀN⁻¹r and ln|N| are sums of
     * per-backend blocks G_b = Σ wᵢtᵢtᵢᵀ, d_b = Σ wᵢrᵢtᵢ, Σ wᵢrᵢ² and
-    * Σ ln Nᵢᵢ over i in b (wᵢ = 1/Nᵢᵢ, tᵢ = row i of T). Updating an
-    * efac or equad marks only its backend's blocks stale; updating a red
-    * or DM parameter marks only the B diagonal stale. [[apply]] rebuilds
-    * what is stale (n_b·c²/2 for a backend, 2k powers for B) and then
-    * factors A = Σ_b G_b + B⁻¹ (c³/6) for ln|A| and dᵀA⁻¹d. Each
-    * evaluation is a pure function of the current parameters: the
-    * result differs from [[MarginalizedLikelihood]] only by the order of
-    * floating-point sums. */
+    * Σ ln Nᵢᵢ over i in b (wᵢ = 1/Nᵢᵢ, tᵢ = row i of T), kept at the
+    * current parameters. A sweep factors the c×c system once and scores
+    * each grid value on a smaller one:
+    *
+    *  - red or DM sweep: that GP's k = 2·nFreq columns are ordered last.
+    *    The other columns are factored once (A₁₁ = U₁₁ᵀU₁₁), leaving the
+    *    Schur complement S₀ of their data; each value adds its 1/φ to
+    *    S₀'s diagonal and factors only that k×k block. ln|A| =
+    *    ln|A₁₁| + ln|S| and dᵀA⁻¹d = |U₁₁⁻ᵀd₁|² + zᵀS⁻¹z, with z =
+    *    d₂ − U₁₂ᵀU₁₁⁻ᵀd₁ fixed for the sweep.
+    *  - efac or equad sweep of backend b, low-rank route: A₀ at the
+    *    current parameters is factored once, and a value whose weights
+    *    differ by Δ = s·D² (s = ±1: every weight of b moves the same way)
+    *    gives A = A₀ + s·T_bᵀD²T_b. With X = T_bU₀⁻¹ and P = XXᵀ, the
+    *    determinant lemma gives ln|A| = ln|A₀| + ln|K| on the n_b×n_b
+    *    system K = I + s·DPD, and Woodbury gives dᵀA⁻¹d = |u|² −
+    *    s·gᵀK⁻¹g with u = U₀⁻ᵀd, g = D·X·u, all of which reduce to n_b-sized
+    *    products of P, Xy₀ and Δr.
+    *  - efac or equad sweep, rebuild route: the other blocks are summed
+    *    once, and each value rebuilds G_b and factors the c×c system.
+    *
+    * Both white routes are exact; [[sweep]] takes the one with fewer
+    * multiply-adds for the sweep's n_b, c and grid length (the low-rank
+    * route costs n_b³/6 per value after an n_b·c²/2 set-up, the rebuild
+    * route n_b·c²/2 + c³/6). The result differs from
+    * [[MarginalizedLikelihood]] only by the order of floating-point
+    * operations. */
   final class IncrementalLikelihood(
       psr: String,
       resid: DenseVector[Double],
@@ -300,142 +320,260 @@ object TimingModel {
 
     private val n = resid.length
     private val nm = m.cols
-    // every c×c matrix below is an array of rows, of which only the upper
+    private val gps: Seq[GpBasis] = red.toSeq ++ dm.toSeq
+    // every matrix below is an array of rows, of which only the upper
     // triangle (k ≥ j in row j) is kept: the inner loops are then
     // same-index axpys over two rows, a form the JIT can vectorize
     private val tRows: Array[Array[Double]] = {
       val t = basis(m, red, dm)
       Array.tabulate(n)(i => t(i, ::).t.toArray)
     }
-    private val c = nm + (red.toSeq ++ dm.toSeq).map(_._1.cols).sum
+    private val c = nm + gps.map(_._1.cols).sum
     private val r = resid.toArray
     private val sigma = sigmaSec.toArray
     private val rowsOf: Array[Array[Int]] =
       backendNames.map(b => backends.indices.filter(backends(_) == b).toArray)
+    private val ln2Pi = 0.5 * n * math.log(2.0 * math.Pi)
 
-    // per-backend blocks
+    // per-backend blocks at the current parameters
     private val g = Array.ofDim[Double](nb, c, c)
     private val d = Array.ofDim[Double](nb, c)
     private val rNr = new Array[Double](nb)
     private val lnN = new Array[Double](nb)
-    private val stale = Array.fill(nb)(true)
-    private var bStale = true
-    // sums of the blocks, B, and the work space of the factorization
-    private val gSum = Array.ofDim[Double](c, c)
-    private val dSum = new Array[Double](c)
-    private var rNrSum = 0.0
-    private var lnNSum = 0.0
-    private val bInv = new Array[Double](c)
-    private var lnDetB = 0.0
+    (0 until nb).foreach(rebuild)
+    // the c×c system of a sweep and its right-hand side
     private val a = Array.ofDim[Double](c, c)
     private val y = new Array[Double](c)
+    private val inOrder: Array[Int] = Array.range(0, c)
 
-    def update(k: Int, v: Double): Unit = {
+    /** Moves parameter k (in [[names]] order) to v. */
+    def set(k: Int, v: Double): Unit = {
       params(k) = v
-      if (k < 2 * nb) stale(k / 2) = true else bStale = true
+      if (k < 2 * nb) rebuild(k / 2)
     }
 
-    def apply(): Double = {
-      var resum = false
-      var b = 0
-      while (b < nb) {
-        if (stale(b)) { rebuild(b); stale(b) = false; resum = true }
-        b += 1
+    /** lnL at each value of `grid` for parameter k, every other parameter
+      * at its current value; the parameters are left as they were. */
+    def sweep(k: Int, grid: Array[Double]): Array[Double] =
+      if (k >= 2 * nb) gpSweep(k, grid)
+      else whiteSweep(k, grid, lowRankCheaper(rowsOf(k / 2).length, grid.length))
+
+    /** Multiply-adds of a white sweep by each route, leading terms. */
+    private def lowRankCheaper(nbk: Int, len: Int): Boolean = {
+      val (q, cc) = (nbk.toDouble, c.toDouble)
+      val lowRank = cc * cc * cc / 6 + q * cc * cc / 2 + q * q * cc +
+        len * (q * q * q / 6 + 3 * q * q)
+      val rebuild = len * (q * cc * cc / 2 + cc * cc * cc / 6 + cc * cc)
+      lowRank < rebuild
+    }
+
+    /** An efac (k even) or equad sweep of backend k/2 by the chosen route. */
+    private[signals] def whiteSweep(k: Int, grid: Array[Double], lowRank: Boolean): Array[Double] = {
+      val b = k / 2
+      val bDiag = currentB()
+      val lnDetB = bDiag.map(math.log).sum
+      val (rrRest, lnRest) = load(b, inOrder, c, bDiag)
+      def noise(v: Double): (Double, Double) =
+        if (k % 2 == 0) (v, equad2(params(k + 1))) else (params(k - 1), equad2(v))
+      if (!lowRank) {
+        val aRest = a.map(_.clone)
+        val dRest = y.clone
+        grid.map { v =>
+          (0 until c).foreach(j => System.arraycopy(aRest(j), j, a(j), j, c - j))
+          System.arraycopy(dRest, 0, y, 0, c)
+          val (ef, eq2) = noise(v)
+          val (rr, ln) = addRows(b, ef, eq2, a, y)
+          val lnDetA = factor(a, c, c)
+          val quad = forward(a, y, c, c)
+          -0.5 * (rrRest + rr - quad) - 0.5 * (lnRest + ln + lnDetB + lnDetA) - ln2Pi
+        }
+      } else {
+        // A₀ = A at the current parameters: add b's block back and factor
+        addBlock(b, inOrder, a, y)
+        val lnDetA0 = factor(a, c, c)
+        val quad0 = forward(a, y, c, c)
+        val rows = rowsOf(b)
+        val q = rows.length
+        val x = rows.map { i => val xi = tRows(i).clone; forward(a, xi, c, c); xi }
+        val p = Array.tabulate(q, q)((i, j) => dot(x(i), x(j), c))
+        val e = x.map(dot(_, y, c))
+        val w0 = rows.map(i => 1.0 / nii(i, params(2 * b), equad2(params(2 * b + 1))))
+        val kk = Array.ofDim[Double](q, q)
+        val dd, dr, z = new Array[Double](q)
+        grid.map { v =>
+          val (ef, eq2) = noise(v)
+          var rr = 0.0
+          var ln = 0.0
+          var sum = 0.0
+          var i = 0
+          while (i < q) {
+            val ni = nii(rows(i), ef, eq2)
+            val w = 1.0 / ni
+            val ri = r(rows(i))
+            rr += ri * ri * w
+            ln += math.log(ni)
+            val delta = w - w0(i)
+            dd(i) = delta
+            dr(i) = delta * ri
+            sum += delta
+            i += 1
+          }
+          // every weight of b moves the same way, so Δ = s·D²
+          val s = if (sum < 0) -1.0 else 1.0
+          i = 0
+          while (i < q) { dd(i) = math.sqrt(math.abs(dd(i))); i += 1 }
+          // uᵀu = |y₀|² + Δrᵀ(2Xy₀ + PΔr); g = D(Xy₀ + PΔr)
+          var uu = quad0
+          i = 0
+          while (i < q) {
+            val pdr = dot(p(i), dr, q)
+            uu += dr(i) * (2 * e(i) + pdr)
+            z(i) = dd(i) * (e(i) + pdr)
+            val ki = kk(i)
+            val pi = p(i)
+            var j = i
+            while (j < q) { ki(j) = s * dd(i) * pi(j) * dd(j); j += 1 }
+            ki(i) += 1.0
+            i += 1
+          }
+          val lnDetK = factor(kk, q, q)
+          val quad = uu - s * forward(kk, z, q, q)
+          -0.5 * (rrRest + rr - quad) - 0.5 * (lnRest + ln + lnDetB + lnDetA0 + lnDetK) - ln2Pi
+        }
       }
-      if (resum) sumBlocks()
-      if (bStale) {
-        val gp = params.drop(2 * nb).grouped(2).map(p => (p(0), p(1))).toSeq
-        val bDiag = bDiagonal(nm, (red.toSeq ++ dm.toSeq).zip(gp))
+    }
+
+    /** A log10_A (k even) or gamma sweep of a red or DM GP. */
+    private def gpSweep(k: Int, grid: Array[Double]): Array[Double] = {
+      val gp = (k - 2 * nb) / 2
+      val basisK = gps(gp)
+      val kc = basisK._1.cols
+      val off = nm + gps.take(gp).map(_._1.cols).sum
+      val lead = c - kc
+      // the swept GP's columns last
+      val perm = ((0 until off) ++ (off + kc until c) ++ (off until off + kc)).toArray
+      val bDiag = currentB()
+      val (rr, ln) = load(-1, perm, lead, bDiag)
+      val lnDetLead = factor(a, c, lead)
+      val quadLead = forward(a, y, c, lead)
+      val lnDetBLead = (0 until lead).map(j => math.log(bDiag(perm(j)))).sum
+      val s0 = Array.tabulate(kc)(j => a(lead + j).slice(lead, c))
+      val z0 = y.slice(lead, c)
+      val sk = Array.ofDim[Double](kc, kc)
+      val zk = new Array[Double](kc)
+      val (lgA, gam) = (params(2 * nb + 2 * gp), params(2 * nb + 2 * gp + 1))
+      grid.map { v =>
+        val phi = bDiagonal(0, Seq((basisK, if (k % 2 == 0) (v, gam) else (lgA, v))))
         var j = 0
-        while (j < c) { bInv(j) = 1.0 / bDiag(j); j += 1 }
-        lnDetB = bDiag.map(math.log).sum
-        bStale = false
+        while (j < kc) {
+          System.arraycopy(s0(j), j, sk(j), j, kc - j)
+          sk(j)(j) += 1.0 / phi(j)
+          j += 1
+        }
+        System.arraycopy(z0, 0, zk, 0, kc)
+        val lnDetS = factor(sk, kc, kc)
+        val quad = quadLead + forward(sk, zk, kc, kc)
+        val lnDetB = lnDetBLead + phi.map(math.log).sum
+        -0.5 * (rr - quad) - 0.5 * (ln + lnDetB + lnDetLead + lnDetS) - ln2Pi
       }
+    }
+
+    private def equad2(lq: Double): Double = math.pow(10.0, 2 * lq)
+
+    private def nii(i: Int, ef: Double, eq2: Double): Double =
+      ef * ef * sigma(i) * sigma(i) + eq2
+
+    private def currentB(): Array[Double] =
+      bDiagonal(nm, gps.zip(params.drop(2 * nb).grouped(2).map(p => (p(0), p(1)))))
+
+    private def dot(u: Array[Double], v: Array[Double], len: Int): Double = {
+      var acc = 0.0
       var j = 0
-      while (j < c) {
-        System.arraycopy(gSum(j), j, a(j), j, c - j)
-        a(j)(j) += bInv(j)
-        j += 1
-      }
-      val lnDetA = choleskyInPlace()
-      // solve Uᵀ y = d, then quadratic form dᵀA⁻¹d = |y|²
-      System.arraycopy(dSum, 0, y, 0, c)
-      var quad = 0.0
-      var k = 0
-      while (k < c) {
-        val uk = a(k)
-        val yk = y(k) / uk(k)
-        y(k) = yk
-        quad += yk * yk
-        j = k + 1
-        while (j < c) { y(j) -= uk(j) * yk; j += 1 }
-        k += 1
-      }
-      -0.5 * (rNrSum - quad) - 0.5 * (lnNSum + lnDetB + lnDetA) -
-        0.5 * n * math.log(2.0 * math.Pi)
+      while (j < len) { acc += u(j) * v(j); j += 1 }
+      acc
     }
 
     private def rebuild(b: Int): Unit = {
-      val ef = params(2 * b)
-      val eq2 = math.pow(10.0, 2 * params(2 * b + 1))
-      val gb = g(b)
-      val db = d(b)
-      gb.foreach(java.util.Arrays.fill(_, 0.0))
-      java.util.Arrays.fill(db, 0.0)
-      var rr = 0.0
-      var ln = 0.0
-      rowsOf(b).foreach { i =>
-        val nii = ef * ef * sigma(i) * sigma(i) + eq2
-        val w = 1.0 / nii
-        val wr = r(i) * w
-        rr += r(i) * wr
-        ln += math.log(nii)
-        val ti = tRows(i)
-        var j = 0
-        while (j < c) {
-          val tj = ti(j)
-          db(j) += tj * wr
-          val wtj = w * tj
-          val gbj = gb(j)
-          var k = j
-          while (k < c) { gbj(k) += wtj * ti(k); k += 1 }
-          j += 1
-        }
-      }
+      g(b).foreach(java.util.Arrays.fill(_, 0.0))
+      java.util.Arrays.fill(d(b), 0.0)
+      val (rr, ln) = addRows(b, params(2 * b), equad2(params(2 * b + 1)), g(b), d(b))
       rNr(b) = rr
       lnN(b) = ln
     }
 
-    private def sumBlocks(): Unit = {
-      gSum.foreach(java.util.Arrays.fill(_, 0.0))
-      java.util.Arrays.fill(dSum, 0.0)
-      rNrSum = 0.0
-      lnNSum = 0.0
-      var b = 0
-      while (b < nb) {
+    /** Adds backend b's rows at (efac, equad²) into the upper triangle of
+      * `ga` and into `da`; returns their Σ wᵢrᵢ² and Σ ln Nᵢᵢ. */
+    private def addRows(b: Int, ef: Double, eq2: Double, ga: Array[Array[Double]],
+        da: Array[Double]): (Double, Double) = {
+      var rr = 0.0
+      var ln = 0.0
+      rowsOf(b).foreach { i =>
+        val ni = nii(i, ef, eq2)
+        val w = 1.0 / ni
+        val wr = r(i) * w
+        rr += r(i) * wr
+        ln += math.log(ni)
+        val ti = tRows(i)
         var j = 0
         while (j < c) {
-          val sj = gSum(j)
-          val gbj = g(b)(j)
+          val tj = ti(j)
+          da(j) += tj * wr
+          val wtj = w * tj
+          val gj = ga(j)
           var k = j
-          while (k < c) { sj(k) += gbj(k); k += 1 }
-          dSum(j) += d(b)(j)
+          while (k < c) { gj(k) += wtj * ti(k); k += 1 }
           j += 1
         }
-        rNrSum += rNr(b)
-        lnNSum += lnN(b)
-        b += 1
+      }
+      (rr, ln)
+    }
+
+    /** Adds block b, columns in the order `perm`, into `a` and `y`. */
+    private def addBlock(b: Int, perm: Array[Int], a: Array[Array[Double]],
+        y: Array[Double]): Unit = {
+      val gb = g(b)
+      var i = 0
+      while (i < c) {
+        val pi = perm(i)
+        val ai = a(i)
+        var j = i
+        while (j < c) {
+          val pj = perm(j)
+          ai(j) += (if (pi <= pj) gb(pi)(pj) else gb(pj)(pi))
+          j += 1
+        }
+        y(i) += d(b)(pi)
+        i += 1
       }
     }
 
-    /** Right-looking Cholesky A = UᵀU on the upper triangle of `a`,
-      * overwritten by U; returns ln|A|. Row k of U updates each trailing
-      * row i as one axpy. */
-    private def choleskyInPlace(): Double = {
+    /** Loads `a` and `y` with the blocks other than `skip`, columns in the
+      * order `perm`, and B⁻¹ on the first `lead` of them; returns the
+      * blocks' rᵀN⁻¹r and ln|N|. */
+    private def load(skip: Int, perm: Array[Int], lead: Int,
+        bDiag: Array[Double]): (Double, Double) = {
+      a.foreach(java.util.Arrays.fill(_, 0.0))
+      java.util.Arrays.fill(y, 0.0)
+      var rr = 0.0
+      var ln = 0.0
+      var b = 0
+      while (b < nb) {
+        if (b != skip) { addBlock(b, perm, a, y); rr += rNr(b); ln += lnN(b) }
+        b += 1
+      }
+      (0 until lead).foreach(j => a(j)(j) += 1.0 / bDiag(perm(j)))
+      (rr, ln)
+    }
+
+    /** Right-looking Cholesky UᵀU of the leading `upto` columns of the
+      * m×m upper triangle of `u`, overwritten by U; the trailing block is
+      * left holding its Schur complement. Returns ln|A₁₁|. Row k of U
+      * updates each trailing row i as one axpy. */
+    private def factor(u: Array[Array[Double]], m: Int, upto: Int): Double = {
       var lnDet = 0.0
       var k = 0
-      while (k < c) {
-        val uk = a(k)
+      while (k < upto) {
+        val uk = u(k)
         val akk = uk(k)
         if (!(akk > 0.0)) throw new ArithmeticException(
           s"$psr: A = B⁻¹ + TᵀN⁻¹T is not positive definite at column $k")
@@ -444,18 +582,36 @@ object TimingModel {
         uk(k) = ukk
         val inv = 1.0 / ukk
         var j = k + 1
-        while (j < c) { uk(j) *= inv; j += 1 }
+        while (j < m) { uk(j) *= inv; j += 1 }
         var i = k + 1
-        while (i < c) {
-          val ai = a(i)
+        while (i < m) {
+          val ai = u(i)
           val uki = uk(i)
           j = i
-          while (j < c) { ai(j) -= uki * uk(j); j += 1 }
+          while (j < m) { ai(j) -= uki * uk(j); j += 1 }
           i += 1
         }
         k += 1
       }
       lnDet
+    }
+
+    /** Solves the leading `upto` rows of Uᵀx = v in place (U from
+      * [[factor]]) and returns their |x|²; the trailing entries are left
+      * as v₂ − U₁₂ᵀx₁. */
+    private def forward(u: Array[Array[Double]], v: Array[Double], m: Int, upto: Int): Double = {
+      var quad = 0.0
+      var k = 0
+      while (k < upto) {
+        val uk = u(k)
+        val vk = v(k) / uk(k)
+        v(k) = vk
+        quad += vk * vk
+        var j = k + 1
+        while (j < m) { v(j) -= uk(j) * vk; j += 1 }
+        k += 1
+      }
+      quad
     }
   }
 
@@ -527,11 +683,13 @@ object TimingModel {
     * The dimensions are swept in [[IncrementalLikelihood.names]] order,
     * `passes` times; each takes the first grid value with the highest
     * likelihood, the others held at their current values (efac starts at
-    * 1, every other parameter at its grid's middle). The objective is
-    * evaluated incrementally: while one backend's efac or equad is swept
-    * only that backend's blocks of TᵀN⁻¹T, TᵀN⁻¹r, rᵀN⁻¹r and ln|N| are
-    * rebuilt, and while a red or DM parameter is swept the blocks are
-    * reused and only B⁻¹ and the Cholesky factor of A are rebuilt. */
+    * 1, every other parameter at its grid's middle). Each 1-D sweep
+    * factors the c×c system once and scores its grid values on small
+    * systems ([[IncrementalLikelihood.sweep]]): a red or DM sweep on the
+    * swept GP's k×k block, an efac or equad sweep on the n_b×n_b
+    * Woodbury system of its backend's TOAs, or, where a backend has so
+    * many TOAs that this costs more, by rebuilding that backend's block
+    * and refactoring per value. */
   def fitOne(rows: Array[ToaFit], par: ParInfo, cfg: FitConfig)
       : Map[String, Double] = {
     val lik = pulsarModel(rows, par, cfg).incremental
@@ -544,20 +702,15 @@ object TimingModel {
     val cur = Array.tabulate(grids.length) { k =>
       if (k < 2 * nb && k % 2 == 0) 1.0 else grids(k)(grids(k).length / 2)
     }
-    cur.indices.foreach(k => lik.update(k, cur(k)))
+    cur.indices.foreach(k => lik.set(k, cur(k)))
     (1 to cfg.passes).foreach { _ =>
       cur.indices.foreach { k =>
-        val grid = grids(k)
+        val ls = lik.sweep(k, grids(k))
         var best = 0
-        var bestL = 0.0
-        grid.indices.foreach { i =>
-          lik.update(k, grid(i))
-          val l = lik()
-          // Double's implicit Ordering is the total order, as in maxBy
-          if (i == 0 || java.lang.Double.compare(l, bestL) > 0) { best = i; bestL = l }
-        }
-        cur(k) = grid(best)
-        lik.update(k, cur(k))
+        // Double's implicit Ordering is the total order, as in maxBy
+        ls.indices.foreach(i => if (java.lang.Double.compare(ls(i), ls(best)) > 0) best = i)
+        cur(k) = grids(k)(best)
+        lik.set(k, cur(k))
       }
     }
     lik.names.zip(cur).toMap

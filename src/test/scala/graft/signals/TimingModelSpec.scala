@@ -285,6 +285,7 @@ class TimingModelSpec extends SparkTestBase {
   test("incremental likelihood equals MarginalizedLikelihood at 208 random points") {
     val rng = new java.util.Random(5)
     var points = 0
+    var compared = 0
     for {
       (fitRed, fitDm) <- Seq((false, false), (true, false), (false, true), (true, true))
       jumps <- Seq(false, true)
@@ -295,30 +296,48 @@ class TimingModelSpec extends SparkTestBase {
       val model = TimingModel.pulsarModel(synthPulsar(psr, 40, points), synthPar(psr, jumps), cfg)
       val ref = model.marginalized
       val inc = model.incremental
+      val white = 2 * inc.backendNames.length
       assert(inc.names.length === 8 + (if (fitRed) 2 else 0) + (if (fitDm) 2 else 0))
+      def draw(name: String): Double = {
+        val u = rng.nextDouble()
+        if (name.endsWith("_efac")) 0.1 + 2.9 * u
+        else if (name.endsWith("_log10_equad")) -9.0 + 4.0 * u
+        else if (name.endsWith("_log10_A")) -16.0 + 5.0 * u
+        else 1.0 + 5.0 * u
+      }
       val cur = scala.collection.mutable.Map[String, Double]()
       (1 to 13).foreach { _ =>
         // move a random subset of the parameters: blocks not touched since
         // the previous point must be reused correctly
         inc.names.indices.filter(_ => cur.isEmpty || rng.nextInt(3) == 0).foreach { k =>
-          val name = inc.names(k)
-          val u = rng.nextDouble()
-          val v =
-            if (name.endsWith("_efac")) 0.1 + 2.9 * u
-            else if (name.endsWith("_log10_equad")) -9.0 + 4.0 * u
-            else if (name.endsWith("_log10_A")) -16.0 + 5.0 * u
-            else 1.0 + 5.0 * u
-          cur(name) = v
-          inc.update(k, v)
+          val v = draw(inc.names(k))
+          cur(inc.names(k)) = v
+          inc.set(k, v)
         }
-        val want = ref(cur.toMap)
-        val got = inc()
-        assert(math.abs(got - want) <= 1e-9 * math.abs(want),
-          s"$psr red=$fitRed dm=$fitDm jumps=$jumps svd=$useSvd: $got vs $want at $cur")
+        // sweep every parameter over its current value and two random
+        // ones; a white sweep by both routes and by the chosen one
+        inc.names.indices.foreach { k =>
+          val name = inc.names(k)
+          val grid = Array(cur(name), draw(name), draw(name))
+          val routes =
+            if (k < white) Seq(inc.whiteSweep(k, grid, lowRank = true),
+              inc.whiteSweep(k, grid, lowRank = false), inc.sweep(k, grid))
+            else Seq(inc.sweep(k, grid))
+          grid.indices.foreach { i =>
+            val want = ref(cur.toMap.updated(name, grid(i)))
+            routes.foreach { got =>
+              assert(math.abs(got(i) - want) <= 1e-9 * math.abs(want),
+                s"$psr red=$fitRed dm=$fitDm jumps=$jumps svd=$useSvd: ${got(i)} vs $want " +
+                  s"at ${cur.toMap.updated(name, grid(i))}")
+              compared += 1
+            }
+          }
+        }
         points += 1
       }
     }
     assert(points === 208)
+    assert(compared >= 208)
   }
 
   test("fitOne chooses exactly what coordinate ascent over MarginalizedLikelihood does") {
