@@ -86,12 +86,16 @@ object TimingModel {
   }
 
   /** `tm_svd` stabilization (ref `enterprise_warp.py:277-279,501`):
-    * replace M with its left singular vectors — an orthonormal basis of
-    * the same column space, immune to the 10-plus-decade dynamic range
-    * between offset and dt² columns. Rank-revealing: directions with
-    * singular value below `rcond·s₀` are dropped. */
+    * replace M with an orthonormal basis of its column space, the left
+    * singular vectors of M with its columns normalized (the same span).
+    * Normalizing first matters: M's raw columns span 20-plus decades
+    * (dt²/2 reaches 10¹⁶ s² over a decade, an offset or JUMP column is
+    * 1), so an SVD of the raw M puts the offset, JUMP and DM directions
+    * below any relative cut. Rank-revealing for genuinely collinear
+    * columns: directions with singular value below `rcond·s₀` of the
+    * normalized M are dropped. */
   def svdStabilize(m: DenseMatrix[Double], rcond: Double = 1e-15): DenseMatrix[Double] = {
-    val svd.SVD(u, s, _) = svd.reduced(m)
+    val svd.SVD(u, s, _) = svd.reduced(normalizeColumns(m))
     val r = s.toArray.count(_ > s(0) * rcond)
     u(::, 0 until r).copy
   }
@@ -675,6 +679,26 @@ object TimingModel {
       red = red, dm = dm)
   }
 
+  /** Relative width within which two lnL values of one sweep are a tie.
+    * lnL is a sum of terms some thousands in size (ln|B| and ln|A| carry
+    * ~92 per timing-model column), so its rounding is ~1e-14 relative and
+    * differs between evaluation orders. A parameter the data cannot
+    * constrain, such as the white noise of a backend whose only TOA has
+    * its own JUMP, has a lnL flat to that rounding; without a tie width
+    * its pick would follow the rounding. */
+  private[signals] val TieRtol: Double = 1e-11
+
+  /** Index of the grid value a sweep picks: the first whose lnL is within
+    * [[TieRtol]] of the largest (Double's total order, so a NaN is the
+    * largest and is picked, as in `maxBy`). */
+  private[signals] def firstBest(ls: Array[Double]): Int = {
+    var best = 0
+    ls.indices.foreach(i => if (java.lang.Double.compare(ls(i), ls(best)) > 0) best = i)
+    val floor = ls(best) - TieRtol * math.abs(ls(best))
+    val first = ls.indexWhere(_ >= floor)
+    if (first < 0) best else first
+  }
+
   /** Per-pulsar noise fit: coordinate ascent of [[MarginalizedLikelihood]]
     * over per-backend (efac, log10_equad) and the red/DM hyperpriors, on
     * the inputs of [[pulsarModel]]. Pure function of the TOA slice —
@@ -682,8 +706,9 @@ object TimingModel {
     *
     * The dimensions are swept in [[IncrementalLikelihood.names]] order,
     * `passes` times; each takes the first grid value with the highest
-    * likelihood, the others held at their current values (efac starts at
-    * 1, every other parameter at its grid's middle). Each 1-D sweep
+    * likelihood up to [[TieRtol]] ([[firstBest]]), the others held at
+    * their current values (efac starts at 1, every other parameter at its
+    * grid's middle). Each 1-D sweep
     * factors the c×c system once and scores its grid values on small
     * systems ([[IncrementalLikelihood.sweep]]): a red or DM sweep on the
     * swept GP's k×k block, an efac or equad sweep on the n_b×n_b
@@ -705,11 +730,7 @@ object TimingModel {
     cur.indices.foreach(k => lik.set(k, cur(k)))
     (1 to cfg.passes).foreach { _ =>
       cur.indices.foreach { k =>
-        val ls = lik.sweep(k, grids(k))
-        var best = 0
-        // Double's implicit Ordering is the total order, as in maxBy
-        ls.indices.foreach(i => if (java.lang.Double.compare(ls(i), ls(best)) > 0) best = i)
-        cur(k) = grids(k)(best)
+        cur(k) = grids(k)(firstBest(lik.sweep(k, grids(k))))
         lik.set(k, cur(k))
       }
     }

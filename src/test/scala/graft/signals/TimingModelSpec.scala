@@ -59,6 +59,28 @@ class TimingModelSpec extends SparkTestBase {
     }
   }
 
+  test("svdStabilize keeps every timing-model direction of a 13-year design matrix") {
+    // offset, dt, dt²/2, two DM columns and two JUMPs: raw singular values
+    // span ~23 decades, so a relative cut on the raw M drops real columns
+    val rng = new java.util.Random(13)
+    val n = 300
+    val t = Array.fill(n)(53000.0 + 13 * 365.25 * rng.nextDouble()).sorted.map(_ * 86400.0)
+    val groups = Array("PDFB_10CM", "PDFB_20CM", "CASPSR_40CM")
+    val g = Array.fill(n)(rng.nextInt(groups.length))
+    val freq = g.map(Array(3100.0, 1369.0, 732.0)(_) + 64.0 * (rng.nextDouble() - 0.5))
+    val m = TimingModel.designMatrix(t, freq, g.map(i => Map("group" -> groups(i))),
+      TimingModel.ParInfo("P", pepochMjd = 55500.0,
+        jumpGroups = Seq(("group", groups(1)), ("group", groups(2))), includeDm = true))
+    assert(m.cols === 7)
+    val u = TimingModel.svdStabilize(m)
+    assert(u.cols === 7)
+    (0 until m.cols).foreach { j =>
+      val col = m(::, j)
+      val off = col - u * (u.t * col)
+      assert(breeze.linalg.norm(off) <= 1e-10 * breeze.linalg.norm(col), s"column $j")
+    }
+  }
+
   test("marginalized likelihood: invariant to shifts inside the model space") {
     // adding any timing-model column times a constant to the residuals
     // must not change the marginalized likelihood (the 1e40 prior absorbs
@@ -254,8 +276,8 @@ class TimingModelSpec extends SparkTestBase {
       includeDm = true)
 
   /** The fit as coordinate ascent over `MarginalizedLikelihood.apply`,
-    * built from scratch at every grid point: the reference `fitOne` must
-    * reproduce exactly. */
+    * built from scratch at every grid point, with `fitOne`'s pick rule:
+    * the reference `fitOne` must reproduce exactly. */
   private def referenceFit(rows: Array[TimingModel.ToaFit], par: TimingModel.ParInfo,
       cfg: TimingModel.FitConfig): Map[String, Double] = {
     val model = TimingModel.pulsarModel(rows, par, cfg)
@@ -276,7 +298,8 @@ class TimingModelSpec extends SparkTestBase {
     }.toMap
     (1 to cfg.passes).foreach { _ =>
       dims.foreach { case (name, grid) =>
-        cur = cur.updated(name, grid.maxBy(v => lik(cur.updated(name, v))))
+        val ls = grid.map(v => lik(cur.updated(name, v))).toArray
+        cur = cur.updated(name, grid(TimingModel.firstBest(ls)))
       }
     }
     cur
