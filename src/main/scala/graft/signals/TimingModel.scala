@@ -287,8 +287,9 @@ object TimingModel {
     *    gives A = A₀ + s·T_bᵀD²T_b. With X = T_bU₀⁻¹ and P = XXᵀ, the
     *    determinant lemma gives ln|A| = ln|A₀| + ln|K| on the n_b×n_b
     *    system K = I + s·DPD, and Woodbury gives dᵀA⁻¹d = |u|² −
-    *    s·gᵀK⁻¹g with u = U₀⁻ᵀd, g = D·X·u, all of which reduce to n_b-sized
-    *    products of P, Xy₀ and Δr.
+    *    s·gᵀK⁻¹g with u = U₀⁻ᵀd and g = D·X·u. Since d = d₀ + T_bᵀΔr,
+    *    |u|² and g reduce to n_b-sized products of P, Xy₀ and Δr
+    *    (y₀ = U₀⁻ᵀd₀).
     *  - efac or equad sweep, rebuild route: the other blocks are summed
     *    once, and each value rebuilds G_b and factors the c×c system.
     *
@@ -348,7 +349,7 @@ object TimingModel {
     // the c×c system of a sweep and its right-hand side
     private val a = Array.ofDim[Double](c, c)
     private val y = new Array[Double](c)
-    private val inOrder: Array[Int] = Array.range(0, c)
+    private val inOrder: Array[Int] = Array.range(0, c) // T's own column order
 
     /** Moves parameter k (in [[names]] order) to v. */
     def set(k: Int, v: Double): Unit = {
