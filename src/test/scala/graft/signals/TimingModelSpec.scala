@@ -59,6 +59,29 @@ class TimingModelSpec extends SparkTestBase {
     }
   }
 
+  test("svdStabilize drops the collinear DM and JUMP columns of a one-frequency pulsar") {
+    // every TOA at 1440 MHz, as in fake_psr_0, so 1/ν² is the offset
+    // column and dt/ν² the dt column once normalized; a JUMP on every TOA
+    // is the offset again. The span is that of offset, dt and dt²/2 in
+    // each case. Over 270 TOAs the SVD leaves a duplicate direction at
+    // ~2e-15 of the largest singular value: a fixed 1e-15 cut keeps it.
+    val n = 270
+    val t = Array.tabulate(n)(i => (53000.0 + 5000.0 * i / n) * 86400.0)
+    val flags = Array.fill(n)(Map("be" -> "AXIS"))
+    for ((dm, jumps) <- Seq((true, Nil), (false, Seq(("be", "AXIS"))), (true, Seq(("be", "AXIS"))))) {
+      val m = TimingModel.designMatrix(t, Array.fill(n)(1440.0), flags,
+        TimingModel.ParInfo("P", pepochMjd = 55500.0, jumpGroups = jumps, includeDm = dm))
+      assert(m.cols === 3 + (if (dm) 2 else 0) + jumps.length)
+      val u = TimingModel.svdStabilize(m)
+      assert(u.cols === 3, s"dm=$dm jumps=$jumps")
+      (0 until m.cols).foreach { j =>
+        val col = m(::, j)
+        val off = col - u * (u.t * col)
+        assert(breeze.linalg.norm(off) <= 1e-10 * breeze.linalg.norm(col), s"dm=$dm column $j")
+      }
+    }
+  }
+
   test("svdStabilize keeps every timing-model direction of a 13-year design matrix") {
     // offset, dt, dt²/2, two DM columns and two JUMPs: raw singular values
     // span ~23 decades, so a relative cut on the raw M drops real columns
@@ -276,8 +299,10 @@ class TimingModelSpec extends SparkTestBase {
       includeDm = true)
 
   /** The fit as coordinate ascent over `MarginalizedLikelihood.apply`,
-    * built from scratch at every grid point, with `fitOne`'s pick rule:
-    * the reference `fitOne` must reproduce exactly. */
+    * built from scratch at every grid point, picking the first grid value
+    * within a relative 1e-11 of the largest lnL (written out here, apart
+    * from `TimingModel.firstBest`): the reference `fitOne` must reproduce
+    * exactly. */
   private def referenceFit(rows: Array[TimingModel.ToaFit], par: TimingModel.ParInfo,
       cfg: TimingModel.FitConfig): Map[String, Double] = {
     val model = TimingModel.pulsarModel(rows, par, cfg)
@@ -298,8 +323,9 @@ class TimingModelSpec extends SparkTestBase {
     }.toMap
     (1 to cfg.passes).foreach { _ =>
       dims.foreach { case (name, grid) =>
-        val ls = grid.map(v => lik(cur.updated(name, v))).toArray
-        cur = cur.updated(name, grid(TimingModel.firstBest(ls)))
+        val ls = grid.map(v => lik(cur.updated(name, v)))
+        val top = ls.max
+        cur = cur.updated(name, grid(ls.indexWhere(_ >= top - 1e-11 * math.abs(top))))
       }
     }
     cur
@@ -361,6 +387,23 @@ class TimingModelSpec extends SparkTestBase {
     }
     assert(points === 208)
     assert(compared >= 208)
+  }
+
+  test("firstBest: the first value within a relative 1e-11 of the largest") {
+    import TimingModel.firstBest
+    // exact ties go to the first
+    assert(firstBest(Array(-5.0, -2.0, -3.0, -2.0)) === 1)
+    // 1e-11 of 1000 is 1e-8: half of it is a tie, twice it is not
+    assert(firstBest(Array(-1.0e3 - 0.5e-8, -1.0e3, -1.0e3 - 0.5e-8)) === 0)
+    assert(firstBest(Array(-1.0e3 - 2e-8, -1.0e3, -1.0e3 - 0.5e-8)) === 1)
+    // the width is relative to the largest, also when it is positive:
+    // 1e-11 of 1e5 is 1e-6
+    assert(firstBest(Array(1.0e5 - 0.5e-6, 1.0e5)) === 0)
+    assert(firstBest(Array(1.0e5 - 2e-6, 1.0e5)) === 1)
+    // a NaN is the largest in Double's total order and is picked
+    assert(firstBest(Array(-1.0, Double.NaN, 0.0)) === 1)
+    assert(firstBest(Array.fill(3)(Double.NegativeInfinity)) === 0)
+    assert(firstBest(Array(Double.NegativeInfinity, -7.0, Double.NegativeInfinity)) === 1)
   }
 
   test("fitOne chooses exactly what coordinate ascent over MarginalizedLikelihood does") {
