@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.core.{Query, Tables}
+import graft.core.{Oracle, Query, Tables}
 
 /** SURVEY §2 chain-analytics / window / set-op operators instantiated over
   * the driver's `events`/`documents` tables so each has a DuckDB oracle.
@@ -18,8 +18,6 @@ import graft.core.{Query, Tables}
 object AnalyticsQueries extends graft.core.QueryModule {
 
   private val L = 176400L // 420²; divisible by sig² for sig in 1..7
-
-  private def vdec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
 
   // A4/A5 share ONE definition of the model-index bucket — the named
   // reference semantic Chain.modelCounts — so the a4 histogram and a5's
@@ -137,12 +135,12 @@ object AnalyticsQueries extends graft.core.QueryModule {
   // decimal squares so the sums match bit-for-bit.
   def a10(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val v2 = (vdec($"value") * vdec($"value")).cast(DecimalType(24, 4))
+    val v2 = (Oracle.money($"value") * Oracle.money($"value")).cast(DecimalType(24, 4))
     Tables.events(s, dir)
       .groupBy($"event_type")
       .agg(
         sqrt(sum(v2).cast("double") / count(lit(1))).as("rms"),
-        (sum(vdec($"value")).cast("double") / count(lit(1))).as("mean_err"),
+        (sum(Oracle.money($"value")).cast("double") / count(lit(1))).as("mean_err"),
         count(lit(1)).as("n"))
       .orderBy($"event_type")
   }
@@ -162,7 +160,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .withColumn("w", expr(s"$L div ((event_id % 7 + 1) * (event_id % 7 + 1))"))
       .groupBy($"event_type")
       .agg(
-        (sum(vdec($"value") * $"w").cast("double") / sum($"w").cast("double")).as("rho_wavg"),
+        (sum(Oracle.money($"value") * $"w").cast("double") / sum($"w").cast("double")).as("rho_wavg"),
         sqrt(lit(L.toDouble) / sum($"w").cast("double")).as("sig_wavg"))
       .orderBy($"event_type")
   }
@@ -184,7 +182,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
         graft.operators.GlobalRank.ntileFromRank($"rn", $"n", 8))
       .groupBy($"tile")
       .agg(
-        (sum(vdec($"value")).cast("double") / count(lit(1))).as("mean_xi"),
+        (sum(Oracle.money($"value")).cast("double") / count(lit(1))).as("mean_xi"),
         min($"value").as("min_xi"), max($"value").as("max_xi"),
         count(lit(1)).as("npairs"))
       .orderBy($"tile")
@@ -205,7 +203,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .withColumn("bin", floor($"value" / 50).cast("long"))
       .groupBy($"bin")
       .agg(
-        (sum(vdec($"value") * $"w").cast("double") / sum($"w").cast("double")).as("rho_wavg"),
+        (sum(Oracle.money($"value") * $"w").cast("double") / sum($"w").cast("double")).as("rho_wavg"),
         sqrt(lit(L.toDouble) / sum($"w").cast("double")).as("sig_wavg"),
         count(lit(1)).as("npairs"))
       .orderBy($"bin")
@@ -229,7 +227,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .withColumn("w", expr(s"$L div ((event_id % 7 + 1) * (event_id % 7 + 1))"))
       .withColumn("draw", $"event_id" % 100)
       .groupBy($"draw")
-      .agg((sum(vdec($"value") * $"w").cast("double") / sum($"w").cast("double"))
+      .agg((sum(Oracle.money($"value") * $"w").cast("double") / sum($"w").cast("double"))
         .as("os_draw"))
     perDraw.agg(
       (sum($"os_draw".cast(DecimalType(18, 8))).cast("double") / count(lit(1)))
@@ -757,7 +755,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
     val ev = Tables.events(s, dir)
       .filter($"value".isNotNull && $"event_type" === "purchase")
       .select($"user_id", unix_micros($"ts").as("ts_us"),
-        (vdec($"value") * 100).cast("long").as("cents"))
+        (Oracle.money($"value") * 100).cast("long").as("cents"))
     val mid = ev.agg(min($"ts_us").as("mn"), max($"ts_us").as("mx"))
       .select(($"mn" + expr("(mx - mn) div 2")).as("mid")) // integer midpoint
     val perUser = graft.core.ScalarSub.withScalars(ev, mid)
@@ -839,7 +837,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
     import s.implicits._
     val ev = Tables.events(s, dir)
       .filter($"value".isNotNull && $"event_type" === "purchase")
-      .select((vdec($"value") * 100).cast("long").as("cents"),
+      .select((Oracle.money($"value") * 100).cast("long").as("cents"),
         ($"user_id" % 2).as("grp"))
     val byV = ev.groupBy($"cents").agg(
       sum(when($"grp" === 0, 1L).otherwise(0L)).as("na"),
@@ -907,7 +905,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .withColumn("w", expr("(h0 ^ shiftright(h0, 16)) % 7"))
       .groupBy($"subset", $"r")
       .agg(count(lit(1)).as("n"), sum($"w").as("wsum"),
-        sum(vdec($"value") * $"w").as("vsum"))
+        sum(Oracle.money($"value") * $"w").as("vsum"))
       .select($"subset", $"r".as("replicate"), $"n", $"wsum",
         round($"vsum".cast("double") / $"wsum".cast("double"), 9).as("boot_mean"))
       .orderBy($"subset", $"replicate")
@@ -1589,7 +1587,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .withColumn("bucket", bucket)
       .groupBy($"bucket", $"event_type")
       .agg(count(lit(1)).as("cnt"),
-        sum(vdec($"value")).cast("double").as("sum_value"))
+        sum(Oracle.money($"value")).cast("double").as("sum_value"))
       .withColumn("window_start",
         date_format(timestamp_micros($"bucket" * 21600000000L), "yyyy-MM-dd HH:mm:ss"))
       .select($"window_start", $"event_type", $"cnt", $"sum_value")
@@ -1611,7 +1609,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .withColumn("k", explode(sequence(lit(0), lit(3))))
       .withColumn("w", $"b" - $"k")
       .groupBy($"w", $"event_type")
-      .agg(count(lit(1)).as("cnt"), sum(vdec($"value")).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("cnt"), sum(Oracle.money($"value")).cast("double").as("sum_value"))
       .withColumn("window_start",
         date_format(timestamp_micros($"w" * 900000000L), "yyyy-MM-dd HH:mm:ss"))
       .select($"window_start", $"event_type", $"cnt", $"sum_value")
@@ -1994,7 +1992,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
       // INTEGER decimal, and integer→double casts round identically on
       // both engines (a scaled decimal→double cast does NOT: DuckDB
       // divides int128 by 10^scale in float — a second rounding)
-      .withColumn("cents", (vdec($"value") * 100).cast("decimal(38,0)"))
+      .withColumn("cents", (Oracle.money($"value") * 100).cast("decimal(38,0)"))
       .groupBy($"user_id")
       .agg(sum($"cents" * $"dur").as("vd"), sum($"dur").as("d"),
         count(lit(1)).as("n_intervals"))
@@ -2034,7 +2032,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
         max($"value").as("high"), min($"value").as("low"),
         max(when($"rd" === 1, $"value")).as("close"),
         count(lit(1)).as("volume"),
-        sum(vdec($"value")).cast("double").as("sum_value"))
+        sum(Oracle.money($"value")).cast("double").as("sum_value"))
       .withColumn("window_start",
         date_format(timestamp_micros($"bucket" * 21600000000L), "yyyy-MM-dd HH:mm:ss"))
       .select($"window_start", $"event_type", $"open", $"high", $"low", $"close",
@@ -2070,8 +2068,8 @@ object AnalyticsQueries extends graft.core.QueryModule {
     import s.implicits._
     val ev = Tables.events(s, dir)
     val st = ev.groupBy($"user_id".as("su"))
-      .agg(sum(vdec($"value")).as("sv"),
-        sum((vdec($"value") * vdec($"value")).cast(DecimalType(28, 4))).as("svv"),
+      .agg(sum(Oracle.money($"value")).as("sv"),
+        sum((Oracle.money($"value") * Oracle.money($"value")).cast(DecimalType(28, 4))).as("svv"),
         count(lit(1)).as("n"))
       .withColumn("mean", $"sv".cast("double") / $"n")
       .withColumn("std",
@@ -2112,7 +2110,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
     import s.implicits._
     val q = Tables.events(s, dir).select(
       $"user_id",
-      least((vdec($"value") * 100).cast("long"), lit(65535L)).as("cents"),
+      least((Oracle.money($"value") * 100).cast("long"), lit(65535L)).as("cents"),
       expr("user_id % 65536").as("xa"))
     q.withColumn("z", graft.functions.ZOrder.interleave16($"xa", $"cents"))
       .withColumn("zbucket", expr("z div 4194304"))
@@ -2226,7 +2224,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
     val decZero = lit(0).cast(DecimalType(22, 2))
     def partial(df: DataFrame, suffix: String): DataFrame =
       df.groupBy($"event_type")
-        .agg(count(lit(1)).as(s"n_$suffix"), sum(vdec($"value")).as(s"sv_$suffix"))
+        .agg(count(lit(1)).as(s"n_$suffix"), sum(Oracle.money($"value")).as(s"sv_$suffix"))
     val stored = partial(ev.filter($"event_id" % 5 =!= 4), "h")
     val batch = partial(ev.filter($"event_id" % 5 === 4), "b")
     stored.join(batch, Seq("event_type"), "full_outer")
@@ -2275,8 +2273,8 @@ object AnalyticsQueries extends graft.core.QueryModule {
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         max($"p05").as("p05"), max($"p95").as("p95"),
-        (sum(vdec($"wv")).cast("double") / count(lit(1))).as("winsorized_mean"),
-        (sum(vdec($"value")).cast("double") / count(lit(1))).as("raw_mean"))
+        (sum(Oracle.money($"wv")).cast("double") / count(lit(1))).as("winsorized_mean"),
+        (sum(Oracle.money($"value")).cast("double") / count(lit(1))).as("raw_mean"))
       .orderBy($"event_type")
   }
 
@@ -2562,7 +2560,7 @@ object AnalyticsQueries extends graft.core.QueryModule {
     import s.implicits._
     val p = Tables.events(s, dir).filter($"event_type" === "purchase")
       .groupBy($"user_id").agg(max(unix_micros($"ts")).as("r"),
-        count(lit(1)).as("f"), sum(vdec($"value")).as("m"))
+        count(lit(1)).as("f"), sum(Oracle.money($"value")).as("m"))
     def score(df: DataFrame, metric: String, out: String): DataFrame = {
       val ranked = graft.operators.GlobalRank.withRowNumber(
         df, Seq(col(metric), col("user_id")), rn = "__rn", nTotal = Some("__n"))

@@ -3,7 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Posterior-chain analytics operators, re-expressed Spark-first.
   *
@@ -114,7 +113,4 @@ object Chain {
       .groupBy(col("bin"))
       .agg(wm.as("rho_wavg"), we.as("sig_wavg"), count(lit(1)).as("npairs"))
   }
-
-  /** Exact decimal cast used by the oracle-checked variants. */
-  def vdec(c: Column): Column = c.cast(DecimalType(12, 2))
 }

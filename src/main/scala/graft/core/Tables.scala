@@ -8,24 +8,17 @@ import org.apache.spark.sql.types._
   *
   * All loads are plain parquet scans so Catalyst pushes filters and prunes
   * columns into the scan (verify with `.explain`: `PushedFilters`,
-  * `ReadSchema`). Nothing is cached here — callers own persistence policy.
+  * `ReadSchema`). Each scan is held in [[StageCache]] under
+  * (session, dir, `<name>.parquet`): `spark.read.parquet` re-lists files
+  * and re-reads footers on every call, as a metastore would cache, and a
+  * hit is the same `DataFrame` instance. A rewritten `dir` is scanned
+  * again, and `checkDrift` runs on every (re)load.
   */
 object Tables {
 
-  // Memoized source relations per (session, path): `spark.read.parquet`
-  // re-lists files and re-reads footers on every call — a metastore caches
-  // that metadata in any real deployment. DataFrames are immutable plan
-  // fragments; sharing them never shares execution state.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // lazily purge entries of stopped sessions (no invalidation needed for
-    // live ones: the test tables are immutable by contract, TESTDATA.md)
-    cache.keySet.removeIf { case (s, _) => s.sparkContext.isStopped }
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (s, p) => checkDrift(name, s.read.parquet(p)) })
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    StageCache.get(spark, dir, s"$name.parquet")(
+      checkDrift(name, spark.read.parquet(s"$dir/$name.parquet")))
 
   /** Tolerance classes for the drift guard: a regenerated file may widen
     * within a class (int32↔int64, float↔double, any timestamp encoding —

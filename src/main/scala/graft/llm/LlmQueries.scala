@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Query, Tables}
+import graft.core.{Query, StageCache, Tables}
 import graft.text.TextOps
 import graft.similarity.VectorOps
 
@@ -41,40 +41,17 @@ object LlmQueries extends graft.core.QueryModule {
       |ids AS (
       |  SELECT p.doc_id, p.pos, d.tid FROM pt p JOIN dict d ON p.tok = d.tok)""".stripMargin
 
+  /** The stage `key` of `dir`'s corpus, held in [[graft.core.StageCache]]
+    * as a `localCheckpoint`: built once per (session, dir) and rebuilt when
+    * `dir` is rewritten. The checkpoint is taken here, so its RDD's call
+    * site names this file. */
+  private def memoized(s: SparkSession, dir: String, key: String)
+      (build: => DataFrame): DataFrame =
+    StageCache.get(s, dir, key)(build.localCheckpoint())
+
   // Positioned token stream and id-mapped stream are THE shared
   // intermediates of the text pipeline (language-ID, quality, token stats,
-  // simhash, fingerprint all fold the same tokenization) — memoized
-  // per (session, dir) as localCheckpoint'ed tables, same contract as
-  // Tables.load / the simhash pair memo: immutable input, immutable
-  // checkpointed RDD, no CacheManager. A 100 TB pipeline materializes
-  // tokenization exactly once for the same reason.
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  private def memoized(s: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    memo.keySet.removeIf { case (sess, _, _) => sess.sparkContext.isStopped }
-    // NOT computeIfAbsent: a build may itself call memoized() for its
-    // upstream stage (ccComp → simhashPairs, docTids → docTokens), and a
-    // reentrant computeIfAbsent on the same map throws "Recursive update".
-    // Double-checked locking instead; the monitor is reentrant, so nested
-    // builds on the same thread are fine, and a concurrent caller waits
-    // rather than racing a second EAGER localCheckpoint it could never
-    // unpersist (the persist-leak class).
-    val k = (s, dir, key)
-    val existing = memo.get(k)
-    if (existing != null) existing
-    else memo.synchronized {
-      val again = memo.get(k)
-      if (again != null) again
-      else {
-        val built = build.localCheckpoint()
-        memo.put(k, built)
-        built
-      }
-    }
-  }
-
+  // simhash, fingerprint all fold the same tokenization).
   private def docTokens(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "docTokens") {
       TextOps.docTokens(Tables.documents(s, dir), col("doc_id"), col("text"),
@@ -358,11 +335,9 @@ object LlmQueries extends graft.core.QueryModule {
   /** SimHash near-dup pairs with Hamming distance ≤ 1 (shared by d6 and the
     * c1/c2 clustering stages): band equijoin candidates + bit_count(xor)
     * verify. d6, c1 and c2 are stages of ONE dedup pipeline over the same
-    * corpus, so the materialized (localCheckpoint'ed) pair table is
-    * memoized per (session, dir) — same contract as Tables.load's source
-    * memoization: immutable inputs, immutable checkpointed RDD, zero
-    * CacheManager involvement. At 100 TB this intermediate IS what a
-    * pipeline persists between its pairing and clustering stages.
+    * corpus, so the materialized pair table is [[memoized]]. At 100 TB
+    * this intermediate IS what a pipeline persists between its pairing and
+    * clustering stages.
     */
   private def simhashPairs(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "simhashPairs")(simhashPairs0(s, dir))

@@ -12,8 +12,6 @@ import graft.core.{Oracle, Query, Tables}
   */
 object Extras extends graft.core.QueryModule {
 
-  private def vdec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(12, 2))
-
   // W5+: rolling frame — 4-row moving average of event value per user
   // (rowsBetween; exact decimal sum / window count).
   def w5(s: SparkSession, dir: String): DataFrame = {
@@ -23,7 +21,7 @@ object Extras extends graft.core.QueryModule {
     Tables.events(s, dir)
       .withColumn("us", unix_micros($"ts"))
       .withColumn("roll_avg",
-        sum(vdec($"value")).over(w).cast("double") / count(lit(1)).over(w))
+        sum(Oracle.money($"value")).over(w).cast("double") / count(lit(1)).over(w))
       .filter($"user_id" < 10)
       .select($"user_id", $"event_id", $"roll_avg")
       .orderBy($"user_id", $"event_id")
@@ -334,7 +332,7 @@ object Extras extends graft.core.QueryModule {
     val topk = udaf(new graft.functions.Aggregators.TopKByScore(3))
     Tables.lineitem(s, dir)
       .select($"l_suppkey",
-        (vdec($"l_extendedprice") * 100).cast("long").as("cents"),
+        (Oracle.money($"l_extendedprice") * 100).cast("long").as("cents"),
         ($"l_orderkey" * 8 + $"l_linenumber").as("rowid"))
       .groupBy($"l_suppkey")
       .agg(topk($"cents", $"rowid").as("ids"))
@@ -623,7 +621,7 @@ object Extras extends graft.core.QueryModule {
       .filter($"user_id" < 10)
       .withColumn("us", unix_micros($"ts"))
       .select($"user_id", $"event_id", $"us",
-        sum(vdec($"value")).over(w).cast("double").as("spend_30m"),
+        sum(Oracle.money($"value")).over(w).cast("double").as("spend_30m"),
         count(lit(1)).over(w).as("n_30m"))
       .orderBy($"user_id", $"us", $"event_id")
   }

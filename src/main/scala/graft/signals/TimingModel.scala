@@ -700,15 +700,21 @@ object TimingModel {
     * its pick would follow the rounding. */
   private[signals] val TieRtol: Double = 1e-11
 
-  /** Index of the grid value a sweep picks: the first whose lnL is within
-    * [[TieRtol]] of the largest (Double's total order, so a NaN is the
-    * largest and is picked, as in `maxBy`). */
-  private[signals] def firstBest(ls: Array[Double]): Int = {
+  /** Index of the grid value a sweep picks: `current`, the index the
+    * parameter holds, if its lnL is within [[TieRtol]] of the largest;
+    * otherwise the first index that is (Double's total order, so a NaN is
+    * the largest and is picked, as in `maxBy`). Keeping the current index
+    * leaves a parameter the data do not constrain at its start value
+    * instead of moving it to its grid's first entry. */
+  private[signals] def firstBest(ls: Array[Double], current: Int): Int = {
     var best = 0
     ls.indices.foreach(i => if (java.lang.Double.compare(ls(i), ls(best)) > 0) best = i)
     val floor = ls(best) - TieRtol * math.abs(ls(best))
-    val first = ls.indexWhere(_ >= floor)
-    if (first < 0) best else first
+    if (ls.indices.contains(current) && ls(current) >= floor) current
+    else {
+      val first = ls.indexWhere(_ >= floor)
+      if (first < 0) best else first
+    }
   }
 
   /** Per-pulsar noise fit: coordinate ascent of [[MarginalizedLikelihood]]
@@ -717,10 +723,12 @@ object TimingModel {
     * called inside `mapGroups`.
     *
     * The dimensions are swept in [[IncrementalLikelihood.names]] order,
-    * `passes` times; each takes the first grid value with the highest
-    * likelihood up to [[TieRtol]] ([[firstBest]]), the others held at
-    * their current values (efac starts at 1, every other parameter at its
-    * grid's middle). Each 1-D sweep
+    * `passes` times; each keeps the parameter's grid value if its
+    * likelihood is the highest up to [[TieRtol]], else takes the first
+    * that is ([[firstBest]]), the others held at their current values
+    * (efac starts at the grid value nearest 1, enterprise's value for a
+    * backend without one, every other parameter at its grid's middle).
+    * Each 1-D sweep
     * factors the c×c system once and scores its grid values on small
     * systems ([[IncrementalLikelihood.sweep]]): a red or DM sweep on the
     * swept GP's k×k block, an efac or equad sweep on the n_b×n_b
@@ -736,17 +744,18 @@ object TimingModel {
       (Array.fill(nb)(Array(cfg.efacGrid, cfg.equadGrid)).flatten ++
         Array.fill(lik.names.length / 2 - nb)(Array(cfg.lgAGrid, cfg.gammaGrid)).flatten)
         .map(_.toArray)
-    val cur = Array.tabulate(grids.length) { k =>
-      if (k < 2 * nb && k % 2 == 0) 1.0 else grids(k)(grids(k).length / 2)
+    val idx = Array.tabulate(grids.length) { k =>
+      if (k < 2 * nb && k % 2 == 0) grids(k).indices.minBy(i => math.abs(grids(k)(i) - 1.0))
+      else grids(k).length / 2
     }
-    cur.indices.foreach(k => lik.set(k, cur(k)))
+    idx.indices.foreach(k => lik.set(k, grids(k)(idx(k))))
     (1 to cfg.passes).foreach { _ =>
-      cur.indices.foreach { k =>
-        cur(k) = grids(k)(firstBest(lik.sweep(k, grids(k))))
-        lik.set(k, cur(k))
+      idx.indices.foreach { k =>
+        idx(k) = firstBest(lik.sweep(k, grids(k)), idx(k))
+        lik.set(k, grids(k)(idx(k)))
       }
     }
-    lik.names.zip(cur).toMap
+    lik.names.indices.map(k => lik.names(k) -> grids(k)(idx(k))).toMap
   }
 
   // ----------------------------------------------------------- Spark boundary

@@ -35,13 +35,6 @@ object VectorOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Sign-bit LSH bucket from the first `bits` dimensions (exact across
-    * engines: float >= 0 comparisons). */
-  def signBucket(a: Column, bits: Int): Column =
-    (0 until bits).map { j =>
-      when(element_at(a, j + 1) >= 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   // ---- unrolled SQL generators (shared shape, per-dialect indexing) ----
 
   private def terms(a: String, b: String, dim: Int, base: Int): String =
@@ -58,13 +51,6 @@ object VectorOps {
     s"(${dotSqlSpark(a, b, dim)}) / (sqrt(${dotSqlSpark(a, a, dim)}) * sqrt(${dotSqlSpark(b, b, dim)}))"
   def cosineSqlDuck(a: String, b: String, dim: Int): String =
     s"(${dotSqlDuck(a, b, dim)}) / (sqrt(${dotSqlDuck(a, a, dim)}) * sqrt(${dotSqlDuck(b, b, dim)}))"
-
-  /** Cosine with PRE-COMPUTED squared norms (columns na2/nb2): same
-    * arithmetic tree as cosineSql*, but the per-row norm is computed once
-    * per vector in the projection instead of once per PAIR — the O(n²)
-    * stage only evaluates the cross dot product. */
-  def cosineWithNormsSqlSpark(a: String, b: String, na2: String, nb2: String, dim: Int): String =
-    s"(${dotSqlSpark(a, b, dim)}) / (sqrt($na2) * sqrt($nb2))"
 
   /** Sign-bucket SQL, mirrored for both dialects. */
   def bucketSqlSpark(a: String, bits: Int): String =

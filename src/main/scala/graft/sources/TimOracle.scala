@@ -5,13 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Query
 
-/** Oracle-backed checks of the `.tim` reader against the REFERENCE's own
-  * example data (VERDICT r5 directive 8): DuckDB re-parses the
-  * `.tim` glob under `/root/reference/examples/data` from scratch (`read_text` +
-  * regexp split) while Spark goes through [[TimReader.read]], so a hash
-  * match proves the whole parse chain — header-line filter, column
-  * split, flag-map extraction, and the DECIMAL(38,18) MJD round-trip —
-  * not just the aggregate arithmetic.
+/** Oracle-backed checks of the `.tim` and `.par` readers on the committed
+  * PPTA-style fixture pair `src/test/resources/ppta/J1832-0836.{tim,par}`
+  * (FIXTURES.md tier (b)): DuckDB re-parses the files from scratch
+  * (`read_text` + regexp split) while Spark goes through
+  * [[TimReader.read]], so a hash match proves the whole parse chain —
+  * header-line filter, column split, flag-map extraction, and the
+  * DECIMAL(38,18) MJD round-trip — not just the aggregate arithmetic.
+  *
+  * The fixture path is resolved against the working directory (the repo
+  * root under sbt), as a string only: the registry is initialised by every
+  * `SparkEntry` user, so nothing here touches the file system until one of
+  * these queries runs, and then a missing directory fails it by name.
   *
   * Cross-engine determinism rules (the project's standing discipline):
   * integers stay BIGINT end-to-end; exact decimal sums take ONE final
@@ -27,7 +32,19 @@ import graft.core.Query
   */
 object TimOracle extends graft.core.QueryModule {
 
-  private val glob = "/root/reference/examples/data/*.tim"
+  private val fixtureDir: String =
+    java.nio.file.Paths.get(System.getProperty("user.dir"), "src", "test", "resources", "ppta")
+      .toAbsolutePath.toString
+  private val glob = s"$fixtureDir/*.tim"
+  private val parGlob = s"$fixtureDir/*.par"
+
+  /** `path`, once the fixture directory is known to exist. */
+  private def fixture(path: String): String = {
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(fixtureDir)))
+      throw new IllegalStateException(
+        s"tim/par fixture directory $fixtureDir does not exist; run from the repo root")
+    path
+  }
 
   /** Shared DuckDB prelude: re-parse the tim files the way the reference
     * defines them. `nullif(list_position, 0)` because DuckDB returns 0
@@ -44,11 +61,11 @@ object TimOracle extends graft.core.QueryModule {
          |)""".stripMargin
 
   /** tim1: per (psr, backend, site) — the by-backend partition the
-    * reference builds selections from (F4/F5/A10) over real PPTA data.
+    * reference builds selections from (F4/F5/A10).
     * toaerr has <= 5 source decimals, so the double->DECIMAL(18,6)
     * re-quantization is exact and matches DuckDB's string->decimal cast. */
   def tim1(s: SparkSession, dir: String): DataFrame = {
-    val toas = TimReader.read(s, glob)
+    val toas = TimReader.read(s, fixture(glob))
     val errDec = col("toaerr_us").cast(DecimalType(18, 6))
     toas
       .groupBy(col("psr"),
@@ -79,14 +96,14 @@ object TimOracle extends graft.core.QueryModule {
          |FROM toas GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin
 
   /** tim2: per-pulsar span and Fourier-frequency sizing (A1/A2/A3) plus
-    * the flag-pair count over real data. The pair count comes from the RAW
+    * the flag-pair count. The pair count comes from the RAW
     * token array (`(size(f)-5) div 2`, matching DuckDB's `(len(f)-5)//2`),
     * NOT `size(flags)`: a repeated flag key would make the map throw (or
     * dedup) while DuckDB counts both pairs — the raw count is the quantity
     * both engines agree on by construction. nfreqs uses floor(x+0.5) on
     * both engines — round() differs (HALF_UP vs HALF_EVEN) between them. */
   def tim2(s: SparkSession, dir: String): DataFrame = {
-    val toas = TimReader.readRaw(s, glob)
+    val toas = TimReader.readRaw(s, fixture(glob))
     val tspan = max(col("toa_sec")) - min(col("toa_sec"))
     toas
       .groupBy(col("psr"))
@@ -107,7 +124,7 @@ object TimOracle extends graft.core.QueryModule {
          |  CAST(SUM((len(f) - 5) // 2) AS BIGINT) AS total_flags
          |FROM toas GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** par1: the full `.par` parameter table of both reference pulsars as
+  /** par1: the full `.par` parameter table of the fixture pulsar as
     * (psr, param, value, fit) — values stay RAW STRINGS (the reference
     * stores them at precisions beyond double, e.g. F0 at 17 sig figs;
     * a string compare proves the parse without a lossy numeric hop).
@@ -115,8 +132,7 @@ object TimOracle extends graft.core.QueryModule {
     * [uncertainty]]` rows (tempo2 format; enterprise_warp.py:394-400
     * pairs them with tims by sorted stem). */
   def par1(s: SparkSession, dir: String): DataFrame = {
-    val parGlob = "/root/reference/examples/data/*.par"
-    val raw = s.read.textFile(parGlob).toDF("value")
+    val raw = s.read.textFile(fixture(parGlob)).toDF("value")
       .withColumn("file_path", input_file_name())
     val psr = graft.core.Labels.psrFromPath(col("file_path"))
     raw
@@ -137,7 +153,7 @@ object TimOracle extends graft.core.QueryModule {
     raw"""WITH raw AS (
          |  SELECT string_split(string_split(string_split(filename, '/')[-1], '_')[1], '.')[1] AS psr,
          |         unnest(string_split(content, chr(10))) AS line
-         |  FROM read_text('/root/reference/examples/data/*.par')
+         |  FROM read_text('$parGlob')
          |), rows_ AS (
          |  SELECT psr, regexp_split_to_array(trim(line), '\s+') AS f
          |  FROM raw WHERE len(regexp_split_to_array(trim(line), '\s+')) >= 2

@@ -299,9 +299,10 @@ class TimingModelSpec extends SparkTestBase {
       includeDm = true)
 
   /** The fit as coordinate ascent over `MarginalizedLikelihood.apply`,
-    * built from scratch at every grid point, picking the first grid value
-    * within a relative 1e-11 of the largest lnL (written out here, apart
-    * from `TimingModel.firstBest`): the reference `fitOne` must reproduce
+    * built from scratch at every grid point: a sweep keeps the parameter's
+    * grid index if its lnL is within a relative 1e-11 of the largest, else
+    * picks the first index that is (written out here, apart from
+    * `TimingModel.firstBest`): the reference `fitOne` must reproduce
     * exactly. */
   private def referenceFit(rows: Array[TimingModel.ToaFit], par: TimingModel.ParInfo,
       cfg: TimingModel.FitConfig): Map[String, Double] = {
@@ -318,17 +319,19 @@ class TimingModelSpec extends SparkTestBase {
         (if (model.dm.isDefined) Seq(
           (s"${psr}_dm_gp_log10_A", cfg.lgAGrid),
           (s"${psr}_dm_gp_gamma", cfg.gammaGrid)) else Nil)
-    var cur: Map[String, Double] = dims.map { case (name, grid) =>
-      name -> (if (name.endsWith("_efac")) 1.0 else grid(grid.length / 2))
+    var at: Map[String, Int] = dims.map { case (name, grid) =>
+      name -> (if (name.endsWith("_efac")) grid.indexOf(1.0) else grid.length / 2)
     }.toMap
+    def values = dims.map { case (name, grid) => name -> grid(at(name)) }.toMap
     (1 to cfg.passes).foreach { _ =>
       dims.foreach { case (name, grid) =>
+        val cur = values
         val ls = grid.map(v => lik(cur.updated(name, v)))
-        val top = ls.max
-        cur = cur.updated(name, grid(ls.indexWhere(_ >= top - 1e-11 * math.abs(top))))
+        val floor = ls.max - 1e-11 * math.abs(ls.max)
+        if (ls(at(name)) < floor) at = at.updated(name, ls.indexWhere(_ >= floor))
       }
     }
-    cur
+    values
   }
 
   test("incremental likelihood equals MarginalizedLikelihood at 208 random points") {
@@ -390,7 +393,8 @@ class TimingModelSpec extends SparkTestBase {
   }
 
   test("firstBest: the first value within a relative 1e-11 of the largest") {
-    import TimingModel.firstBest
+    // -1: no current index, as if the parameter held no grid value
+    def firstBest(ls: Array[Double]) = TimingModel.firstBest(ls, -1)
     // exact ties go to the first
     assert(firstBest(Array(-5.0, -2.0, -3.0, -2.0)) === 1)
     // 1e-11 of 1000 is 1e-8: half of it is a tie, twice it is not
@@ -404,6 +408,21 @@ class TimingModelSpec extends SparkTestBase {
     assert(firstBest(Array(-1.0, Double.NaN, 0.0)) === 1)
     assert(firstBest(Array.fill(3)(Double.NegativeInfinity)) === 0)
     assert(firstBest(Array(Double.NegativeInfinity, -7.0, Double.NegativeInfinity)) === 1)
+  }
+
+  test("firstBest keeps the current index while it is within the tie width") {
+    import TimingModel.firstBest
+    // a flat sweep keeps its current index, not the first
+    assert(firstBest(Array(-2.0, -2.0, -2.0, -2.0), 2) === 2)
+    assert(firstBest(Array(-1.0e3 - 0.5e-8, -1.0e3, -1.0e3 - 0.5e-8), 2) === 2)
+    // outside the width the first value within it wins
+    assert(firstBest(Array(-1.0e3 - 0.5e-8, -1.0e3, -1.0e3 - 2e-8), 2) === 0)
+    assert(firstBest(Array(-5.0, -2.0, -3.0, -2.0), 0) === 1)
+    // the current index is kept also when it is the largest
+    assert(firstBest(Array(-5.0, -2.0, -3.0, -2.0), 3) === 3)
+    assert(firstBest(Array.fill(3)(Double.NegativeInfinity), 1) === 1)
+    // a NaN is still picked over a finite current value
+    assert(firstBest(Array(-1.0, Double.NaN, 0.0), 2) === 1)
   }
 
   test("fitOne chooses exactly what coordinate ascent over MarginalizedLikelihood does") {
