@@ -71,7 +71,9 @@ object AnalyticsQueries extends graft.core.QueryModule {
   }
   val a8Sql: String =
     """WITH st AS (
-      |  SELECT event_type AS g, min(value) AS mn, max(value) AS mx
+      |  SELECT event_type AS g,
+      |    CASE WHEN min(value) = max(value) THEN min(value) - 0.5 ELSE min(value) END AS mn,
+      |    CASE WHEN min(value) = max(value) THEN max(value) + 0.5 ELSE max(value) END AS mx
       |  FROM events GROUP BY 1),
       |bins AS (
       |  SELECT e.event_type AS g,

@@ -53,11 +53,15 @@ object Chain {
   /** Per-group 50-bin histogram bins with counts; `bins` left edges derive
     * from per-group min/max (results.py:154-170). Returns
     * (group, bin, bin_left, bin_cnt). Two-pass: min/max agg (broadcast back)
-    * then bucket count — both map-side combinable.
+    * then bucket count — both map-side combinable. Like numpy, a group whose
+    * values are all equal gets the range [v − 0.5, v + 0.5], so its mode is
+    * v and the bin width never divides by zero.
     */
   def histogram(df: DataFrame, group: Column, value: Column, nBins: Int): DataFrame = {
-    val stats = df.groupBy(group.as("g")).agg(
-      min(value).as("mn"), max(value).as("mx"))
+    val flat = col("lo") === col("hi")
+    val stats = df.groupBy(group.as("g")).agg(min(value).as("lo"), max(value).as("hi"))
+      .select(col("g"), when(flat, col("lo") - 0.5).otherwise(col("lo")).as("mn"),
+        when(flat, col("hi") + 0.5).otherwise(col("hi")).as("mx"))
     df.select(group.as("g"), value.as("v"))
       .join(broadcast(stats), "g")
       .withColumn("bin",

@@ -1,67 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
-/** Custom typed aggregators (SURVEY U5): the two aggregation semantics the
-  * reference needs that Spark lacks as built-ins, plus the bottom-k sketch
-  * a training-data pipeline needs for per-group sampling.
-  * All are algebraic (commutative, associative merge) so Spark applies
-  * them with map-side partial aggregation — shuffle carries one buffer per
-  * group, not the rows.
+/** Custom typed aggregators: the mergeable sketches (heavy hitters,
+  * count-min, Gram matrix) and the bounded per-group top-k a
+  * training-data pipeline needs for sampling, capping and ranking. The
+  * reference's two custom aggregates, histogram mode and the
+  * inverse-variance weighted mean (SURVEY U5), are plain column
+  * expressions in [[graft.analytics.Chain]]. All are algebraic
+  * (commutative, associative merge) so Spark applies them with map-side
+  * partial aggregation — shuffle carries one buffer per group, not the
+  * rows.
   */
 object Aggregators {
-
-  /** Inverse-variance weighted mean (weightedavg, results.py:276-284):
-    * mean = Σ(r/s²)/Σ(1/s²), err = sqrt(1/Σ(1/s²)). IN = (rho, sig). */
-  object WeightedMean extends Aggregator[(Double, Double), (Double, Double), (Double, Double)] {
-    def zero: (Double, Double) = (0.0, 0.0)
-    def reduce(b: (Double, Double), a: (Double, Double)): (Double, Double) = {
-      val w = 1.0 / (a._2 * a._2)
-      (b._1 + a._1 * w, b._2 + w)
-    }
-    def merge(x: (Double, Double), y: (Double, Double)): (Double, Double) =
-      (x._1 + y._1, x._2 + y._2)
-    def finish(b: (Double, Double)): (Double, Double) =
-      (b._1 / b._2, math.sqrt(1.0 / b._2))
-    def bufferEncoder: Encoder[(Double, Double)] = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-    def outputEncoder: Encoder[(Double, Double)] = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-  }
-
-  /** Fixed-range histogram-mode estimator (dist_mode_position,
-    * results.py:154-170): nBins equal bins over [lo, hi); mode = left edge
-    * of the argmax bin (lowest bin wins ties — np.argmax semantics).
-    * The reference derives [lo, hi] from the data; callers do a min/max
-    * pass first (see Chain.histogramMode for the two-pass DataFrame form —
-    * this Aggregator is the single-pass variant when the range is known).
-    */
-  class HistMode(nBins: Int, lo: Double, hi: Double)
-      extends Aggregator[Double, Array[Long], Double] {
-    def zero: Array[Long] = Array.fill(nBins)(0L)
-    def reduce(b: Array[Long], v: Double): Array[Long] = {
-      // out-of-range values are NOT counted (plt.hist derives bins from the
-      // data and never sees them); v == hi lands in the top bin
-      if (!v.isNaN && hi > lo && v >= lo && v <= hi) {
-        val bin = math.min(math.floor((v - lo) / (hi - lo) * nBins).toInt, nBins - 1)
-        b(bin) += 1
-      }
-      b
-    }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < nBins) { x(i) += y(i); i += 1 }
-      x
-    }
-    def finish(b: Array[Long]): Double = {
-      var best = 0
-      var i = 1
-      while (i < nBins) { if (b(i) > b(best)) best = i; i += 1 }
-      lo + best.toDouble * (hi - lo) / nBins
-    }
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
 
   /** Misra–Gries heavy-hitters sketch (k counters): the frequent-items
     * primitive of corpus analysis (frequent tokens / n-grams / domains).
@@ -97,263 +52,148 @@ object Aggregators {
       }
     }
     def finish(b: Map[String, Long]): Array[String] = b.keys.toArray.sorted
-    def bufferEncoder: Encoder[Map[String, Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    def outputEncoder: Encoder[Array[String]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[String]]()
+    def bufferEncoder: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+    def outputEncoder: Encoder[Array[String]] = ExpressionEncoder[Array[String]]()
+  }
+
+  /** The one bounded top-k buffer behind the six per-group k-smallest
+    * aggregates below: a (keys, ids) pair of arrays kept sorted by the
+    * subclass's `before`, never longer than k. reduce is one insertion-sort
+    * step (a full buffer rejects anything not before its last entry); merge
+    * re-inserts one buffer into the other, so it is associative and
+    * commutative whenever `before` is a strict total order on the entries
+    * (merge laws property-tested in AggregatorsSpec and SearchNoveltySpec).
+    * The shuffle carries ≤ k (key, id) pairs per group, where a
+    * `ROW_NUMBER() OVER (PARTITION BY g ORDER BY key)` window sorts every
+    * row of the group in one task. With `skipHeld` an id already in the
+    * buffer is ignored; without it duplicate entries take two slots.
+    * K is specialized so Long and Double keys are never boxed per row.
+    */
+  abstract class BoundedK[@specialized(Long, Double) K: ClassTag: TypeTag, IN, OUT: TypeTag](
+      k: Int, skipHeld: Boolean) extends Aggregator[IN, (Array[K], Array[Long]), OUT] {
+    require(k > 0)
+    type Buf = (Array[K], Array[Long])
+    def key(v: IN): K
+    def id(v: IN): Long
+    def before(k1: K, i1: Long, k2: K, i2: Long): Boolean
+    def zero: Buf = (new Array[K](0), new Array[Long](0))
+    protected def insert(b: Buf, key: K, id: Long): Buf = {
+      val ks = b._1; val ids = b._2
+      val n = ids.length
+      if (n == k && !before(key, id, ks(n - 1), ids(n - 1))) return b
+      if (skipHeld) { var j = 0; while (j < n) { if (ids(j) == id) return b; j += 1 } }
+      val m = math.min(n + 1, k)
+      val ok = new Array[K](m); val oi = new Array[Long](m)
+      java.lang.System.arraycopy(ks, 0, ok, 0, m - 1)
+      java.lang.System.arraycopy(ids, 0, oi, 0, m - 1)
+      var i = m - 1
+      while (i > 0 && before(key, id, ok(i - 1), oi(i - 1))) {
+        ok(i) = ok(i - 1); oi(i) = oi(i - 1); i -= 1
+      }
+      ok(i) = key; oi(i) = id
+      (ok, oi)
+    }
+    def reduce(b: Buf, v: IN): Buf = insert(b, key(v), id(v))
+    def merge(x: Buf, y: Buf): Buf = {
+      var out = x
+      var i = 0
+      while (i < y._2.length) { out = insert(out, y._1(i), y._2(i)); i += 1 }
+      out
+    }
+    // spelled out, not `Buf`: the type tag must see K to substitute it
+    def bufferEncoder: Encoder[Buf] = ExpressionEncoder[(Array[K], Array[Long])]()
+    def outputEncoder: Encoder[OUT] = ExpressionEncoder[OUT]()
   }
 
   /** Bottom-k sketch (k-minimum-values): keeps the k ids with the smallest
     * deterministic hash priority — simultaneously a uniform per-group
     * SAMPLE (the hash is effectively random but reproducible across runs
     * and retries, unlike rand()) and the KMV distinct-count estimator.
-    * Buffer is the id array ordered by (priority, id), never larger than
-    * k — a shuffle carries k longs per group regardless of group size,
-    * where a window row_number() over the same grouping would sort every
-    * row. Merge = merge-by-priority, truncate at k (associative,
-    * commutative; property-tested in AggregatorsSpec).
+    * Order: (priority, id); an id already held is skipped. The priority is
+    * the 32-bit Knuth multiplicative hash, expressible verbatim in the
+    * DuckDB oracle: (id * 2654435761) % 4294967296. Output: ids in order.
     */
-  class BottomK(k: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-    require(k > 0)
-    /** Knuth multiplicative hash, 32-bit — cheap enough to recompute on
-      * compare (buffer stays a bare long array) and expressible verbatim
-      * in the DuckDB oracle: (id * 2654435761) % 4294967296. */
-    @inline private def pri(v: Long): Long = (v * 2654435761L) & 0xFFFFFFFFL
-    private def lt(a: Long, b: Long): Boolean = {
-      val (pa, pb) = (pri(a), pri(b))
-      pa < pb || (pa == pb && a < b)
-    }
-    def zero: Array[Long] = Array.empty
-    def reduce(b: Array[Long], v: Long): Array[Long] =
-      if (b.length == k && !lt(v, b(k - 1))) b
-      else insert(b, v)
-    private def insert(b: Array[Long], v: Long): Array[Long] = {
-      var i = b.length
-      // ids arrive distinct in the intended use (keys); a duplicate would
-      // occupy two slots — guard anyway
-      if (b.contains(v)) return b
-      val out = new Array[Long](math.min(b.length + 1, k) max b.length)
-      java.lang.System.arraycopy(b, 0, out, 0, b.length)
-      if (out.length > b.length) out(b.length) = v
-      else if (lt(v, out(out.length - 1))) out(out.length - 1) = v
-      else return b
-      i = out.length - 1
-      while (i > 0 && lt(out(i), out(i - 1))) {
-        val t = out(i); out(i) = out(i - 1); out(i - 1) = t; i -= 1
-      }
-      out
-    }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] =
-      y.foldLeft(x)(insert)
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  class BottomK(k: Int) extends BoundedK[Long, Long, Array[Long]](k, skipHeld = true) {
+    def key(v: Long): Long = (v * 2654435761L) & 0xFFFFFFFFL
+    def id(v: Long): Long = v
+    def before(p1: Long, i1: Long, p2: Long, i2: Long): Boolean =
+      p1 < p2 || (p1 == p2 && i1 < i2)
+    def finish(b: Buf): Array[Long] = b._2
   }
 
-  /** K smallest DISTINCT long values per group, as a mergeable aggregate —
-    * the posting-list cap of an inverted-index build: the shuffle carries
-    * ≤ k longs per term where `slice(sort_array(collect_set(id)), 1, k)`
-    * would drag every posting of every term through the shuffle first and
-    * sort it after. Buffer = ascending array, capped at k; duplicates
-    * ignored (idempotent insert), so pre-distincting the input is a
-    * correctness no-op and merely a size optimization. Merge laws
-    * property-tested in AggregatorsSpec.
+  /** K smallest DISTINCT long values per group — the posting-list cap of
+    * an inverted-index build: ≤ k longs per term ride the shuffle where
+    * `slice(sort_array(collect_set(id)), 1, k)` would drag every posting
+    * of every term through it. A value already held is skipped, so
+    * pre-distincting the input is merely a size optimization. Output:
+    * ascending values.
     */
-  class MinK(k: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-    require(k > 0)
-    def zero: Array[Long] = Array.empty
-    private def insert(b: Array[Long], v: Long): Array[Long] = {
-      val pos = java.util.Arrays.binarySearch(b, v)
-      if (pos >= 0) return b // duplicate
-      val ins = -pos - 1
-      if (ins >= k) return b // larger than the current k-th smallest
-      val n = math.min(b.length + 1, k)
-      val out = new Array[Long](n)
-      java.lang.System.arraycopy(b, 0, out, 0, ins)
-      out(ins) = v
-      java.lang.System.arraycopy(b, ins, out, ins + 1, n - ins - 1)
-      out
-    }
-    def reduce(b: Array[Long], v: Long): Array[Long] = insert(b, v)
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = y.foldLeft(x)(insert)
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  class MinK(k: Int) extends BoundedK[Long, Long, Array[Long]](k, skipHeld = true) {
+    def key(v: Long): Long = v
+    def id(v: Long): Long = v
+    def before(v1: Long, i1: Long, v2: Long, i2: Long): Boolean = v1 < v2
+    def finish(b: Buf): Array[Long] = b._2
   }
 
-  /** Top-k rows per group by a long score, as a mergeable aggregate —
-    * the shuffle carries ≤ k (score, id) pairs per group, where the
-    * equivalent `ROW_NUMBER() OVER (PARTITION BY g ORDER BY score DESC)`
-    * window sorts EVERY row of every group. The classic 100 TB "top
-    * products per region" shape: map-side partial top-k makes the reduce
-    * input proportional to groups×k, not rows.
-    *
-    * Total order: score DESC, then id ASC (ids must be unique within a
-    * group for deterministic results — pack a rowid if needed). Buffer is
-    * an interleaved [score0, id0, score1, id1, …] long array kept sorted;
-    * merge re-inserts (associative, commutative; property-tested).
-    * Output: ids in rank order.
+  /** Top-k rows per group by a long score, (score, id) in: the classic
+    * "top products per region" shape, where map-side partial top-k makes
+    * the reduce input proportional to groups×k, not rows. Order: score
+    * DESC, then id ASC (ids must be unique within a group for
+    * deterministic results — pack a rowid if needed). Output: ids in rank
+    * order.
     */
-  class TopKByScore(k: Int) extends Aggregator[(Long, Long), Array[Long], Array[Long]] {
-    require(k > 0)
-    // (score, id) at slot i lives at b(2i), b(2i+1); order: score desc, id asc
-    private def before(s1: Long, i1: Long, s2: Long, i2: Long): Boolean =
+  class TopKByScore(k: Int)
+      extends BoundedK[Long, (Long, Long), Array[Long]](k, skipHeld = false) {
+    def key(v: (Long, Long)): Long = v._1
+    def id(v: (Long, Long)): Long = v._2
+    def before(s1: Long, i1: Long, s2: Long, i2: Long): Boolean =
       s1 > s2 || (s1 == s2 && i1 < i2)
-    def zero: Array[Long] = Array.empty
-    private def insert(b: Array[Long], s: Long, id: Long): Array[Long] = {
-      val n = b.length / 2
-      if (n == k && !before(s, id, b(2 * k - 2), b(2 * k - 1))) return b
-      val m = math.min(n + 1, k)
-      val out = new Array[Long](2 * m)
-      java.lang.System.arraycopy(b, 0, out, 0, 2 * math.min(n, m))
-      out(2 * m - 2) = s; out(2 * m - 1) = id
-      var i = m - 1
-      while (i > 0 && before(out(2 * i), out(2 * i + 1), out(2 * i - 2), out(2 * i - 1))) {
-        val ts = out(2 * i); val ti = out(2 * i + 1)
-        out(2 * i) = out(2 * i - 2); out(2 * i + 1) = out(2 * i - 1)
-        out(2 * i - 2) = ts; out(2 * i - 1) = ti
-        i -= 1
-      }
-      out
-    }
-    def reduce(b: Array[Long], v: (Long, Long)): Array[Long] = insert(b, v._1, v._2)
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var out = x
-      var i = 0
-      while (i < y.length) { out = insert(out, y(i), y(i + 1)); i += 2 }
-      out
-    }
-    def finish(b: Array[Long]): Array[Long] =
-      Array.tabulate(b.length / 2)(i => b(2 * i + 1))
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    def finish(b: Buf): Array[Long] = b._2
   }
 
-  /** K rows per group with the smallest DOUBLE priority (ties → smaller
-    * id), as a mergeable aggregate — the weighted-sampling (Efraimidis–
-    * Spirakis A-Res) rank step without a rank window: the shuffle carries
-    * ≤ k (priority, id) pairs per group, where `ROW_NUMBER() OVER
-    * (PARTITION BY g ORDER BY p)` sorts every row of the group in one
-    * task. With ~5 language groups over a 100 TB corpus the window form
-    * funnels ~20 TB through a single task; this buffer stays at k entries
-    * regardless. Output: ids in rank order (p asc, id asc).
+  /** K rows per group with the smallest DOUBLE priority, (priority, id)
+    * in — the weighted-sampling (Efraimidis–Spirakis A-Res) rank step
+    * without a rank window: with ~5 language groups over a 100 TB corpus
+    * the window form funnels ~20 TB through a single task. Order: p asc
+    * by `<`/`==` (−0.0 ties 0.0, NaN ties nothing), then id asc. Output:
+    * ids in rank order.
     */
   class BottomKByPriority(k: Int)
-      extends Aggregator[(Double, Long), (Array[Double], Array[Long]), Array[Long]] {
-    require(k > 0)
-    private def before(p1: Double, i1: Long, p2: Double, i2: Long): Boolean =
+      extends BoundedK[Double, (Double, Long), Array[Long]](k, skipHeld = false) {
+    def key(v: (Double, Long)): Double = v._1
+    def id(v: (Double, Long)): Long = v._2
+    def before(p1: Double, i1: Long, p2: Double, i2: Long): Boolean =
       p1 < p2 || (p1 == p2 && i1 < i2)
-    def zero: (Array[Double], Array[Long]) = (Array.empty, Array.empty)
-    private def insert(b: (Array[Double], Array[Long]), p: Double, id: Long):
-        (Array[Double], Array[Long]) = {
-      val (ps, ids) = b
-      val n = ps.length
-      if (n == k && !before(p, id, ps(n - 1), ids(n - 1))) return b
-      val m = math.min(n + 1, k)
-      val op = new Array[Double](m); val oi = new Array[Long](m)
-      java.lang.System.arraycopy(ps, 0, op, 0, math.min(n, m))
-      java.lang.System.arraycopy(ids, 0, oi, 0, math.min(n, m))
-      op(m - 1) = p; oi(m - 1) = id
-      var i = m - 1
-      while (i > 0 && before(op(i), oi(i), op(i - 1), oi(i - 1))) {
-        val tp = op(i); val ti = oi(i)
-        op(i) = op(i - 1); oi(i) = oi(i - 1)
-        op(i - 1) = tp; oi(i - 1) = ti
-        i -= 1
-      }
-      (op, oi)
-    }
-    def reduce(b: (Array[Double], Array[Long]), v: (Double, Long)) =
-      insert(b, v._1, v._2)
-    def merge(x: (Array[Double], Array[Long]), y: (Array[Double], Array[Long])) = {
-      var out = x
-      var i = 0
-      while (i < y._1.length) { out = insert(out, y._1(i), y._2(i)); i += 1 }
-      out
-    }
-    def finish(b: (Array[Double], Array[Long])): Array[Long] = b._2
-    def bufferEncoder: Encoder[(Array[Double], Array[Long])] =
-      Encoders.tuple(
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]](),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    def finish(b: Buf): Array[Long] = b._2
   }
 
-  /** [[BottomKByPriority]] whose FINISH keeps the (priority, id) pairs in
+  /** [[BottomKByPriority]] whose output keeps the (priority, id) pairs in
     * rank order — for consumers that need the sort key itself (a k-NN
-    * edge's similarity score), not just the ranked ids. Delegates every
-    * buffer operation to [[BottomKByPriority]], so the merge laws proven
-    * there carry over verbatim; same ≤ k pairs-per-group shuffle bound. */
+    * edge's similarity score), not just the ranked ids. */
   class BottomKPairs(k: Int)
-      extends Aggregator[(Double, Long), (Array[Double], Array[Long]), Array[(Double, Long)]] {
-    private val inner = new BottomKByPriority(k)
-    def zero: (Array[Double], Array[Long]) = inner.zero
-    def reduce(b: (Array[Double], Array[Long]), v: (Double, Long)) = inner.reduce(b, v)
-    def merge(x: (Array[Double], Array[Long]), y: (Array[Double], Array[Long])) =
-      inner.merge(x, y)
-    def finish(b: (Array[Double], Array[Long])): Array[(Double, Long)] = b._1.zip(b._2)
-    def bufferEncoder: Encoder[(Array[Double], Array[Long])] = inner.bufferEncoder
-    def outputEncoder: Encoder[Array[(Double, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Double, Long)]]()
+      extends BoundedK[Double, (Double, Long), Array[(Double, Long)]](k, skipHeld = false) {
+    def key(v: (Double, Long)): Double = v._1
+    def id(v: (Double, Long)): Long = v._2
+    def before(p1: Double, i1: Long, p2: Double, i2: Long): Boolean =
+      p1 < p2 || (p1 == p2 && i1 < i2)
+    def finish(b: Buf): Array[(Double, Long)] = b._1.zip(b._2)
   }
 
-  /** K rows per group with the smallest STRING sort key (ties → smaller
-    * id) — the deterministic stratified-sample rank (order by md5(text))
-    * as a mergeable aggregate. Same shuffle bound as
-    * [[BottomKByPriority]]: ≤ k (key, id) pairs per group ride the
-    * shuffle; the stratum never sorts. String compare is Java
-    * lexicographic — identical to DuckDB's binary collation on the ASCII
-    * hex md5 digest. Output: ids in rank order (key asc, id asc).
+  /** K rows per group with the smallest STRING sort key, (key, id) in —
+    * the deterministic stratified-sample rank (order by md5(text)). String
+    * compare is Java lexicographic, identical to DuckDB's binary collation
+    * on the ASCII hex md5 digest. Order: key asc, then id asc. Output: ids
+    * in rank order.
     */
   class BottomKByStringKey(k: Int)
-      extends Aggregator[(String, Long), (Array[String], Array[Long]), Array[Long]] {
-    require(k > 0)
-    private def before(k1: String, i1: Long, k2: String, i2: Long): Boolean = {
+      extends BoundedK[String, (String, Long), Array[Long]](k, skipHeld = false) {
+    def key(v: (String, Long)): String = v._1
+    def id(v: (String, Long)): Long = v._2
+    def before(k1: String, i1: Long, k2: String, i2: Long): Boolean = {
       val c = k1.compareTo(k2)
       c < 0 || (c == 0 && i1 < i2)
     }
-    def zero: (Array[String], Array[Long]) = (Array.empty, Array.empty)
-    private def insert(b: (Array[String], Array[Long]), key: String, id: Long):
-        (Array[String], Array[Long]) = {
-      val (ks, ids) = b
-      val n = ks.length
-      if (n == k && !before(key, id, ks(n - 1), ids(n - 1))) return b
-      val m = math.min(n + 1, k)
-      val ok = new Array[String](m); val oi = new Array[Long](m)
-      java.lang.System.arraycopy(ks, 0, ok, 0, math.min(n, m))
-      java.lang.System.arraycopy(ids, 0, oi, 0, math.min(n, m))
-      ok(m - 1) = key; oi(m - 1) = id
-      var i = m - 1
-      while (i > 0 && before(ok(i), oi(i), ok(i - 1), oi(i - 1))) {
-        val tk = ok(i); val ti = oi(i)
-        ok(i) = ok(i - 1); oi(i) = oi(i - 1)
-        ok(i - 1) = tk; oi(i - 1) = ti
-        i -= 1
-      }
-      (ok, oi)
-    }
-    def reduce(b: (Array[String], Array[Long]), v: (String, Long)) =
-      insert(b, v._1, v._2)
-    def merge(x: (Array[String], Array[Long]), y: (Array[String], Array[Long])) = {
-      var out = x
-      var i = 0
-      while (i < y._1.length) { out = insert(out, y._1(i), y._2(i)); i += 1 }
-      out
-    }
-    def finish(b: (Array[String], Array[Long])): Array[Long] = b._2
-    def bufferEncoder: Encoder[(Array[String], Array[Long])] =
-      Encoders.tuple(
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[String]](),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    def finish(b: Buf): Array[Long] = b._2
   }
 
   /** Count-min sketch (Cormode & Muthukrishnan 2005): a d×w counter matrix;
@@ -385,10 +225,8 @@ object Aggregators {
       a
     }
     def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
   object CountMin {
@@ -451,9 +289,7 @@ object Aggregators {
       x
     }
     def finish(b: Array[Long]): Seq[Long] = b.toSeq
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
   }
 }

@@ -148,7 +148,9 @@ object ScalingProbe {
             fn(spark, d).collect()
             (System.nanoTime() - t0) / 1e9
           }
-          // same stall re-run rule as Bench: >5× spread = host CPU steal
+          // crude stall guard: a >5× spread among the samples (host CPU
+          // steal) buys up to two more. Bench instead vets every sample by
+          // its CPU sentinel and the tasks' cpu/wall ratio.
           var extra = 0
           while (extra < 2 && times.max / math.max(times.min, 1e-9) > 5.0) {
             times = times :+ { val t0 = System.nanoTime(); fn(spark, d).collect()
