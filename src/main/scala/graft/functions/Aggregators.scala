@@ -151,19 +151,27 @@ object Aggregators {
     def finish(b: Buf): Array[Long] = b._2
   }
 
+  /** The order of the two double-keyed classes: p asc by `<`/`==` (−0.0
+    * ties 0.0), NaN after every number and tied with another NaN, then id
+    * asc — a strict total order, so the result does not depend on arrival
+    * order or merge split. DuckDB also sorts NaN last. */
+  private def nanLastBefore(p1: Double, i1: Long, p2: Double, i2: Long): Boolean =
+    if (p1 < p2) true
+    else if (p1 == p2 || (p1.isNaN && p2.isNaN)) i1 < i2
+    else p2.isNaN
+
   /** K rows per group with the smallest DOUBLE priority, (priority, id)
     * in — the weighted-sampling (Efraimidis–Spirakis A-Res) rank step
     * without a rank window: with ~5 language groups over a 100 TB corpus
-    * the window form funnels ~20 TB through a single task. Order: p asc
-    * by `<`/`==` (−0.0 ties 0.0, NaN ties nothing), then id asc. Output:
-    * ids in rank order.
+    * the window form funnels ~20 TB through a single task. Order:
+    * `nanLastBefore`. Output: ids in rank order.
     */
   class BottomKByPriority(k: Int)
       extends BoundedK[Double, (Double, Long), Array[Long]](k, skipHeld = false) {
     def key(v: (Double, Long)): Double = v._1
     def id(v: (Double, Long)): Long = v._2
     def before(p1: Double, i1: Long, p2: Double, i2: Long): Boolean =
-      p1 < p2 || (p1 == p2 && i1 < i2)
+      nanLastBefore(p1, i1, p2, i2)
     def finish(b: Buf): Array[Long] = b._2
   }
 
@@ -175,7 +183,7 @@ object Aggregators {
     def key(v: (Double, Long)): Double = v._1
     def id(v: (Double, Long)): Long = v._2
     def before(p1: Double, i1: Long, p2: Double, i2: Long): Boolean =
-      p1 < p2 || (p1 == p2 && i1 < i2)
+      nanLastBefore(p1, i1, p2, i2)
     def finish(b: Buf): Array[(Double, Long)] = b._1.zip(b._2)
   }
 

@@ -60,7 +60,7 @@ object KCore {
     * round: (round, n_peeled, n_remaining), where n_remaining counts the
     * vertices surviving that round's degree test. The per-round counts ARE
     * the aggregate output (the peel profile — how fast the graph sheds its
-    * periphery); [[coreVertices]] exposes the surviving set itself.
+    * periphery).
     *
     * `inputCheckpointed` (r11): caller guarantees `edges` is ALREADY a
     * long-typed localCheckpoint — skips the round-0 normalize+checkpoint
@@ -163,36 +163,6 @@ object KCore {
     import spark.implicits._
     spark.createDataFrame(out.result()).toDF("round", "n_peeled", "n_remaining")
       .orderBy($"round")
-  }
-
-  /** Vertices surviving `rounds` peel rounds (= the exact k-core when the
-    * profile shows a zero-peel round — spec-checked). */
-  def coreVertices(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint
-    // same long normalization as peelRounds (testdata Integral drift)
-    var e = edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")).localCheckpoint()
-    var keep = degrees(e).filter(col("dg") >= k).select(col("x")).localCheckpoint()
-    var prev = keep.count()
-    var r = 1
-    while (r < rounds) {
-      val induced = e.join(keep.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint()
-      val survivors = degrees(induced).filter(col("dg") >= k)
-        .select(col("x")).localCheckpoint()
-      // both superseded checkpoints are garbage now — release immediately
-      unpersistCheckpoint(e)
-      unpersistCheckpoint(keep)
-      e = induced
-      keep = survivors
-      val cur = keep.count()
-      // counts equal ⇒ sets equal (peeling is monotone) ⇒ fixed point
-      r = if (cur == prev) rounds else r + 1
-      prev = cur
-    }
-    unpersistCheckpoint(e) // `keep` (returned) is its own checkpoint
-    keep
   }
 
   private[graft] def degrees(e: DataFrame): DataFrame =

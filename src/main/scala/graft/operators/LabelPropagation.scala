@@ -40,7 +40,7 @@ object LabelPropagation {
     * side escapes the per-round shuffle regardless. Each round then pays
     * exactly one edge-wide exchange — repartition(u) after the join —
     * which co-locates BOTH vote aggregations (clustering by u satisfies
-    * the (u, label) grain too). A pinned-count + asserted variant was
+    * the (u, label) grain too). A pinned-partitioning variant was
     * probed and measured a loss (OPTIMIZATION_r11.md §4; the r9 numbers
     * are SCALING.md "r9 decision probes", lp1 row). */
   def run(edges: DataFrame, rounds: Int): DataFrame = {

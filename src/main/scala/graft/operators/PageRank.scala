@@ -56,8 +56,8 @@ object PageRank {
     *
     * Pinned build partitioning (r11): when the materialized edge table
     * reaches [[PinMinEdgeRows]], it is re-shuffled ONCE onto an EXPLICIT
-    * partition count and that partitioning is re-asserted on the
-    * checkpoint (GraftSqlBridge.assertHashPartitioned — under AQE a
+    * partition count and that partitioning is kept on the checkpoint
+    * (GraftSqlBridge.pinnedCheckpoint — under AQE a bare
     * localCheckpoint comes back UnknownPartitioning, so the per-iteration
     * rank joins would re-exchange the full edge checkpoint on `b` EVERY
     * round). With the pin, each round only exchanges the node-sized rank
@@ -108,17 +108,16 @@ object PageRank {
     val n = statsRow.getLong(0)
     val edgeRows = statsRow.getLong(1)
     // Past the measured crossover, pay ONE re-shuffle onto an explicit
-    // partition count and re-assert it on the checkpoint (AQE returns
-    // checkpoints as UnknownPartitioning — without the assert every
+    // partition count and keep it on the checkpoint (AQE returns
+    // checkpoints as UnknownPartitioning — without the pin every
     // iteration join re-exchanged the edge table; see scaladoc). Below
     // it, the r10 bare coalesced checkpoint is strictly cheaper.
     val symDeg =
       if (edgeRows >= PinMinEdgeRows) {
         val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        val rep = symDeg0Ck.repartition(p, col("b"))
-        val c = rep.localCheckpoint()
+        val c = org.apache.spark.sql.GraftSqlBridge.pinnedCheckpoint(symDeg0Ck, Seq("b"), p)
         org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(symDeg0Ck)
-        org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(c, Seq("b"), p)
+        c
       } else symDeg0Ck
     val base = (15L * (Scale / n)) / 100L
     // Iteration 1 joins nothing: the uniform initial rank is a constant,

@@ -27,9 +27,9 @@ object TriangleCount {
     * Pinned partitioning (r11): when the oriented edge list is `big`
     * (> 500k rows — the SAME dial that forces the triangle joins to
     * SHUFFLE_HASH), it is re-shuffled once onto an EXPLICIT partition
-    * count on the probe key `src`, and that partitioning is re-asserted on
-    * the o and adj checkpoints (GraftSqlBridge.assertHashPartitioned —
-    * under AQE a localCheckpoint comes back UnknownPartitioning, so both
+    * count on the probe key `src`, and that partitioning is kept on the
+    * o and adj checkpoints (GraftSqlBridge.pinnedCheckpoint — under AQE
+    * a bare localCheckpoint comes back UnknownPartitioning, so both
     * sides of both SHUFFLE_HASH triangle joins and the adjacency groupBy
     * would each pay an exchange). With the pin the adjacency aggregation
     * runs exchange-free on o's partitioning, the first triangle join is
@@ -62,15 +62,13 @@ object TriangleCount {
     val o1 = o0.localCheckpoint()
     // the big/SHJ dial doubles as the pin dial (see scaladoc): past it,
     // one explicit src re-shuffle replaces the adjacency groupBy's and
-    // the first triangle join's exchanges; the assert is TRUE by
-    // construction — the checkpoint materializes the REPARTITION_BY_NUM
-    // output partition-for-partition (never AQE-coalesced or skew-split)
+    // the first triangle join's exchanges
     val big = o1.count() > 500000L
     val o =
       if (big) {
-        val c = o1.repartition(p, col("src")).localCheckpoint()
+        val c = org.apache.spark.sql.GraftSqlBridge.pinnedCheckpoint(o1, Seq("src"), p)
         org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(o1)
-        org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(c, Seq("src"), p)
+        c
       } else o1
     // Count via ORIENTED ADJACENCY INTERSECTION instead of the classic
     // three-scan wedge self-join (r6 verdict directive 2): aggregate each
@@ -87,16 +85,14 @@ object TriangleCount {
     // the oriented out-degree O(√|E|), so no skew funnel. Materialized:
     // BOTH probe joins read it, and without the checkpoint the grouping
     // shuffle runs once per join.
-    // when pinned: exchange-free on o's asserted partitioning, and the
-    // aggregation output keeps (src, p) partition-for-partition, so the
-    // assert stays true
+    // when pinned: exchange-free on o's partitioning, and the aggregation
+    // output is already hash-partitioned on (src, p), so the re-pin plans
+    // no exchange of its own
     val adj0 = o.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint()
     val adj =
-      if (big)
-        org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(adj0, Seq("src"), p)
-      else adj0
+      if (big) org.apache.spark.sql.GraftSqlBridge.pinnedCheckpoint(adj0, Seq("src"), p)
+      else adj0.localCheckpoint()
     // Beyond broadcast size, SHUFFLE_HASH: build on the node-keyed
     // adjacency, stream the edges — a sort buys nothing for a join that
     // ends in one global sum (the count() is free; localCheckpoint just

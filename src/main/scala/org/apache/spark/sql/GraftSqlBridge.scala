@@ -24,39 +24,47 @@ object GraftSqlBridge {
   def waitForListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Re-assert hash partitioning on a `localCheckpoint()`ed Dataset.
+  /** `df` hash-partitioned on `colNames` into `numPartitions` and
+    * `localCheckpoint()`ed, with that partitioning kept on the checkpoint.
     *
-    * Under AQE the checkpoint's LogicalRDD comes back with
-    * `UnknownPartitioning(0)` — `AdaptiveSparkPlanExec` never surfaces its
-    * final plan's partitioning to `Dataset.checkpoint` (measured on this
-    * engine: `repartition(4, b).localCheckpoint()` advertises Unknown) —
-    * so every downstream join/aggregation keyed on the checkpoint's own
-    * partition key re-exchanges the whole table. When the CALLER knows the
-    * checkpoint was materialized directly from `repartition(n, cols)`
-    * (checkpoint partitions correspond 1:1 to shuffle output partitions),
-    * this stamps that hashpartitioning back onto the LogicalRDD so
-    * EnsureRequirements can line other sides up with it instead.
-    *
-    * SAFETY: the claim must be TRUE — asserting a partitioning the RDD
-    * does not have silently mis-joins. Only call on a checkpoint whose
-    * immediate upstream was `repartition(n, cols)` with the same n and
-    * column list. Throws `IllegalArgumentException` when `df` is not a
-    * bare checkpoint (its analyzed plan is not a `LogicalRDD`): there is
-    * no partitioning to stamp, and returning `df` unchanged would hide the
-    * caller's broken assumption. */
-  def assertHashPartitioned(df: DataFrame, colNames: Seq[String],
-      numPartitions: Int): DataFrame =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        val attrs = colNames.map(c => l.output.find(_.name == c).getOrElse(
-          throw new IllegalArgumentException(s"no column $c on checkpoint")))
-        val part = org.apache.spark.sql.catalyst.plans.physical
-          .HashPartitioning(attrs, numPartitions)
-        ofRows(df.sparkSession, l.copy(outputPartitioning = part)(
-          df.sparkSession.asInstanceOf[classic.SparkSession], None, None))
-      case other => throw new IllegalArgumentException(
-        s"assertHashPartitioned needs a checkpointed frame (LogicalRDD), got ${other.nodeName}")
+    * Under AQE a checkpoint's LogicalRDD comes back as
+    * `UnknownPartitioning(0)`, so every later join or aggregation keyed on
+    * the checkpoint's own partition key would re-exchange the whole table.
+    * The stamp put back here is the partitioning Spark's executed plan
+    * reports for the materialized frame (AQE's final plan), moved onto the
+    * checkpoint's output by column position; nothing is taken on trust
+    * from the caller. When that plan does not report
+    * `hashpartitioning(colNames, numPartitions)` over exactly
+    * `numPartitions` RDD partitions, this throws and names what it
+    * reported. The checkpoint's statistics and constraints are kept, so a
+    * pinned table can still be broadcast where its size allows. */
+  def pinnedCheckpoint(df: DataFrame, colNames: Seq[String],
+      numPartitions: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val rep = df.repartition(numPartitions, colNames.map(df.col): _*)
+    val ck = rep.localCheckpoint()
+    val ran = rep.asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
     }
+    val l = ck.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val toCk = ran.output.map(_.exprId).zip(l.output).toMap
+    val keys = colNames.map(c => l.output(rep.columns.indexOf(c)))
+    val stamp = Some(ran.outputPartitioning).collect { case h: HashPartitioning =>
+      h.transform { case a: Attribute if toCk.contains(a.exprId) => toCk(a.exprId) }
+        .asInstanceOf[HashPartitioning]
+    }.filter(h => h.numPartitions == numPartitions &&
+      l.rdd.getNumPartitions == numPartitions && h.expressions.length == keys.length &&
+      h.expressions.zip(keys).forall { case (e, k) => e.semanticEquals(k) }
+    ).getOrElse(throw new IllegalStateException(
+      s"pinnedCheckpoint(${colNames.mkString(", ")}, $numPartitions): the executed " +
+        s"plan reported ${ran.outputPartitioning} over ${l.rdd.getNumPartitions} partitions"))
+    ofRows(df.sparkSession, l.copy(outputPartitioning = stamp)(
+      df.sparkSession.asInstanceOf[classic.SparkSession],
+      Some(l.computeStats()), Some(l.constraints)))
+  }
 
   /** Release the storage blocks of a `localCheckpoint()`ed Dataset NOW.
     *

@@ -38,9 +38,33 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Exchanges in `df`'s executed plan, counted through AQE query stages
+    * and subqueries (AQE's final plan once `df` itself has run). */
+  def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+    PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan)(PlanWalk.exchange).size
+
+  /** One (left, right) exchange count per shuffled hash join in `df`'s
+    * executed plan whose left keys include column `key`: the exchanges
+    * under each side of the join, counted as in [[exchanges]]. */
+  def joinSideExchanges(df: org.apache.spark.sql.DataFrame, key: String): Seq[(Int, Int)] =
+    PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == key)) =>
+        (PlanWalk.collect(j.left)(PlanWalk.exchange).size,
+          PlanWalk.collect(j.right)(PlanWalk.exchange).size)
+    }
+
   def write(path: java.nio.file.Path, name: String, content: String): String = {
     val f = path.resolve(name)
     java.nio.file.Files.writeString(f, content)
     f.toString
+  }
+}
+
+private object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.execution.SparkPlan
+  val exchange: PartialFunction[SparkPlan, SparkPlan] = {
+    case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    case e: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => e
   }
 }

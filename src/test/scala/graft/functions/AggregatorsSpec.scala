@@ -44,14 +44,21 @@ class AggregatorsSpec extends SparkTestBase {
   private def withDups[T](g: Gen[List[T]]): Gen[List[T]] =
     g.flatMap(l => Gen.someOf(l).map(d => l ++ d.take(3)))
 
-  /** Sometimes puts one NaN priority into the list, at a random place. */
-  private def withNaN(g: Gen[List[(Double, Long)]]): Gen[List[(Double, Long)]] =
-    Gen.frequency((9, g), (1, for {
-      l <- g; at <- Gen.choose(0, l.size); id <- Gen.choose(0L, 10000L)
-    } yield l.patch(at, List((Double.NaN, id)), 0)))
+  /** Sometimes puts one or two NaN priorities into the list, at random
+    * places. */
+  private def withNaN(g: Gen[List[(Double, Long)]]): Gen[List[(Double, Long)]] = {
+    val nan = for {
+      at <- Gen.choose(0, 1000); id <- Gen.choose(0L, 10000L)
+    } yield (at, (Double.NaN, id))
+    Gen.frequency((4, g), (1, for {
+      l <- g; n <- Gen.choose(1, 2); ins <- Gen.listOfN(n, nan)
+    } yield ins.foldLeft(l) { case (acc, (at, e)) => acc.patch(at % (acc.size + 1), List(e), 0) }))
+  }
 
   /** The double-keyed aggregates compare priorities with `<` and `==`:
-    * −0.0 ties 0.0 (the id decides), so the references see both as 0.0. */
+    * −0.0 ties 0.0 (the id decides), so the references see both as 0.0.
+    * The references' `sorted` uses Java's total order, which puts NaN
+    * last and ties NaN with NaN, as the aggregates do. */
   private def tieZeros(l: Seq[(Double, Long)]): Seq[(Double, Long)] =
     l.map { case (p, id) => (p + 0.0, id) }
 
@@ -140,25 +147,42 @@ class AggregatorsSpec extends SparkTestBase {
   test("BottomKByPriority merge is associative, commutative, matches single-pass") {
     val a = new Aggregators.BottomKByPriority(4)
     val p = Gen.frequency((10, Gen.choose(0, 50).map(_ / 50.0)), (1, Gen.const(-0.0)))
-    // tight p range → ties; −0.0 beside 0.0; exact duplicates; sometimes a NaN
+    // tight p range → ties; −0.0 beside 0.0; exact duplicates; sometimes
+    // one or two NaNs
     val gen = withNaN(withDups(Gen.listOf(Gen.zip(p, Gen.choose(0L, 10000L)))))
     val prop = forAll(gen, gen, gen) { (xs, ys, zs) =>
       def buf(l: List[(Double, Long)]) = l.foldLeft(a.zero)(a.reduce)
-      def v(b: (Array[Double], Array[Long])) = (b._1.toSeq, b._2.toSeq)
+      // keys by bits of p + 0.0: −0.0 equals 0.0 and NaN equals NaN
+      def v(b: (Array[Double], Array[Long])) =
+        (b._1.toSeq.map(p => java.lang.Double.doubleToLongBits(p + 0.0)), b._2.toSeq)
       val left = v(a.merge(a.merge(buf(xs), buf(ys)), buf(zs)))
       val right = v(a.merge(buf(xs), a.merge(buf(ys), buf(zs))))
       val swap = v(a.merge(buf(ys), buf(xs)))
-      val all = a.finish(buf(xs ++ ys ++ zs)).toSeq
+      val all = xs ++ ys ++ zs
+      val ref = bkpRef(4, tieZeros(all))
       val sizesOk = Seq(buf(xs), buf(ys), buf(zs), a.merge(a.merge(buf(xs), buf(ys)), buf(zs)))
         .forall(b => b._1.length == b._2.length && b._2.length <= 4)
-      // a NaN priority ties nothing, so where it lands depends on arrival
-      // order: with one in the input only the bound holds
-      sizesOk && ((xs ++ ys ++ zs).exists(_._1.isNaN) ||
-        left == right && v(a.merge(buf(xs), buf(ys))) == swap &&
-          all == bkpRef(4, tieZeros(xs ++ ys ++ zs)))
+      sizesOk && left == right && v(a.merge(buf(xs), buf(ys))) == swap &&
+        left._2 == ref && a.finish(buf(all)).toSeq == ref &&
+        a.finish(buf(all.reverse)).toSeq == ref
     }
     val r = SCTest.check(prop)(_.withMinSuccessfulTests(100))
     assert(r.passed, r.status.toString)
+  }
+
+  test("BottomKByPriority orders a NaN priority last, whatever the arrival order") {
+    val a = new Aggregators.BottomKByPriority(2)
+    def buf(l: Seq[(Double, Long)]) = l.foldLeft(a.zero)(a.reduce)
+    val in = Seq((Double.NaN, 1L), (0.5, 2L), (0.1, 3L))
+    assert(a.finish(buf(in)).toSeq == Seq(3L, 2L))
+    assert(a.finish(buf(in.tail :+ in.head)).toSeq == Seq(3L, 2L))
+    val (x, y) = (buf(in.take(1)), buf(in.drop(1)))
+    assert(a.finish(a.merge(x, y)).toSeq == Seq(3L, 2L))
+    assert(a.finish(a.merge(y, x)).toSeq == Seq(3L, 2L))
+    // two NaNs tie, so the id decides; −0.0 still ties 0.0
+    val b = new Aggregators.BottomKByPriority(4)
+    val two = Seq((Double.NaN, 9L), (0.0, 5L), (Double.NaN, 4L), (-0.0, 6L))
+    assert(b.finish(two.foldLeft(b.zero)(b.reduce)).toSeq == Seq(5L, 6L, 4L, 9L))
   }
 
   private def bksRef(k: Int, pairs: Seq[(String, Long)]): Seq[Long] =

@@ -227,8 +227,7 @@ class ShapeEquivalenceSpec extends SparkTestBase {
     // odd-round probe key `a`; optionally a SHUFFLE_HASH hint on the frontier
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def arm(shjHint: Boolean): Seq[String] = {
-      val e = org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned(
-        edges.repartition(p, $"a").localCheckpoint(), Seq("a"), p)
+      val e = org.apache.spark.sql.GraftSqlBridge.pinnedCheckpoint(edges, Seq("a"), p)
       val side = Array[DataFrame](
         src.distinct().withColumn("level", lit(0)).localCheckpoint(), null)
       var frontier = side(0).select($"v")

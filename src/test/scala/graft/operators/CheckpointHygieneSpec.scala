@@ -68,18 +68,45 @@ class CheckpointHygieneSpec extends SparkTestBase {
     assert(leaked <= 1, s"leaked $leaked checkpoint RDDs")
   }
 
-  test("assertHashPartitioned rejects a frame that is not a bare checkpoint") {
-    import org.apache.spark.sql.GraftSqlBridge.assertHashPartitioned
+  private def pinFixture = {
     val session = spark
     import session.implicits._
-    val df = (1L to 100L).map(i => (i, i % 7)).toDF("a", "b")
-    val lazyPart = df.repartition(4, $"b")
-    intercept[IllegalArgumentException](assertHashPartitioned(lazyPart, Seq("b"), 4))
-    // a projection over a checkpoint is no longer the checkpoint's plan
-    val ck = lazyPart.localCheckpoint()
-    intercept[IllegalArgumentException](
-      assertHashPartitioned(ck.select($"b"), Seq("b"), 4))
-    assert(assertHashPartitioned(ck, Seq("b"), 4).count() == 100L)
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(ck)
+    session.range(0L, 20000L).select(($"id" % 997).as("a"), ($"id" % 13).as("b"), $"id".as("c"))
+  }
+
+  test("pinnedCheckpoint: every row sits in the partition its key hashes to") {
+    import org.apache.spark.sql.GraftSqlBridge.{pinnedCheckpoint, unpersistCheckpoint}
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod, spark_partition_id}
+    for (cols <- Seq(Seq("a"), Seq("a", "b"))) {
+      val pin = pinnedCheckpoint(pinFixture, cols, 8)
+      val misplaced = pin.filter(
+        pmod(hash(cols.map(col): _*), lit(8)) =!= spark_partition_id()).count()
+      assert(misplaced == 0L && pin.count() == 20000L, cols.mkString(", "))
+      unpersistCheckpoint(pin)
+    }
+  }
+
+  test("pinnedCheckpoint keeps the checkpoint's size estimate") {
+    import org.apache.spark.sql.GraftSqlBridge.{pinnedCheckpoint, unpersistCheckpoint}
+    val df = pinFixture
+    val plain = df.repartition(8, df("a")).localCheckpoint()
+    val pin = pinnedCheckpoint(df, Seq("a"), 8)
+    def size(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size(pin) == size(plain) && size(plain) < BigInt(Long.MaxValue))
+    unpersistCheckpoint(plain); unpersistCheckpoint(pin)
+  }
+
+  test("pinnedCheckpoint: a re-pinned aggregate and a join of two pins need no exchange") {
+    import org.apache.spark.sql.GraftSqlBridge.{pinnedCheckpoint, unpersistCheckpoint}
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val pin = pinnedCheckpoint(pinFixture, Seq("a"), 8)
+    val agg = pin.groupBy(col("a")).agg(count(lit(1)).as("n"))
+    assert(exchanges(agg.repartition(8, col("a"))) == 0)
+    val repin = pinnedCheckpoint(agg, Seq("a"), 8)
+    val joined = pin.join(repin.hint("shuffle_hash"), "a")
+    assert(joined.count() == 20000L)
+    assert(exchanges(joined) == 0 && joinSideExchanges(joined, "a") == Seq((0, 0)))
+    unpersistCheckpoint(pin); unpersistCheckpoint(repin)
   }
 }

@@ -6,25 +6,24 @@ import org.scalacheck.Gen
 class KCoreSpec extends SparkTestBase {
 
   /** Driver reference: synchronous peel, one round at a time. Returns the
-    * per-round (peeled, remaining) profile plus the surviving vertex set. */
+    * per-round (round, peeled, remaining) profile. */
   private def refPeel(edges: Seq[(Long, Long)], k: Int, rounds: Int)
-      : (Seq[(Long, Long, Long)], Set[Long]) = {
+      : Seq[(Long, Long, Long)] = {
     var e = edges.toSet
     def deg(es: Set[(Long, Long)]): Map[Long, Int] =
       es.toSeq.flatMap(p => Seq(p._1, p._2)).groupBy(identity).view.mapValues(_.size).toMap
     var d = deg(e)
     var prev = d.size.toLong
-    var keep = Set.empty[Long]
     val out = Seq.newBuilder[(Long, Long, Long)]
     for (r <- 1 to rounds) {
-      keep = d.collect { case (x, dg) if dg >= k => x }.toSet
+      val keep = d.collect { case (x, dg) if dg >= k => x }.toSet
       val cur = keep.size.toLong
       e = e.filter(p => keep(p._1) && keep(p._2))
       d = deg(e)
       out += ((r.toLong, prev - cur, cur))
       prev = cur
     }
-    (out.result(), keep)
+    out.result()
   }
 
   /** 12 random simple graphs on up to 15 vertices, none empty. */
@@ -51,15 +50,11 @@ class KCoreSpec extends SparkTestBase {
     // round 1 drops 5 (deg 1); round 2 drops the now-isolated-enough 4;
     // rounds 3-4 peel nothing: the 2-core {1,2,3} is reached
     assert(rows === Seq((1L, 1L, 4L), (2L, 1L, 3L), (3L, 0L, 3L), (4L, 0L, 3L)))
-    import spark.implicits._
-    val core = KCore.coreVertices(edges.toDF("u", "v"), 2, 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(core === Set(1L, 2L, 3L))
   }
 
   test("profile matches the driver reference on random graphs") {
     for (edges <- randomGraphs) {
-      val (want, _) = refPeel(edges, k = 2, rounds = 5)
+      val want = refPeel(edges, k = 2, rounds = 5)
       val got = runSpark(edges, k = 2, rounds = 5)
       assert(got === want, s"edges=$edges")
     }
@@ -68,7 +63,7 @@ class KCoreSpec extends SparkTestBase {
   test("kc1 path (checkpointed input, given degrees) matches the reference") {
     import spark.implicits._
     for (edges <- randomGraphs) {
-      val (want, _) = refPeel(edges, k = 2, rounds = 5)
+      val want = refPeel(edges, k = 2, rounds = 5)
       val e = edges.toDF("u", "v").localCheckpoint()
       val deg = KCore.degrees(e).localCheckpoint()
       val nVertices = edges.flatMap(p => Seq(p._1, p._2)).distinct.size.toLong
@@ -87,10 +82,6 @@ class KCoreSpec extends SparkTestBase {
     val edges = k4 ++ Seq((4L, 5L), (5L, 6L), (6L, 7L))
     val rows = runSpark(edges, k = 3, rounds = 6)
     assert(rows.last._2 == 0L && rows.last._3 == 4L)
-    import spark.implicits._
-    val core = KCore.coreVertices(edges.toDF("u", "v"), 3, 6)
-      .collect().map(_.getLong(0)).toSet
-    assert(core === Set(1L, 2L, 3L, 4L))
   }
 
   test("int32 edge columns survive the local tail finish (testdata drift)") {
@@ -103,12 +94,9 @@ class KCoreSpec extends SparkTestBase {
     val edges = Seq((1, 2), (2, 3), (1, 3), (3, 4), (4, 5)).toDF("u", "v")
     val rows = KCore.peelRounds(edges, k = 2, rounds = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val (want, _) = refPeel(
+    val want = refPeel(
       Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)), k = 2, rounds = 4)
     assert(rows === want)
-    val core = KCore.coreVertices(edges, 2, 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(core === Set(1L, 2L, 3L))
   }
 
   test("a round that peels every survivor doesn't NPE the edge-bound guard") {

@@ -53,4 +53,31 @@ class PageRankSpec extends SparkTestBase {
     assert(r(0L) > r(1L))
     assert((1L to 5L).map(r).distinct.size === 1) // symmetric leaves tie exactly
   }
+
+  test("above PinMinEdgeRows: regular components match their degree's recurrence") {
+    // a 1,000,000-node cycle (degree 2) beside a 500,000-node circulant
+    // C(1, 2) (degree 4): 2·1M + 4·500k = 4M symmetric edge rows, so the
+    // pinned arm runs. Every node of a d-regular component has the same
+    // rank, so each component's exact rank is a scalar recurrence.
+    val (n1, n2) = (1000000L, 500000L)
+    assert(2 * n1 + 4 * n2 >= PageRank.PinMinEdgeRows)
+    val cycle = spark.range(0L, n1).select(col("id").as("a"), ((col("id") + 1) % n1).as("b"))
+    def circ(step: Long) = spark.range(0L, n2)
+      .select((col("id") + n1).as("a"), ((col("id") + step) % n2 + n1).as("b"))
+    val iters = 3
+    val t0 = System.nanoTime()
+    val ranks = PageRank.run(cycle.union(circ(1)).union(circ(2)), iters)
+    val got = ranks.groupBy(col("v") < n1)
+      .agg(count(lit(1)), min(col("rank")), max(col("rank")))
+      .collect().map(r => r.getBoolean(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val n = n1 + n2
+    val base = (15L * (PageRank.Scale / n)) / 100L
+    def rank(d: Long): Long =
+      (1 to iters).foldLeft(PageRank.Scale / n)((r, _) => base + (85L * (d * (r / d))) / 100L)
+    assert(got === Map(true -> ((n1, rank(2), rank(2))), false -> ((n2, rank(4), rank(4)))))
+    // the pin held: no iteration join re-exchanges the edge side (key b)
+    val sides = joinSideExchanges(ranks, "b")
+    assert(sides.size == iters - 1 && sides.forall(_._1 == 0), sides)
+    info(f"wall ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
 }

@@ -83,4 +83,21 @@ class TriangleCountSpec extends SparkTestBase {
       Seq((1, 2), (2, 3), (1, 3), (3, 4)).toDF("u", "v")).head()
     assert(r.getAs[Long]("n_triangles") == 1)
   }
+
+  test("above the 500k dial: 100,000 disjoint K4s, o ⋈ adj on src with no exchange") {
+    import org.apache.spark.sql.functions.{array, col, explode, lit, struct}
+    // 600,000 edges: past the oriented-edge dial, so the pinned arm runs
+    val pairs = for (i <- 0 to 3; j <- (i + 1) to 3) yield struct(lit(i).as("i"), lit(j).as("j"))
+    val edges = spark.range(0L, 100000L)
+      .select((col("id") * 4).as("base"), explode(array(pairs: _*)).as("p"))
+      .select((col("base") + col("p.i")).as("u"), (col("base") + col("p.j")).as("v"))
+    val out = TriangleCount.run(edges)
+    val r = out.collect().head
+    assert(r.getAs[Long]("n_nodes") == 400000L)
+    assert(r.getAs[Long]("n_edges") == 600000L)
+    assert(r.getAs[Long]("n_wedges") == 1200000L)
+    assert(r.getAs[Long]("n_triangles") == 400000L)
+    assert(r.getAs[Double]("clustering") == 1.0)
+    assert(joinSideExchanges(out, "src") == Seq((0, 0)))
+  }
 }
