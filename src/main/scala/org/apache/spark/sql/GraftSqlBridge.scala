@@ -40,7 +40,6 @@ object GraftSqlBridge {
     * pinned table can still be broadcast where its size allows. */
   def pinnedCheckpoint(df: DataFrame, colNames: Seq[String],
       numPartitions: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val rep = df.repartition(numPartitions, colNames.map(df.col): _*)
     val ck = rep.localCheckpoint()
@@ -50,17 +49,16 @@ object GraftSqlBridge {
     }
     val l = ck.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
       .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-    val toCk = ran.output.map(_.exprId).zip(l.output).toMap
-    val keys = colNames.map(c => l.output(rep.columns.indexOf(c)))
-    val stamp = Some(ran.outputPartitioning).collect { case h: HashPartitioning =>
-      h.transform { case a: Attribute if toCk.contains(a.exprId) => toCk(a.exprId) }
-        .asInstanceOf[HashPartitioning]
-    }.filter(h => h.numPartitions == numPartitions &&
-      l.rdd.getNumPartitions == numPartitions && h.expressions.length == keys.length &&
-      h.expressions.zip(keys).forall { case (e, k) => e.semanticEquals(k) }
-    ).getOrElse(throw new IllegalStateException(
-      s"pinnedCheckpoint(${colNames.mkString(", ")}, $numPartitions): the executed " +
-        s"plan reported ${ran.outputPartitioning} over ${l.rdd.getNumPartitions} partitions"))
+    val keyAt = colNames.map(rep.columns.indexOf(_))
+    val stamp = ran.outputPartitioning match {
+      case h: HashPartitioning if h.numPartitions == numPartitions &&
+          l.rdd.getNumPartitions == numPartitions &&
+          h.expressions.map(_.canonicalized) == keyAt.map(ran.output(_).canonicalized) =>
+        HashPartitioning(keyAt.map(l.output(_)), numPartitions)
+      case other => throw new IllegalStateException(
+        s"pinnedCheckpoint(${colNames.mkString(", ")}, $numPartitions): the executed " +
+          s"plan reported $other over ${l.rdd.getNumPartitions} partitions")
+    }
     ofRows(df.sparkSession, l.copy(outputPartitioning = stamp)(
       df.sparkSession.asInstanceOf[classic.SparkSession],
       Some(l.computeStats()), Some(l.constraints)))
